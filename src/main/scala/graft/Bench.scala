@@ -1,24 +1,46 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  type Gate = (SparkSession, String) => DataFrame
+
+  /** Min-of-repeats seconds per gate that ran clean, and the gates that
+    * threw, in name order. A failed gate is never a time. */
+  final case class Timings(seconds: Map[String, Double], failed: Seq[String]) {
+    def total: Double = seconds.values.sum
+  }
+
+  /** Fixed run order (the gate map is unordered) and `repeats` runs per
+    * gate keeping the MINIMUM: the first run pays any residual cold cost
+    * (shuffle-file creation, codegen of this gate's plan), and min — not
+    * "the second" — also survives a one-off GC/compilation spike landing
+    * on a repeat (observed: 8.95s for a 0.65s query, once, mid-sweep).
+    * The first run that throws marks the gate failed and ends its timing.
+    * State a gate leaves behind is released after it, outside timing.
+    */
+  def timeGates(spark: SparkSession, sfDir: String, gates: Map[String, Gate],
+                repeats: Int): Timings = {
+    val outcomes = gates.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val best =
+        try Some((1 to math.max(1, repeats)).map { _ =>
+          val t0 = System.nanoTime()
+          // Execute the REAL plan: .count() lets Catalyst prune every
+          // column (an empty aggregate), under-measuring projection-heavy
+          // gates; toRdd.count() materializes the full output rows.
+          fn(spark, sfDir).queryExecution.toRdd.count()
+          (System.nanoTime() - t0) / 1e9
+        }.min)
+        catch { case _: Throwable => None }
+      Sessions.releaseGateState(spark)
+      name -> best
+    }
+    Timings(outcomes.collect { case (n, Some(t)) => n -> t }.toMap,
+      outcomes.collect { case (n, None) => n })
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      // see Verify: evictable checkpoint storage + AQE-coalesced
-      // 256-way shuffle planning (scale headroom, same sf0.1 plans)
-      .config("spark.memory.storageFraction", "0.3")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR: stray WARN chatter on stderr must not drown the JSON line the
-    // driver parses from this run's output
-    spark.sparkContext.setLogLevel("ERROR")
+    val cores = Sessions.mainCores
+    val spark = Sessions.tuned(cores)
     // JIT/codegen + page-cache warmup: touch every base table the headline
     // queries scan (not just lineitem) so no measured query absorbs the
     // first cold read of a table — BENCH_r05's q_nb_quality outlier (22.9s
@@ -32,11 +54,6 @@ object Bench {
     // optional subset filter for local scale probes (absent → all queries)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    // fixed run order (queries is an unordered HashMap) + three runs per
-    // query keeping the MINIMUM: the first run pays any residual cold cost
-    // (shuffle-file creation, codegen of this query's plan), and min — not
-    // "the second" — also survives a one-off GC/compilation spike landing
-    // on a repeat (observed: 8.95s for a 0.65s query, once, mid-sweep).
     // r12 (VERDICT ask 4): default raised 2 -> 3 and the protocol is
     // recorded IN the emitted JSON — r11's committed headline was a
     // post-reboot high-variance sample (identical code measured 212.8 vs
@@ -46,37 +63,15 @@ object Bench {
     // makes runs comparable across rounds.
     val repeats = sys.env.get("SPARK_GRAFT_BENCH_REPEATS").map(_.toInt).getOrElse(3)
     val protocol = s"min-of-$repeats"
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .map { case (name, fn) =>
-      val times = (1 to math.max(1, repeats)).map { _ =>
-        val t0 = System.nanoTime()
-        // Execute the REAL plan: .count() lets Catalyst prune every column
-        // (an empty aggregate), under-measuring projection-heavy queries;
-        // toRdd.count() materializes the full output rows of the query plan.
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }
-      // Per-gate hygiene (r9, the q_logreg/q_nb_quality in-suite wobble):
-      // gates localCheckpoint(true) intermediates, which PERSIST in the
-      // BlockManager and are never unpersisted — 240 gates of leftovers
-      // mean later gates run under storage-memory pressure and GC churn
-      // that isolated A/Bs don't see (measured ±3x on single gates).
-      // Dropping persisted RDDs + cached plans between gates makes each
-      // in-suite number reproduce its isolated run; timing excludes it.
-      try {
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.sharedState.cacheManager.clearCache()
-        // trigger ContextCleaner shuffle-file reclamation (see Verify;
-        // cluster-mode equivalent: spark.cleaner.periodicGC.interval=5min,
-        // set in Sessions.tuned — explicit gc() is the local[32] defense)
-        System.gc()
-      } catch { case _: Throwable => () }
-      name -> times.min
-    }.toMap
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val timings = timeGates(spark, sfDir,
+      SparkEntry.queries.filter { case (name, _) => only.isEmpty || only(name) },
+      repeats)
+    val results = timings.seconds
+    val total = timings.total
+    // run conditions ride in both records so runs compare across hosts
+    val failed = timings.failed.map(n => s"\"$n\"").mkString("[", ",", "]")
+    val conditions =
+      s""""cores":$cores,"heap_mb":${Runtime.getRuntime.maxMemory >> 20},"failed":$failed"""
     // The two intentional evaluation harnesses (multi-method sweeps, each
     // the cost of ~15 ordinary gates BY DESIGN) report on their own line
     // so the per-operator trend stays legible when diffing rounds.
@@ -94,11 +89,13 @@ object Bench {
     try
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("target/bench_full_last.json"),
-        s"""{"total_s":$total,"operators_s":$operators,"harness_s":$harness,"n":${sorted.size},"protocol":"$protocol","sf":"$sfDir","queries":$full}""")
+        s"""{"total_s":$total,"operators_s":$operators,"harness_s":$harness,"n":${sorted.size},"protocol":"$protocol",$conditions,"sf":"$sfDir","queries":$full}""")
     catch { case _: Throwable => () } // the stdout line must still go out
     def fmt(v: Double): String =
       if (v >= 100) f"$v%.0f" else if (v >= 10) f"$v%.1f" else f"$v%.2f"
-    val budget = 1600 // bytes for the queries object; envelope adds ~150
+    // bytes for the queries object; the envelope adds ~200 plus the
+    // failed list
+    val budget = 1600 - failed.length
     val sb = new StringBuilder
     var omittedN = 0
     var omittedS = 0.0
@@ -112,7 +109,7 @@ object Bench {
     val omitted =
       if (omittedN == 0) ""
       else s""","omitted":{"n":$omittedN,"total_s":${fmt(omittedS)}}"""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${sorted.size},"protocol":"$protocol","operators_s":${fmt(operators)},"harness_s":${fmt(harness)},"queries":{$sb}$omitted,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${sorted.size},"protocol":"$protocol",$conditions,"operators_s":${fmt(operators)},"harness_s":${fmt(harness)},"queries":{$sb}$omitted,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -7,7 +7,8 @@ import java.nio.file.{Files, Paths}
   * claims in OPTIMIZATION_r13.md are checkable without running Spark.
   *
   * Usage: runMain graft.Plans <sfDir> <outDir> <suffix> [qname ...]
-  * Writes <outDir>/<qname>_<suffix>.txt per query. Plan construction
+  * Writes <outDir>/<qname>_<suffix>.txt per query, on the session Bench
+  * times with (`SPARK_GRAFT_CPUS` cores, default 4). Plan construction
   * only — nothing is executed (actions a gate runs at build time, e.g.
   * count()/localCheckpoint(), do run; the final frame is not).
   */
@@ -17,18 +18,7 @@ object Plans {
     val outDir = args(1)
     val suffix = args(2)
     val names = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        "256")
-      .config("spark.memory.storageFraction", "0.3")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.tuned(Sessions.mainCores)
     Files.createDirectories(Paths.get(outDir))
     val qs = SparkEntry.queries
     // r14 (ADVICE): a typo'd name or a failing plan used to leave a
@@ -52,12 +42,7 @@ object Plans {
           failed ::= name
           System.err.println(s"[plans] unknown query: $name")
       }
-      try {
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.sharedState.cacheManager.clearCache()
-        System.gc()
-      } catch { case _: Throwable => () }
+      Sessions.releaseGateState(spark)
     }
     spark.stop()
     if (failed.nonEmpty) {

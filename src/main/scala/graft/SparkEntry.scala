@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -54,12 +54,3 @@ object SparkEntry {
   def oracleSql: Map[String, String] = Oracles.sql
 }
 
-
-/** Aggregate-expression forms of the closed-form linear fit, shared by
-  * queries and the Fitting module (cov/var, aep.py:920-927).
-  */
-object Fitting2 {
-  def slope(x: Column, y: Column): Column = covar_samp(x, y) / var_samp(x)
-  def intercept(x: Column, y: Column): Column =
-    avg(y) - (covar_samp(x, y) / var_samp(x)) * avg(x)
-}

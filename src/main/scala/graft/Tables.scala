@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   *
   * `events.parquet` stores TIMESTAMP(NANOS) which Spark's parquet reader
   * rejects; sessions must set `spark.sql.legacy.parquet.nanosAsLong=true`
-  * (see [[Sessions.tuned]]) and [[events]] converts the long-nanos column to
-  * a microsecond TimestampType (matching DuckDB's own ns->us semantics).
+  * (as [[Sessions.tuned]] does) and [[events]] converts the long-nanos
+  * column to a microsecond TimestampType (matching DuckDB's own ns->us
+  * semantics).
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -45,13 +46,19 @@ object Tables {
   }
 }
 
-/** Session factory with the scale-appropriate local config. */
+/** The one session factory: every main and the spec session build here, so
+  * the plans `Plans` captures and `Verify` checks are the plans `Bench`
+  * times.
+  */
 object Sessions {
-  def tuned(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
+  /** Core count for the mains: `SPARK_GRAFT_CPUS`, default 4. */
+  def mainCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  def tuned(cores: Int): SparkSession = {
     val spark = SparkSession.builder()
-      .master(master)
+      .master(s"local[$cores]")
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -60,21 +67,44 @@ object Sessions {
       // driven); under a large heap that can be tens of gates / TBs of
       // leftovers at 100-TB scale (observed locally: a 240-gate sf10
       // sweep filled the disk mid-run). 5min periodic GC is the
-      // cluster-mode defense — Verify/Bench additionally System.gc()
-      // between gates in local mode, where the 30min default is too slow.
+      // cluster-mode defense — [[releaseGateState]] additionally
+      // System.gc()s between gates in local mode, where the 30min
+      // default is too slow.
       .config("spark.cleaner.periodicGC.interval", "5min")
       // Evictable checkpoint storage (0.3 floor, not the 0.5 default):
       // checkpoint-heavy pipelines otherwise starve hash aggregates at
       // 100x scale while MEMORY_AND_DISK checkpoint blocks sit
-      // protected in memory; eviction just moves them to disk. And
-      // shuffles PLAN at 256 partitions with AQE coalescing down —
-      // small inputs still run ~cores tasks, big inputs don't
-      // concentrate aggregate state in 32.
+      // protected in memory (observed: q_dedup_sweep
+      // AGGREGATE_OUT_OF_MEMORY at sf10); eviction just moves them to
+      // disk. And shuffles PLAN at 256 partitions with AQE coalescing
+      // down — small inputs still run ~cores tasks, big inputs don't
+      // concentrate aggregate state in a few.
       .config("spark.memory.storageFraction", "0.3")
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // ERROR: stray WARN chatter on stderr must not drown the JSON line
+    // Bench prints
+    spark.sparkContext.setLogLevel("ERROR")
     spark
   }
+
+  /** Drops what a gate left behind before the next one runs. Gates
+    * localCheckpoint(true) intermediates, which PERSIST in the
+    * BlockManager and are never unpersisted: 240 gates of leftovers mean
+    * later gates run under storage-memory pressure and GC churn that
+    * isolated runs don't see (measured ±3x on single gates). The
+    * System.gc() makes the ContextCleaner reclaim the gate's shuffle
+    * files, which it does only once the driver has collected the
+    * referencing RDDs — under a large heap that may not happen for
+    * dozens of gates. The live set between gates is tiny, so this costs
+    * milliseconds.
+    */
+  def releaseGateState(spark: SparkSession): Unit =
+    try {
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = false))
+      spark.sharedState.cacheManager.clearCache()
+      System.gc()
+    } catch { case _: Throwable => () }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,105 +7,22 @@ object Verify {
     val sfDir = args(0)
     val outDir = args(1)
     val only = args.drop(2).toSet // optional query-name filter (local iteration)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      // Checkpoint-heavy gates persist multi-GB intermediates; the
-      // default 0.5 storageFraction PROTECTS half the unified pool for
-      // those blocks and a 100x-scale hash aggregate then cannot get its
-      // first page (observed: q_dedup_sweep AGGREGATE_OUT_OF_MEMORY at
-      // sf10 while MemoryStore was full of localCheckpoint blocks).
-      // 0.3 lets execution evict checkpoints to disk — MEMORY_AND_DISK
-      // blocks survive eviction; recompute is impossible for
-      // localCheckpoints, spill-to-disk is exactly what we want.
-      .config("spark.memory.storageFraction",
-        sys.env.getOrElse("SPARK_GRAFT_STORAGE_FRACTION", "0.3"))
-      // Shuffles are PLANNED at 256 partitions and AQE coalesces down:
-      // at sf0.01 every gate still runs ~32 post-coalesce tasks, at
-      // sf10 a 160M-row distinct no longer concentrates 5M keys of
-      // hash-agg state in each of 32 tasks. The cluster-mode equivalent
-      // of picking shuffle.partitions per job size.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", "256"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.tuned(Sessions.mainCores)
     new java.io.File(outDir).mkdirs()
-    // Per-gate wall time (compute + single-file write), recorded so scale
-    // sweeps double as a timing ledger (VERDICT r9 ask #2: the sf10/sf1
-    // ratio evidence lives here, not only in Bench's headline subset).
-    val times = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
-        // Default: one comparable file per gate (coalesce(1)) — what the
-        // driver's sf0.01 checker has always consumed. Sweep mode
-        // (SPARK_GRAFT_SHARDED_WRITE=1) skips the coalesce: at sf10 the
-        // single-file write serializes 10M-60M-row outputs on one core
-        // (~210 s across q_interp_linear/q_shear_alpha/q_bin_filter,
-        // r10 sweep) while check.py/DuckDB read multi-file parquet
-        // natively and canon-sort checker-side anyway.
-        val result = fn(spark, sfDir)
-        val writer =
-          if (sys.env.get("SPARK_GRAFT_SHARDED_WRITE").contains("1")) result
-          else result.coalesce(1)
-        writer.write.mode("overwrite").parquet(s"$outDir/$name")
+        // one comparable file per gate — what the oracle checker consumes
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
         val dt = (System.nanoTime() - t0) / 1e9
-        times(name) = dt
-        System.err.println(f"[verify] $name ok ${dt}%.2f s")
+        System.err.println(f"[verify] $name ok $dt%.2f s")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Same per-gate hygiene as Bench (r9): gates localCheckpoint(true)
-      // intermediates that otherwise stay persisted for the whole
-      // 240-gate run — at 100x bench scale the leftovers are GBs.
-      try {
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.sharedState.cacheManager.clearCache()
-        // ContextCleaner reclaims SHUFFLE FILES only after the driver
-        // GCs the referencing RDDs — under a large heap (sf10 sweeps run
-        // -Xmx48g) GC may not fire for dozens of gates and the leftovers
-        // are tens of GB of disk (observed: a 240-gate sf10 sweep filled
-        // the disk mid-run). Live set between gates is tiny, so this is
-        // milliseconds, and timing excludes it in Bench. This explicit
-        // gc() is the LOCAL-MODE defense; on a real cluster the same
-        // reclamation is configuration (`spark.cleaner.periodicGC
-        // .interval`, set to 5min in Sessions.tuned) — executors clean
-        // shuffle files when the driver's ContextCleaner tells them to,
-        // and that still requires a driver GC to collect the RDD refs.
-        System.gc()
-      } catch { case _: Throwable => () }
-    }
-    if (times.nonEmpty) {
-      // Filtered re-runs (local iteration on one gate) MERGE into an
-      // existing ledger instead of clobbering the full sweep's record.
-      val ledger = Paths.get(s"$outDir/verify_times.json")
-      // Regex parse is pinned to the format THIS file writes two lines
-      // below (flat {"name":sec,...}); a hand-edited ledger is out of
-      // contract. Keys in `only` are dropped from the prior ledger first:
-      // a gate that FAILED in this filtered re-run must not silently keep
-      // its stale green timing (r10 ADVICE).
-      val prior: Seq[(String, Double)] =
-        if (only.nonEmpty && Files.exists(ledger))
-          "\"([^\"]+)\"\\s*:\\s*([0-9.eE+-]+)".r
-            .findAllMatchIn(Files.readString(ledger))
-            .map(m => m.group(1) -> m.group(2).toDouble)
-            .filterNot { case (k, _) => only(k) }.toSeq
-        else Seq.empty
-      only.diff(times.keySet).foreach(k =>
-        System.err.println(s"[verify] $k produced no timing (failed?) — no ledger entry"))
-      val merged = scala.collection.mutable.LinkedHashMap(prior: _*) ++ times
-      val body = merged.map { case (k, v) => f""""$k":$v%.3f""" }
-        .mkString("{", ",", "}")
-      Files.writeString(ledger, body)
+      Sessions.releaseGateState(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

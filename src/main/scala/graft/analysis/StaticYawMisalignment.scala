@@ -56,9 +56,6 @@ final class StaticYawMisalignment(
       yawByTurbineAndBin: Map[(String, Double), Double],
       yawStdByTurbineAndBin: Map[(String, Double), Double] = Map.empty)
 
-  private def isTargetBin(center: Double): Boolean =
-    wsBins.exists(c => math.abs(c - center) < 1e-9)
-
   /** Poisson(1) multiplicity from a deterministic per-(row, sim) uniform:
     * inverse-CDF over the cumulative probabilities. Codegen-friendly
     * when-chain; counts above 7 are negligible (P < 1e-7).

@@ -238,24 +238,6 @@ private[graft] object GateHelpers {
     intra.unionByName(noise)
   }
 
-  /** Run independent gate sub-pipelines concurrently (guide §2.6:
-    * actions are only sequential because the driver calls them
-    * sequentially — a small pool lets the next chain's tasks back-fill
-    * executors idled by the current chain's stragglers/tail). Results
-    * return in INPUT order, so downstream union order — and therefore
-    * every gate output — is unchanged; each thunk's own computation is
-    * seed-fixed and independent, so concurrency cannot change values.
-    * Pool is bounded (default 3 in flight) per the guide's guidance:
-    * enough to fill the tail, not enough to fight for executors.
-    */
-  private[graft] def inParallel[T](thunks: Seq[() => T],
-                                   slots: Int = 3,
-                                   label: String = "inParallel"): Seq[T] =
-    // r14: canonical implementation moved to [[graft.Par]] (operators
-    // pool independent chains too) with the ADVICE fixes — per-thunk
-    // job descriptions, ExecutionException unwrapping, cancel-on-fail
-    graft.Par.inParallel(thunks, slots, label)
-
   /** Corpus + an id-shifted EXACT copy in one scan (r14, VERDICT ask 5):
     * the `docs.unionByName(docs.select(id + off, ...))` twin fixture
     * scanned the base table once per union branch — 2x the parquet read

@@ -332,8 +332,8 @@ private[graft] object GatesAnn {
     // r12 (VERDICT ask 5): the 10x-chance bar is replaced by an
     // absolute floor at ~half the measured operating point per scale —
     // recall@5 measured 0.98 / 0.88 / 0.83 / 0.48 at n = 500 / 2k /
-    // 20k / 50k (Profile graphrecall, this round) — so the known-bad
-    // K=5 plateau (0.29) can no longer pass at gate scales.
+    // 20k / 50k — so the known-bad K=5 plateau (0.29) can no longer
+    // pass at gate scales.
     "q_knn_graph" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
         .filter(col("vec_id") < 50000)
@@ -342,7 +342,7 @@ private[graft] object GatesAnn {
       val n = e.count()
       // r13 opt (guide §2.6): the build and the brute-force truth are
       // independent chains — overlap them; values unchanged
-      val pooled = inParallel(Seq[() => DataFrame](
+      val pooled = Par.inParallel(Seq[() => DataFrame](
         () => KnnGraph.nnDescent(e, "vec_id", "v", k = 20, iterations = 3,
           earlyStop = false, corpusCount = n),
         () => Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 20),
@@ -376,9 +376,8 @@ private[graft] object GatesAnn {
     // 2k / 20k / 50k — because small-world walk length grows with
     // log(n) (the HNSW layer-count analog). servingBudget(n) grows
     // every knob ~log2(n/50) and restores 0.97 / 0.95 / 1.00 / 0.94
-    // at the same sub-second per-batch serving cost (Profile
-    // graphsearch sweep), so ONE flat bar at ~half measured (0.45)
-    // holds at every scale.
+    // at the same sub-second per-batch serving cost, so ONE flat bar at
+    // ~half measured (0.45) holds at every scale.
     "q_graph_search" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
         .filter(col("vec_id") < 50000)
@@ -389,7 +388,7 @@ private[graft] object GatesAnn {
       val (beam, hops, entries) = KnnGraph.servingBudget(n)
       // r13 opt (guide §2.6): build+index+search and the brute-force
       // truth are independent chains — overlap them; values unchanged
-      val pooled = inParallel(Seq[() => DataFrame](
+      val pooled = Par.inParallel(Seq[() => DataFrame](
         () => {
           val g = KnnGraph.nnDescent(e, "vec_id", "v", k = 16,
             iterations = 2, earlyStop = false, corpusCount = n)
@@ -418,10 +417,10 @@ private[graft] object GatesAnn {
     // measured parity operating point (matches/beats a full rebuild);
     // placement rides the log-scaled servingBudget like q_graph_search;
     // recall@5 measured 0.94 / 0.92 / 1.00 / 1.00 at n = 500 / 2k /
-    // 20k / 50k (Profile graphsearch, budgeted insert) — one flat bar
-    // at ~half (0.45). This also permanently pins the class of the r11
-    // FP-divergent duplicate-neighbor bug, which was caught only by an
-    // ad-hoc rebuild-parity measurement.
+    // 20k / 50k (budgeted insert) — one flat bar at ~half (0.45). This
+    // also permanently pins the class of the r11 FP-divergent
+    // duplicate-neighbor bug, which was caught only by an ad-hoc
+    // rebuild-parity measurement.
     // r13 (VERDICT ask 1): routed through the INDEX-NATIVE path — the
     // gate now builds the graphIndex asset and inserts with
     // insertIncrementalIndexed (delta re-rank, no corpus renormalize /
@@ -439,7 +438,7 @@ private[graft] object GatesAnn {
       val (beam, hops, entries) = KnnGraph.servingBudget(n)
       // r13 opt (guide §2.6): build+index+insert and the brute-force
       // truth are independent chains — overlap them; values unchanged
-      val pooled = inParallel(Seq[() => DataFrame](
+      val pooled = Par.inParallel(Seq[() => DataFrame](
         () => {
           val g = KnnGraph.nnDescent(corpus, "vec_id", "v", k = 16,
             iterations = 2, earlyStop = false, corpusCount = n - 25)
@@ -485,7 +484,7 @@ private[graft] object GatesAnn {
       // r13 opt (guide §2.6): build+index+delete+search and the
       // brute-force truth over survivors are independent chains —
       // overlap them; values unchanged
-      val pooled = inParallel(Seq[() => (DataFrame, DataFrame)](
+      val pooled = Par.inParallel(Seq[() => (DataFrame, DataFrame)](
         () => {
           val g = KnnGraph.nnDescent(e, "vec_id", "v", k = 16,
             iterations = 2, earlyStop = false, corpusCount = n)
@@ -552,7 +551,7 @@ private[graft] object GatesAnn {
       // sequentially before). Every chain is seed-fixed; pooling changes
       // scheduling, never values, and the Seq order (hence union order
       // and output) is preserved.
-      val built = inParallel(Seq[() => (String, DataFrame)](
+      val built = Par.inParallel(Seq[() => (String, DataFrame)](
         () => "exact" -> Similarity.bruteForceTopK(e, q, "vec_id", "v",
           k = 5).localCheckpoint(true),
         () => "graph" -> {
@@ -587,7 +586,7 @@ private[graft] object GatesAnn {
       val truthPairs = exact.select("query_id", "neighbor_id")
       val nQ = q.count()
       val chance = lit(10.0 * 5 / n.toDouble)
-      inParallel(cands.map { case (name, cand) => () =>
+      Par.inParallel(cands.map { case (name, cand) => () =>
         val raw5 = cand.filter(col("rank") <= 5)
         // r13 opt: pin the tiny (<= 20x5 row) rerank result — it feeds
         // BOTH the hits join and the coverage aggregate, and each lazy

@@ -16,15 +16,14 @@ import graft.GateHelpers._
 private[graft] object GatesDedup {
 
   /** q_cc_dedup's banded candidate-pair rule (same source, n_chars within
-    * +/-2), shared with Profile's `cc` decomposition mode so the probe can
-    * never silently diverge from the gate it profiles (r10 ADVICE). The
-    * +/-2 tolerance is banded INTO the join key (width-3 buckets; side a
-    * probes its own bucket and both neighbors, so |delta| <= 2 never
-    * crosses more than one boundary): joining on source alone and
-    * post-filtering streams the full per-source cross product — quadratic
-    * in per-source density (r8 sf10: 12B intermediate rows for 87M pairs).
+    * +/-2). The +/-2 tolerance is banded INTO the join key (width-3
+    * buckets; side a probes its own bucket and both neighbors, so
+    * |delta| <= 2 never crosses more than one boundary): joining on
+    * source alone and post-filtering streams the full per-source cross
+    * product — quadratic in per-source density (r8 sf10: 12B
+    * intermediate rows for 87M pairs).
     */
-  private[graft] def bandedCharPairs(docs: DataFrame): DataFrame = {
+  private def bandedCharPairs(docs: DataFrame): DataFrame = {
     val probe = docs.select(col("doc_id"), col("source"), col("n_chars"),
       explode(sequence(expr("n_chars div 3") - 1,
         expr("n_chars div 3") + 1)).as("__b"))
@@ -531,12 +530,12 @@ private[graft] object GatesDedup {
       // sf1 and below): the corpus's replica families make the simhash
       // NEAR-DUP TRUTH quadratic in family size — at 100x bench scale
       // (500k docs, 100-member families) maxHamming=3 yields 214M
-      // candidate pairs (measured, Profile dsweep r10; minhash at the
-      // r=8 point yields 4.5M) and the sweep's CC-over-near-cliques
-      // exhausted a 48g heap. The engine's banding/skew guards behaved
-      // as designed; it is the GATE's truth shape that must stay
-      // bounded. Generator scale is exercised per-operator by the
-      // q_simhash_neardup / q_minhash_pairs gates.
+      // candidate pairs (measured r10; minhash at the r=8 point yields
+      // 4.5M) and the sweep's CC-over-near-cliques exhausted a 48g
+      // heap. The engine's banding/skew guards behaved as designed; it
+      // is the GATE's truth shape that must stay bounded. Generator
+      // scale is exercised per-operator by the q_simhash_neardup /
+      // q_minhash_pairs gates.
       val docs = Tables.documents(s, dir).filter(col("doc_id") < 50000)
         .select("doc_id", "text", "source")
       val OFF = 10000000L
@@ -577,7 +576,7 @@ private[graft] object GatesDedup {
       // counts — build them through a small pool so one chain's job
       // tail back-fills cores the others idle (strictly sequential
       // before). Values unchanged; only scheduling overlaps.
-      val stage1 = inParallel(Seq[() => Any](
+      val stage1 = Par.inParallel(Seq[() => Any](
         () => Dedup.minHashCandidates(union, "text", "doc_id",
             shingleSize = 5, numHashes = 64, bands = 8)
           .filter(col("est_jaccard") >= 0.5).localCheckpoint(true),
@@ -596,7 +595,7 @@ private[graft] object GatesDedup {
       val ids = union.select("doc_id")
       // second pooled stage: the two planted-recall counts and the two
       // CC label fixpoints all read only the checkpointed mh/sh
-      val stage2 = inParallel(Seq[() => Any](
+      val stage2 = Par.inParallel(Seq[() => Any](
         () => planted(mh),
         () => planted(sh),
         () => Dedup.dedupClusters(ids, "doc_id", mh)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.fitting.Fitting
 import graft.functions.Met
 import graft.operators._
 import graft.GateHelpers._
@@ -637,8 +638,8 @@ private[graft] object GatesPlant {
     "q_linreg" -> ((s, dir) => {
       Tables.lineitem(s, dir)
         .agg(
-          round(Fitting2.slope(col("l_quantity"), col("l_extendedprice")), 6).as("slope"),
-          round(Fitting2.intercept(col("l_quantity"), col("l_extendedprice")), 6).as("intercept"),
+          round(Fitting.slopeExpr(col("l_quantity"), col("l_extendedprice")), 6).as("slope"),
+          round(Fitting.interceptExpr(col("l_quantity"), col("l_extendedprice")), 6).as("intercept"),
           count(lit(1)).as("n"))
     }),
 
@@ -650,8 +651,8 @@ private[graft] object GatesPlant {
       Tables.lineitem(s, dir)
         .groupBy(col("l_returnflag"))
         .agg(
-          round(Fitting2.slope(col("l_quantity"), col("l_extendedprice")), 6).as("slope"),
-          round(Fitting2.intercept(col("l_quantity"), col("l_extendedprice")), 6).as("intercept"),
+          round(Fitting.slopeExpr(col("l_quantity"), col("l_extendedprice")), 6).as("slope"),
+          round(Fitting.interceptExpr(col("l_quantity"), col("l_extendedprice")), 6).as("intercept"),
           round(pow(corr(col("l_quantity"), col("l_extendedprice")), 2), 6).as("r2"),
           count(lit(1)).as("n"))
         .orderBy("l_returnflag")

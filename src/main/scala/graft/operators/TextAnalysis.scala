@@ -825,8 +825,8 @@ object TextAnalysis {
       .select((col("__pos") + 1).cast("double").as("rnk"),
         col("__tf").cast("double").as("tf"))
     ranked.agg(
-      graft.Fitting2.slope(log(col("rnk")), log(col("tf"))).as("slope"),
-      graft.Fitting2.intercept(log(col("rnk")), log(col("tf"))).as("intercept"),
+      graft.fitting.Fitting.slopeExpr(log(col("rnk")), log(col("tf"))).as("slope"),
+      graft.fitting.Fitting.interceptExpr(log(col("rnk")), log(col("tf"))).as("intercept"),
       pow(corr(log(col("rnk")), log(col("tf"))), 2).as("r2"),
       count(lit(1)).as("n_top"))
   }
