@@ -68,19 +68,14 @@ final class StaticYawMisalignment(
     }
   }
 
-  /** Rated power per turbine (collected once per entry point). */
-  private def ratedByTurbine: Map[String, Double] =
-    plant.assetDf.select("asset_id", "rated_power").collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-
   /** Normal-operation frame: pitch at or below threshold (one-sided,
     * yaw_misalignment.py:510), complete rows, power as a fraction of rated.
     */
-  private def normalBase(rated: Map[String, Double]): org.apache.spark.sql.DataFrame =
+  private def normalBase: org.apache.spark.sql.DataFrame =
     plant.scadaDf
       .filter(col("WROT_BlPthAngVal") <= pitchThresholdDeg)
       .na.drop(Seq("WTUR_W", "WMET_HorWdSpd", "WMET_HorWdDirRel"))
-      .withColumn("p_frac", col("WTUR_W") / typedLit(rated).apply(col("asset_id")))
+      .withColumn("p_frac", col("WTUR_W") / typedLit(plant.ratedPower).apply(col("asset_id")))
 
   private def powerBin(pf: Column): Column =
     when(col("p_frac") > minPowerFilter && col("p_frac") <= pf,
@@ -124,7 +119,7 @@ final class StaticYawMisalignment(
     * slice, vane binning. [[run]] consumes this directly in the no-UQ path.
     */
   def vaneBins(maxPf: Double = 0.95, madThresh: Double = 7.0): org.apache.spark.sql.DataFrame = {
-    val base = normalBase(ratedByTurbine)
+    val base = normalBase
       .withColumn("__pbin", powerBin(lit(maxPf)))
     val med = base.filter(col("__pbin").isNotNull)
       .groupBy("asset_id", "__pbin")
@@ -152,8 +147,7 @@ final class StaticYawMisalignment(
     val simMad: Map[Int, Double] =
       (0 until sims).map(n => n -> (if (uq) (4 + rng.nextInt(10)).toDouble else 7.0)).toMap
 
-    val rated = ratedByTurbine
-    val base = normalBase(rated)
+    val base = normalBase
 
     // median/MAD of wind speed per (max-power-filter value, turbine, power
     // bin) — the outlier-filter statistics, one explode by <= 7 distinct

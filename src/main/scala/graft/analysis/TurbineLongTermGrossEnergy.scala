@@ -2,6 +2,7 @@ package graft.analysis
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pins
 
 import graft.fitting.Fitting
 import graft.functions.Met
@@ -131,11 +132,10 @@ final class TurbineLongTermGrossEnergy(
       .withColumn("wd", Met.windDirection(col("u"), col("v")))
   }
 
-  def run(): Result = {
+  def run(): Result = Pins.scoped { pins =>
     val rng = new scala.util.Random(seed)
     val turbines = plant.turbineIds
-    val rated = plant.assetDf.select("asset_id", "rated_power").collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val rated = plant.ratedPower
     val products = reanalysisProducts
       .map { ps =>
         ps.foreach(p => require(plant.reanalysis.contains(p), s"unknown reanalysis product '$p'"))
@@ -154,17 +154,23 @@ final class TurbineLongTermGrossEnergy(
     val results = new Array[Double](sims)
     var perTurbineAcc = Map.empty[String, Double]
 
-    // Memoize the filtered daily table per threshold CONFIG (<= numSim
-    // distinct aggregation plans — the reference refilters per simulation,
+    // Memoize the daily table per threshold CONFIG (<= numSim distinct
+    // aggregation plans — the reference refilters per simulation,
     // turbine_long_term_gross_energy.py TODO notes the resulting slowness)
     // and the collected arrays per (config, product): one join + collect per
     // pair no matter how many simulations draw it (reference memo at
-    // turbine_long_term_gross_energy.py:392-415).
+    // turbine_long_term_gross_energy.py:392-415). The valid-day table
+    // (#turbines x #days rows) is pinned: the imputation plan references it
+    // a dozen times (span, grid, both correlation sides, the pair/fit/
+    // prediction joins), and each unpinned reference would re-run the
+    // frozen-sensor window and the per-bin median filter over SCADA. The
+    // imputed table stays a lazy cache: the UQ bootstrap draws rows by their
+    // collected order, which follows the join plan over the cached table.
     val dailyCache = scala.collection.mutable.Map.empty[(Double, Double, Double), DataFrame]
     def dailyFor(cfg: (Double, Double, Double)): DataFrame =
       dailyCache.getOrElseUpdate(cfg, {
-        val valid = dailyValid(filteredScada(rated, cfg._1, cfg._2), cfg._3)
-        (if (imputeMissingDays) dailyImputed(valid, turbines) else valid).cache()
+        val valid = pins.pin(dailyValid(filteredScada(rated, cfg._1, cfg._2), cfg._3))
+        if (imputeMissingDays) dailyImputed(valid, turbines).cache() else valid
       })
     val memo = scala.collection.mutable.Map.empty[((Double, Double, Double), String),
       (Map[String, Array[org.apache.spark.sql.Row]], Array[org.apache.spark.sql.Row])]
@@ -178,34 +184,35 @@ final class TurbineLongTermGrossEnergy(
         (joined, rean.select("ws", "wd", "rho", "day").collect())
       })
 
-    for (n <- 0 until sims) {
-      val cfg = (sample(maxPowerFilter), sample(windBinThreshold),
-        sample(correctionThreshold))
-      val scadaFrac = if (uq) 1.0 + rng.nextGaussian() * uncertaintyScada else 1.0
-      val product = products(if (uq) rng.nextInt(products.size) else n % products.size)
-      val (joined, ltRows) = productData(cfg, product)
-      val perTurbine = turbines.map { t =>
-        val rows = joined.getOrElse(t, Array.empty)
-        val xs = rows.map(r => (r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-        val ys = rows.map(_.getDouble(1) * scadaFrac)
-        val sampleIdx =
-          if (uq) Array.fill(ys.length)(rng.nextInt(ys.length))
-          else ys.indices.toArray
-        val model = TurbineLongTermGrossEnergy.fitPowerModel(
-          sampleIdx.map(xs), sampleIdx.map(ys))
-        // apply to full LT record; per-day energy, cap at plausible bounds
-        val maxDaily = rated(t) * 24.0 * 1.2
-        val lt = ltRows.map { r =>
-          val p = model(r.getDouble(0), r.getDouble(1), r.getDouble(2))
-          math.min(math.max(p, 0.0), maxDaily)
-        }
-        val years = lt.length / 365.25
-        t -> (lt.sum / years / 1e6) // GWh/yr
-      }.toMap
-      if (n == 0) perTurbineAcc = perTurbine
-      results(n) = perTurbine.values.sum
-    }
-    dailyCache.values.foreach(_.unpersist())
+    try {
+      for (n <- 0 until sims) {
+        val cfg = (sample(maxPowerFilter), sample(windBinThreshold),
+          sample(correctionThreshold))
+        val scadaFrac = if (uq) 1.0 + rng.nextGaussian() * uncertaintyScada else 1.0
+        val product = products(if (uq) rng.nextInt(products.size) else n % products.size)
+        val (joined, ltRows) = productData(cfg, product)
+        val perTurbine = turbines.map { t =>
+          val rows = joined.getOrElse(t, Array.empty)
+          val xs = rows.map(r => (r.getDouble(2), r.getDouble(3), r.getDouble(4)))
+          val ys = rows.map(_.getDouble(1) * scadaFrac)
+          val sampleIdx =
+            if (uq) Array.fill(ys.length)(rng.nextInt(ys.length))
+            else ys.indices.toArray
+          val model = TurbineLongTermGrossEnergy.fitPowerModel(
+            sampleIdx.map(xs), sampleIdx.map(ys))
+          // apply to full LT record; per-day energy, cap at plausible bounds
+          val maxDaily = rated(t) * 24.0 * 1.2
+          val lt = ltRows.map { r =>
+            val p = model(r.getDouble(0), r.getDouble(1), r.getDouble(2))
+            math.min(math.max(p, 0.0), maxDaily)
+          }
+          val years = lt.length / 365.25
+          t -> (lt.sum / years / 1e6) // GWh/yr
+        }.toMap
+        if (n == 0) perTurbineAcc = perTurbine
+        results(n) = perTurbine.values.sum
+      }
+    } finally dailyCache.values.foreach(_.unpersist())
     Result(results, perTurbineAcc)
   }
 }

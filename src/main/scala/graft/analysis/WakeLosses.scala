@@ -1,7 +1,8 @@
 package graft.analysis
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pins
 
 import graft.fitting.Fitting
 import graft.functions.Met
@@ -86,10 +87,6 @@ final class WakeLosses(
     * Driver-side over the tiny pair table; wraparound handled via wrap180.
     */
   def freestreamByBin(sectorWidth: Double = freestreamSectorWidth): Map[Int, Seq[String]] = {
-    val pairs = plant.assetDistances
-      .select("asset_a", "asset_b", "bearing_deg")
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
     val turbines = plant.turbineIds
     val turbineSet = turbines.toSet
     (0 until nBins(wdBinWidth)).map { b =>
@@ -97,7 +94,7 @@ final class WakeLosses(
       val free = turbines.filter { t =>
         // upwind neighbors: bearing from t to neighbor within sector of wd
         // (only turbines block; met towers in the asset table don't wake)
-        !pairs.exists { case (a, nb, bearing) =>
+        !assetPairs.exists { case (a, nb, bearing) =>
           a == t && nb != t && turbineSet(nb) &&
             math.abs(((bearing - wd) % 360 + 540) % 360 - 180) <= sectorWidth / 2
         }
@@ -106,6 +103,13 @@ final class WakeLosses(
       b -> (if (free.nonEmpty) free else turbines)
     }.toMap
   }
+
+  // (asset_a, asset_b, bearing from a to b), collected once per analysis
+  private lazy val assetPairs: Array[(String, String, Double)] =
+    plant.assetDistances
+      .select("asset_a", "asset_b", "bearing_deg")
+      .collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
 
   /** Per-turbine derating/curtailment flags (wake_losses.py:1057-1095):
     * window-range flag (plausible ws, implausible power) OR a median/MAD
@@ -220,10 +224,6 @@ final class WakeLosses(
     }
   }
 
-  /** One wake-loss evaluation for a fixed parameter draw. `base` is the
-    * na-dropped SCADA projection, cached by [[run]] so UQ draws don't
-    * re-scan the fact table from parquet.
-    */
   // last reanalysis bucket per product, for the LT windiness window
   private lazy val reanEnd: Map[String, Long] =
     plant.reanalysis.keys.map { p =>
@@ -245,80 +245,91 @@ final class WakeLosses(
       .groupBy("wd_bin", "ws_bin").agg(count(lit(1)).as("freq"))
   }
 
+  /** Sums over one (wd_bin, ws_bin) bin of the POR timestamps: actual and
+    * freestream power, and the row count. `key` is None when an edge is
+    * null; such a bin counts toward the POR totals but never matches the
+    * long-term wind rose.
+    */
+  private final case class BinSums(key: Option[(Int, Int)], actual: Double,
+                                   freestream: Double, n: Long)
+
+  private def binSums(r: Row, i: Int): BinSums =
+    BinSums(if (r.isNullAt(i) || r.isNullAt(i + 1)) None else Some((r.getInt(i), r.getInt(i + 1))),
+      r.getDouble(i + 2), r.getDouble(i + 3), r.getLong(i + 4))
+
+  /** One wake-loss evaluation for a fixed parameter draw. `base` is the
+    * na-dropped SCADA projection, pinned by [[run]] so UQ draws don't
+    * re-scan the fact table. The derate-filtered SCADA and the
+    * per-timestamp frame are pinned for the draw: the bias fit and both bin
+    * reductions re-read them. The four losses come from three bounded
+    * collects (plant bins, turbine bins, the long-term wind rose), weighted
+    * on the driver.
+    */
   private def runOnce(base: DataFrame, product: String, sectorWidth: Double,
                       madThresh: Double, wsStart: Double, maxPf: Double,
-                      years: Int, rated: Map[String, Double]): Once = {
+                      years: Int): Once = Pins.scoped { pins =>
     val nTurbines = plant.turbineIds.size
     val scada =
       if (deratingFilter)
-        withDerateFlag(base, rated, wsStart, maxPf, madThresh)
-          .filter(!col("derate_flag")).drop("derate_flag")
+        pins.pin(withDerateFlag(base, plant.ratedPower, wsStart, maxPf, madThresh)
+          .filter(!col("derate_flag")).drop("derate_flag"))
       else base
-    val ts = timestampAggregate(scada, sectorWidth, nTurbines).cache()
+    val ts = pins.pin(timestampAggregate(scada, sectorWidth, nTurbines))
 
-    // POR losses (wake_losses.py:653-731): potential = freestream mean x N
-    val por = ts.agg(
-      sum(col("plant_power")).as("actual"),
-      sum(col("freestream_power") * nTurbines).as("potential")).head()
-    val porLoss = 1.0 - por.getDouble(0) / por.getDouble(1)
-
-    // per-turbine POR loss: actual turbine power vs freestream mean
-    val perTurbinePor = scada.join(ts.select("time", "freestream_power"), Seq("time"))
-      .groupBy("asset_id")
-      .agg((lit(1.0) - sum(col("WTUR_W")) / sum(col("freestream_power"))).as("loss"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-
-    // LT correction (wake_losses.py:1098-1303): bin POR by (wd, ws) with the
-    // bias-corrected freestream ws, weight by the reanalysis long-term
-    // (wd, ws) frequency table
+    // LT binning (wake_losses.py:1098-1147): (wd, ws) bins on the
+    // bias-corrected freestream ws
     val fit = wsBiasFit(ts, product)
-    val tsCorr = ts.withColumn("ws_corr",
-      lit(fit.intercept) + lit(fit.slope) * col("freestream_ws"))
-      .withColumn("ws_bin", floor(col("ws_corr") / wsBinWidthLt).cast("int"))
-    val binnedPlant = tsCorr
-      .groupBy("wd_bin", "ws_bin")
-      .agg(avg(col("plant_power")).as("actual_mean"),
-        avg(col("freestream_power") * nTurbines).as("potential_mean"))
+    val tsBinned = ts.withColumn("ws_bin", floor(
+      (lit(fit.intercept) + lit(fit.slope) * col("freestream_ws")) / wsBinWidthLt).cast("int"))
+    val plantBins = tsBinned.groupBy("wd_bin", "ws_bin")
+      .agg(sum(col("plant_power")), sum(col("freestream_power")), count(lit(1)))
+      .collect().map(binSums(_, 0)).toSeq
+    // per-turbine bins: each turbine's power vs the freestream mean
+    val turbineBins = scada
+      .join(tsBinned.select("time", "wd_bin", "ws_bin", "freestream_power"), Seq("time"))
+      .groupBy("asset_id", "wd_bin", "ws_bin")
+      .agg(sum(col("WTUR_W")), sum(col("freestream_power")), count(lit(1)))
+      .collect().groupBy(_.getString(0)).map { case (t, rs) => t -> rs.map(binSums(_, 1)).toSeq }
     // long-term wind rose over the last `years` calendar years of reanalysis
     // (wake_losses.py:201 num_years_LT; end-anchored like the AEP windiness)
-    val freq = longTermFrequency(product, years)
-    // above the no-wakes threshold the plant is assumed wake-free: the bin's
-    // actual is replaced by its potential (wake_losses.py:202-203)
+    val freq = longTermFrequency(product, years).collect()
+      .filterNot(r => r.isNullAt(0) || r.isNullAt(1))
+      .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
+
+    // POR loss (wake_losses.py:653-731): potential = freestream power x
+    // `scale` (N for the plant, 1 per turbine); no timestamps gives 0/0 = NaN
+    def porLoss(bins: Seq[BinSums], scale: Double): Double =
+      1.0 - bins.map(_.actual).sum / (bins.map(_.freestream).sum * scale)
+    // LT loss (wake_losses.py:1150-1303): per-bin mean actual and potential
+    // weighted by the bin's long-term count. Above the no-wakes threshold
+    // the bin is assumed wake-free, its actual replaced by its potential
+    // (wake_losses.py:202-203). No bin shared with the wind rose means no
+    // long-term weighting is possible: None.
     val noWakesBin = math.floor(noWakesWsThresh / wsBinWidthLt).toInt
-    def wakeFree(actual: org.apache.spark.sql.Column,
-                 potential: org.apache.spark.sql.Column) =
-      if (!assumeNoWakesHighWs) actual
-      else when(col("ws_bin") >= noWakesBin, potential).otherwise(actual)
-    val lt = binnedPlant.join(broadcast(freq), Seq("wd_bin", "ws_bin"), "inner")
-      .agg(sum(wakeFree(col("actual_mean"), col("potential_mean")) * col("freq")).as("a"),
-        sum(col("potential_mean") * col("freq")).as("p")).head()
-    // an empty (wd, ws)-bin intersection between the POR and the reanalysis
-    // wind rose means no long-term weighting is possible -> NaN, not a crash
-    val ltLoss =
-      if (lt.isNullAt(0) || lt.isNullAt(1)) Double.NaN
-      else 1.0 - lt.getDouble(0) / lt.getDouble(1)
+    def ltLoss(bins: Seq[BinSums], scale: Double): Option[Double] = {
+      val weighted = bins.flatMap(b => b.key.flatMap(freq.get).map(f => (b, f.toDouble)))
+      if (weighted.isEmpty) None
+      else {
+        var a = 0.0; var p = 0.0
+        weighted.foreach { case (b, f) =>
+          val actual = b.actual / b.n
+          val potential = b.freestream * scale / b.n
+          val wakeFree = assumeNoWakesHighWs && b.key.exists(_._2 >= noWakesBin)
+          a += (if (wakeFree) potential else actual) * f
+          p += potential * f
+        }
+        Some(1.0 - a / p)
+      }
+    }
 
-    // per-turbine LT loss (wake_losses.py:1236-1303): same bin weighting
-    // with each turbine's actual power vs the freestream mean
-    val perTurbineBins = scada
-      .join(tsCorr.select("time", "wd_bin", "ws_bin", "freestream_power"), Seq("time"))
-      .groupBy("asset_id", "wd_bin", "ws_bin")
-      .agg(avg(col("WTUR_W")).as("t_actual"),
-        avg(col("freestream_power")).as("t_potential"))
-    val perTurbineLt = perTurbineBins.join(broadcast(freq), Seq("wd_bin", "ws_bin"), "inner")
-      .groupBy("asset_id")
-      .agg((lit(1.0) -
-        sum(wakeFree(col("t_actual"), col("t_potential")) * col("freq"))
-          / sum(col("t_potential") * col("freq"))).as("loss"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-
-    ts.unpersist()
-    Once(porLoss, perTurbinePor, ltLoss, perTurbineLt)
+    Once(
+      por = porLoss(plantBins, nTurbines),
+      porByT = turbineBins.map { case (t, bs) => t -> porLoss(bs, 1.0) },
+      lt = ltLoss(plantBins, nTurbines).getOrElse(Double.NaN),
+      ltByT = turbineBins.flatMap { case (t, bs) => ltLoss(bs, 1.0).map(t -> _) })
   }
 
-  def run(): Result = {
-    val rated = plant.assetDf.select("asset_id", "rated_power").collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+  def run(): Result = Pins.scoped { pins =>
     val products = reanalysisProducts
       .map { ps =>
         ps.foreach(p => require(plant.reanalysis.contains(p), s"unknown reanalysis product '$p'"))
@@ -330,14 +341,13 @@ final class WakeLosses(
         col("WMET_HorWdDir"))
       .na.drop()
     // optional POR bounds (wake_losses.py:169-170)
-    val base = Seq(
+    val base = pins.pin(Seq(
       startDate.map(d => col("time") >= lit(d)),
       endDate.map(d => col("time") <= lit(d)))
-      .flatten.foldLeft(base0)(_ filter _)
-      .cache()
+      .flatten.foldLeft(base0)(_ filter _))
     val runs: Seq[Once] =
       if (!uq) products.map(p => runOnce(base, p, freestreamSectorWidth,
-        windBinMadThresh, deratingWsStart, maxPowerFilter, numYearsLt._2, rated))
+        windBinMadThresh, deratingWsStart, maxPowerFilter, numYearsLt._2))
       else {
         val rng = new scala.util.Random(seed)
         (0 until numSim).map { _ =>
@@ -352,10 +362,9 @@ final class WakeLosses(
             rng.nextInt(((uncertaintyMaxPower._2 - uncertaintyMaxPower._1) * 100).round.toInt + 1) / 100.0
           val yrs = numYearsLt._1 +
             rng.nextInt(numYearsLt._2 - numYearsLt._1 + 1)
-          runOnce(base, p, sector.toDouble, mad.toDouble, ws0, mpf, yrs, rated)
+          runOnce(base, p, sector.toDouble, mad.toDouble, ws0, mpf, yrs)
         }
       }
-    base.unpersist()
     def meanOf(xs: Seq[Double]) = xs.sum / xs.size
     def stdOf(xs: Seq[Double]) = {
       val m = meanOf(xs)

@@ -31,9 +31,15 @@ final case class PlantData(
   def curtailDf: DataFrame = curtail.getOrElse(sys.error("curtail bucket not loaded"))
   def assetDf: DataFrame = asset.getOrElse(sys.error("asset bucket not loaded"))
 
-  def turbineIds: Seq[String] =
+  /** Turbine ids, sorted; read from the asset table once per plant. */
+  lazy val turbineIds: Seq[String] =
     assetDf.filter(col("type") === "turbine" || col("type").isNull)
       .select("asset_id").collect().map(_.getString(0)).toSeq.sorted
+
+  /** Rated power per asset, kW; read from the asset table once per plant. */
+  lazy val ratedPower: Map[String, Double] =
+    assetDf.select("asset_id", "rated_power").collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
 
   /** One asset's rows (plant.py:1178-1189). */
   def turbineDf(id: String): DataFrame = scadaDf.filter(col("asset_id") === id)

@@ -254,6 +254,15 @@ class AnalysesSpec extends SparkSpec {
       s"tower=${towerRef.porLossPlant} scada=${scadaRef.porLossPlant}")
   }
 
+  test("WakeLosses on a plant where no timestamp has every turbine reporting is NaN") {
+    import org.apache.spark.sql.functions._
+    // the asset table still lists four turbines, so no timestamp qualifies
+    val partial = plant.copy(scada = Some(plant.scadaDf.filter(col("asset_id") =!= "T4")))
+    val wl = new WakeLosses(partial).run()
+    assert(wl.porLossPlant.isNaN && wl.ltLossPlant.isNaN, s"$wl")
+    assert(wl.porLossByTurbine.isEmpty && wl.ltLossByTurbine.isEmpty, s"$wl")
+  }
+
   test("WakeLosses UQ bootstrap yields a stable mean and a spread") {
     val wl = new WakeLosses(plant, uq = true, numSim = 5).run()
     assert(math.abs(wl.porLossPlant) < 0.03, s"UQ mean drifted: ${wl.porLossPlant}")

@@ -1,0 +1,79 @@
+package graft.analysis
+
+import graft.SparkSpec
+
+/** Pins the TIE and wake `Result`s on the synthetic plant (60 d, 3 y of
+  * reanalysis) with and without UQ (`numSim = 3`, default seed). The
+  * goldens were captured before these analyses pinned their re-read
+  * intermediates and moved wake's loss reductions to the driver; only the
+  * floating-point summation order may differ, so every field must agree
+  * within 1e-9 relative.
+  */
+class AnalysisResultPinSpec extends SparkSpec {
+
+  private lazy val plant = SyntheticPlant.build(spark, days = 60, reanalysisYears = 3)
+
+  private def close(got: Double, want: Double, what: String): Unit =
+    assert(math.abs(got - want) <= 1e-9 * math.abs(want), s"$what: got $got, want $want")
+
+  private def closeMap(got: Map[String, Double], want: Map[String, Double], what: String): Unit = {
+    assert(got.keySet == want.keySet, s"$what keys: $got")
+    want.foreach { case (k, v) => close(got(k), v, s"$what($k)") }
+  }
+
+  private def checkWake(r: WakeLosses#Result, por: Double, porByT: Map[String, Double],
+                        lt: Double, ltByT: Map[String, Double],
+                        porStd: Double, ltStd: Double): Unit = {
+    close(r.porLossPlant, por, "porLossPlant")
+    closeMap(r.porLossByTurbine, porByT, "porLossByTurbine")
+    close(r.ltLossPlant, lt, "ltLossPlant")
+    closeMap(r.ltLossByTurbine, ltByT, "ltLossByTurbine")
+    close(r.porLossStd, porStd, "porLossStd")
+    close(r.ltLossStd, ltStd, "ltLossStd")
+  }
+
+  private def checkTie(r: TurbineLongTermGrossEnergy#Result, plantGwh: Array[Double],
+                       perTurbine: Map[String, Double]): Unit = {
+    assert(r.plantGrossGwhPerYear.length == plantGwh.length)
+    r.plantGrossGwhPerYear.zip(plantGwh).zipWithIndex.foreach { case ((g, w), i) =>
+      close(g, w, s"plantGrossGwhPerYear($i)")
+    }
+    closeMap(r.perTurbine, perTurbine, "perTurbine")
+  }
+
+  test("WakeLosses Result without UQ is unchanged") {
+    checkWake(new WakeLosses(plant, numSim = 3).run(),
+      4.538856659452861E-5,
+      Map("T1" -> -6.208408049346303E-4, "T2" -> 5.0741021584643775E-5,
+        "T3" -> 5.568564910756191E-4, "T4" -> 1.9479755865192683E-4),
+      -1.6489844418732247E-4,
+      Map("T1" -> -8.724313134449435E-4, "T2" -> -1.5828065454326357E-4,
+        "T3" -> 4.1801574127742214E-4, "T4" -> -4.6897550036728575E-5),
+      0.0, 0.0)
+  }
+
+  test("WakeLosses Result with UQ is unchanged") {
+    checkWake(new WakeLosses(plant, uq = true, numSim = 3).run(),
+      -1.0697297925673273E-4,
+      Map("T1" -> -7.733038631298298E-4, "T2" -> -1.0161970872094954E-4,
+        "T3" -> 4.0457287680554604E-4, "T4" -> 4.245877801930161E-5),
+      -3.359919678271872E-4,
+      Map("T1" -> -0.001053742731279117, "T2" -> -3.5132910918885446E-4,
+        "T3" -> 2.6485083050342695E-4, "T4" -> -2.0374686134183584E-4),
+      1.1861381932008947E-4, 1.2737483197963683E-4)
+  }
+
+  test("TurbineLongTermGrossEnergy Result without UQ is unchanged") {
+    checkTie(new TurbineLongTermGrossEnergy(plant, numSim = 3).run(),
+      Array(20.51871230848135),
+      Map("T1" -> 5.135049480360913, "T2" -> 5.125554042780971,
+        "T3" -> 5.127782463909754, "T4" -> 5.130326321429714))
+  }
+
+  test("TurbineLongTermGrossEnergy Result with UQ is unchanged") {
+    checkTie(new TurbineLongTermGrossEnergy(plant, uq = true, numSim = 3).run(),
+      Array(20.235257783212106, 21.041637110041997, 20.406956141739826),
+      Map("T1" -> 5.016222332029036, "T2" -> 5.099985756924739,
+        "T3" -> 5.10062739690254, "T4" -> 5.018422297355787))
+  }
+}
