@@ -10,12 +10,10 @@ package graft
   * never values. Pool is bounded (default 3 in flight) per the guide's
   * guidance: enough to fill the tail, not enough to fight for executors.
   *
-  * r14: hoisted out of gates.GateHelpers so operator internals (e.g.
-  * [[operators.KnnGraph.removeIds]]'s independent heal / re-hub /
-  * entry-re-election chains) can use it without a gates dependency,
-  * plus the ADVICE fixes — per-thunk job descriptions (thread-local,
-  * guide §1.5), ExecutionException unwrapping, and cancellation of
-  * surviving chains once one has failed.
+  * r14: hoisted out of gates.GateHelpers so operator internals can use
+  * it without a gates dependency, plus the ADVICE fixes — per-thunk job
+  * descriptions (thread-local, guide §1.5), ExecutionException
+  * unwrapping, and cancellation of surviving chains once one has failed.
   */
 private[graft] object Par {
   def inParallel[T](thunks: Seq[() => T], slots: Int = 3,

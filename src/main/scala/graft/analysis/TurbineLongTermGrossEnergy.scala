@@ -164,55 +164,56 @@ final class TurbineLongTermGrossEnergy(
     // a dozen times (span, grid, both correlation sides, the pair/fit/
     // prediction joins), and each unpinned reference would re-run the
     // frozen-sensor window and the per-bin median filter over SCADA. The
-    // imputed table stays a lazy cache: the UQ bootstrap draws rows by their
-    // collected order, which follows the join plan over the cached table.
+    // imputed table is read once per (config, product), by the collect.
     val dailyCache = scala.collection.mutable.Map.empty[(Double, Double, Double), DataFrame]
     def dailyFor(cfg: (Double, Double, Double)): DataFrame =
       dailyCache.getOrElseUpdate(cfg, {
         val valid = pins.pin(dailyValid(filteredScada(rated, cfg._1, cfg._2), cfg._3))
-        if (imputeMissingDays) dailyImputed(valid, turbines).cache() else valid
+        if (imputeMissingDays) dailyImputed(valid, turbines) else valid
       })
     val memo = scala.collection.mutable.Map.empty[((Double, Double, Double), String),
       (Map[String, Array[org.apache.spark.sql.Row]], Array[org.apache.spark.sql.Row])]
+    // each turbine's rows are sorted by day, so the UQ bootstrap's draws
+    // do not depend on the order the join plan collects them in
     def productData(cfg: (Double, Double, Double), product: String) =
       memo.getOrElseUpdate((cfg, product), {
         val rean = dailyReanalysis(product)
         val joined = dailyFor(cfg).join(rean, Seq("day"))
-          .select(col("asset_id"), col("energy_corrected"), col("ws"), col("wd"), col("rho"))
+          .select(col("asset_id"), col("energy_corrected"), col("ws"), col("wd"), col("rho"),
+            col("day"))
           .collect()
           .groupBy(_.getString(0))
+          .map { case (t, rows) => t -> rows.sortBy(_.getTimestamp(5).getTime) }
         (joined, rean.select("ws", "wd", "rho", "day").collect())
       })
 
-    try {
-      for (n <- 0 until sims) {
-        val cfg = (sample(maxPowerFilter), sample(windBinThreshold),
-          sample(correctionThreshold))
-        val scadaFrac = if (uq) 1.0 + rng.nextGaussian() * uncertaintyScada else 1.0
-        val product = products(if (uq) rng.nextInt(products.size) else n % products.size)
-        val (joined, ltRows) = productData(cfg, product)
-        val perTurbine = turbines.map { t =>
-          val rows = joined.getOrElse(t, Array.empty)
-          val xs = rows.map(r => (r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-          val ys = rows.map(_.getDouble(1) * scadaFrac)
-          val sampleIdx =
-            if (uq) Array.fill(ys.length)(rng.nextInt(ys.length))
-            else ys.indices.toArray
-          val model = TurbineLongTermGrossEnergy.fitPowerModel(
-            sampleIdx.map(xs), sampleIdx.map(ys))
-          // apply to full LT record; per-day energy, cap at plausible bounds
-          val maxDaily = rated(t) * 24.0 * 1.2
-          val lt = ltRows.map { r =>
-            val p = model(r.getDouble(0), r.getDouble(1), r.getDouble(2))
-            math.min(math.max(p, 0.0), maxDaily)
-          }
-          val years = lt.length / 365.25
-          t -> (lt.sum / years / 1e6) // GWh/yr
-        }.toMap
-        if (n == 0) perTurbineAcc = perTurbine
-        results(n) = perTurbine.values.sum
-      }
-    } finally dailyCache.values.foreach(_.unpersist())
+    for (n <- 0 until sims) {
+      val cfg = (sample(maxPowerFilter), sample(windBinThreshold),
+        sample(correctionThreshold))
+      val scadaFrac = if (uq) 1.0 + rng.nextGaussian() * uncertaintyScada else 1.0
+      val product = products(if (uq) rng.nextInt(products.size) else n % products.size)
+      val (joined, ltRows) = productData(cfg, product)
+      val perTurbine = turbines.map { t =>
+        val rows = joined.getOrElse(t, Array.empty)
+        val xs = rows.map(r => (r.getDouble(2), r.getDouble(3), r.getDouble(4)))
+        val ys = rows.map(_.getDouble(1) * scadaFrac)
+        val sampleIdx =
+          if (uq) Array.fill(ys.length)(rng.nextInt(ys.length))
+          else ys.indices.toArray
+        val model = TurbineLongTermGrossEnergy.fitPowerModel(
+          sampleIdx.map(xs), sampleIdx.map(ys))
+        // apply to full LT record; per-day energy, cap at plausible bounds
+        val maxDaily = rated(t) * 24.0 * 1.2
+        val lt = ltRows.map { r =>
+          val p = model(r.getDouble(0), r.getDouble(1), r.getDouble(2))
+          math.min(math.max(p, 0.0), maxDaily)
+        }
+        val years = lt.length / 365.25
+        t -> (lt.sum / years / 1e6) // GWh/yr
+      }.toMap
+      if (n == 0) perTurbineAcc = perTurbine
+      results(n) = perTurbine.values.sum
+    }
     Result(results, perTurbineAcc)
   }
 }

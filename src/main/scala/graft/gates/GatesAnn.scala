@@ -392,7 +392,6 @@ private[graft] object GatesAnn {
         () => {
           val g = KnnGraph.nnDescent(e, "vec_id", "v", k = 16,
             iterations = 2, earlyStop = false, corpusCount = n)
-            .localCheckpoint(true)
           val index = KnnGraph.graphIndex(g, e, "vec_id", "v",
             entries = entries, corpusCount = n).localCheckpoint(true)
           KnnGraph.searchGraphIndexed(index, q, "vec_id", "v", k = 5,
@@ -442,7 +441,6 @@ private[graft] object GatesAnn {
         () => {
           val g = KnnGraph.nnDescent(corpus, "vec_id", "v", k = 16,
             iterations = 2, earlyStop = false, corpusCount = n - 25)
-            .localCheckpoint(true)
           val idx = KnnGraph.graphIndex(g, corpus, "vec_id", "v",
             entries = entries, corpusCount = n - 25).localCheckpoint(true)
           KnnGraph.indexGraph(KnnGraph.insertIncrementalIndexed(
@@ -488,7 +486,6 @@ private[graft] object GatesAnn {
         () => {
           val g = KnnGraph.nnDescent(e, "vec_id", "v", k = 16,
             iterations = 2, earlyStop = false, corpusCount = n)
-            .localCheckpoint(true)
           val idx = KnnGraph.graphIndex(g, e, "vec_id", "v",
             entries = entries, corpusCount = n).localCheckpoint(true)
           val after = KnnGraph.removeIds(idx,
@@ -558,7 +555,6 @@ private[graft] object GatesAnn {
           val (beam, hops, entries) = KnnGraph.servingBudget(n)
           val g = KnnGraph.nnDescent(e, "vec_id", "v", k = 16,
             iterations = 2, earlyStop = false, corpusCount = n)
-            .localCheckpoint(true)
           val idx = KnnGraph.graphIndex(g, e, "vec_id", "v",
             entries = entries, corpusCount = n).localCheckpoint(true)
           KnnGraph.searchGraphIndexed(idx, q, "vec_id", "v", k = kc,

@@ -54,10 +54,12 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType,
   *    recall@k vs the exact graph is non-decreasing per round; with
   *    `earlyStop` the loop ends when a round adopts no new edge
   *    (one `isEmpty` action on an anti-join — limit-1, cheap).
-  *  - '''Lineage''': the graph is localCheckpoint'd per round (the
-  *    iterated plan otherwise grows by two joins + one agg per
-  *    round, the same trap the connected-components loop hit at
-  *    sf10 — see [[Dedup.dedupClusters]]).
+  *  - '''Lineage''': pins follow the one rule in
+  *    [[org.apache.spark.sql.graft.Pins]]: per-round loop state is
+  *    pinned so the plan stays one round deep, a frame is pinned only
+  *    when later plans re-read it, and a projection or explode of an
+  *    input or of another pin is left lazy. Each pin names what
+  *    re-reads it.
   *
   * Determinism: bucketing and reverse-cap ordering are xxhash64 of
   * (id, seed, round); top-k ties break by (score desc, id asc) inside
@@ -154,6 +156,7 @@ object KnnGraph {
     requireIntegralId(corpus, idCol, "nnDescent")
     val idType = corpus.schema(idCol).dataType
     val maxRev = if (maxReverse > 0) maxReverse else k
+    // pinned: the init self-join, the rescue joins and every round re-read it
     val vecs = normalized(corpus, idCol, vecCol).localCheckpoint(true)
     val n = if (corpusCount >= 0) corpusCount else vecs.count()
     val nBuckets = math.max(1L, n / math.max(2L, k + 1L))
@@ -204,7 +207,8 @@ object KnnGraph {
     // __new marks edges adopted in the latest round (all of init's are):
     // only candidate pairs touching >= 1 new edge get scored (the
     // paper's incremental-join trick — converged neighborhoods stop
-    // contributing work, which is most of them after round 2).
+    // contributing work, which is most of them after round 2). Pinned:
+    // loop state, re-read by the next round.
     var graph = topkOf(symmetrize(initScored), k, idType, dedup = true)
       .withColumn("__new", lit(true)).localCheckpoint(true)
 
@@ -292,6 +296,7 @@ object KnnGraph {
     // exchange at this grain carries n·k aggregate states
     val merged = symmetrize(scored)
       .unionByName(graph.select(col("id"), col("nbr"), col("cosine")))
+    // pinned: loop state, re-read by the next round and its probe
     topkOf(merged, k, idType, dedup = true)
       .join(graph.select(col("id"), col("nbr"))
         .withColumn("__old", lit(true)), Seq("id", "nbr"), "left")
@@ -363,6 +368,8 @@ object KnnGraph {
       .select(col("query_id"), col("node"),
         Similarity.dot(col("__qv"), col("__nv")).as("cosine"))
 
+    // pinned per hop: the frontier, the anti-join and the final top-k re-read
+    // every scored hop frame
     var visited = scoreNodes(
         qv.select(col("query_id")).crossJoin(entryPts.select(col("id").as("node"))))
       .localCheckpoint(true)
@@ -454,6 +461,8 @@ object KnnGraph {
       s"k/beam/entries must be >= 1, got $k/$beam/$entries")
     requireIntegralId(corpus, idCol, "searchGraph")
     val idType = corpus.schema(idCol).dataType
+    // pinned: the count, the bridges, the entry points and every hop re-read
+    // vecs; every hop re-reads adj
     val vecs = normalized(corpus, idCol, vecCol).localCheckpoint(true)
     val knn = graph.select(col("id"), col("neighbor_id").as("nbr"))
     val adj = (if (bridgeRounds <= 0) knn else {
@@ -589,6 +598,8 @@ object KnnGraph {
     require(entries >= 1, s"entries must be >= 1, got $entries")
     requireIntegralId(corpus, idCol, "graphIndex")
     val idType = corpus.schema(idCol).dataType
+    // pinned: the count, the bridges, the entry points and the row join
+    // re-read it
     val vecs = normalized(corpus, idCol, vecCol).localCheckpoint(true)
     val n = if (corpusCount >= 0) corpusCount else vecs.count()
     val nB = math.max(1L, n / 2)
@@ -715,22 +726,18 @@ object KnnGraph {
       bridgeRounds = bridgeRounds, seed = seed, corpusCount = corpusCount)
     // new -> new links: exact over the bounded batch
     val intra = Similarity.bruteForceTopK(batch, batch, idCol, vecCol, k = k)
-    // r13 opt: pin the bounded placement edges once — both union
-    // directions below otherwise re-execute the search top-k and the
-    // new-vs-new brute pass inside the merge job (bit-identical rows)
+    // not pinned: the placement edges are read once, by the explode below
     val newDirected = found.unionByName(intra)
       .select(col("query_id").as("id"), col("neighbor_id").as("nbr"),
         col("cosine"))
-      .localCheckpoint(true)
-    // reverse edges let affected OLD nodes admit the new arrivals.
-    // r14 (VERDICT ask 5): both directions via ONE explode pass
-    // ([[symmetrize]]) instead of a self-union that scanned the
-    // checkpointed placement edges twice — same multiset into the
-    // dedup top-k aggregate.
+    // reverse edges let affected OLD nodes admit the new arrivals; both
+    // directions come from ONE explode pass ([[symmetrize]]) — same
+    // multiset into the dedup top-k aggregate.
     val merged = symmetrize(newDirected
         .select(col("id").as("id_a"), col("nbr").as("id_b"), col("cosine")))
       .unionByName(graph.select(col("id"),
         col("neighbor_id").as("nbr"), col("cosine")))
+    // pinned: loop state, re-read by the first refine round
     var placed = topkOf(merged, k, idType, dedup = true)
       // edges absent from the input graph are the perturbation front
       .join(graph.select(col("id"), col("neighbor_id").as("nbr"))
@@ -739,6 +746,7 @@ object KnnGraph {
         coalesce(col("__old"), lit(false)).unary_!.as("__new"))
       .localCheckpoint(true)
     if (refineRounds > 0) {
+      // pinned: every refine round re-reads the vectors
       val vecs = normalized(corpus.unionByName(batch), idCol, vecCol)
         .localCheckpoint(true)
       val maxRev = if (maxReverse > 0) maxReverse else k
@@ -791,7 +799,7 @@ object KnnGraph {
     val newE = delta.filter(col("__new")).select(col("id"), col("nbr"))
     // r14 (VERDICT ask 5): endpoints via one explode pass over the
     // checkpointed delta, not a self-union scanning it twice; same id
-    // multiset into the distinct
+    // multiset into the distinct. Pinned: fwdP and revP re-read it.
     val pivots = newE.select(explode(array(col("id"), col("nbr"))).as("id"))
       .distinct()
       .localCheckpoint(true)
@@ -813,6 +821,7 @@ object KnnGraph {
       .select(col("x.nbr").as("id_a"), col("y.nbr").as("id_b"),
         Similarity.dot(col("x.__nv"), col("y.__nv")).as("cosine"))
     val sym = symmetrize(scored)
+    // pinned: curT and the pass-through anti-join re-read it
     val targets = sym.select("id").distinct().localCheckpoint(true)
     val curT = cur.join(broadcast(targets), Seq("id"))
     val nextT = topkOf(sym.unionByName(
@@ -822,6 +831,7 @@ object KnnGraph {
         Seq("id", "nbr"), "left")
       .select(col("id"), col("nbr"), col("cosine"), col("rank"),
         coalesce(col("__old"), lit(false)).unary_!.as("__new"))
+    // pinned: loop state, re-read by the next round
     delta.join(broadcast(targets), Seq("id"), "left_anti")
       .select(col("id"), col("nbr"), col("cosine"), col("rank"))
       .withColumn("__new", lit(false))
@@ -873,7 +883,8 @@ object KnnGraph {
         else {
           // r13 opt: round 0's id set is usually known to the caller
           // (the checkpointed touched-id frame whose distinct this
-          // would recompute) — reuse it; later rounds re-derive
+          // would recompute) — reuse it; later rounds re-derive. Pinned:
+          // the count and the chosen branch re-read it.
           val dIds =
             if (r == 0 && firstIds != null) firstIds
             else delta.select("id").distinct().localCheckpoint(true)
@@ -883,6 +894,7 @@ object KnnGraph {
               iterBase + r, idType, deltaIds0 = dIds)
           else {
             full = true
+            // pinned: loop state, re-read four times by descentRound
             val curAll = delta
               .select(col("id"), col("nbr"), col("cosine"), col("__new"))
               .unionByName(baseKnn
@@ -931,28 +943,35 @@ object KnnGraph {
                                refineRounds: Int = 1, maxReverse: Int = 0,
                                seed: Int = 42,
                                validateIds: Boolean = true,
-                               corpusCount: Long = -1L,
-                               deltaRefineFraction: Double = 0.25): DataFrame =
+                               corpusCount: Long = -1L): DataFrame =
     insertIndexedDelta(index, batch, idCol, vecCol, k, beam, hops,
-      refineRounds, maxReverse, seed, validateIds, corpusCount,
-      deltaRefineFraction)._1
+      refineRounds, maxReverse, seed, validateIds, corpusCount)._1
+
+  /** The |delta|/n crossover of [[refineDeltaRounds]] for the index
+    * writes: a pure cost choice, results are identical either way.
+    */
+  private val DeltaRefineFraction = 0.25
 
   /** [[insertIncrementalIndexed]] plus the CHANGED ROWS (index-schema
     * rows for every id whose row differs from the input index —
     * re-ranked nodes, bridge-amended hubs, and the new batch nodes):
     * the overlay a streaming state appends per micro-batch so it never
     * re-materializes the whole index ([[graft.streaming.StreamingOps
-    * .GraphInsertState]]).
+    * .GraphInsertState]]). `deltaRefineFraction` overrides the refine
+    * crossover so specs can force either refine path.
     */
   private[graft] def insertIndexedDelta(index: DataFrame, batch: DataFrame,
       idCol: String, vecCol: String, k: Int, beam: Int, hops: Int,
       refineRounds: Int, maxReverse: Int, seed: Int,
       validateIds: Boolean, corpusCount: Long = -1L,
-      deltaRefineFraction: Double = 0.25): (DataFrame, DataFrame) = {
+      deltaRefineFraction: Double = DeltaRefineFraction)
+      : (DataFrame, DataFrame) = {
     validateIndex(index, "insertIncrementalIndexed")
     requireIntegralId(batch, idCol, "insertIncrementalIndexed")
     require(k >= 1, s"k must be >= 1, got $k")
     val idType = index.schema("id").dataType
+    // pinned: the probes, the count, the vectors, the bridge keys and the
+    // new rows re-read it
     val bv = normalized(batch, idCol, vecCol).localCheckpoint(true)
     if (bv.isEmpty) return (index, index.limit(0))
     if (validateIds) {
@@ -973,11 +992,8 @@ object KnnGraph {
     val found = searchGraphIndexed(index, batch, idCol, vecCol, k = k,
       beam = beam, hops = hops)
     val intra = Similarity.bruteForceTopK(batch, batch, idCol, vecCol, k = k)
-    // r13 opt: checkpoint the bounded (<= 2·k·|batch| rows) placement
-    // edges once — `inc` feeds BOTH the touched-id distinct and the
-    // re-rank union, and without the pin the placement search's final
-    // top-k and the new-vs-new brute pass re-execute per consumer
-    // (guide §1/§2: don't compute things twice); bit-identical rows.
+    // pinned (<= 2·k·|batch| rows): through `inc`, the touched-id distinct
+    // and the re-rank union re-read it
     val newDirected = found.unionByName(intra)
       .select(col("query_id").as("id"), col("neighbor_id").as("nbr"),
         col("cosine"))
@@ -986,18 +1002,12 @@ object KnnGraph {
     // self-union scanning the checkpointed placement edges twice
     val inc = symmetrize(newDirected
       .select(col("id").as("id_a"), col("nbr").as("id_b"), col("cosine")))
-    val baseKnn0 = index
+    // not pinned: an explode of the input index, cheaper to re-run than
+    // to materialize
+    val baseKnn = index
       .select(col("id"), explode(col("knn")).as("__e"))
       .select(col("id"), col("__e.nbr").as("nbr"), col("__e.cos").as("cosine"))
-    // r14 (VERDICT ask 2, guide §1.2/§5): every refine round scans the
-    // base edge set ~3x (forward/reverse/target views of `cur`), and
-    // each scan re-exploded the index's knn arrays from scratch —
-    // measured per-round cost ~4x the one-shot path's, whose edge set
-    // IS materialized. Pin it once per insert when rounds will run
-    // (index-grain n·k rows, the same bounded class as the index the
-    // caller holds); refine rounds then read cached blocks.
-    val baseKnn =
-      if (refineRounds > 0) baseKnn0.localCheckpoint(true) else baseKnn0
+    // pinned: curT0, and refine round 0 as its id set, re-read it
     val t0 = inc.select("id").distinct().localCheckpoint(true)
     val curT0 = baseKnn.join(broadcast(t0), Seq("id"))
     var delta = topkOf(inc.unionByName(curT0), k, idType, dedup = true)
@@ -1005,14 +1015,11 @@ object KnnGraph {
         Seq("id", "nbr"), "left")
       .select(col("id"), col("nbr"), col("cosine"), col("rank"),
         coalesce(col("__old"), lit(false)).unary_!.as("__new"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // loop state, re-read by the refine rounds
     if (refineRounds > 0) {
-      // r14 (VERDICT ask 2): the composed corpus was re-derived lazily
-      // by every round's vector-attach join; one node-grain pin (same
-      // bounded class as the one-shot path's checkpointed `vecs`)
+      // not pinned: a projection of the index and of the pinned batch
       val vecsAll = index.select(col("id"), col("nv").as("__nv"))
         .unionByName(bv.select(col("id"), col("__nv")))
-        .localCheckpoint(true)
       val nTotal = (if (corpusCount >= 0) corpusCount else index.count()) +
         bv.count()
       // firstIds = t0: the re-rank emits exactly one group per touched
@@ -1022,14 +1029,15 @@ object KnnGraph {
         firstIds = t0)
     }
     // compose the updated index: one broadcast-joined pass over the old
-    // rows (scan, no shuffle of untouched rows) + the new node rows
-    val deltaIds = delta.select("id").distinct().localCheckpoint(true)
+    // rows (scan, no shuffle of untouched rows) + the new node rows.
+    // Pinned: the old-row composition and the new rows re-read knnNew
+    // and bridgeAdds.
     val knnNew = knnArrays(delta).localCheckpoint(true)
     val bridgeAdds = (if (bRounds <= 0) emptyAdds(bv.select(col("id")), idType)
       else {
+        // not pinned: an explode of the pinned batch
         val batchKeys = bv.select(col("id"),
           explode(bridgeKeys(col("id"), bRounds, bSeed, bMod)).as("__b"))
-          .localCheckpoint(true)
         val oldHub = index
           .select(col("id"),
             explode(bridgeKeys(col("id"), bRounds, bSeed, bMod)).as("__b"))
@@ -1075,8 +1083,8 @@ object KnnGraph {
     // changed OLD rows = the transform over the touched subset of the
     // index (batch ids in the touched sets semi-join away naturally);
     // new rows are changed by definition
-    val changedOldIds = deltaIds.unionByName(bridgeAdds.select("id"))
-      .distinct()
+    val changedOldIds = delta.select("id")
+      .unionByName(bridgeAdds.select("id")).distinct()
     val changed = composeOld(
         index.join(broadcast(changedOldIds), Seq("id"), "left_semi"))
       .unionByName(newRows)
@@ -1116,7 +1124,7 @@ object KnnGraph {
     val entryPts = index.select(col("id"))
       .orderBy(xxhash64(col("id"), lit(bSeed)), col("id"))
       .limit(math.max(1, e0))
-      .withColumn("__entry2", lit(true)).localCheckpoint(true)
+      .withColumn("__entry2", lit(true))
     val withB =
       if (bridges == null)
         index.withColumn("__br2", array().cast(ArrayType(idType)))
@@ -1162,8 +1170,7 @@ object KnnGraph {
     */
   def removeIds(index: DataFrame, removals: DataFrame, idCol: String,
                 k: Int, healRounds: Int = 1, maxReverse: Int = 0,
-                seed: Int = 42, corpusCount: Long = -1L,
-                deltaRefineFraction: Double = 0.25): DataFrame = {
+                seed: Int = 42, corpusCount: Long = -1L): DataFrame = {
     validateIndex(index, "removeIds")
     requireIntegralId(removals, idCol, "removeIds")
     require(k >= 1, s"k must be >= 1, got $k")
@@ -1178,76 +1185,66 @@ object KnnGraph {
     val delArr = lit(delIds)
     def isDel(c: Column): Column = array_contains(delArr, c.cast("long"))
     val survivors = index.filter(!isDel(col("id")))
+    // pinned: a selective filter that the heal candidates, the re-hub keys
+    // and the entry probe re-read
     val deleted = index.filter(isDel(col("id"))).localCheckpoint(true)
     val params = index.select("bridge_mod", "bridge_rounds", "bridge_seed")
       .head
     val bMod = params.getLong(0)
     val bRounds = params.getInt(1)
     val bSeed = params.getInt(2)
-    // r14 (VERDICT ask 4): ONE pinned explode pass over the survivors'
-    // knn arrays — it serves the amputation scan, the re-rank's
-    // current-edge view AND every heal round's base scans (previously
-    // the amputation scan and each survKnn consumer re-exploded the
-    // index per use: 2x at re-rank + 3x per heal round). Index-grain
-    // n·k rows, the same bounded class as the index the caller holds.
+
+    // heal: the amputated survivors re-rank over their surviving edges and
+    // the deleted nodes' former neighbors, then refine. Not pinned: the
+    // survivor edges and vectors are an explode and a projection of the
+    // input index.
     val survEdges = survivors
       .select(col("id"), explode(col("knn")).as("__e"))
       .select(col("id"), col("__e.nbr").as("nbr"), col("__e.cos").as("cosine"))
-      .localCheckpoint(true)
     // post-amputation survivor edge view (never carries a deleted target)
     val survKnn = survEdges.filter(!isDel(col("nbr")))
     val amput = survEdges.filter(isDel(col("nbr")))
       .select(col("id").as("s"), col("nbr").as("d"))
-    // pinned like the one-shot path's checkpointed `vecs`: consumed by
-    // both sides of the candidate scoring and once per heal round
     val vecsSurv = survivors.select(col("id"), col("nv").as("__nv"))
+    val delNbrs = deleted
+      .select(col("id").as("d"),
+        explode(transform(col("knn"), e => e.getField("nbr"))).as("c"))
+      .filter(!isDel(col("c")))
+    val cand = amput.join(broadcast(delNbrs), Seq("d"))
+      .filter(col("s") =!= col("c"))
+      .select(col("s").as("id"), col("c").as("nbr")).distinct()
+    val scoredCand = broadcast(cand)
+      .join(vecsSurv.select(col("id"), col("__nv").as("__nva")), Seq("id"))
+      .join(vecsSurv.select(col("id").as("nbr"), col("__nv").as("__nvb")),
+        Seq("nbr"))
+      .select(col("id"), col("nbr"),
+        Similarity.dot(col("__nva"), col("__nvb")).as("cosine"))
+    // pinned: curT's re-rank union and its old-edge join re-read it
+    val touched = amput.select(col("s").as("id")).distinct()
       .localCheckpoint(true)
-    // r14 (VERDICT ask 4, guide §2.6): the heal chain, the bucket
-    // re-hub chain and the entry re-election are mutually independent
-    // (heal: survEdges+vecsSurv; re-hub: bucket keys from ids; entries:
-    // the hash-order rule over survivor ids) — build them through the
-    // bounded pool so one chain's job tail back-fills the others' idle
-    // cores. Each thunk is deterministic and ends in its own bounded
-    // checkpoint; pooling changes scheduling, never values.
-    val healThunk = () => {
-      val delNbrs = deleted
-        .select(col("id").as("d"),
-          explode(transform(col("knn"), e => e.getField("nbr"))).as("c"))
-        .filter(!isDel(col("c")))
-      val cand = amput.join(broadcast(delNbrs), Seq("d"))
-        .filter(col("s") =!= col("c"))
-        .select(col("s").as("id"), col("c").as("nbr")).distinct()
-        .localCheckpoint(true)
-      val scoredCand = broadcast(cand)
-        .join(vecsSurv.select(col("id"), col("__nv").as("__nva")), Seq("id"))
-        .join(vecsSurv.select(col("id").as("nbr"), col("__nv").as("__nvb")),
-          Seq("nbr"))
-        .select(col("id"), col("nbr"),
-          Similarity.dot(col("__nva"), col("__nvb")).as("cosine"))
-      val touched = amput.select(col("s").as("id")).distinct()
-        .localCheckpoint(true)
-      val curT = survKnn.join(broadcast(touched), Seq("id"))
-      var delta = topkOf(scoredCand.unionByName(curT), k, idType, dedup = true)
-        .join(curT.select(col("id"), col("nbr")).withColumn("__old", lit(true)),
-          Seq("id", "nbr"), "left")
-        .select(col("id"), col("nbr"), col("cosine"), col("rank"),
-          coalesce(col("__old"), lit(false)).unary_!.as("__new"))
-        .localCheckpoint(true)
-      if (healRounds > 0) {
-        val maxRev = if (maxReverse > 0) maxReverse else k
-        val nSurv = (if (corpusCount >= 0) corpusCount else index.count()) -
-          delIds.length
-        delta = refineDeltaRounds(delta, survKnn, vecsSurv, nSurv, k, maxRev,
-          seed, 8000, healRounds, deltaRefineFraction, idType)
-      }
-      knnArrays(delta).localCheckpoint(true)
+    val curT = survKnn.join(broadcast(touched), Seq("id"))
+    var delta = topkOf(scoredCand.unionByName(curT), k, idType, dedup = true)
+      .join(curT.select(col("id"), col("nbr")).withColumn("__old", lit(true)),
+        Seq("id", "nbr"), "left")
+      .select(col("id"), col("nbr"), col("cosine"), col("rank"),
+        coalesce(col("__old"), lit(false)).unary_!.as("__new"))
+      .localCheckpoint(true) // loop state, re-read by the heal rounds
+    if (healRounds > 0) {
+      val maxRev = if (maxReverse > 0) maxReverse else k
+      val nSurv = (if (corpusCount >= 0) corpusCount else index.count()) -
+        delIds.length
+      delta = refineDeltaRounds(delta, survKnn, vecsSurv, nSurv, k, maxRev,
+        seed, 8000, healRounds, DeltaRefineFraction, idType)
     }
-    val bridgeThunk = () => (if (bRounds <= 0)
-        emptyAdds(deleted.select("id"), idType)
+    val knnNew = knnArrays(delta)
+
+    // re-hub: buckets whose min-id hub was deleted re-elect and re-link
+    val bridgeAdds = if (bRounds <= 0) emptyAdds(deleted.select("id"), idType)
       else {
         val affKeys = deleted.select(col("id"),
             explode(bridgeKeys(col("id"), bRounds, bSeed, bMod)).as("__b"))
           .select("__b").distinct()
+        // pinned: the hub election and the surviving members re-read it
         val members = index
           .select(col("id"),
             explode(bridgeKeys(col("id"), bRounds, bSeed, bMod)).as("__b"))
@@ -1265,30 +1262,25 @@ object KnnGraph {
         bothDirections(e1) // r13 opt: explode, not self-union (see def)
           .groupBy("id")
           .agg(array_sort(collect_set(col("nbr"))).as("__adds"))
-      }).localCheckpoint(true)
-    val entryThunk = () =>
-      if (deleted.filter(col("is_entry")).isEmpty) None
-      else {
-        val e0 = index.filter(col("is_entry")).count()
-        Some(survivors.select(col("id"))
-          .orderBy(xxhash64(col("id"), lit(bSeed)), col("id"))
-          .limit(e0.toInt)
-          .withColumn("__entry2", lit(true)).localCheckpoint(true))
       }
-    val pooled = graft.Par.inParallel(Seq[() => Any](
-      healThunk, bridgeThunk, entryThunk), label = "KnnGraph.removeIds")
-    val knnNew = pooled(0).asInstanceOf[DataFrame]
-    val bridgeAdds = pooled(1).asInstanceOf[DataFrame]
-    val entryFix = pooled(2).asInstanceOf[Option[DataFrame]]
+
     val joined = survivors
       .join(broadcast(knnNew.withColumnRenamed("knn", "__knn2")),
         Seq("id"), "left")
       .join(broadcast(bridgeAdds), Seq("id"), "left")
-    val entried = entryFix match {
-      case Some(ef) => joined.join(broadcast(ef), Seq("id"), "left")
-        .withColumn("__ise", coalesce(col("__entry2"), lit(false)))
-      case None => joined.withColumn("__ise", col("is_entry"))
-    }
+    // re-elect entries when a deleted node held one
+    val entried =
+      if (deleted.filter(col("is_entry")).isEmpty)
+        joined.withColumn("__ise", col("is_entry"))
+      else {
+        val e0 = index.filter(col("is_entry")).count()
+        val entryFix = survivors.select(col("id"))
+          .orderBy(xxhash64(col("id"), lit(bSeed)), col("id"))
+          .limit(e0.toInt)
+          .withColumn("__entry2", lit(true))
+        joined.join(broadcast(entryFix), Seq("id"), "left")
+          .withColumn("__ise", coalesce(col("__entry2"), lit(false)))
+      }
     entried.select(col("id"), col("nv"),
       coalesce(col("__knn2"),
         filter(col("knn"), e => !isDel(e.getField("nbr")))).as("knn"),

@@ -14,7 +14,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   * or per-day aggregate — never a fan-out). Every reference to an unpinned
   * DataFrame re-plans and re-runs its whole lineage; a pin turns N re-runs
   * into one job plus N scans of cached blocks. A result read once gains
-  * nothing from a pin and pays its job.
+  * nothing from a pin and pays its job. Two corollaries:
+  *
+  *  - a projection or explode of an input or of another pin is not
+  *    pinned: re-running it costs less than the pin's job. A selective
+  *    filter (a few deleted rows out of an index) may be;
+  *  - loop state is pinned each round, so the plan stays one round deep
+  *    instead of growing by a round's joins per iteration.
   *
   * `pin` is `localCheckpoint(eager = true)`: the lineage is cut, so later
   * plans over the pin neither re-optimize nor match it against the cache

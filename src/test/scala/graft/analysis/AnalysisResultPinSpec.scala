@@ -7,7 +7,9 @@ import graft.SparkSpec
   * goldens were captured before these analyses pinned their re-read
   * intermediates and moved wake's loss reductions to the driver; only the
   * floating-point summation order may differ, so every field must agree
-  * within 1e-9 relative.
+  * within 1e-9 relative. The TIE UQ golden was captured once TIE's
+  * bootstrap drew from each turbine's rows in day order, not in the order
+  * the join plan collected them.
   */
 class AnalysisResultPinSpec extends SparkSpec {
 
@@ -72,8 +74,21 @@ class AnalysisResultPinSpec extends SparkSpec {
 
   test("TurbineLongTermGrossEnergy Result with UQ is unchanged") {
     checkTie(new TurbineLongTermGrossEnergy(plant, uq = true, numSim = 3).run(),
-      Array(20.235257783212106, 21.041637110041997, 20.406956141739826),
-      Map("T1" -> 5.016222332029036, "T2" -> 5.099985756924739,
-        "T3" -> 5.10062739690254, "T4" -> 5.018422297355787))
+      Array(20.328612782786387, 21.17292182265234, 20.484425136103376),
+      Map("T1" -> 5.097178281039495, "T2" -> 5.1170635789561,
+        "T3" -> 5.072826599106346, "T4" -> 5.041544323684446))
+  }
+
+  test("TurbineLongTermGrossEnergy UQ Result does not depend on the join strategy") {
+    // the bootstrap draws day indices per turbine: a sort-merge join in
+    // place of the broadcast join must not reorder what it draws from
+    def run() = new TurbineLongTermGrossEnergy(plant, uq = true, numSim = 3).run()
+    val broadcastJoins = run()
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    val sortMergeJoins = try run() finally spark.conf.set(key, prev)
+    assert(sortMergeJoins.plantGrossGwhPerYear.toSeq == broadcastJoins.plantGrossGwhPerYear.toSeq)
+    assert(sortMergeJoins.perTurbine == broadcastJoins.perTurbine)
   }
 }

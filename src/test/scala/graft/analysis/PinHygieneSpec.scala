@@ -1,6 +1,5 @@
 package graft.analysis
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ListenerBus
 
@@ -59,17 +58,7 @@ class PinHygieneSpec extends SparkSpec {
 
   test("WakeLosses without UQ runs in a bounded number of Spark jobs") {
     plant.turbineIds; plant.ratedPower
-    val sc = spark.sparkContext
-    @volatile var jobs = 0
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs += 1
-    }
-    ListenerBus.drain(sc)
-    sc.addSparkListener(counter)
-    try {
-      new WakeLosses(plant).run()
-      ListenerBus.drain(sc)
-    } finally sc.removeSparkListener(counter)
+    val jobs = ListenerBus.countJobs(spark.sparkContext)(new WakeLosses(plant).run())
     assert(jobs <= 40, s"$jobs jobs")
   }
 }

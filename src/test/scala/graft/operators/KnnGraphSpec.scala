@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListenerBus
 
 import graft.SparkSpec
 
@@ -377,9 +378,10 @@ class KnnGraphSpec extends SparkSpec {
     for (refine <- Seq(0, 2); frac <- Seq(0.0, 1.0)) {
       val direct = KnnGraph.insertIncremental(g, corpus, batch, "vec_id",
         "v", k = 6, refineRounds = refine, corpusCount = n)
-      val viaIdx = KnnGraph.indexGraph(KnnGraph.insertIncrementalIndexed(
-        idx, batch, "vec_id", "v", k = 6, refineRounds = refine,
-        deltaRefineFraction = frac))
+      val viaIdx = KnnGraph.indexGraph(KnnGraph.insertIndexedDelta(
+        idx, batch, "vec_id", "v", k = 6, beam = 8, hops = 3,
+        refineRounds = refine, maxReverse = 0, seed = 42,
+        validateIds = true, deltaRefineFraction = frac)._1)
       assert(viaIdx.exceptAll(direct).isEmpty &&
         direct.exceptAll(viaIdx).isEmpty, s"refine=$refine frac=$frac diverged")
     }
@@ -455,6 +457,31 @@ class KnnGraphSpec extends SparkSpec {
       .unionByName(changed)
     assert(composed.exceptAll(updated).isEmpty &&
       updated.exceptAll(composed).isEmpty)
+  }
+
+  test("the index writes run in a bounded number of Spark jobs") {
+    // the graph pins follow the one pin rule: a frame read once, or a
+    // projection of an input, is not pinned. On this index the insert
+    // runs 97 jobs and the delete 43; with a pin on every projection and
+    // on the pooled heal chains they ran 102 and 48.
+    val all = clustered(nClusters = 6, perCluster = 10, dims = 8)
+    val corpus = all.filter(col("vec_id") < 50)
+    val batch = all.filter(col("vec_id") >= 50)
+      .select((col("vec_id") + 10000L).as("vec_id"), col("v"))
+    val g = KnnGraph.nnDescent(corpus, "vec_id", "v", k = 6, iterations = 2)
+    val idx = KnnGraph.graphIndex(g, corpus, "vec_id", "v", entries = 3)
+      .localCheckpoint(true)
+    val sc = spark.sparkContext
+    val insertJobs = ListenerBus.countJobs(sc) {
+      KnnGraph.insertIncrementalIndexed(idx, batch, "vec_id", "v", k = 6,
+        refineRounds = 3, corpusCount = 50).localCheckpoint(true)
+    }
+    assert(insertJobs <= 99, s"insert: $insertJobs jobs")
+    val removeJobs = ListenerBus.countJobs(sc) {
+      KnnGraph.removeIds(idx, (0L until 10L).toDF("vec_id"), "vec_id", k = 6,
+        healRounds = 1, corpusCount = 50).localCheckpoint(true)
+    }
+    assert(removeJobs <= 45, s"removeIds: $removeJobs jobs")
   }
 
   test("removeIds: deleted ids vanish everywhere; survivors heal and stay searchable") {
