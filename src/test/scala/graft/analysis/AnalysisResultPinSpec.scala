@@ -10,6 +10,13 @@ import graft.SparkSpec
   * within 1e-9 relative. The TIE UQ golden was captured once TIE's
   * bootstrap drew from each turbine's rows in day order, not in the order
   * the join plan collected them.
+  *
+  * The AEP and yaw `Result`s are pinned bit for bit: they were captured
+  * before AEP resampled each reanalysis product once and hoisted its
+  * draw-invariant work, and before yaw's outlier filter moved onto the
+  * one-pass median/MAD kernel. A field of many values is pinned by its
+  * count, its sum and `java.util.Arrays.hashCode` (a hash of every bit),
+  * map values in key order.
   */
 class AnalysisResultPinSpec extends SparkSpec {
 
@@ -21,6 +28,20 @@ class AnalysisResultPinSpec extends SparkSpec {
   private def closeMap(got: Map[String, Double], want: Map[String, Double], what: String): Unit = {
     assert(got.keySet == want.keySet, s"$what keys: $got")
     want.foreach { case (k, v) => close(got(k), v, s"$what($k)") }
+  }
+
+  private def fingerprint(vs: Seq[Double]): (Int, Double, Int) =
+    (vs.size, vs.sum, java.util.Arrays.hashCode(vs.toArray))
+
+  private def fingerprint[K: Ordering](m: Map[K, Double]): (Int, Double, Int) =
+    fingerprint(m.toSeq.sortBy(_._1).map(_._2))
+
+  private def checkAep(r: MonteCarloAEP#Result, aep: (Int, Double, Int), avail: (Int, Double, Int),
+                       curt: (Int, Double, Int), iav: (Int, Double, Int)): Unit = {
+    assert(fingerprint(r.aepGwh.toSeq) == aep, "aepGwh")
+    assert(fingerprint(r.availPct.toSeq) == avail, "availPct")
+    assert(fingerprint(r.curtPct.toSeq) == curt, "curtPct")
+    assert(fingerprint(r.iav.toSeq) == iav, "iav")
   }
 
   private def checkWake(r: WakeLosses#Result, por: Double, porByT: Map[String, Double],
@@ -90,5 +111,43 @@ class AnalysisResultPinSpec extends SparkSpec {
     val sortMergeJoins = try run() finally spark.conf.set(key, prev)
     assert(sortMergeJoins.plantGrossGwhPerYear.toSeq == broadcastJoins.plantGrossGwhPerYear.toSeq)
     assert(sortMergeJoins.perTurbine == broadcastJoins.perTurbine)
+  }
+
+  test("MonteCarloAEP Result without UQ is unchanged, daily and monthly") {
+    val d = new MonteCarloAEP(plant, timeResolution = "D").run()
+    assert(d.aepGwh.toSeq == Seq(3.019060672377405))
+    assert(d.availPct.toSeq == Seq(0.0) && d.curtPct.toSeq == Seq(0.0))
+    assert(d.iav.toSeq == Seq(0.0013843116322556452))
+    val ms = new MonteCarloAEP(plant, timeResolution = "MS").run()
+    assert(ms.aepGwh.toSeq == Seq(2.7952040005624963))
+    assert(ms.availPct.toSeq == Seq(0.0) && ms.curtPct.toSeq == Seq(0.0))
+    assert(ms.iav.toSeq == Seq(0.04845793125552084))
+  }
+
+  test("MonteCarloAEP Result with UQ is unchanged, daily and monthly") {
+    val zeros = (50, 0.0, 1133190593)
+    checkAep(new MonteCarloAEP(plant, timeResolution = "D", uq = true, numSim = 50).run(),
+      (50, 199.0154267194555, 1741973527), zeros, zeros,
+      (50, 0.06908162060321894, 1415953095))
+    checkAep(new MonteCarloAEP(plant, timeResolution = "MS", uq = true, numSim = 50).run(),
+      (50, 210.93399769062802, -109991278), zeros, zeros,
+      (50, 2.469033529051078, -1607707243))
+  }
+
+  private val avgVane = Map("T1" -> -0.03881204687499974, "T2" -> -0.06556582638888903,
+    "T3" -> 0.02710395659722217, "T4" -> 0.20300640104166676)
+
+  test("StaticYawMisalignment Result without UQ is unchanged") {
+    val r = new StaticYawMisalignment(plant, minVaneBinCount = 10).run()
+    assert(r.avgVaneAngleByTurbine == avgVane)
+    assert(fingerprint(r.yawByTurbineAndBin) == ((16, 12.298749915680865, -312260777)))
+    assert(fingerprint(r.yawStdByTurbineAndBin) == ((16, 0.0, 1353309697)))
+  }
+
+  test("StaticYawMisalignment Result with UQ is unchanged") {
+    val r = new StaticYawMisalignment(plant, minVaneBinCount = 10, uq = true, numSim = 5).run()
+    assert(r.avgVaneAngleByTurbine == avgVane)
+    assert(fingerprint(r.yawByTurbineAndBin) == ((16, -110.13155568168087, -1319436430)))
+    assert(fingerprint(r.yawStdByTurbineAndBin) == ((16, 647.4004509583593, 1789391513)))
   }
 }
