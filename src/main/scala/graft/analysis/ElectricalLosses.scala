@@ -33,6 +33,10 @@ final class ElectricalLosses(
     monthlyMeter: Option[Boolean] = None,
     seed: Long = 42L) {
 
+  require(!uq || numSim >= 1, s"numSim must be >= 1 with uq, got $numSim")
+  require(correctionThreshold._1 <= correctionThreshold._2,
+    s"correctionThreshold must be (lo, hi) with lo <= hi, got $correctionThreshold")
+
   /** Monthly-meter handling auto-detects from the meter frequency metadata
     * unless overridden (electrical_losses.py:128-130).
     */

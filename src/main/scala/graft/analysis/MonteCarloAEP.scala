@@ -1,10 +1,11 @@
 package graft.analysis
 
+import java.sql.Timestamp
 import java.time.ZoneOffset
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.fitting.Fitting
@@ -20,6 +21,14 @@ import graft.plant.PlantData
   * collected aggregate (months x columns, <= a few hundred rows) feeds the
   * driver-side MC loop, the same altitude as the reference's in-memory
   * simulation over a pre-reduced frame.
+  *
+  * Each reanalysis product is resampled once per analysis: the products'
+  * period means are joined and collected once, and both [[aggregate]] and
+  * [[longTermSeries]] read that collection. The MC loop computes what does
+  * not depend on the draw once per run — the long-term features per
+  * product, the typical-loss weight per long-term row, and the window start
+  * and annual buckets per sampled window length — so each draw is one pass
+  * over its window.
   *
   * Feature parity with the reference:
   *  - per-simulation OUTLIER FILTER pass (aep.py:718-840): loss/nan filter,
@@ -66,6 +75,13 @@ final class MonteCarloAEP(
 
   require(Seq("MS", "ME", "D", "h").contains(timeResolution), s"bad timeResolution $timeResolution")
   require(Seq("lin", "gam", "gbt", "rf").contains(regModel), s"bad regModel $regModel")
+  require(!uq || numSim >= 1, s"numSim must be >= 1 with uq, got $numSim")
+  require(windinessYears._1 >= 1 && windinessYears._1 <= windinessYears._2,
+    s"windinessYears must be (lo, hi) with 1 <= lo <= hi, got $windinessYears")
+  require(lossMaxPct._1 <= lossMaxPct._2,
+    s"lossMaxPct must be (lo, hi) with lo <= hi, got $lossMaxPct")
+  require(uncertaintyOutlier._1 <= uncertaintyOutlier._2,
+    s"uncertaintyOutlier must be (lo, hi) with lo <= hi, got $uncertaintyOutlier")
   private val isMonthly = timeResolution == "MS" || timeResolution == "ME"
   // monthly data has too few points for the nonlinear models (aep.py:257-259)
   require(!isMonthly || regModel == "lin",
@@ -152,7 +168,22 @@ final class MonteCarloAEP(
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  private def mapsOf(r: org.apache.spark.sql.Row, prefix: String): Map[String, Double] =
+  /** Every product's resampled reanalysis, inner-joined on the period, in
+    * period order; collected once per analysis for [[aggregate]] and
+    * [[longTermSeries]].
+    */
+  private lazy val reanalysisRows: Array[Row] =
+    byPeriod(products.map(reanalysisResampled)
+      .reduce((a, b) => a.join(b, Seq("period"), "inner")).collect())
+
+  /** Collected period rows in period order, a null period first as in
+    * `orderBy`: a few thousand rows at most, so they are sorted on the
+    * driver, not range-partitioned by a Spark sort.
+    */
+  private def byPeriod(rows: Array[Row]): Array[Row] =
+    rows.sortBy(r => Option(r.getAs[Timestamp]("period")).fold(Long.MinValue)(_.getTime))
+
+  private def mapsOf(r: Row, prefix: String): Map[String, Double] =
     if (!needsExtras) Map.empty
     else products.map(p => p -> r.getAs[Double](s"${prefix}_$p")).toMap
 
@@ -173,10 +204,7 @@ final class MonteCarloAEP(
         (sum(col("IAVL_ExtPwrDnWh")) / 1e6).as("curtailment_gwh"),
         nanPerc(col("IAVL_DnWh")).as("avail_nan_perc"),
         nanPerc(col("IAVL_ExtPwrDnWh")).as("curt_nan_perc"))
-    val joined = products.foldLeft(meterAgg.join(curtAgg, Seq("period"), "left")) {
-      (acc, p) => acc.join(reanalysisResampled(p), Seq("period"), "left")
-    }
-    val rows = joined
+    val rows = byPeriod(meterAgg.join(curtAgg, Seq("period"), "left")
       .withColumn("gross_energy_gwh",
         col("energy_gwh") + col("availability_gwh") + col("curtailment_gwh"))
       .withColumn("availability_pct", col("availability_gwh") / col("gross_energy_gwh"))
@@ -184,13 +212,21 @@ final class MonteCarloAEP(
       .withColumn("num_days_expected",
         if (isMonthly) dayofmonth(last_day(col("period"))).cast("double")
         else lit(1.0))
-      .na.drop(Seq("energy_gwh", "gross_energy_gwh") ++ products.map(p => s"ws_$p"))
-      .orderBy("period")
-      .collect()
-    val out = rows.map { r =>
+      .na.drop(Seq("energy_gwh", "gross_energy_gwh"))
+      .collect())
+    // the reanalysis row of each period; a period without a finite wind
+    // speed from every product is dropped
+    val reanByPeriod = reanalysisRows.map(r => r.getAs[Timestamp]("period") -> r).toMap
+    def finiteWs(re: Row) = products.forall { p =>
+      val i = re.fieldIndex(s"ws_$p")
+      !re.isNullAt(i) && !re.getDouble(i).isNaN
+    }
+    val matched = rows.flatMap(r =>
+      reanByPeriod.get(r.getAs[Timestamp]("period")).filter(finiteWs).map(r -> _))
+    val out = matched.map { case (r, re) =>
       PeriodRow(
         epochSec = MonteCarloAEP.labelEpochSec(
-          r.getAs[java.sql.Timestamp]("period"), timeResolution),
+          r.getAs[Timestamp]("period"), timeResolution),
         energyGwh = r.getAs[Double]("energy_gwh"),
         availGwh = r.getAs[Double]("availability_gwh"),
         curtGwh = r.getAs[Double]("curtailment_gwh"),
@@ -198,8 +234,8 @@ final class MonteCarloAEP(
         availPct = r.getAs[Double]("availability_pct"),
         curtPct = r.getAs[Double]("curtailment_pct"),
         numDays = r.getAs[Double]("num_days_expected"),
-        ws = products.map(p => p -> r.getAs[Double](s"ws_$p")).toMap,
-        temp = mapsOf(r, "temp"), u = mapsOf(r, "u"), v = mapsOf(r, "v"),
+        ws = products.map(p => p -> re.getAs[Double](s"ws_$p")).toMap,
+        temp = mapsOf(re, "temp"), u = mapsOf(re, "u"), v = mapsOf(re, "v"),
         // nan_flag: period excluded when ANY input series is too gappy
         // (aep.py:517-520); missing loss rows (left-join nulls) flag too
         nanFlag = Seq("energy_nan_perc", "avail_nan_perc", "curt_nan_perc")
@@ -210,7 +246,7 @@ final class MonteCarloAEP(
     }.toSeq
     // trim partial first/last periods (aep.py:643-653)
     if (isMonthly) {
-      val actual = rows.map(_.getAs[Long]("num_days_actual").toDouble)
+      val actual = matched.map(_._1.getAs[Long]("num_days_actual").toDouble)
       out.zipWithIndex.filter { case (row, i) =>
         !((i == 0 || i == out.length - 1) && actual(i) != row.numDays)
       }.map(_._1)
@@ -221,12 +257,9 @@ final class MonteCarloAEP(
     * (for the windiness correction), trimmed to full periods.
     */
   def longTermSeries(): Seq[LtRow] = {
-    val joined = products.map(reanalysisResampled)
-      .reduce((a, b) => a.join(b, Seq("period"), "inner"))
-    val rows = joined.orderBy("period").collect()
     val expectedN = plant.metadata.reanalysisFreqSeconds
-    val lt = rows.map { r =>
-      val ts = r.getAs[java.sql.Timestamp]("period")
+    val lt = reanalysisRows.map { r =>
+      val ts = r.getAs[Timestamp]("period")
       val date = ts.toInstant.atZone(ZoneOffset.UTC).toLocalDate
       val numDays = if (isMonthly) date.lengthOfMonth.toDouble
                     else if (timeResolution == "D") 1.0 else 1.0 / 24
@@ -343,6 +376,27 @@ final class MonteCarloAEP(
     val typicalCurt = agg.groupBy(r => calendarKey(r.epochSec))
       .map { case (k, rs) => k -> rs.map(_.curtPct).sum / rs.size }
 
+    // what does not depend on the draw, once: per long-term row its
+    // typical-loss weights, per product the long-term features, per sampled
+    // window length the window's first row and its rows' annual buckets
+    val ltSecs = ltUsable.map(_.epochSec).toArray
+    val ltAvail = ltUsable.map(r => typicalAvail.getOrElse(calendarKey(r.epochSec), 0.0)).toArray
+    val ltCurt = ltUsable.map(r => typicalCurt.getOrElse(calendarKey(r.epochSec), 0.0)).toArray
+    val ltNumDays = ltUsable.map(_.numDays).toArray
+    val ltFeatures = mutable.Map.empty[String, Array[Array[Double]]]
+    val windows = mutable.Map.empty[Int, (Int, Array[Int], Int)]
+    // long-term window: the last `years` CALENDAR years ending at the
+    // series end (or endDateLt) — the reference's end-anchored DateOffset
+    // slice (aep.py:1125-1133), not a fixed bucket count, so leap days
+    // stay inside the window at D/h resolutions; returns its first row,
+    // each of its rows' annual bucket and the number of buckets
+    def window(years: Int): (Int, Array[Int], Int) = windows.getOrElseUpdate(years, {
+      val startSec = MonteCarloAEP.windowStartSec(ltSecs.last, years, timeResolution)
+      val start = ltSecs.indexWhere(_ >= startSec)
+      val bucket = MonteCarloAEP.annualBuckets(ltSecs.drop(start))
+      (start, bucket, bucket.max + 1)
+    })
+
     val aepA = new Array[Double](sims)
     val availA = new Array[Double](sims)
     val curtA = new Array[Double](sims)
@@ -384,35 +438,32 @@ final class MonteCarloAEP(
             new scala.util.Random(seed ^ product.hashCode))
       }
 
-      // long-term window: the last `years` CALENDAR years ending at the
-      // series end (or endDateLt) — the reference's end-anchored DateOffset
-      // slice (aep.py:1125-1133), not a fixed bucket count, so leap days
-      // stay inside the window at D/h resolutions
-      val startSec = MonteCarloAEP.windowStartSec(
-        ltUsable.last.epochSec, years, timeResolution)
-      val window = ltUsable.filter(_.epochSec >= startSec)
-      val grossLt = window.map { r =>
-        val g = predict(r.features(product, regTemperature, regWindDirection))
-        if (isMonthly) g * r.numDays / 30.0 else g
+      // one pass over the window: long-term gross, its gross-weighted
+      // losses (aep.py:1167-1193) and its ANCHORED annual sums for the
+      // inter-annual variability (aep.py:40-59 get_annual_values)
+      val features = ltFeatures.getOrElseUpdate(product,
+        ltUsable.map(_.features(product, regTemperature, regWindDirection)).toArray)
+      val (start, bucket, numYears) = window(years)
+      val annual = new Array[Double](numYears)
+      var grossSum, availSum, curtSum = 0.0
+      var i = start
+      while (i < ltSecs.length) {
+        val p = predict(features(i))
+        val g = if (isMonthly) p * ltNumDays(i) / 30.0 else p
+        grossSum += g
+        availSum += ltAvail(i) * g
+        curtSum += ltCurt(i) * g
+        annual(bucket(i - start)) += g
+        i += 1
       }
-
-      // gross-weighted long-term losses (aep.py:1167-1193)
-      val weights = window.map(r => calendarKey(r.epochSec)).zip(grossLt)
-      val wSum = grossLt.sum
-      val availLt = weights.map { case (k, g) => typicalAvail.getOrElse(k, 0.0) * g }.sum / wSum
-      val curtLt = weights.map { case (k, g) => typicalCurt.getOrElse(k, 0.0) * g }.sum / wSum
-
-      // inter-annual variability from ANCHORED annual sums of gross_lt
-      // (aep.py:40-59 get_annual_values: 12-calendar-month windows anchored
-      // at the month start of the first bucket)
-      val annual = MonteCarloAEP.annualSums(
-        window.map(_.epochSec).toArray, grossLt.toArray)
+      val availLt = availSum / grossSum
+      val curtLt = curtSum / grossSum
       val iav = if (annual.length > 1) {
         val m = annual.sum / annual.length
         math.sqrt(annual.map(a => (a - m) * (a - m)).sum / (annual.length - 1)) / m
       } else 0.0
 
-      val aep = grossLt.sum / years * (1.0 - availLt)
+      val aep = grossSum / years * (1.0 - availLt)
       aepA(n) = if (uq) aep * (1.0 + rng.nextGaussian() * iav) else aep
       availA(n) = availLt
       curtA(n) = curtLt
@@ -471,30 +522,32 @@ object MonteCarloAEP {
     end.minusYears(years).toEpochSecond(ZoneOffset.UTC)
   }
 
-  /** Annual sums over buckets anchored at the month START of the first
-    * timestamp — pandas `get_annual_values` (aep.py:40-59): the index is
+  /** Annual bucket of each timestamp, anchored at the month START of the
+    * first one — pandas `get_annual_values` (aep.py:40-59): the index is
     * shifted by (first - its month begin), then grouped into consecutive
-    * 12-calendar-month windows.
+    * 12-calendar-month windows numbered from 0.
     */
-  private[analysis] def annualSums(epochSecs: Array[Long],
-                                   values: Array[Double]): Array[Double] = {
+  private[analysis] def annualBuckets(epochSecs: Array[Long]): Array[Int] = {
     if (epochSecs.isEmpty) return Array.empty
     import java.time.{Duration, LocalDateTime}
     import java.time.temporal.ChronoUnit
     val first = LocalDateTime.ofEpochSecond(epochSecs.head, 0, ZoneOffset.UTC)
     val anchor = first.toLocalDate.withDayOfMonth(1).atStartOfDay
     val delta = Duration.between(anchor, first)
-    val out = mutable.ArrayBuffer.empty[Double]
-    var i = 0
-    while (i < epochSecs.length) {
-      val shifted = LocalDateTime.ofEpochSecond(epochSecs(i), 0, ZoneOffset.UTC)
+    epochSecs.map { s =>
+      val shifted = LocalDateTime.ofEpochSecond(s, 0, ZoneOffset.UTC)
         .minus(delta).toLocalDate.withDayOfMonth(1)
-      val k = (ChronoUnit.MONTHS.between(anchor.toLocalDate, shifted) / 12).toInt
-      while (out.length <= k) out += 0.0
-      out(k) += values(i)
-      i += 1
+      (ChronoUnit.MONTHS.between(anchor.toLocalDate, shifted) / 12).toInt
     }
-    out.toArray
+  }
+
+  /** Annual sums over [[annualBuckets]], in index order. */
+  private[analysis] def annualSums(epochSecs: Array[Long],
+                                   values: Array[Double]): Array[Double] = {
+    val bucket = annualBuckets(epochSecs)
+    val out = new Array[Double](if (bucket.isEmpty) 0 else bucket.max + 1)
+    bucket.indices.foreach(i => out(bucket(i)) += values(i))
+    out
   }
 
   /** Fit a tree regressor on a small multivariate sample; returns a

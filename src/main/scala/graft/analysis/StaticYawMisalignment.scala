@@ -1,9 +1,10 @@
 package graft.analysis
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.fitting.Fitting
+import graft.operators.Flags
 import graft.plant.PlantData
 
 /** Static yaw misalignment per turbine and wind-speed bin: cosine fit of
@@ -21,11 +22,18 @@ import graft.plant.PlantData
   * cosine-exponent fit (cos_curve, yaw_misalignment.py:59-71).
   *
   * Scale design:
-  *  - The power-bin statistics are computed per DISTINCT sampled
+  *  - The power-curve outlier filter is `Flags.binFilter`'s median/MAD
+  *    filter: one aggregation per turbine and power bin over each group's
+  *    sorted wind speeds ([[Flags.sortedValues]]).
+  *  - The ws slice and the vane bin are computed once per row, before the
+  *    UQ explode; nothing per-row is recomputed per simulation.
+  *  - Under UQ the power-bin statistics are computed per DISTINCT sampled
   *    max-power-filter value (<= 7 values for the reference's 0.92-0.98
   *    percent grid) rather than per simulation — the stats depend only on
   *    the bin geometry, so the stats pass explodes the fact table by <= 7,
-  *    never by numSim, and the per-(row, sim) flag is a broadcast lookup.
+  *    never by numSim. Each row then explodes into one struct per
+  *    simulation carrying that draw's (sim, filter, MAD threshold), and the
+  *    per-(row, sim) flag is a broadcast join on (filter, turbine, bin).
   *  - UQ (yaw_misalignment.py:381-386): the reference bootstraps the ws-bin
   *    slice per simulation. Re-running the aggregate numSim times would be
   *    numSim shuffles; instead each row draws one Poisson(1) multiplicity
@@ -51,6 +59,12 @@ final class StaticYawMisalignment(
     numSim: Int = 20,
     seed: Long = 42L) {
 
+  require(!uq || numSim >= 1, s"numSim must be >= 1 with uq, got $numSim")
+  require(maxPowerFilter._1 <= maxPowerFilter._2,
+    s"maxPowerFilter must be (lo, hi) with lo <= hi, got $maxPowerFilter")
+  require(powerBinMadThresh._1 <= powerBinMadThresh._2,
+    s"powerBinMadThresh must be (lo, hi) with lo <= hi, got $powerBinMadThresh")
+
   final case class Result(
       avgVaneAngleByTurbine: Map[String, Double],
       yawByTurbineAndBin: Map[(String, Double), Double],
@@ -69,39 +83,39 @@ final class StaticYawMisalignment(
   }
 
   /** Normal-operation frame: pitch at or below threshold (one-sided,
-    * yaw_misalignment.py:510), complete rows, power as a fraction of rated.
+    * yaw_misalignment.py:510), complete rows, power as a fraction of rated,
+    * and each row's ws-bin center and vane bin. The bins are per row, so
+    * they are computed here, before any per-simulation explode: Spark's
+    * `round` on a double goes through `BigDecimal`.
     */
-  private def normalBase: org.apache.spark.sql.DataFrame =
+  private def normalBase: DataFrame =
     plant.scadaDf
       .filter(col("WROT_BlPthAngVal") <= pitchThresholdDeg)
       .na.drop(Seq("WTUR_W", "WMET_HorWdSpd", "WMET_HorWdDirRel"))
       .withColumn("p_frac", col("WTUR_W") / typedLit(plant.ratedPower).apply(col("asset_id")))
+      .withColumn("ws_bin_center", round(col("WMET_HorWdSpd") / wsBinWidth) * wsBinWidth)
+      .withColumn("vane_bin", round(col("WMET_HorWdDirRel") / vaneBinWidth) * vaneBinWidth)
 
   private def powerBin(pf: Column): Column =
     when(col("p_frac") > minPowerFilter && col("p_frac") <= pf,
       ceil((col("p_frac") - minPowerFilter) / ((pf - minPowerFilter) / numPowerBins)))
 
   /** Shared cosine-fit-input aggregation tail (yaw_misalignment.py:545-563):
-    * target ws-bin slice, optional power-coefficient normalization, vane
-    * binning, weighted per-bin power/vane statistics. Both the oracle-gated
-    * [[vaneBins]] (weight = 1) and the UQ bootstrap path in [[run]] (weight
-    * = Poisson multiplicity, extra `sim` key) consume THIS tail — the gated
-    * code is the only binning implementation.
+    * target ws-bin slice, optional power-coefficient normalization,
+    * weighted per-vane-bin power/vane statistics over [[normalBase]]'s bins.
+    * Both the oracle-gated [[vaneBins]] (weight = 1) and the UQ bootstrap
+    * path in [[run]] (weight = Poisson multiplicity, extra `sim` key)
+    * consume THIS tail — the gated code is the only binning implementation.
     */
-  private def binAggregate(
-      df: org.apache.spark.sql.DataFrame,
-      weight: Column,
-      keys: Seq[String]): org.apache.spark.sql.DataFrame =
-    df.withColumn("ws_bin_center",
-        round(col("WMET_HorWdSpd") / wsBinWidth) * wsBinWidth)
-      .filter(col("ws_bin_center").isin(wsBins.map(w => w: Any): _*))
+  private def binAggregate(df: DataFrame, weight: Column, keys: Seq[String]): DataFrame =
+    // ws bins are CENTERED on wsBins values: slice [c - w/2, c + w/2)
+    // (yaw_misalignment.py:374-378)
+    df.filter(col("ws_bin_center").isin(wsBins.map(w => w: Any): _*))
       .withColumn("__w", weight)
       .filter(col("__w") > 0)
       .withColumn("pow_ratio",
         if (usePowerCoeff) col("WTUR_W") / pow(col("WMET_HorWdSpd"), 3.0)
         else col("WTUR_W"))
-      .withColumn("vane_bin",
-        round(col("WMET_HorWdDirRel") / vaneBinWidth) * vaneBinWidth)
       .groupBy((keys ++ Seq("asset_id", "ws_bin_center", "vane_bin")).map(col): _*)
       .agg((sum(col("pow_ratio") * col("__w")) / sum(col("__w"))).as("perf_mean"),
         sum(col("__w")).as("n"),
@@ -118,20 +132,14 @@ final class StaticYawMisalignment(
     * the given max-power-filter fraction and MAD threshold, target ws-bin
     * slice, vane binning. [[run]] consumes this directly in the no-UQ path.
     */
-  def vaneBins(maxPf: Double = 0.95, madThresh: Double = 7.0): org.apache.spark.sql.DataFrame = {
-    val base = normalBase
-      .withColumn("__pbin", powerBin(lit(maxPf)))
-    val med = base.filter(col("__pbin").isNotNull)
-      .groupBy("asset_id", "__pbin")
-      .agg(percentile(col("WMET_HorWdSpd"), lit(0.5)).as("__med"))
-    val stats = base.filter(col("__pbin").isNotNull)
-      .join(broadcast(med), Seq("asset_id", "__pbin"))
-      .groupBy("asset_id", "__pbin")
-      .agg(first(col("__med")).as("__med"),
-        percentile(abs(col("WMET_HorWdSpd") - col("__med")), lit(0.5)).as("__mad"))
-    val kept = base.join(broadcast(stats), Seq("asset_id", "__pbin"), "left")
-      .filter(col("__mad").isNull ||
-        abs(col("WMET_HorWdSpd") - col("__med")) <= lit(madThresh) * col("__mad"))
+  def vaneBins(maxPf: Double = 0.95, madThresh: Double = 7.0): DataFrame = {
+    // the power bins of powerBin(maxPf): right-closed, width
+    // (maxPf - minPowerFilter) / numPowerBins from minPowerFilter
+    val kept = Flags.binFilter(normalBase, "p_frac", "WMET_HorWdSpd",
+        binWidth = (maxPf - minPowerFilter) / numPowerBins, threshold = madThresh,
+        centerType = "median", deviationType = "mad", flagCol = "__outlier",
+        binMin = Some(minPowerFilter), binMax = Some(maxPf), groupCols = Seq("asset_id"))
+      .filter(!col("__outlier"))
     // weight 1.0: sum(x*1.0)/sum(1.0) is bit-identical to avg(x), and n is
     // an exact integer-valued double -> restore the count-typed column
     binAggregate(kept, lit(1.0), Nil)
@@ -139,45 +147,7 @@ final class StaticYawMisalignment(
   }
 
   def run(): Result = {
-    val sims = if (uq) numSim else 1
-    val rng = new scala.util.Random(seed)
-    // per-sim thresholds (yaw_misalignment.py:434-444: randint grids)
-    val simPf: Map[Int, Double] =
-      (0 until sims).map(n => n -> (if (uq) (92 + rng.nextInt(7)) / 100.0 else 0.95)).toMap
-    val simMad: Map[Int, Double] =
-      (0 until sims).map(n => n -> (if (uq) (4 + rng.nextInt(10)).toDouble else 7.0)).toMap
-
     val base = normalBase
-
-    // median/MAD of wind speed per (max-power-filter value, turbine, power
-    // bin) — the outlier-filter statistics, one explode by <= 7 distinct
-    // filter values, two aggregate passes (exact medians; #pf x #turbines x
-    // numPowerBins rows -> broadcast)
-    val pfValues = simPf.values.toSeq.distinct.sorted
-    val statsBase = base
-      .withColumn("__pf", explode(array(pfValues.map(lit): _*)))
-      .withColumn("__pbin", powerBin(col("__pf")))
-      .filter(col("__pbin").isNotNull)
-    val med = statsBase.groupBy("__pf", "asset_id", "__pbin")
-      .agg(percentile(col("WMET_HorWdSpd"), lit(0.5)).as("__med"))
-    val binStats = statsBase.join(broadcast(med), Seq("__pf", "asset_id", "__pbin"))
-      .groupBy("__pf", "asset_id", "__pbin")
-      .agg(first(col("__med")).as("__med"),
-        percentile(abs(col("WMET_HorWdSpd") - col("__med")), lit(0.5)).as("__mad"))
-
-    // explode rows x sims; apply the sim's outlier filter via broadcast
-    // lookup; bootstrap weights under UQ
-    val pfOfSim = typedLit(simPf)
-    val madOfSim = typedLit(simMad)
-    // ws bins are CENTERED on wsBins values: slice [c - w/2, c + w/2)
-    // (yaw_misalignment.py:374-378) — applied inside binAggregate
-    val simDf = base
-      .withColumn("sim", explode(array((0 until sims).map(lit): _*)))
-      .withColumn("__pf", pfOfSim.apply(col("sim")))
-      .withColumn("__pbin", powerBin(col("__pf")))
-      .join(broadcast(binStats), Seq("__pf", "asset_id", "__pbin"), "left")
-      .filter(col("__mad").isNull ||
-        abs(col("WMET_HorWdSpd") - col("__med")) <= madOfSim.apply(col("sim")) * col("__mad"))
 
     // (sim, turbine, ws_bin, vane_bin) weighted mean power performance +
     // vane (yaw_misalignment.py:545-563); ONE shuffle for all simulations.
@@ -186,19 +156,32 @@ final class StaticYawMisalignment(
     // via Poisson bootstrap weights and an extra `sim` key.
     val binned =
       if (!uq)
-        vaneBins(simPf(0), simMad(0))
+        vaneBins()
           .select(lit(0).as("sim"), col("asset_id"), col("ws_bin_center"),
             col("vane_bin"), col("perf_mean"),
             col("n").cast("double").as("n"), col("vane_mean"))
           .collect()
-      else binAggregate(simDf,
-          poisson1(
-            (pmod(xxhash64(col("time"), col("asset_id"), col("sim"), lit(seed)),
-              lit(1000000L)) / 1000000.0)).cast("double"),
-          Seq("sim"))
-        .select(col("sim"), col("asset_id"), col("ws_bin_center"),
-          col("vane_bin"), col("perf_mean"), col("n"), col("vane_mean"))
-        .collect()
+      else {
+        // per-sim thresholds on the reference's randint grids
+        // (yaw_misalignment.py:434-444): hundredths of rated power, whole
+        // MADs; all filter draws first, then all MAD draws
+        val rng = new scala.util.Random(seed)
+        def draws(range: (Double, Double), scale: Double): Seq[Int] = {
+          val lo = math.round(range._1 * scale).toInt
+          val hi = math.round(range._2 * scale).toInt
+          Seq.fill(numSim)(lo + rng.nextInt(hi - lo + 1))
+        }
+        val simPf = draws(maxPowerFilter, 100).map(_ / 100.0)
+        val simMad = draws(powerBinMadThresh, 1).map(_.toDouble)
+        binAggregate(simFrame(base, simPf, simMad),
+            poisson1(
+              (pmod(xxhash64(col("time"), col("asset_id"), col("sim"), lit(seed)),
+                lit(1000000L)) / 1000000.0)).cast("double"),
+            Seq("sim"))
+          .select(col("sim"), col("asset_id"), col("ws_bin_center"),
+            col("vane_bin"), col("perf_mean"), col("n"), col("vane_mean"))
+          .collect()
+      }
 
     // driver-side per (sim, turbine, ws_bin): slice mean vane over ALL vane
     // bins (yaw_misalignment.py:554), cosine fit over qualifying bins, yaw
@@ -240,6 +223,37 @@ final class StaticYawMisalignment(
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     Result(avgVane, byBin.map { case (k, (m, _)) => k -> m },
       byBin.map { case (k, (_, sd)) => k -> sd })
+  }
+
+  /** `base` exploded into one row per simulation, with that simulation's
+    * power-curve outlier filter applied: draw n keeps a row unless its wind
+    * speed lies more than `simMad(n)` MADs from the median of its turbine's
+    * power bin under max-power filter `simPf(n)`.
+    */
+  private def simFrame(base: DataFrame, simPf: Seq[Double], simMad: Seq[Double]): DataFrame = {
+    // median/MAD of wind speed per (max-power-filter value, turbine, power
+    // bin): one explode by <= 7 distinct filter values, one aggregation
+    // (#pf x #turbines x numPowerBins rows -> broadcast)
+    val binStats = base
+      .withColumn("__pf", explode(array(simPf.distinct.sorted.map(lit): _*)))
+      .withColumn("__pbin", powerBin(col("__pf")))
+      .filter(col("__pbin").isNotNull)
+      .groupBy("__pf", "asset_id", "__pbin")
+      .agg(Flags.sortedValues(col("WMET_HorWdSpd")).as("__sorted"))
+      .withColumn("__med", Flags.medianOfSorted(col("__sorted")))
+      .withColumn("__mad", Flags.madOfSorted(col("__sorted"), col("__med")))
+      .drop("__sorted")
+    val draws = simPf.zip(simMad).zipWithIndex.map { case ((pf, mad), n) =>
+      struct(lit(n).as("sim"), lit(pf).as("pf"), lit(mad).as("mad"))
+    }
+    base
+      .withColumn("__draw", explode(array(draws: _*)))
+      .withColumn("sim", col("__draw.sim"))
+      .withColumn("__pf", col("__draw.pf"))
+      .withColumn("__pbin", powerBin(col("__pf")))
+      .join(broadcast(binStats), Seq("__pf", "asset_id", "__pbin"), "left")
+      .filter(col("__mad").isNull ||
+        abs(col("WMET_HorWdSpd") - col("__med")) <= col("__draw.mad") * col("__mad"))
   }
 
   /** Overall yaw per turbine = mean of per-ws-bin offsets. */

@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * remain prunable and nothing is collected.
   *
   * Scale notes (100 TB): every operator here is either a pure row-local
-  * expression (rangeFlag, windowRangeFlag), a two-level aggregate joined
-  * back on a low-cardinality key (stdRangeFlag: 1 row; binFilter: #bins
-  * rows — both broadcast), or a bounded window per asset (unresponsiveFlag).
+  * expression (rangeFlag, windowRangeFlag), an aggregate joined back on a
+  * low-cardinality key (stdRangeFlag: 1 row; binFilter: #bins rows — both
+  * broadcast), or a bounded window per asset (unresponsiveFlag).
   * No collects, no cross-joins at fact grain.
   */
 object Flags {
@@ -111,11 +111,13 @@ object Flags {
     *
     * centerType: "mean" | "median"; deviationType: "std" | "mad" | "scalar";
     * direction: "all" | "above" | "below". Medians are exact (interpolating
-    * `percentile`), matching numpy nanmedian.
+    * `percentile`), matching numpy nanmedian; the MAD is taken about the
+    * center.
     *
-    * Two aggregation passes over the fact table produce a #bins-row table
+    * One aggregation pass over the fact table produces a #bins-row table
     * (broadcast) joined back on the bin key — no fact-grain shuffle beyond
-    * the aggs themselves.
+    * the agg itself. A median or MAD reads the group's sorted values
+    * ([[sortedValues]]); the mean/std path does not collect them.
     */
   def binFilter(df: DataFrame, binCol: String, valueCol: String,
                 binWidth: Double, threshold: Double,
@@ -146,25 +148,24 @@ object Flags {
     // per-turbine power-curve filters); the stats stay a
     // #groups x #bins-row broadcast
     val keys = groupCols :+ "__bin"
-    val centerExpr = centerType match {
-      case "mean"   => avg(col(valueCol))
-      case "median" => percentile(col(valueCol), lit(0.5))
-    }
-    val centers = binned.filter(col("__bin").isNotNull)
-      .groupBy(keys.map(col): _*).agg(centerExpr.as("__center"),
-        stddev_samp(col(valueCol)).as("__std"))
-    val spreadTable = deviationType match {
-      case "mad" =>
-        // MAD needs the median-of-absolute-deviations: second pass vs center.
-        binned.filter(col("__bin").isNotNull).join(broadcast(centers), keys)
-          .groupBy(keys.map(col): _*)
-          .agg(first(col("__center")).as("__center"),
-            percentile(abs(col(valueCol) - col("__center")), lit(0.5)).as("__spread"))
-      case "std"    => centers.withColumnRenamed("__std", "__spread")
-      case "scalar" => centers.withColumn("__spread", lit(1.0)).drop("__std")
+    val v = col(valueCol)
+    val needsSorted = centerType == "median" || deviationType == "mad"
+    val aggs = Seq(
+      if (centerType == "mean") Some(avg(v).as("__center")) else None,
+      if (needsSorted) Some(sortedValues(v).as("__sorted")) else None,
+      if (deviationType == "std") Some(stddev_samp(v).as("__spread")) else None).flatten
+    val grouped = binned.filter(col("__bin").isNotNull)
+      .groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    val centered =
+      if (centerType == "median") grouped.withColumn("__center", medianOfSorted(col("__sorted")))
+      else grouped
+    val stats = deviationType match {
+      case "mad"    => centered.withColumn("__spread", madOfSorted(col("__sorted"), col("__center")))
+      case "std"    => centered
+      case "scalar" => centered.withColumn("__spread", lit(1.0))
     }
     val dev = col(valueCol) - col("__center")
-    val spread = (if (deviationType == "scalar") lit(1.0) else col("__spread")) * threshold
+    val spread = col("__spread") * threshold
     val rawFlag = direction match {
       case "all"   => dev > spread || -dev > spread
       case "above" => dev > spread
@@ -172,11 +173,37 @@ object Flags {
     }
     // NaN/null spread (singleton bin) and out-of-range rows are never flagged
     binned.join(
-        broadcast(spreadTable.select((keys :+ "__center" :+ "__spread").map(col): _*)),
+        broadcast(stats.select((keys :+ "__center" :+ "__spread").map(col): _*)),
         keys.toSeq, "left")
       .withColumn(flagCol, coalesce(rawFlag, lit(false)))
       .drop("__bin", "__center", "__spread", "__lo", "__hi")
   }
+
+  /** Aggregate expression: a group's non-null values as doubles, ascending —
+    * the input of [[medianOfSorted]] and [[madOfSorted]], so an exact median
+    * and its MAD cost one aggregation. Like `percentile`, it holds each
+    * group's values in memory. `sort_array`, not `array_sort`: the latter
+    * sorts through an interpreted comparator lambda.
+    */
+  def sortedValues(x: Column): Column = sort_array(collect_list(x.cast("double")))
+
+  /** Exact median of an ascending array, bit-identical to Spark's
+    * `percentile` at 0.5: at pos = (n-1)/2 it returns a[lo] when lo == hi or
+    * a[lo] == a[hi], else (hi-pos)·a[lo] + (pos-lo)·a[hi], which is
+    * 0.5·a[lo] + 0.5·a[hi]. An empty array (an all-null group) gives null.
+    */
+  def medianOfSorted(a: Column): Column = {
+    val n = size(a)
+    val lo = element_at(a, shiftright(n + 1, 1))
+    val hi = element_at(a, shiftright(n, 1) + 1)
+    when(n > 0, when(lo === hi, lo).otherwise(lit(0.5) * lo + lit(0.5) * hi))
+  }
+
+  /** Median absolute deviation about `center` of an ascending array, from
+    * the same array: the median of its sorted |x - center|.
+    */
+  def madOfSorted(a: Column, center: Column): Column =
+    medianOfSorted(sort_array(transform(a, x => abs(x - center))))
 
   /** KMeans-cluster two columns and flag points with Mahalanobis distance
     * greater than `distThreshold` within their cluster. Covariances are

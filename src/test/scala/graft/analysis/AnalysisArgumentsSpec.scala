@@ -1,0 +1,51 @@
+package graft.analysis
+
+import graft.SparkSpec
+
+/** The Monte-Carlo arguments of AEP, yaw and electrical losses: a
+  * degenerate draw count or sampling range is a typed error naming its
+  * argument, never a NaN result, and yaw's UQ draws follow the ranges
+  * they are given.
+  */
+class AnalysisArgumentsSpec extends SparkSpec {
+
+  private lazy val plant = SyntheticPlant.build(spark, days = 60, reanalysisYears = 1)
+
+  private def rejects(arg: String)(body: => Any): Unit = {
+    val e = intercept[IllegalArgumentException](body)
+    assert(e.getMessage.contains(arg), s"message does not name $arg: ${e.getMessage}")
+  }
+
+  test("numSim = 0 under UQ is rejected by AEP, yaw and electrical losses") {
+    rejects("numSim")(new MonteCarloAEP(plant, uq = true, numSim = 0))
+    rejects("numSim")(new StaticYawMisalignment(plant, uq = true, numSim = 0))
+    rejects("numSim")(new ElectricalLosses(plant, uq = true, numSim = 0))
+  }
+
+  test("AEP windinessYears must be a range of at least one year") {
+    rejects("windinessYears")(new MonteCarloAEP(plant, uq = true, windinessYears = (2, 1)))
+    rejects("windinessYears")(new MonteCarloAEP(plant, windinessYears = (0, 0)))
+    rejects("windinessYears")(new MonteCarloAEP(plant, uq = true, windinessYears = (0, 2)))
+  }
+
+  test("every sampled range must have lo <= hi") {
+    rejects("lossMaxPct")(new MonteCarloAEP(plant, lossMaxPct = (20, 10)))
+    rejects("uncertaintyOutlier")(new MonteCarloAEP(plant, uncertaintyOutlier = (3.0, 1.0)))
+    rejects("maxPowerFilter")(new StaticYawMisalignment(plant, maxPowerFilter = (0.98, 0.92)))
+    rejects("powerBinMadThresh")(new StaticYawMisalignment(plant, powerBinMadThresh = (13.0, 4.0)))
+    rejects("correctionThreshold")(new ElectricalLosses(plant, correctionThreshold = (0.995, 0.9)))
+  }
+
+  test("yaw UQ draws its outlier filter from maxPowerFilter and powerBinMadThresh") {
+    def yaw(pf: (Double, Double), mad: (Double, Double)) =
+      new StaticYawMisalignment(plant, minVaneBinCount = 10, uq = true, numSim = 3,
+        maxPowerFilter = pf, powerBinMadThresh = mad).run().yawByTurbineAndBin
+    // the synthetic plant's power curve is clean: at 4-13 MADs the filter
+    // drops nothing, at 1 MAD it drops rows in every power bin it covers
+    val default = yaw((0.92, 0.98), (4.0, 13.0))
+    val tight = yaw((0.92, 0.98), (1.0, 1.0))
+    assert(default.nonEmpty)
+    assert(tight != default)
+    assert(yaw((0.5, 0.5), (1.0, 1.0)) != tight)
+  }
+}

@@ -6,7 +6,7 @@ import org.apache.spark.sql.graft.ListenerBus
 import graft.SparkSpec
 
 /** The analyses release every RDD they persist, on return and on a throw,
-  * and wake's per-draw job count stays bounded.
+  * and wake's and AEP's job counts stay bounded.
   */
 class PinHygieneSpec extends SparkSpec {
 
@@ -60,5 +60,15 @@ class PinHygieneSpec extends SparkSpec {
     plant.turbineIds; plant.ratedPower
     val jobs = ListenerBus.countJobs(spark.sparkContext)(new WakeLosses(plant).run())
     assert(jobs <= 40, s"$jobs jobs")
+  }
+
+  test("MonteCarloAEP with UQ runs in a bounded number of Spark jobs") {
+    // one collect of the resampled reanalysis serves both the period
+    // aggregate and the long-term series, and the collected periods are
+    // sorted on the driver (9 jobs; 17 when each resampled every product
+    // and sorted in Spark)
+    val jobs = ListenerBus.countJobs(spark.sparkContext)(new MonteCarloAEP(plant,
+      timeResolution = "D", uq = true, numSim = 50, windinessYears = (1, 2)).run())
+    assert(jobs <= 12, s"$jobs jobs")
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -80,6 +81,33 @@ class FlagsSpec extends SparkSpec {
       centerType = "median", deviationType = "mad")
       .filter($"flag").select("v").as[Double].collect().toSeq
     assert(got == Seq(100.0))
+  }
+
+  test("median/MAD kernel equals percentile and the two-pass MAD bit for bit") {
+    val groups = Seq(
+      "one" -> Seq(Some(0.3)),
+      "two" -> Seq(Some(0.1), Some(0.7)),
+      "odd" -> Seq(Some(0.9), Some(0.1), Some(0.35), Some(2.2), Some(0.2)),
+      "even" -> Seq(Some(0.1), Some(0.7), Some(0.2), Some(0.35), Some(1.0 / 3), Some(5.5)),
+      "ties" -> Seq(Some(0.2), Some(0.7), Some(0.7), Some(0.7), Some(0.1), Some(0.7)),
+      "negative" -> Seq(Some(-3.3), Some(-0.1), Some(2.7), Some(-1.9)),
+      "with null" -> Seq(Some(1.5), None, Some(0.4), Some(0.6)),
+      "all null" -> Seq(None, None))
+    val df = groups.flatMap { case (g, vs) => vs.map(v => (g, v)) }.toDF("g", "x")
+    val kernel = df.groupBy("g").agg(Flags.sortedValues($"x").as("a"))
+      .select($"g", Flags.medianOfSorted($"a").as("med"),
+        Flags.madOfSorted($"a", Flags.medianOfSorted($"a")).as("mad"))
+    val med = df.groupBy("g").agg(percentile($"x", lit(0.5)).as("med"))
+    val twoPass = df.join(med, "g").groupBy("g")
+      .agg(first($"med").as("med"), percentile(abs($"x" - $"med"), lit(0.5)).as("mad"))
+    def bits(d: DataFrame) = d.collect().map { r =>
+      r.getString(0) -> Seq(1, 2).map(i =>
+        if (r.isNullAt(i)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(i))))
+    }.toMap
+    val got = bits(kernel)
+    assert(got.keySet == groups.map(_._1).toSet)
+    assert(got == bits(twoPass))
+    assert(got("all null") == Seq(None, None))
   }
 
   test("clusterMahalanobis2d flags far-out points") {
