@@ -17,6 +17,10 @@ import graft.SparkSpec
   * one-pass median/MAD kernel. A field of many values is pinned by its
   * count, its sum and `java.util.Arrays.hashCode` (a hash of every bit),
   * map values in key order.
+  *
+  * The electrical-losses `Result`s (daily and monthly meter, with and
+  * without UQ) and the EYA gap waterfall are pinned bit for bit as well,
+  * captured before the operator families moved onto `Pins`.
   */
 class AnalysisResultPinSpec extends SparkSpec {
 
@@ -149,5 +153,29 @@ class AnalysisResultPinSpec extends SparkSpec {
     assert(r.avgVaneAngleByTurbine == avgVane)
     assert(fingerprint(r.yawByTurbineAndBin) == ((16, -110.13155568168087, -1319436430)))
     assert(fingerprint(r.yawStdByTurbineAndBin) == ((16, 647.4004509583593, 1789391513)))
+  }
+
+  test("ElectricalLosses Result without UQ is unchanged, daily and monthly meter") {
+    assert(new ElectricalLosses(plant).run().losses.toSeq == Seq(0.019999999999999907))
+    assert(new ElectricalLosses(plant, monthlyMeter = Some(true)).run().losses.toSeq ==
+      Seq(0.020000000000000684))
+  }
+
+  test("ElectricalLosses Result with UQ is unchanged, daily and monthly meter") {
+    assert(fingerprint(new ElectricalLosses(plant, uq = true, numSim = 500).run().losses.toSeq) ==
+      ((500, 9.749943656047925, 574813470)))
+    assert(fingerprint(new ElectricalLosses(plant, monthlyMeter = Some(true), uq = true,
+      numSim = 500).run().losses.toSeq) == ((500, 9.869418815666883, 450408485)))
+  }
+
+  test("EYAGapAnalysis Result is unchanged") {
+    val gap = new EYAGapAnalysis(
+      eyaAep = 467.0, eyaGross = 597.0, eyaAvailLoss = 0.062,
+      eyaElecLoss = 0.024, eyaTurbineLoss = 0.037,
+      eyaWakeLoss = 0.05, eyaBladeDegLoss = 0.011,
+      oaAep = 448.0, oaAvailLoss = 0.0837, oaElecLoss = 0.0201,
+      oaTurbineIdeal = 581.0).compile()
+    assert(gap == Seq(467.0, 40.842369950000034, -11.721420572084998, 2.106614757195,
+      -50.22756413511007))
   }
 }
