@@ -39,6 +39,14 @@ final class TurbineLongTermGrossEnergy(
     numSim: Int = 20,
     seed: Long = 42L) {
 
+  require(!uq || numSim >= 1, s"numSim must be >= 1 with uq, got $numSim")
+  require(maxPowerFilter._1 <= maxPowerFilter._2,
+    s"maxPowerFilter must be (lo, hi) with lo <= hi, got $maxPowerFilter")
+  require(windBinThreshold._1 <= windBinThreshold._2,
+    s"windBinThreshold must be (lo, hi) with lo <= hi, got $windBinThreshold")
+  require(correctionThreshold._1 <= correctionThreshold._2,
+    s"correctionThreshold must be (lo, hi) with lo <= hi, got $correctionThreshold")
+
   final case class Result(plantGrossGwhPerYear: Array[Double],
                           perTurbine: Map[String, Double]) {
     def mean: Double = plantGrossGwhPerYear.sum / plantGrossGwhPerYear.length

@@ -70,6 +70,17 @@ final class WakeLosses(
   require(Seq("scada", "tower").contains(wdRef), s"bad wdRef $wdRef")
   require(Seq("mean", "median", "max").contains(freestreamPowerMethod))
   require(Seq("mean", "median", "max").contains(freestreamWsMethod))
+  require(!uq || numSim >= 1, s"numSim must be >= 1 with uq, got $numSim")
+  require(uncertaintySectorWidth._1 <= uncertaintySectorWidth._2,
+    s"uncertaintySectorWidth must be (lo, hi) with lo <= hi, got $uncertaintySectorWidth")
+  require(uncertaintyMadThresh._1 <= uncertaintyMadThresh._2,
+    s"uncertaintyMadThresh must be (lo, hi) with lo <= hi, got $uncertaintyMadThresh")
+  require(uncertaintyWsStart._1 <= uncertaintyWsStart._2,
+    s"uncertaintyWsStart must be (lo, hi) with lo <= hi, got $uncertaintyWsStart")
+  require(uncertaintyMaxPower._1 <= uncertaintyMaxPower._2,
+    s"uncertaintyMaxPower must be (lo, hi) with lo <= hi, got $uncertaintyMaxPower")
+  require(numYearsLt._1 <= numYearsLt._2,
+    s"numYearsLt must be (lo, hi) with lo <= hi, got $numYearsLt")
 
   final case class Result(
       porLossPlant: Double, porLossByTurbine: Map[String, Double],

@@ -2,6 +2,7 @@ package graft.fitting
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pins
 
 /** Bradley–Terry paired-comparison strengths — the model behind
   * preference-data audits (DPO/RLHF pair sets, LLM-judge tournaments,
@@ -75,10 +76,11 @@ object BradleyTerry {
       }
       spark.createDataFrame(items.indices.map(k => (items(k), p(k))))
         .toDF("item", "strength")
-    } else {
-      import org.apache.spark.sql.graft.PlanRebase.rebase
-      val ec = rebase(sym)
-      val itemsW = rebase(ec.groupBy(col("i").as("item"))
+    } else Pins.scoped { pins =>
+      // pinned: every round's pair join re-reads it
+      val ec = pins.pin(sym)
+      // pinned: the count and every round's ratio re-read it
+      val itemsW = pins.pin(ec.groupBy(col("i").as("item"))
         .agg(sum(col("w")).cast("double").as("__w")))
       val n = itemsW.count()
       var p = itemsW.select(col("item"), lit(1.0 / n).as("strength"))
@@ -94,11 +96,11 @@ object BradleyTerry {
           .select(col("item"), when(col("__d") > 0, col("__w") / col("__d"))
             .otherwise(0.0).as("__r"))
         val tot = raw.agg(coalesce(sum(col("__r")), lit(0.0)).as("__t"))
-        // rebase, not localCheckpoint: the lazy total folded back via
-        // crossJoin references `raw` twice, so a checkpoint that CARRIES
-        // origin stats squares the size estimate every round — see
-        // PlanRebase for the measured failure.
-        p = rebase(raw.crossJoin(tot)
+        // loop state, re-read twice by the next round. A loop pin, not a
+        // pin: the lazy total folded back via crossJoin references `raw`
+        // twice, so carried origin stats would square the size estimate
+        // every round — see Pins for the measured failure.
+        p = pins.loop(raw.crossJoin(tot)
           .select(col("item"),
             (col("__r") / when(col("__t") > 0, col("__t")).otherwise(1.0))
               .as("strength")))

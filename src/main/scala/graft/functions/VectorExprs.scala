@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graft.{ArrayDot, ColumnBridge, HashCombine}
+import org.apache.spark.sql.graft.{ArrayDot, ColumnBridge}
 
 /** Public wrappers for graft's codegen'd dense-vector kernels (see
   * [[org.apache.spark.sql.graft.ArrayDot]] for the design rationale).
@@ -21,13 +21,6 @@ object VectorExprs {
   def sub(a: Column, b: Column): Column =
     ColumnBridge.column(org.apache.spark.sql.graft.ArraySub(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** Codegen'd wraparound h1 + seed*h2 double-hashing combiner (long
-    * arithmetic that must wrap; ANSI checked ops would throw).
-    */
-  def hashCombine(h1: Column, h2: Column, seed: Long): Column =
-    ColumnBridge.column(HashCombine(
-      ColumnBridge.expression(h1), ColumnBridge.expression(h2), seed))
 
   /** Codegen'd multi-table sign-LSH bucketing: one input fetch, one
     * (table, bit, dim) loop — see

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pins
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard near-dup.
@@ -13,6 +14,10 @@ import org.apache.spark.sql.functions._
   * instead of via an O(n^2) cross join; SimHash groups on the 64-bit
   * signature (optionally banded for Hamming-distance tolerance). Nothing
   * here collects fact-grain data to the driver.
+  *
+  * Materialization follows [[org.apache.spark.sql.graft.Pins]]: each
+  * operator pins inside one `Pins.scoped`, and every pin names what
+  * re-reads it.
   */
 object Dedup {
 
@@ -153,14 +158,13 @@ object Dedup {
 
   def minHashCandidates(df: DataFrame, textCol: String, idCol: String,
                         shingleSize: Int = 5, numHashes: Int = 128,
-                        bands: Int = 32, maxBucketSize: Int = 2000): DataFrame = {
+                        bands: Int = 32,
+                        maxBucketSize: Int = 2000): DataFrame = Pins.scoped { pins =>
     val rowsPerBand = numHashes / bands
-    // The signature table is referenced four times below (both self-join
-    // sides + both per-pair re-attachments); materialize it once — it is
-    // tiny (#docs x numHashes longs) while its lineage (shingling over the
-    // full corpus) is not.
-    val sigs = minHashSignatures(df, textCol, idCol, shingleSize, numHashes)
-      .localCheckpoint(true)
+    // pinned: both self-join sides and both per-pair re-attachments re-read
+    // it — tiny (#docs x numHashes longs) while its lineage (shingling over
+    // the full corpus) is not
+    val sigs = pins.pin(minHashSignatures(df, textCol, idCol, shingleSize, numHashes))
     // Candidate pairs carry ONLY ids through the (possibly huge) bucket
     // self-join — a hot band bucket of n docs emits n^2/2 pair rows, and
     // shipping the numHashes-long signature arrays through that join is the
@@ -186,12 +190,11 @@ object Dedup {
     // grouping key is xxhash64(sig) — a collision merely adds a spurious
     // candidate whose true est_jaccard is computed (and thresholded)
     // downstream from the REAL signatures.
-    // hot is bounded tiny (buckets past the cap only); materialized once
-    // so the common no-hot case pays one agg pass and skips the star
-    // subtree entirely
-    val hot = keyed0.groupBy("bandkey").agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucketSize).select("bandkey")
-      .localCheckpoint(true)
+    // pinned: the emptiness probe, the anti-join and the star subtree re-read
+    // it — bounded tiny (buckets past the cap only), so the common no-hot
+    // case pays one agg pass and skips the star subtree entirely
+    val hot = pins.pin(keyed0.groupBy("bandkey").agg(count(lit(1)).as("__n"))
+      .filter(col("__n") > maxBucketSize).select("bandkey"))
     val keyed = keyed0.join(broadcast(hot), Seq("bandkey"), "left_anti")
     val hotStars = if (hot.isEmpty) None else Some {
       val hotIds = keyed0.join(broadcast(hot), Seq("bandkey"))
@@ -259,8 +262,10 @@ object Dedup {
     */
   def simHashCandidates(df: DataFrame, textCol: String, idCol: String,
                         maxHamming: Int = 3, maxBucketSize: Int = 2000): DataFrame =
-    hammingCandidates(simHashTable(df, textCol, idCol).localCheckpoint(true),
-      maxHamming, maxBucketSize)
+    Pins.scoped { pins =>
+      // pinned: the banding passes and the hot-bucket stars re-read it
+      hammingCandidates(pins.pin(simHashTable(df, textCol, idCol)), maxHamming, maxBucketSize)
+    }
 
   /** Near-dup candidate pairs over ANY precomputed 64-bit signature table
     * (id, sig) with Hamming distance <= maxHamming — the banding engine
@@ -283,7 +288,7 @@ object Dedup {
     */
   def hammingCandidates(sigs: DataFrame, maxHamming: Int = 3,
                         maxBucketSize: Int = 2000,
-                        bandsOverride: Int = 0): DataFrame = {
+                        bandsOverride: Int = 0): DataFrame = Pins.scoped { pins =>
     require(maxHamming >= 0 && maxHamming < 64, s"bad maxHamming $maxHamming")
     // bandsOverride decouples band WIDTH from the distance filter: the
     // multi-table path bands at the selective 4x16-bit point while keeping
@@ -314,12 +319,11 @@ object Dedup {
     // at ANY scale. Only cross-signature pairs inside hot buckets stay
     // capped (the genuinely quadratic part; other bands still find them
     // probabilistically).
-    // hot is bounded tiny (buckets past the cap only); materialized once
-    // so the common no-hot case pays one agg pass and skips the star
-    // subtree entirely
-    val hot = banded0.groupBy("band", "band_val").agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucketSize).select("band", "band_val")
-      .localCheckpoint(true)
+    // pinned: the emptiness probe, the anti-join and the star subtree re-read
+    // it — bounded tiny (buckets past the cap only), so the common no-hot
+    // case pays one agg pass and skips the star subtree entirely
+    val hot = pins.pin(banded0.groupBy("band", "band_val").agg(count(lit(1)).as("__n"))
+      .filter(col("__n") > maxBucketSize).select("band", "band_val"))
     val banded = banded0.join(broadcast(hot), Seq("band", "band_val"), "left_anti")
     val hotStars = if (hot.isEmpty) None else Some {
       val hotRows = banded0.join(broadcast(hot), Seq("band", "band_val"))
@@ -383,7 +387,7 @@ object Dedup {
     * (-1 = count here). The default `bands = 0` path needs n; when
     * `sigs` is a derived plan (simhash over text, typically), counting
     * it would recompute that upstream lineage — so the signatures are
-    * localCheckpoint'd ONCE up front and both the count and every
+    * pinned ONCE up front and both the count and every
     * per-table rotation read the materialized copy. Callers that
     * already know n (a prior `.count()`, a catalog row count) pass it
     * and skip the count job entirely; spec-pinned equal to the
@@ -393,15 +397,14 @@ object Dedup {
                              tables: Int = 4,
                              maxBucketSize: Int = 2000,
                              bands: Int = 0,
-                             corpusCount: Long = -1L): DataFrame = {
+                             corpusCount: Long = -1L): DataFrame = Pins.scoped { pins =>
     require(tables >= 1 && tables <= 16, s"bad tables $tables")
     require(maxHamming >= 0 && maxHamming < 64, s"bad maxHamming $maxHamming")
     require(bands >= 0 && bands <= 64, s"bad bands $bands")
-    // Materialize the signature plan once: the adaptive count() and the
-    // `tables` rotated banding passes below would each re-run the
-    // upstream signature computation (often an expensive
-    // simhash-over-text plan) otherwise.
-    val mat = sigs.localCheckpoint(true)
+    // pinned: the adaptive count() and the `tables` rotated banding passes
+    // re-read it; each would re-run the upstream signature computation
+    // (often an expensive simhash-over-text plan) otherwise.
+    val mat = pins.pin(sigs)
     // bands = 0 (default) -> adaptive: one count over the MATERIALIZED
     // signatures sizes the operating point (skipped when the caller
     // supplies corpusCount); pass explicit bands only with a
@@ -460,25 +463,26 @@ object Dedup {
     * text, no signatures. The mapping tables are node-sized and shrink
     * with the contraction; the contract joins broadcast the mapping when
     * it fits (AQE runtime-converts) and degrade to shuffle joins keyed on
-    * the endpoint otherwise. Each round's edge set and mapping are
-    * [[org.apache.spark.sql.graft.PlanRebase]]d (lesson 14: carried stats
-    * square through iterative checkpoints). Map-side partial aggregation
+    * the endpoint otherwise. Each round's edge set and labels are loop
+    * pins (lesson 14: carried stats square through iterative
+    * checkpoints). Map-side partial aggregation
     * collapses the contracted duplicates before the distinct's shuffle —
     * a clique's C(k,2) edges leave the mapper as ONE row per partition.
     */
   def connectedComponents(pairs: DataFrame, srcCol: String = "id_a",
                           dstCol: String = "id_b", maxIter: Int = 30,
-                          driverEdgeThreshold: Long = 4L * 1000 * 1000): DataFrame = {
+                          driverEdgeThreshold: Long = 4L * 1000 * 1000)
+      : DataFrame = Pins.scoped { pins =>
     // r14 (VERDICT ask 5): both directions via ONE explode pass — the
     // self-union executed the candidate-pair subtree once per branch
     // (2x the generator's work when the caller passes it lazy). Same
-    // multiset into the distinct.
-    val edges = pairs.select(explode(array(
+    // multiset into the distinct. Pinned: the count and the collect (or
+    // the initial labels and the first round) re-read it.
+    val edges = pins.pin(pairs.select(explode(array(
         struct(col(srcCol).as("src"), col(dstCol).as("dst")),
         struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("__e"))
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     // Size-aware short-circuit (the KMeansLite altitude rule): candidate-
     // pair graphs are usually FAR smaller than the corpus that produced
     // them, and the distributed loop pays ~0.3-0.8 s of job overhead per
@@ -527,78 +531,81 @@ object Dedup {
       val rows = ids.indices.map(i => (ids(i), minOf(find(i))))
       import spark.implicits._
       val idType = edges.schema("src").dataType
-      return rows.toDF("id", "comp")
+      rows.toDF("id", "comp")
         .select(col("id").cast(idType), col("comp").cast(idType))
+    } else {
+      // Final labels for every node of the ORIGINAL graph, folded through
+      // the per-round contraction mappings at the end. Loop state: the
+      // first round's fold re-reads it.
+      var labels = pins.loop(edges.select(col("src").as("id"))
+        .distinct()
+        .withColumn("comp", col("id")))
+      var cur = edges // symmetrized; both directions present
+      var iter = 0
+      var live = true
+      while (live && iter < maxIter) {
+        // (1) min of the closed neighborhood — partial-aggregated shuffle
+        // over the current (shrinking) edge set; output is node-sized.
+        val m1 = cur.groupBy("src")
+          .agg(min("dst").as("mn"))
+          .select(col("src").as("node"), least(col("src"), col("mn")).as("rep"))
+        // (2) two pointer jumps on the node-sized mapping: rep := rep(rep).
+        // One jump contracts stars/cliques; the second halves chains (a
+        // sorted path shrinks by only one node per round under a single
+        // hop). Jump joins are mapping x mapping — never edge-sized.
+        def jump(m: DataFrame): DataFrame = m.as("a")
+          .join(m.select(col("node").as("n2"), col("rep").as("r2")).as("b"),
+            col("a.rep") === col("n2"), "left")
+          .select(col("a.node").as("node"),
+            coalesce(col("r2"), col("a.rep")).as("rep"))
+        // pinned: both contraction joins and the label fold re-read it
+        val mapping = pins.pin(jump(jump(m1)))
+        // (3) contract: rewrite both endpoints through the mapping, drop
+        // self-loops. Map-side partial agg collapses a clique's C(k,2)
+        // rewritten duplicates before the distinct's shuffle.
+        // shuffle_hash on the node-sized mapping: SMJ would SORT the
+        // edge set twice per round (measured r10: sys-time-dominated disk
+        // spill at 174M edges); hash-building the small side streams the
+        // edges unsorted, and AQE still upgrades to broadcast when the
+        // mapping fits.
+        val contracted = cur
+          .join(mapping.withColumnRenamed("node", "src").hint("shuffle_hash"),
+            "src")
+          .select(col("rep").as("src"), col("dst"))
+          .join(mapping.withColumnRenamed("node", "dst").hint("shuffle_hash"),
+            "dst")
+          .select(col("src"), col("rep").as("dst"))
+          .filter(col("src") =!= col("dst"))
+        // r14 (VERDICT ask 5): the self-union re-executed BOTH contraction
+        // joins once per branch every round; one explode pass emits both
+        // directions (same multiset into the distinct). Loop state: the
+        // liveness probe and the next round re-read it.
+        val next = pins.loop(
+          contracted.select(explode(array(
+              struct(col("src"), col("dst")),
+              struct(col("dst").as("src"), col("src").as("dst")))).as("__e"))
+            .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
+            .distinct())
+        // Fold this round's mapping into the accumulated labels (labels
+        // stay original-node-sized; the mapping shrinks every round).
+        // Loop state, re-read by the next round's fold.
+        labels = pins.loop(labels.as("l")
+          .join(mapping.as("m"), col("l.comp") === col("m.node"), "left")
+          .select(col("l.id").as("id"),
+            coalesce(col("m.rep"), col("l.comp")).as("comp")))
+        cur = next
+        live = cur.limit(1).count() > 0L
+        iter += 1
+      }
+      // Silent partial contraction would violate the 'component = min node
+      // id' contract (nodes of one component under different labels) — fail
+      // loudly instead. Convergence is logarithmic in the longest path
+      // (measured r10: 174M edges -> 0 in 4 rounds), so 30 rounds means a
+      // pathological input, not a tuning issue.
+      require(!live,
+        s"connectedComponents did not converge in $maxIter contraction rounds")
+      labels
     }
-    import org.apache.spark.sql.graft.PlanRebase
-    // Final labels for every node of the ORIGINAL graph, folded through
-    // the per-round contraction mappings at the end.
-    var labels = edges.select(col("src").as("id"))
-      .distinct()
-      .withColumn("comp", col("id"))
-      .localCheckpoint(true)
-    var cur = edges // symmetrized; both directions present
-    var iter = 0
-    var live = true
-    while (live && iter < maxIter) {
-      // (1) min of the closed neighborhood — partial-aggregated shuffle
-      // over the current (shrinking) edge set; output is node-sized.
-      val m1 = cur.groupBy("src")
-        .agg(min("dst").as("mn"))
-        .select(col("src").as("node"), least(col("src"), col("mn")).as("rep"))
-      // (2) two pointer jumps on the node-sized mapping: rep := rep(rep).
-      // One jump contracts stars/cliques; the second halves chains (a
-      // sorted path shrinks by only one node per round under a single
-      // hop). Jump joins are mapping x mapping — never edge-sized.
-      def jump(m: DataFrame): DataFrame = m.as("a")
-        .join(m.select(col("node").as("n2"), col("rep").as("r2")).as("b"),
-          col("a.rep") === col("n2"), "left")
-        .select(col("a.node").as("node"),
-          coalesce(col("r2"), col("a.rep")).as("rep"))
-      val mapping = PlanRebase.rebase(jump(jump(m1)))
-      // (3) contract: rewrite both endpoints through the mapping, drop
-      // self-loops. Map-side partial agg collapses a clique's C(k,2)
-      // rewritten duplicates before the distinct's shuffle.
-      // shuffle_hash on the node-sized mapping: SMJ would SORT the
-      // edge set twice per round (measured r10: sys-time-dominated disk
-      // spill at 174M edges); hash-building the small side streams the
-      // edges unsorted, and AQE still upgrades to broadcast when the
-      // mapping fits.
-      val contracted = cur
-        .join(mapping.withColumnRenamed("node", "src").hint("shuffle_hash"),
-          "src")
-        .select(col("rep").as("src"), col("dst"))
-        .join(mapping.withColumnRenamed("node", "dst").hint("shuffle_hash"),
-          "dst")
-        .select(col("src"), col("rep").as("dst"))
-        .filter(col("src") =!= col("dst"))
-      // r14 (VERDICT ask 5): the self-union re-executed BOTH contraction
-      // joins once per branch every round; one explode pass emits both
-      // directions (same multiset into the distinct)
-      val next = PlanRebase.rebase(
-        contracted.select(explode(array(
-            struct(col("src"), col("dst")),
-            struct(col("dst").as("src"), col("src").as("dst")))).as("__e"))
-          .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-          .distinct())
-      // Fold this round's mapping into the accumulated labels (labels
-      // stay original-node-sized; the mapping shrinks every round).
-      labels = PlanRebase.rebase(labels.as("l")
-        .join(mapping.as("m"), col("l.comp") === col("m.node"), "left")
-        .select(col("l.id").as("id"),
-          coalesce(col("m.rep"), col("l.comp")).as("comp")))
-      cur = next
-      live = cur.limit(1).count() > 0L
-      iter += 1
-    }
-    // Silent partial contraction would violate the 'component = min node
-    // id' contract (nodes of one component under different labels) — fail
-    // loudly instead. Convergence is logarithmic in the longest path
-    // (measured r10: 174M edges -> 0 in 4 rounds), so 30 rounds means a
-    // pathological input, not a tuning issue.
-    require(!live,
-      s"connectedComponents did not converge in $maxIter contraction rounds")
-    labels
   }
 
   /** Quality-aware canonical selection: like [[dedupClusters]], but the
@@ -694,33 +701,32 @@ object Dedup {
 
   private def ngramPairCore(df: DataFrame, textCol: String, idCol: String,
                             blockCol: String, n: Int,
-                            maxShingleFreq: Int): DataFrame = {
+                            maxShingleFreq: Int): DataFrame = Pins.scoped { pins =>
     // Shingles become 8-byte xxhash64 longs BEFORE the dedup shuffle and the
     // self-join: intersection/union COUNTS are what Jaccard needs, and longs
     // cut the shuffled bytes ~3x vs ~20-char gram strings (collision odds at
     // 2^-64 per in-block pair are irrelevant next to FP tolerance).
-    // localCheckpoint: four consumers read this table (hot-shingle
-    // aggregate, per-doc sizes, both self-join sides) — materializing the
+    // Pinned: four consumers read this table (hot-shingle aggregate,
+    // per-doc sizes, both self-join sides) — materializing the
     // ~3-longs-per-shingle rows once beats re-running tokenize+shingle 4x
     // (same reuse pattern as minHashCandidates' signature table).
-    val sh = wordShingleRows(FanOut(df), idCol, textCol, n,
+    val sh = pins.pin(wordShingleRows(FanOut(df), idCol, textCol, n,
         passthrough = Seq(blockCol), dedup = false)
       .withColumnRenamed(blockCol, "block")
       .select(col("block"), col("id"), xxhash64(col("shingle")).as("shingle"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     val (filtered, hotStars) =
       if (maxShingleFreq >= Int.MaxValue / 2) (sh, None)
       else {
-        // hot is BOUNDED tiny by construction (only buckets past the cap);
-        // materialize it once so the no-hot common case costs one agg pass
-        // and skips the star subtree entirely (the sf1 A/B measured the
-        // unconditional star plan at +1-3 s per gate on corpora with zero
-        // hot shingles — two extra distinct passes over the shingle table)
-        val hot = sh.groupBy("block", "shingle").agg(count(lit(1)).as("__freq"))
+        // pinned: the emptiness probe and the anti-join re-read it. hot is
+        // BOUNDED tiny by construction (only buckets past the cap), so the
+        // no-hot common case costs one agg pass and skips the star subtree
+        // entirely (the sf1 A/B measured the unconditional star plan at
+        // +1-3 s per gate on corpora with zero hot shingles — two extra
+        // distinct passes over the shingle table)
+        val hot = pins.pin(sh.groupBy("block", "shingle").agg(count(lit(1)).as("__freq"))
           .filter(col("__freq") > maxShingleFreq)
-          .select("block", "shingle")
-          .localCheckpoint(true)
+          .select("block", "shingle"))
         val kept = sh.join(broadcast(hot), Seq("block", "shingle"), "left_anti")
         // r11 (the hot-bucket star lesson, third sibling): a doc family
         // duplicated past maxShingleFreq has EVERY shingle hot, so the
@@ -775,7 +781,7 @@ object Dedup {
     */
   def minHashCandidatesAgainst(newSigs: DataFrame, corpusSigs: DataFrame,
                                numHashes: Int = 128, bands: Int = 32,
-                               maxBucketSize: Int = 2000): DataFrame = {
+                               maxBucketSize: Int = 2000): DataFrame = Pins.scoped { pins =>
     val rowsPerBand = numHashes / bands
     def banded(sigs: DataFrame, idName: String) = sigs
       .select(col("id").as(idName),
@@ -790,9 +796,10 @@ object Dedup {
     // SOMETHING to be flagged; the match lands on the family
     // representative at est_jaccard 1.0. Linear in hot-bucket size.
     val cb = {
-      val hot = cb0.groupBy("bandkey").agg(count(lit(1)).as("__n"))
-        .filter(col("__n") > maxBucketSize).select("bandkey")
-        .localCheckpoint(true)
+      // pinned: the emptiness probe, the anti-join and the hot
+      // representatives re-read it
+      val hot = pins.pin(cb0.groupBy("bandkey").agg(count(lit(1)).as("__n"))
+        .filter(col("__n") > maxBucketSize).select("bandkey"))
       val cold = cb0.join(broadcast(hot), Seq("bandkey"), "left_anti")
       if (hot.isEmpty) cold else {
         val hotReps = cb0.join(broadcast(hot), Seq("bandkey"))
@@ -875,7 +882,7 @@ object Dedup {
     require(k > 0, s"k must be positive, got $k")
     // NOT checkpointed: the window pass and the rebuild explode each re-run
     // the scan + split — tokenizing is cheap codegen'd streaming work,
-    // while materializing the tokenized CORPUS (what localCheckpoint would
+    // while materializing the tokenized CORPUS (what a pin would
     // store) is a fact-grain cache that cannot fit executor storage at the
     // 100 TB north star. Measured at sf0.1: 3.7s vs 3.0s checkpointed —
     // inside the per-query noise band, and the recompute trade is the one
@@ -1439,18 +1446,18 @@ object Dedup {
     */
   def winnowPairs(df: DataFrame, idCol: String, textCol: String,
                   k: Int = 5, window: Int = 4, minShared: Int = 2,
-                  maxFpDocFreq: Int = 100): DataFrame = {
+                  maxFpDocFreq: Int = 100): DataFrame = Pins.scoped { pins =>
     require(minShared >= 1, s"bad minShared $minShared")
     require(maxFpDocFreq >= 2, s"bad maxFpDocFreq $maxFpDocFreq")
     // pair grain wants the fingerprint SET: collapse repeated window
     // selections of the same hash within one document first.
-    // localCheckpoint: the (id, fp) table feeds FOUR consumers (per-doc
-    // counts, the hot-fp aggregate, both self-join sides) and its lineage
-    // is the gram-hash chain — uncheckpointed, the chain re-executed ~6x
-    // (measured 6.45 -> 4.80 s at sf0.1 on the HOF chain; same reuse rule
-    // as minHashCandidates' signature table).
-    val fps = winnowFingerprints(df, idCol, textCol, k, window)
-      .select(col("id"), col("fp")).distinct().localCheckpoint(true)
+    // Pinned: the (id, fp) table feeds FOUR consumers (per-doc counts, the
+    // hot-fp aggregate, both self-join sides) and its lineage is the
+    // gram-hash chain — unpinned, the chain re-executed ~6x (measured
+    // 6.45 -> 4.80 s at sf0.1 on the HOF chain; same reuse rule as
+    // minHashCandidates' signature table).
+    val fps = pins.pin(winnowFingerprints(df, idCol, textCol, k, window)
+      .select(col("id"), col("fp")).distinct())
     val nFp = fps.groupBy("id").agg(count(lit(1)).as("__n_fp"))
     val cold = fps.join(
       fps.groupBy("fp").agg(count(lit(1)).as("__df"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pins
 
 /** Link-graph centrality over an edge table — the host-graph quality prior
   * a crawl pipeline feeds into document scoring (Common Crawl publishes
@@ -11,13 +12,16 @@ import org.apache.spark.sql.functions._
   * PageRank update: r' = (1-d)/N + d * (Σ_in r/outdeg + dangling/N).
   * Scale shape: one edges⋈ranks shuffle + one dst-grain aggregate per
   * iteration (the classic join-based formulation every Spark/Pregel
-  * implementation converges on), the per-iteration ranks table is
-  * localCheckpoint'd so lineage stays one-iteration deep, and the dangling
-  * mass is a single scalar aggregate per iteration. The same altitude rule
-  * as connectedComponents applies: a graph whose edge list fits the driver
-  * cap runs the identical power iteration in-memory (iterations × fixed
-  * job overhead dominates tiny graphs — the q_cc_dedup lesson), while the
-  * distributed loop covers graphs that cannot fit.
+  * implementation converges on), the per-iteration ranks table is a
+  * [[org.apache.spark.sql.graft.Pins]] loop pin so lineage stays
+  * one-iteration deep, and the dangling mass is a single scalar aggregate
+  * per iteration. Each operator's pins live in one `Pins.scoped`: what
+  * its result does not read is released when it returns. The same
+  * altitude rule as connectedComponents applies: a graph whose edge list
+  * fits the driver cap runs the identical power iteration in-memory
+  * (iterations × fixed job overhead dominates tiny graphs — the
+  * q_cc_dedup lesson), while the distributed loop covers graphs that
+  * cannot fit.
   */
 object LinkGraph {
 
@@ -94,20 +98,23 @@ object LinkGraph {
           (1.0 - damping) * t(i) + damping * (in(i) + dangling * t(i)))
       }
       spark.createDataFrame(nodes.zip(rank).toSeq).toDF("node", "rank")
-    } else {
-      val ec = e.localCheckpoint(true)
-      val nodes = (ec.select(col("src").as("node"))
+    } else Pins.scoped { pins =>
+      // pinned: the node set, the out-degrees and every round's
+      // contribution join re-read the edges
+      val ec = pins.pin(e)
+      // pinned: the count and every round's teleport join re-read it
+      val nodes = pins.pin((ec.select(col("src").as("node"))
         .union(ec.select(col("dst").as("node")))
         .union(seedSet.toDF("node")))
-        .distinct().localCheckpoint(true)
+        .distinct())
       val n = nodes.count()
       // teleport share per node: uniform, or concentrated on the seed list
       // (trusted lists are driver-sized by nature — a curated whitelist)
       def teleport(node: Column): Column =
         if (seedSet.isEmpty) lit(1.0 / n)
         else when(node.isin(seedSet: _*), lit(1.0 / seedSet.size)).otherwise(lit(0.0))
-      val outdeg = ec.groupBy("src").agg(count(lit(1)).as("__deg"))
-        .localCheckpoint(true)
+      // pinned: every round's dangling probe and contribution join re-read it
+      val outdeg = pins.pin(ec.groupBy("src").agg(count(lit(1)).as("__deg")))
       var ranks = nodes.withColumn("rank", teleport(col("node")))
       for (_ <- 1 to iters) {
         // scalar job: rank mass sitting on dangling nodes this iteration
@@ -117,11 +124,10 @@ object LinkGraph {
           .join(ranks, col("src") === col("node"))
           .groupBy(col("dst"))
           .agg(sum(col("rank") / col("__deg")).as("__in"))
-        // PlanRebase, not localCheckpoint: a checkpoint CARRIES origin
-        // stats, and a loop-carried frame whose plan references the
-        // previous round more than once compounds the size estimate
-        // exponentially across rounds (see PlanRebase's scaladoc).
-        ranks = org.apache.spark.sql.graft.PlanRebase.rebase(
+        // loop state: the next round's probe and join re-read it; a loop
+        // pin drops the carried size estimate, which would otherwise
+        // compound across rounds (see Pins)
+        ranks = pins.loop(
           nodes.join(contrib, nodes("node") === contrib("dst"), "left")
           .select(col("node"),
             ((lit(1.0 - damping) + lit(damping) * dangling) * teleport(col("node"))
@@ -174,17 +180,19 @@ object LinkGraph {
       spark.createDataFrame(
         nodes.indices.map(i => (nodes(i), hub(i), auth(i))))
         .toDF("node", "hub", "authority")
-    } else {
-      val ec = e.localCheckpoint(true)
-      val nodes = ec.select(col("src").as("node"))
+    } else Pins.scoped { pins =>
+      // pinned: the node set and both joins of every round re-read the edges
+      val ec = pins.pin(e)
+      // pinned: the count and both normalizing joins of every round re-read it
+      val nodes = pins.pin(ec.select(col("src").as("node"))
         .union(ec.select(col("dst").as("node")))
-        .distinct().localCheckpoint(true)
+        .distinct())
       val n = nodes.count()
       var scores = nodes.withColumn("hub", lit(1.0 / n))
         .withColumn("authority", lit(1.0 / n))
       // Normalization is folded into the lazy plan as 1-row aggregate
       // frames (crossJoin) instead of blocking head() actions, and the
-      // iteration materializes with ONE localCheckpoint — 1 job per
+      // iteration materializes with ONE loop pin — 1 job per
       // iteration instead of ~5 (two scalar actions + three eager
       // checkpoints). The authority subtree appears twice in the DAG;
       // Spark's exchange reuse dedups the shuffle, so it costs one
@@ -212,10 +220,10 @@ object LinkGraph {
           .join(withAuth.withColumnRenamed("node", "__n2"),
             col("node") === col("__n2"))
           .select(col("node"), col("hub"), col("authority"))
-        // stats-truncating rebase: this plan references `scores` (and the
-        // lazy totals) several times, so carried-stats checkpointing would
-        // compound the size estimate each round (PlanRebase scaladoc)
-        scores = org.apache.spark.sql.graft.PlanRebase.rebase(scores)
+        // loop state, re-read by the next round: this plan references
+        // `scores` (and the lazy totals) several times, so a carried size
+        // estimate would compound each round (see Pins)
+        scores = pins.loop(scores)
       }
       scores
     }
@@ -237,7 +245,7 @@ object LinkGraph {
     * (the oracle gate chains fixed-round CTEs in DuckDB). Scale shape:
     * each round is two left-semi joins (edges x survivors, shuffled on
     * the node key) + one endpoint-union aggregate; the survivor table is
-    * localCheckpoint'd so lineage stays one round deep; rounds are
+    * a loop pin so lineage stays one round deep; rounds are
     * bounded by the graph's peeling depth (small for real link graphs —
     * shells empty out layer by layer). Graphs under `driverCap` edges
     * run identical synchronous rounds in memory — the q_cc_dedup
@@ -276,11 +284,13 @@ object LinkGraph {
       spark.createDataFrame(nodes.indices.collect {
           case i if alive(i) => (nodes(i), deg(i).toLong)
         }).toDF("node", "degree")
-    } else {
-      val ec = und.localCheckpoint(true)
-      var surv = ec.select(col("a").as("node"))
+    } else Pins.scoped { pins =>
+      // pinned: both semi-joins of every round re-read the edges
+      val ec = pins.pin(und)
+      // loop state: the count and the first round's semi-joins re-read it
+      var surv = pins.loop(ec.select(col("a").as("node"))
         .union(ec.select(col("b").as("node")))
-        .distinct().localCheckpoint(true)
+        .distinct())
       var n = surv.count()
       var result: DataFrame = null
       var it = 0
@@ -288,10 +298,10 @@ object LinkGraph {
         val kept = ec
           .join(surv.select(col("node").as("a")), Seq("a"), "left_semi")
           .join(surv.select(col("node").as("b")), Seq("b"), "left_semi")
-        // rebase (lineage + stats truncation): `kept` is referenced twice
-        // and carries two semi-joins on the shrinking survivor set — see
-        // PlanRebase for why carried-stats checkpoints compound per round
-        val deg = org.apache.spark.sql.graft.PlanRebase.rebase(
+        // loop state: the count and the next round's semi-joins re-read
+        // it; `kept` is referenced twice, so a carried size estimate would
+        // compound per round (see Pins)
+        val deg = pins.loop(
           kept.select(col("a").as("node"))
           .union(kept.select(col("b").as("node")))
           .groupBy("node").agg(count(lit(1)).as("degree"))
@@ -335,8 +345,8 @@ object LinkGraph {
     * is one equi join (symmetrized edges x labels, shuffled on the node
     * key) + two aggregates — (node, label) vote counts, then the
     * frequency argmax as ONE max(struct(cnt, label)) with no window; the
-    * label table is [[org.apache.spark.sql.graft.PlanRebase]]d so neither
-    * lineage nor carried size stats compound across rounds. Graphs under
+    * label table is a [[org.apache.spark.sql.graft.Pins]] loop pin so
+    * neither lineage nor carried size stats compound across rounds. Graphs under
     * `driverCap` edges run the identical rounds in memory (the q_cc_dedup
     * altitude rule); the short-circuit requires integral ids — driver
     * label ordering must agree with Catalyst's for parity, which holds
@@ -392,9 +402,11 @@ object LinkGraph {
       spark.createDataFrame(nodes.indices.map(i => (nodes(i), label(i))))
         .toDF("node", "community")
         .select(col("node").cast(idType), col("community").cast(idType))
-    } else {
-      val ec = org.apache.spark.sql.graft.PlanRebase.rebase(sym)
-      var labels = org.apache.spark.sql.graft.PlanRebase.rebase(
+    } else Pins.scoped { pins =>
+      // pinned: every round's vote join re-reads the edges
+      val ec = pins.pin(sym)
+      // loop state: the first round's votes and fixpoint probe re-read it
+      var labels = pins.loop(
         ec.select(col("s").as("node")).distinct()
           .withColumn("community", col("node")))
       var round = 0
@@ -405,7 +417,8 @@ object LinkGraph {
           .select(col("d").as("node"), col("community"))
           .unionByName(labels)
           .groupBy("node", "community").agg(count(lit(1)).as("__cnt"))
-        val next = org.apache.spark.sql.graft.PlanRebase.rebase(votes
+        // loop state: the fixpoint probe and the next round re-read it
+        val next = pins.loop(votes
           .groupBy("node")
           .agg(max(struct(col("__cnt"), col("community"))).as("__m"))
           .select(col("node"), col("__m.community").as("community")))
@@ -491,7 +504,7 @@ object LinkGraph {
     * neighbors dist(u) + 1), run exactly `maxHops` rounds — distance is
     * capped by construction, so the loop needs no convergence probe and
     * an oracle replays the same fixed rounds. Each round is one equi
-    * join (edges x current distances) + one min aggregate, PlanRebase'd.
+    * join (edges x current distances) + one min aggregate, loop-pinned.
     * This is relax-ALL, not frontier BFS: at bounded maxHops (the use
     * case — past ~6 hops the signal is "far") the uniform round shape
     * wins on simplicity and replayability; a frontier variant only pays
@@ -537,17 +550,18 @@ object LinkGraph {
           if (dist(i) == Long.MaxValue) None else Some(dist(i)))))
         .toDF("node", "distance")
         .select(col("node").cast(idType), col("distance"))
-    } else {
-      val ec = org.apache.spark.sql.graft.PlanRebase.rebase(sym)
-      val nodes = org.apache.spark.sql.graft.PlanRebase.rebase(
-        ec.select(col("s").as("node")).distinct())
+    } else Pins.scoped { pins =>
+      // pinned: every round's relaxation join re-reads the edges
+      val ec = pins.pin(sym)
+      // pinned: the seed filter and the final join re-read it
+      val nodes = pins.pin(ec.select(col("s").as("node")).distinct())
       val seedLit = typedlit(seeds.map(String.valueOf(_)))
-      var dist = org.apache.spark.sql.graft.PlanRebase.rebase(
-        nodes.filter(array_contains(seedLit,
-            col("node").cast("string")))
-          .withColumn("distance", lit(0L)))
+      var dist = nodes.filter(array_contains(seedLit,
+          col("node").cast("string")))
+        .withColumn("distance", lit(0L))
       for (_ <- 1 to maxHops) {
-        dist = org.apache.spark.sql.graft.PlanRebase.rebase(
+        // loop state: the next round's join and union re-read it
+        dist = pins.loop(
           ec.join(dist.select(col("node").as("s"), col("distance")), Seq("s"))
             .select(col("d").as("node"), (col("distance") + 1L).as("distance"))
             .unionByName(dist)
@@ -572,7 +586,7 @@ object LinkGraph {
     * hub cap that bounds the array payload, where an uncapped crawl-hub
     * row would be a multi-MB cell), then each of the `walkLen` steps is
     * one equi join of the (origin, walk, cur) frontier against adjacency,
-    * PlanRebase'd so neither lineage nor carried stats compound. Total
+    * loop-pinned so neither lineage nor carried stats compound. Total
     * cost: walkLen shuffles of a frontier that never exceeds
     * nodes x walksPerNode rows. Walks never dead-end: the symmetrized
     * graph gives every non-isolated node a neighbor; isolated nodes have
@@ -582,7 +596,7 @@ object LinkGraph {
     */
   def randomWalks(edges: DataFrame, srcCol: String, dstCol: String,
                   walkLen: Int = 10, walksPerNode: Int = 2,
-                  maxDegree: Int = 128, seed: Long = 0L): DataFrame = {
+                  maxDegree: Int = 128, seed: Long = 0L): DataFrame = Pins.scoped { pins =>
     require(walkLen >= 1, s"walkLen must be >= 1, got $walkLen")
     require(walksPerNode >= 1, s"walksPerNode must be >= 1, got $walksPerNode")
     require(maxDegree >= 1, s"maxDegree must be >= 1, got $maxDegree")
@@ -590,7 +604,8 @@ object LinkGraph {
       .select(col(srcCol).as("s"), col(dstCol).as("d"))
       .filter(col("s").isNotNull && col("d").isNotNull && col("s") =!= col("d"))
     val sym = bothDirections(directed).distinct()
-    val adj = org.apache.spark.sql.graft.PlanRebase.rebase(
+    // pinned: the first frontier and every step's join re-read it
+    val adj = pins.pin(
       sym.groupBy(col("s").as("__node"))
         .agg(slice(array_sort(collect_set(col("d"))), 1, maxDegree)
           .as("__nbrs")))
@@ -607,7 +622,8 @@ object LinkGraph {
       val prf = conv(substring(md5(concat_ws("_",
         col("origin").cast("string"), col("walk").cast("string"),
         lit(s.toString), lit(seed.toString))), 1, 8), 16, 10).cast("long")
-      frontier = org.apache.spark.sql.graft.PlanRebase.rebase(
+      // loop state: the next step and the output union re-read it
+      frontier = pins.loop(
         frontier.join(adj, frontier("cur") === adj("__node"))
           .select(col("origin"), col("walk"),
             element_at(col("__nbrs"),

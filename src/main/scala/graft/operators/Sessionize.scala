@@ -31,15 +31,4 @@ object Sessionize {
     df.withColumn("session_id",
       sum(isStart).over(w.rowsBetween(Window.unboundedPreceding, 0)))
   }
-
-  /** Per-session aggregate: event count, span seconds, value sum. */
-  def sessionStats(df: DataFrame, keyCols: Seq[String], tsCol: String,
-                   gapSeconds: Long, valueCol: String,
-                   tieBreakCols: Seq[String] = Nil): DataFrame =
-    withSessionId(df, keyCols, tsCol, gapSeconds, tieBreakCols)
-      .groupBy((keyCols.map(col) :+ col("session_id")): _*)
-      .agg(count(lit(1)).as("n_events"),
-        (unix_timestamp(max(col(tsCol))) - unix_timestamp(min(col(tsCol))))
-          .as("span_seconds"),
-        sum(col(valueCol)).as("value_sum"))
 }

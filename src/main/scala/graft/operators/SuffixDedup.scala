@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import org.apache.spark.sql.graft.PlanRebase
+import org.apache.spark.sql.graft.Pins
 
 /** Exact repeated-substring detection with ARBITRARY-LENGTH longest-match
   * semantics — the suffix-array formulation of "Deduplicating Training
@@ -54,9 +54,9 @@ import org.apache.spark.sql.graft.PlanRebase
   * Scale notes. Positions are fact-grain (one row per token); every
   * stage is an equi-join, a groupBy, or a per-document window; the only
   * global sorts are the per-level distinct-key orderings and the final
-  * suffix ordering (Spark range-partitioned sorts). Each level is
-  * [[PlanRebase]]d (lesson 14: carried stats square through iterative
-  * localCheckpoints). Doubling stops early when all ranks are distinct
+  * suffix ordering (Spark range-partitioned sorts). Each level is a
+  * [[Pins]] loop pin (lesson 14: carried stats square through iterative
+  * checkpoints). Doubling stops early when all ranks are distinct
   * (random text reaches distinctness in a few levels; the cap bounds
   * adversarial corpora). At 100 TB the retained level tables would
   * persist to disk rather than executor memory — they are (id, pos,
@@ -235,10 +235,11 @@ object SuffixDedup {
     * its neighbor with v = that hop's edge value. Each round composes
     * (ptr, v) <- (ptr(ptr), min(v, v(ptr))); at the fixpoint v is the
     * min of the edge values along the open path (anchor, ord]. O(log
-    * path length) join rounds, PlanRebase'd per round (lesson 14).
+    * path length) join rounds, loop-pinned per round (lesson 14). `init`
+    * is a projection of a pin and stays lazy.
     */
-  private def doubleToAnchor(init: DataFrame): DataFrame = {
-    var st = PlanRebase.rebase(init)
+  private def doubleToAnchor(pins: Pins, init: DataFrame): DataFrame = {
+    var st = init
     var converged = false
     while (!converged) {
       val hop = st.select(col("ord").as("__o2"), col("ptr").as("__p2"),
@@ -247,7 +248,8 @@ object SuffixDedup {
         .select(col("ord"), col("__p2").as("ptr"),
           least(col("v"), col("__v2")).as("v"),
           (col("ptr") =!= col("__p2")).cast("long").as("__moved"))
-      val rb = PlanRebase.rebase(j)
+      // loop state: the convergence sum and the next round re-read it
+      val rb = pins.loop(j)
       converged = rb.agg(sum(col("__moved"))).head().getLong(0) == 0L
       st = rb.drop("__moved")
     }
@@ -256,11 +258,12 @@ object SuffixDedup {
 
   /** Build suffix order + adjacent exact LCPs for the whole corpus:
     * returns (id, pos, ntok, ord, lcp_prev). */
-  private def suffixLcp(tokens: DataFrame, maxLen: Int): DataFrame = {
-    val spark = tokens.sparkSession
+  private def suffixLcp(pins: Pins, tokens: DataFrame, maxLen: Int): DataFrame = {
     // rank_0: dense token codes (vocab-sized sort)
     val vocab = denseCodes(tokens, Seq("__tok"), "__c")
-    var lvl = PlanRebase.rebase(tokens.join(vocab, Seq("__tok"))
+    // loop state: the count, the next level and the LCP ladder re-read
+    // every level
+    var lvl = pins.loop(tokens.join(vocab, Seq("__tok"))
       .select(col("id"), col("pos"), col("__c").as("r")))
     var len = 1L
     val levels = scala.collection.mutable.ArrayBuffer((len, lvl))
@@ -275,7 +278,7 @@ object SuffixDedup {
         .select(col("id"), col("pos"), col("r"),
           coalesce(col("__r2"), lit(-1L)).as("r2"))
       val codes = denseCodes(pairs, Seq("r", "r2"), "__nr")
-      lvl = PlanRebase.rebase(pairs.join(codes, Seq("r", "r2"))
+      lvl = pins.loop(pairs.join(codes, Seq("r", "r2"))
         .select(col("id"), col("pos"), col("__nr").as("r")))
       len *= 2
       levels += ((len, lvl))
@@ -286,7 +289,8 @@ object SuffixDedup {
     }
     // final suffix order (equal ranks = equal capped prefixes, adjacent)
     val ntoks = tokens.select("id", "pos", "ntok")
-    val ordered = PlanRebase.rebase(ordinalize(
+    // pinned: both ladder sides and the final join re-read it
+    val ordered = pins.pin(ordinalize(
       lvl.join(ntoks, Seq("id", "pos")),
       Seq(col("r"), col("id"), col("pos")), "ord"))
     // adjacent pairs: (ord of the RIGHT suffix, left = ord-1)
@@ -313,7 +317,8 @@ object SuffixDedup {
         col("__ra") === col("__rb") &&
         col("__pa") + col("lcp") + l <= col("__na") &&
         col("__pb") + col("lcp") + l <= col("__nb")
-      pr = PlanRebase.rebase(ext
+      // loop state, re-read by the next ladder step
+      pr = pins.loop(ext
         .withColumn("lcp", col("lcp") + when(ok, l).otherwise(0L))
         .select("ord", "__ia", "__pa", "__na", "__ib", "__pb", "__nb",
           "lcp"))
@@ -321,7 +326,8 @@ object SuffixDedup {
     val lcpPrev = pr.select(col("ord"), col("lcp").as("lcp_prev"))
     val withLcp = ordered.join(lcpPrev, Seq("ord"), "left")
       .withColumn("lcp_prev", coalesce(col("lcp_prev"), lit(0L)))
-    PlanRebase.rebase(withLcp)
+    // pinned: the callers' self-joins re-read it
+    pins.pin(withLcp)
   }
 
   /** Per token position: the length of the longest substring starting
@@ -343,8 +349,8 @@ object SuffixDedup {
     val toks = tokenize(df, idCol, textCol)
     val nPos = toks.count()
     if (nPos == 0)
-      return emptyOut(df, idCol, Seq("id", "pos", "ntok", "match_len"))
-    if (nPos <= maxDriverPositions &&
+      emptyOut(df, idCol, Seq("id", "pos", "ntok", "match_len"))
+    else if (nPos <= maxDriverPositions &&
         driverIdSupported(idDataType(df, idCol))) {
       val c = localSuffixes(toks, maxLen)
       val n = c.order.length
@@ -358,19 +364,20 @@ object SuffixDedup {
         i += 1
       }
       import org.apache.spark.sql.types.{StructField, StructType}
-      return df.sparkSession.createDataFrame(
+      df.sparkSession.createDataFrame(
         df.sparkSession.sparkContext.parallelize(out.toSeq),
         StructType(StructField("id", idDataType(df, idCol)) ::
           StructField("pos", LongType) :: StructField("ntok", LongType) ::
           StructField("match_len", LongType) :: Nil))
+    } else Pins.scoped { pins =>
+      val s = suffixLcp(pins, toks, maxLen)
+      val next = s.select((col("ord") - 1).as("ord"),
+        col("lcp_prev").as("__lcp_next"))
+      s.join(next, Seq("ord"), "left")
+        .select(col("id"), col("pos"), col("ntok"),
+          greatest(col("lcp_prev"), coalesce(col("__lcp_next"), lit(0L)))
+            .as("match_len"))
     }
-    val s = suffixLcp(toks, maxLen)
-    val next = s.select((col("ord") - 1).as("ord"),
-      col("lcp_prev").as("__lcp_next"))
-    s.join(next, Seq("ord"), "left")
-      .select(col("id"), col("pos"), col("ntok"),
-        greatest(col("lcp_prev"), coalesce(col("__lcp_next"), lit(0L)))
-          .as("match_len"))
   }
 
   /** The ExactSubstr CUT LIST: maximal merged spans of tokens covered by
@@ -391,9 +398,8 @@ object SuffixDedup {
     val toks = tokenize(df, idCol, textCol)
     val nPos = toks.count()
     if (nPos == 0)
-      return emptyOut(df, idCol,
-        Seq("id", "span_start", "span_end", "n_tok"))
-    if (nPos <= maxDriverPositions &&
+      emptyOut(df, idCol, Seq("id", "span_start", "span_end", "n_tok"))
+    else if (nPos <= maxDriverPositions &&
         driverIdSupported(idDataType(df, idCol))) {
       val c = localSuffixes(toks, maxLen)
       val n = c.order.length
@@ -468,97 +474,100 @@ object SuffixDedup {
         merged.map { case (st, en) => Row(c.ids(d), st, en, en - st) }
       }
       import org.apache.spark.sql.types.{StructField, StructType}
-      return df.sparkSession.createDataFrame(
+      df.sparkSession.createDataFrame(
         df.sparkSession.sparkContext.parallelize(spanRows),
         StructType(StructField("id", idDataType(df, idCol)) ::
           StructField("span_start", LongType) ::
           StructField("span_end", LongType) ::
           StructField("n_tok", LongType) :: Nil))
+    } else Pins.scoped { pins =>
+      val sfx = suffixLcp(pins, toks, maxLen)
+      val next = sfx.select((col("ord") - 1).as("ord"),
+        col("lcp_prev").as("__lcp_next"))
+      // pinned: the run-head doubling and the run join re-read it
+      val nodes = pins.pin(sfx.join(next, Seq("ord"), "left")
+        .select(col("ord"), col("id"), col("pos"),
+          col("lcp_prev"), coalesce(col("__lcp_next"), lit(0L))
+            .as("lcp_next")))
+      // run head: ord with lcp_prev < minTokens; pointer-double to it
+      // (doubleToAnchor with an unused carried value)
+      val headPtr = doubleToAnchor(pins, nodes.select(col("ord"),
+        when(col("lcp_prev") < minTokens, col("ord"))
+          .otherwise(col("ord") - 1).as("ptr"),
+        lit(Long.MaxValue).as("v")))
+      val withRun = nodes.join(
+        headPtr.select(col("ord"), col("ptr").as("run")), Seq("ord"))
+      val keepers = withRun.groupBy("run")
+        .agg(min(struct(col("id"), col("pos"))).as("__keep"))
+      val kOrd = withRun.join(keepers, Seq("run"))
+        .filter(col("id") === col("__keep.id") &&
+          col("pos") === col("__keep.pos"))
+        .select(col("run"), col("ord").as("kord"))
+      // pinned: both carried-min doublings and the cut join re-read it
+      val members = pins.pin(withRun.join(kOrd, Seq("run")))
+      // cut length = LCP(member, KEEPER): the min of adjacent lcps
+      // strictly between them (the suffix-array LCP lemma). Cutting each
+      // member's own max adjacent LCP instead would remove text shared
+      // only among NON-keepers from every copy — content destroyed
+      // corpus-wide; anchoring on the keeper guarantees every cut span
+      // survives verbatim at the keeper's copy. Two carried-min pointer
+      // doublings (rightward-of-keeper members pull mins leftward to the
+      // keeper anchor; leftward members symmetrically); run boundaries
+      // are also anchors so propagation never crosses runs.
+      val minR = doubleToAnchor(pins, members.select(col("ord"),
+        when(col("lcp_prev") < minTokens || col("ord") === col("kord"),
+          col("ord")).otherwise(col("ord") - 1).as("ptr"),
+        when(col("lcp_prev") < minTokens || col("ord") === col("kord"),
+          lit(Long.MaxValue)).otherwise(col("lcp_prev")).as("v")))
+        .select(col("ord"), col("v").as("__vr"))
+      val minL = doubleToAnchor(pins, members.select(col("ord"),
+        when(col("lcp_next") < minTokens || col("ord") === col("kord"),
+          col("ord")).otherwise(col("ord") + 1).as("ptr"),
+        when(col("lcp_next") < minTokens || col("ord") === col("kord"),
+          lit(Long.MaxValue)).otherwise(col("lcp_next")).as("v")))
+        .select(col("ord"), col("v").as("__vl"))
+      // pinned: the protections and the covered positions re-read it
+      val cutsRaw = pins.pin(
+        members.join(minR, Seq("ord")).join(minL, Seq("ord"))
+          .withColumn("__len",
+            when(col("ord") > col("kord"), col("__vr"))
+              .when(col("ord") < col("kord"), col("__vl"))
+              .otherwise(lit(0L)))
+          .filter(col("__len") >= minTokens &&
+            col("__len") < lit(Long.MaxValue))
+          .select(col("run"), col("id"), col("pos"), col("__len")))
+      // keeper-prefix protection (see scaladoc): each run that cut
+      // anything protects its keeper's first max-cut-length tokens from
+      // EVERY run's cuts, so a duplicated >= minTokens gram always
+      // survives at its run's keeper
+      val protections = keepers
+        .join(cutsRaw.groupBy("run").agg(max(col("__len")).as("__plen")),
+          Seq("run"))
+        .select(col("__keep.id").as("id"),
+          explode(sequence(col("__keep.pos"),
+            col("__keep.pos") + col("__plen") - 1)).as("__idx"))
+      val covered = cutsRaw
+        .select(col("id"),
+          explode(sequence(col("pos"), col("pos") + col("__len") - 1))
+            .as("__idx"))
+        .distinct()
+        .join(protections, Seq("id", "__idx"), "left_anti")
+      // merge removed positions into maximal spans per document (per-id
+      // window — the partition is one document, bounded by its length)
+      val w = Window.partitionBy("id").orderBy("__idx")
+      val islands = covered
+        .withColumn("__prev", lag(col("__idx"), 1).over(w))
+        .withColumn("__new",
+          when(col("__prev").isNull || col("__idx") > col("__prev") + 1, 1L)
+            .otherwise(0L))
+        .withColumn("__island", sum(col("__new"))
+          .over(w.rowsBetween(Window.unboundedPreceding, 0)))
+      islands.groupBy("id", "__island")
+        .agg(min(col("__idx")).as("span_start"),
+          (max(col("__idx")) + 1).as("span_end"))
+        .select(col("id"), col("span_start"), col("span_end"),
+          (col("span_end") - col("span_start")).as("n_tok"))
     }
-    val sfx = suffixLcp(toks, maxLen)
-    val next = sfx.select((col("ord") - 1).as("ord"),
-      col("lcp_prev").as("__lcp_next"))
-    val nodes = PlanRebase.rebase(sfx.join(next, Seq("ord"), "left")
-      .select(col("ord"), col("id"), col("pos"),
-        col("lcp_prev"), coalesce(col("__lcp_next"), lit(0L))
-          .as("lcp_next")))
-    // run head: ord with lcp_prev < minTokens; pointer-double to it
-    // (doubleToAnchor with an unused carried value)
-    val headPtr = doubleToAnchor(nodes.select(col("ord"),
-      when(col("lcp_prev") < minTokens, col("ord"))
-        .otherwise(col("ord") - 1).as("ptr"),
-      lit(Long.MaxValue).as("v")))
-    val withRun = nodes.join(
-      headPtr.select(col("ord"), col("ptr").as("run")), Seq("ord"))
-    val keepers = withRun.groupBy("run")
-      .agg(min(struct(col("id"), col("pos"))).as("__keep"))
-    val kOrd = withRun.join(keepers, Seq("run"))
-      .filter(col("id") === col("__keep.id") &&
-        col("pos") === col("__keep.pos"))
-      .select(col("run"), col("ord").as("kord"))
-    val members = PlanRebase.rebase(
-      withRun.join(kOrd, Seq("run")))
-    // cut length = LCP(member, KEEPER): the min of adjacent lcps
-    // strictly between them (the suffix-array LCP lemma). Cutting each
-    // member's own max adjacent LCP instead would remove text shared
-    // only among NON-keepers from every copy — content destroyed
-    // corpus-wide; anchoring on the keeper guarantees every cut span
-    // survives verbatim at the keeper's copy. Two carried-min pointer
-    // doublings (rightward-of-keeper members pull mins leftward to the
-    // keeper anchor; leftward members symmetrically); run boundaries
-    // are also anchors so propagation never crosses runs.
-    val minR = doubleToAnchor(members.select(col("ord"),
-      when(col("lcp_prev") < minTokens || col("ord") === col("kord"),
-        col("ord")).otherwise(col("ord") - 1).as("ptr"),
-      when(col("lcp_prev") < minTokens || col("ord") === col("kord"),
-        lit(Long.MaxValue)).otherwise(col("lcp_prev")).as("v")))
-      .select(col("ord"), col("v").as("__vr"))
-    val minL = doubleToAnchor(members.select(col("ord"),
-      when(col("lcp_next") < minTokens || col("ord") === col("kord"),
-        col("ord")).otherwise(col("ord") + 1).as("ptr"),
-      when(col("lcp_next") < minTokens || col("ord") === col("kord"),
-        lit(Long.MaxValue)).otherwise(col("lcp_next")).as("v")))
-      .select(col("ord"), col("v").as("__vl"))
-    val cutsRaw = PlanRebase.rebase(
-      members.join(minR, Seq("ord")).join(minL, Seq("ord"))
-        .withColumn("__len",
-          when(col("ord") > col("kord"), col("__vr"))
-            .when(col("ord") < col("kord"), col("__vl"))
-            .otherwise(lit(0L)))
-        .filter(col("__len") >= minTokens &&
-          col("__len") < lit(Long.MaxValue))
-        .select(col("run"), col("id"), col("pos"), col("__len")))
-    // keeper-prefix protection (see scaladoc): each run that cut
-    // anything protects its keeper's first max-cut-length tokens from
-    // EVERY run's cuts, so a duplicated >= minTokens gram always
-    // survives at its run's keeper
-    val protections = keepers
-      .join(cutsRaw.groupBy("run").agg(max(col("__len")).as("__plen")),
-        Seq("run"))
-      .select(col("__keep.id").as("id"),
-        explode(sequence(col("__keep.pos"),
-          col("__keep.pos") + col("__plen") - 1)).as("__idx"))
-    val covered = cutsRaw
-      .select(col("id"),
-        explode(sequence(col("pos"), col("pos") + col("__len") - 1))
-          .as("__idx"))
-      .distinct()
-      .join(protections, Seq("id", "__idx"), "left_anti")
-    // merge removed positions into maximal spans per document (per-id
-    // window — the partition is one document, bounded by its length)
-    val w = Window.partitionBy("id").orderBy("__idx")
-    val islands = covered
-      .withColumn("__prev", lag(col("__idx"), 1).over(w))
-      .withColumn("__new",
-        when(col("__prev").isNull || col("__idx") > col("__prev") + 1, 1L)
-          .otherwise(0L))
-      .withColumn("__island", sum(col("__new"))
-        .over(w.rowsBetween(Window.unboundedPreceding, 0)))
-    islands.groupBy("id", "__island")
-      .agg(min(col("__idx")).as("span_start"),
-        (max(col("__idx")) + 1).as("span_end"))
-      .select(col("id"), col("span_start"), col("span_end"),
-        (col("span_end") - col("span_start")).as("n_tok"))
   }
 
   /** Rebuild the corpus with the [[maximalRepeatedSpans]] cut list
@@ -599,25 +608,26 @@ object SuffixDedup {
                       minTokens: Int = 20, maxLen: Int = 256,
                       maxIters: Int = 5,
                       maxDriverPositions: Long = MaxDriverPositions)
-      : DataFrame = {
+      : DataFrame = Pins.scoped { pins =>
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    var cur = dedup(df, idCol, textCol, minTokens, maxLen,
-      maxDriverPositions).localCheckpoint(true)
+    // loop state: the drop count and the next pass re-read it
+    var cur = pins.loop(dedup(df, idCol, textCol, minTokens, maxLen,
+      maxDriverPositions))
     var iters = 1
     var lastDropped =
       cur.agg(sum(col("n_tokens_dropped"))).head().getLong(0)
     while (lastDropped > 0L && iters < maxIters) {
-      val step = dedup(cur, "id", "text_dedup", minTokens, maxLen,
-        maxDriverPositions).localCheckpoint(true)
+      // pinned: the drop count and the carried-count join re-read it
+      val step = pins.pin(dedup(cur, "id", "text_dedup", minTokens, maxLen,
+        maxDriverPositions))
       lastDropped =
         step.agg(sum(col("n_tokens_dropped"))).head().getLong(0)
       // carry the cumulative drop count through the pass
-      cur = step.withColumnRenamed("n_tokens_dropped", "__d")
+      cur = pins.loop(step.withColumnRenamed("n_tokens_dropped", "__d")
         .join(cur.select(col("id"), col("n_tokens_dropped").as("__prev")),
           Seq("id"))
         .withColumn("n_tokens_dropped", col("__d") + col("__prev"))
-        .select("id", "text_dedup", "n_tokens_kept", "n_tokens_dropped")
-        .localCheckpoint(true)
+        .select("id", "text_dedup", "n_tokens_kept", "n_tokens_dropped"))
       iters += 1
     }
     cur

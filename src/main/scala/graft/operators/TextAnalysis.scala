@@ -17,14 +17,6 @@ object TextAnalysis {
     when(length(trim(text)) === 0, 0)
       .otherwise(size(split(trim(text), "\\s+")))
 
-  /** BPE-ish subword-count estimate: word-piece regex splits on transitions
-    * (letters / digits / other), approximating a byte-pair tokenizer's token
-    * count without a vocab. Deterministic and cheap.
-    */
-  def subwordCount(text: Column): Column =
-    size(filter(split(text, "(?=[^a-zA-Z0-9])|(?<=[^a-zA-Z0-9])"),
-      t => length(t) > 0))
-
   /** Normalize for dedup/fingerprint: lowercase, strip non-alphanumerics to
     * spaces, collapse whitespace, trim.
     */
@@ -115,14 +107,6 @@ object TextAnalysis {
       }
     }
     f(text)
-  }
-
-  /** Ratio of uppercase letters to all letters. */
-  def upperRatio(text: Column): Column = {
-    val letters = length(regexp_replace(text, "[^a-zA-Z]", ""))
-    when(letters === 0, 0.0)
-      .otherwise((length(regexp_replace(text, "[^A-Z]", "")))
-        .cast("double") / letters)
   }
 
   /** Mean word length over whitespace tokens. */
@@ -277,12 +261,6 @@ object TextAnalysis {
     */
   def dupLineFraction(text: Column): Column =
     dupSegmentFraction(text, "\n")
-
-  /** Fraction of non-blank paragraphs (blank-line separated) that are
-    * duplicates of an earlier paragraph.
-    */
-  def dupParagraphFraction(text: Column): Column =
-    dupSegmentFraction(text, "\n\\s*\n")
 
   private def dupSegmentFraction(text: Column, sepRegex: String): Column = {
     val segs = filter(transform(split(text, sepRegex), s => trim(s)),

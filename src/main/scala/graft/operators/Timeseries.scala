@@ -149,14 +149,6 @@ object Timeseries {
     df.groupBy(trunc(col(tsCol), freq).as(tsCol))
       .agg(avg(when(col(valueCol).isNull, 1.0).otherwise(0.0)).as("percent_nan"))
 
-  /** Distinct days / hours represented per resample bucket. NOTE: this is a
-    * coverage metric; the reference's `num_days`/`num_hours` are the SPAN
-    * variants below.
-    */
-  def numDistinct(df: DataFrame, tsCol: String, freq: String, subFreq: String): DataFrame =
-    df.groupBy(trunc(col(tsCol), freq).as(tsCol))
-      .agg(countDistinct(trunc(col(tsCol), subFreq)).as(s"num_$subFreq"))
-
   /** Number of calendar buckets of `freq` ("day" | "hour") spanned by the
     * series, first through last INCLUSIVE — pandas
     * `resample(freq).asfreq().index.size`; 0 for an empty input.

@@ -41,9 +41,6 @@ final case class PlantData(
     assetDf.select("asset_id", "rated_power").collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
 
-  /** One asset's rows (plant.py:1178-1189). */
-  def turbineDf(id: String): DataFrame = scadaDf.filter(col("asset_id") === id)
-
   /** All-pairs asset distance table (long form, plant.py:1229-1258):
     * haversine meters between asset lat/lons. Tiny dim cross join.
     */

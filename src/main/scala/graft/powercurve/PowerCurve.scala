@@ -133,8 +133,6 @@ object PowerCurve {
     def predictCol(ws: Column): Column =
       lit(p(3)) + (lit(p(0)) - lit(p(3))) /
         pow(lit(1.0) + pow(ws / p(2), p(1)), p(4))
-    def predictColCapped(ws: Column, lower: Double, upper: Double): Column =
-      least(greatest(predictCol(ws), lit(lower)), lit(upper))
   }
 
   /** GAM-lite: penalized cubic B-spline-free alternative — piecewise-linear

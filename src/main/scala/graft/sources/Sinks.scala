@@ -79,10 +79,6 @@ object Sinks {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Plain partitioned parquet (no metastore needed). */
-  def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
-
   /** Size-balanced shard writer — the training-data export path. A 100 TB
     * job that writes one file per upstream task emits either thousands of
     * KB-sized files (small partitions) or unsplittable multi-GB ones

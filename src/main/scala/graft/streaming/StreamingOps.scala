@@ -105,17 +105,6 @@ object StreamingOps {
       .drop("__k", "__from", "__to")
   }
 
-  /** Streaming per-bucket flagged-fraction monitor: the percent_nan /
-    * threshold-exceedance pattern as a live quality signal.
-    */
-  def flaggedFraction(stream: DataFrame, tsCol: String, flagCol: String,
-                      duration: String = "10 minutes",
-                      watermark: String = "10 minutes"): DataFrame =
-    stream.withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), duration))
-      .agg(avg(col(flagCol).cast("double")).as("flagged_frac"),
-        count(lit(1)).as("n"))
-
   /** Streaming text-prep twin: deterministic stratified sampling, optional
     * PII redaction, quality + repetition gating, and fixed-window chunking
     * are ALL STATELESS projections/filters, so the batch column expressions

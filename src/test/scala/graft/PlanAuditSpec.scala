@@ -332,7 +332,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("SuffixDedup spans: equi joins only, windows partitioned per doc") {
     // the suffix pipeline is iterative (ranks/ladder/pointer rounds run
-    // eagerly through PlanRebase), so audit the FINAL span assembly plan:
+    // eagerly through Pins.loop), so audit the FINAL span assembly plan:
     // the only window allowed is the per-document island merge, and
     // nothing may degrade to a cartesian/BNLJ
     import spark.implicits._

@@ -2,10 +2,10 @@ package graft.analysis
 
 import graft.SparkSpec
 
-/** The Monte-Carlo arguments of AEP, yaw and electrical losses: a
-  * degenerate draw count or sampling range is a typed error naming its
-  * argument, never a NaN result, and yaw's UQ draws follow the ranges
-  * they are given.
+/** The Monte-Carlo arguments of AEP, yaw, electrical losses, TIE and
+  * wake: a degenerate draw count or sampling range is a typed error
+  * naming its argument, never a NaN result, and yaw's UQ draws follow the
+  * ranges they are given.
   */
 class AnalysisArgumentsSpec extends SparkSpec {
 
@@ -17,6 +17,8 @@ class AnalysisArgumentsSpec extends SparkSpec {
   }
 
   test("numSim = 0 under UQ is rejected by AEP, yaw and electrical losses") {
+    rejects("numSim")(new TurbineLongTermGrossEnergy(plant, uq = true, numSim = 0))
+    rejects("numSim")(new WakeLosses(plant, uq = true, numSim = 0))
     rejects("numSim")(new MonteCarloAEP(plant, uq = true, numSim = 0))
     rejects("numSim")(new StaticYawMisalignment(plant, uq = true, numSim = 0))
     rejects("numSim")(new ElectricalLosses(plant, uq = true, numSim = 0))
@@ -34,6 +36,15 @@ class AnalysisArgumentsSpec extends SparkSpec {
     rejects("maxPowerFilter")(new StaticYawMisalignment(plant, maxPowerFilter = (0.98, 0.92)))
     rejects("powerBinMadThresh")(new StaticYawMisalignment(plant, powerBinMadThresh = (13.0, 4.0)))
     rejects("correctionThreshold")(new ElectricalLosses(plant, correctionThreshold = (0.995, 0.9)))
+    rejects("maxPowerFilter")(new TurbineLongTermGrossEnergy(plant, maxPowerFilter = (0.9, 0.8)))
+    rejects("windBinThreshold")(new TurbineLongTermGrossEnergy(plant, windBinThreshold = (3.0, 1.0)))
+    rejects("correctionThreshold")(
+      new TurbineLongTermGrossEnergy(plant, correctionThreshold = (0.95, 0.85)))
+    rejects("uncertaintySectorWidth")(new WakeLosses(plant, uncertaintySectorWidth = (110, 50)))
+    rejects("uncertaintyMadThresh")(new WakeLosses(plant, uncertaintyMadThresh = (13, 4)))
+    rejects("uncertaintyWsStart")(new WakeLosses(plant, uncertaintyWsStart = (8.0, 4.0)))
+    rejects("uncertaintyMaxPower")(new WakeLosses(plant, uncertaintyMaxPower = (0.98, 0.92)))
+    rejects("numYearsLt")(new WakeLosses(plant, numYearsLt = (20, 10)))
   }
 
   test("yaw UQ draws its outlier filter from maxPowerFilter and powerBinMadThresh") {

@@ -1,12 +1,18 @@
 package graft.analysis
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ListenerBus
 
 import graft.SparkSpec
+import graft.fitting.BradleyTerry
+import graft.operators.{Dedup, LinkGraph, SuffixDedup}
 
 /** The analyses release every RDD they persist, on return and on a throw,
-  * and wake's and AEP's job counts stay bounded.
+  * and wake's and AEP's job counts stay bounded. The link-graph, dedup and
+  * Bradley–Terry loops, on their distributed paths, leave persisted only
+  * the RDDs their results read.
   */
 class PinHygieneSpec extends SparkSpec {
 
@@ -70,5 +76,43 @@ class PinHygieneSpec extends SparkSpec {
     val jobs = ListenerBus.countJobs(spark.sparkContext)(new MonteCarloAEP(plant,
       timeResolution = "D", uq = true, numSim = 50, windinessYears = (1, 2)).run())
     assert(jobs <= 12, s"$jobs jobs")
+  }
+
+  test("the distributed loops leave persisted only what their results read") {
+    import spark.implicits._
+    def leavesOnlyWhatItReads(what: String)(body: => DataFrame): Unit = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = body
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      val read = out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
+      assert(left.subsetOf(read), s"$what left RDDs ${left -- read} persisted")
+      assert(out.count() > 0, what)
+    }
+    // two triangles joined by a bridge, plus a chord
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 3L),
+      (0L, 3L)).toDF("src", "dst")
+    leavesOnlyWhatItReads("pageRank")(
+      LinkGraph.pageRank(edges, "src", "dst", iters = 3, driverCap = 0L))
+    leavesOnlyWhatItReads("hits")(LinkGraph.hits(edges, "src", "dst", iters = 3, driverCap = 0L))
+    leavesOnlyWhatItReads("kCore")(LinkGraph.kCore(edges, "src", "dst", k = 2, driverCap = 0L))
+    leavesOnlyWhatItReads("labelPropagation")(
+      LinkGraph.labelPropagation(edges, "src", "dst", maxIters = 3, driverCap = 0L))
+    leavesOnlyWhatItReads("seedDistance")(
+      LinkGraph.seedDistance(edges, "src", "dst", seeds = Seq(0L), maxHops = 3, driverCap = 0L))
+    leavesOnlyWhatItReads("randomWalks")(LinkGraph.randomWalks(edges, "src", "dst", walkLen = 3))
+    leavesOnlyWhatItReads("connectedComponents")(
+      Dedup.connectedComponents(edges, "src", "dst", driverEdgeThreshold = 0L))
+    val games = Seq(("a", "b", 10L, 7L), ("b", "c", 10L, 6L), ("c", "a", 10L, 4L))
+      .toDF("a", "b", "n", "w")
+    leavesOnlyWhatItReads("BradleyTerry.fit")(
+      BradleyTerry.fit(games, "a", "b", "n", "w", iters = 3, driverCap = 0L))
+    val docs = (0 until 12).map { i =>
+      (i.toLong, if (i % 4 == 0) s"a b c shared0 shared1 shared2 d$i" else s"x$i y$i z$i w$i")
+    }.toDF("doc_id", "text")
+    leavesOnlyWhatItReads("maximalRepeatedSpans")(SuffixDedup.maximalRepeatedSpans(docs,
+      "doc_id", "text", minTokens = 3, maxLen = 8, maxDriverPositions = 0L))
+    // each pass's span pins are handed to the fixpoint loop's own scope
+    leavesOnlyWhatItReads("dedupToFixpoint")(SuffixDedup.dedupToFixpoint(docs,
+      "doc_id", "text", minTokens = 3, maxLen = 8, maxDriverPositions = 0L))
   }
 }

@@ -38,10 +38,10 @@ class BradleyTerrySpec extends SparkSpec {
       val n = 5L + rnd.nextInt(10)
       (s"i$i", s"i$j", n, rnd.nextLong(n + 1))
     }
-    // 40 rounds is also the PlanRebase regression pin: with carried-stats
+    // 40 rounds is also the Pins.loop regression pin: with carried-stats
     // localCheckpoints the Catalyst size estimate squares per round and
     // planning hangs in BigInt multiplication past ~20 rounds (measured:
-    // 24 rounds > 10 min; with rebase, 60 rounds = 26 s)
+    // 24 rounds > 10 min; with stat-free loop pins, 60 rounds = 26 s)
     val mem = fitMap(rows, iters = 40)
     val dist = fitMap(rows, iters = 40, driverCap = 0L)
     assert(mem.keySet == dist.keySet)
