@@ -346,11 +346,11 @@ object LinkGraph {
     * key) + two aggregates — (node, label) vote counts, then the
     * frequency argmax as ONE max(struct(cnt, label)) with no window; the
     * label table is a [[org.apache.spark.sql.graft.Pins]] loop pin so
-    * neither lineage nor carried size stats compound across rounds. Graphs under
-    * `driverCap` edges run the identical rounds in memory (the q_cc_dedup
-    * altitude rule); the short-circuit requires integral ids — driver
-    * label ordering must agree with Catalyst's for parity, which holds
-    * for integers but not for arbitrary collated strings.
+    * neither lineage nor carried size stats compound across rounds.
+    * Graphs under `driverCap` edges run the identical rounds in memory
+    * (the q_cc_dedup altitude rule); the short-circuit requires integral
+    * ids — driver label ordering must agree with Catalyst's for parity,
+    * which holds for integers but not for arbitrary collated strings.
     *
     * Returns (node, community), community = the converged label (a node
     * id). Unweighted: a crawl graph's edge multiplicity is hostility
