@@ -34,7 +34,7 @@ object BradleyTerry {
     */
   def fit(pairs: DataFrame, aCol: String, bCol: String, gamesCol: String,
           winsACol: String, iters: Int = 30,
-          driverCap: Long = 2000000L): DataFrame = {
+          driverCap: Long = 2000000L): DataFrame = Pins.scoped { pins =>
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = pairs.sparkSession
     import spark.implicits._
@@ -48,16 +48,18 @@ object BradleyTerry {
     // r14 (VERDICT ask 5): both orientations via ONE explode pass — the
     // self-union scanned/filtered the caller's pair table once per
     // branch. Same row multiset into the (i,j) long-sum aggregate.
-    val sym = base.select(explode(array(
+    // Pinned: the count and the collect, or every round's pair join,
+    // re-read it
+    val ec = pins.pin(base.select(explode(array(
         struct(col("i"), col("j"), col("n"), col("w")),
         struct(col("j").as("i"), col("i").as("j"), col("n"),
           (col("n") - col("w")).as("w")))).as("__e"))
       .select(col("__e.i").as("i"), col("__e.j").as("j"),
         col("__e.n").as("n"), col("__e.w").as("w"))
-      .groupBy("i", "j").agg(sum(col("n")).as("n"), sum(col("w")).as("w"))
-    val nPairRows = sym.count()
+      .groupBy("i", "j").agg(sum(col("n")).as("n"), sum(col("w")).as("w")))
+    val nPairRows = ec.count()
     if (nPairRows <= driverCap) {
-      val rows = sym.as[(String, String, Long, Long)].collect()
+      val rows = ec.as[(String, String, Long, Long)].collect()
       val items = rows.map(_._1).distinct.sorted
       val idx = items.zipWithIndex.toMap
       val nI = items.length
@@ -76,9 +78,7 @@ object BradleyTerry {
       }
       spark.createDataFrame(items.indices.map(k => (items(k), p(k))))
         .toDF("item", "strength")
-    } else Pins.scoped { pins =>
-      // pinned: every round's pair join re-reads it
-      val ec = pins.pin(sym)
+    } else {
       // pinned: the count and every round's ratio re-read it
       val itemsW = pins.pin(ec.groupBy(col("i").as("item"))
         .agg(sum(col("w")).cast("double").as("__w")))

@@ -47,14 +47,11 @@ private[graft] object GatesDedup {
       val fp = docs.select(col("doc_id"),
         TextAnalysis.fingerprint(col("text")).as("__f"))
       val firsts = fp.groupBy("__f").agg(min(col("doc_id")).as("id_a"))
-      // checkpoint: connectedComponents evaluates its edge input several
-      // times (size probe + traversal) and each re-run would repeat the
-      // fingerprint scan; the pair list is duplicate-grain (tiny), the
-      // legitimate thing to materialize
+      // not pinned: connectedComponents pins its symmetrized edge table
+      // first and reads the pairs only through that pin
       val pairs = fp.join(firsts, Seq("__f"))
         .filter(col("doc_id") =!= col("id_a"))
         .select(col("id_a"), col("doc_id").as("id_b"))
-        .localCheckpoint(true)
       Dedup.dedupClustersBy(docs, "doc_id", "score", pairs)
         .select(col("doc_id"), col("component"), col("canonical_id"),
           col("is_duplicate"))

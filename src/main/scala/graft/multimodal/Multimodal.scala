@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pins
 import org.apache.spark.sql.types._
 
 /** Multimodal (image/audio/video) column handling for training-data
@@ -206,11 +207,13 @@ object Multimodal {
       bytesCol, codec, "sig"), maxHamming, maxBucketSize)
 
   private def sigNearDupPairs(sigged: DataFrame, maxHamming: Int,
-                              maxBucketSize: Int): DataFrame =
+                              maxBucketSize: Int): DataFrame = Pins.scoped { pins =>
+    // pinned: the band explode and the popcount confirm re-read the
+    // decoded signatures
     graft.operators.Dedup.hammingCandidates(
-      sigged.filter(col("sig").isNotNull).select("id", "sig")
-        .localCheckpoint(true),
+      pins.pin(sigged.filter(col("sig").isNotNull).select("id", "sig")),
       maxHamming, maxBucketSize)
+  }
 
   /** Aspect-ratio bucketing for image-training batch assembly (the
     * SDXL-style trick: group images into a fixed set of (width, height)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pins
 import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType,
   DoubleType, IntegerType, LongType, ShortType, StructField, StructType}
 
@@ -55,11 +56,13 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType,
   *    `earlyStop` the loop ends when a round adopts no new edge
   *    (one `isEmpty` action on an anti-join — limit-1, cheap).
   *  - '''Lineage''': pins follow the one rule in
-  *    [[org.apache.spark.sql.graft.Pins]]: per-round loop state is
-  *    pinned so the plan stays one round deep, a frame is pinned only
-  *    when later plans re-read it, and a projection or explode of an
-  *    input or of another pin is left lazy. Each pin names what
-  *    re-reads it.
+  *    [[org.apache.spark.sql.graft.Pins]], scoped per operator: each
+  *    public operator pins inside one `Pins.scoped`, which releases on
+  *    return every pin its result does not read. Per-round loop state
+  *    is a `loop` pin so the plan stays one round deep, a frame is
+  *    pinned only when later plans re-read it, and a projection or
+  *    explode of an input or of another pin is left lazy. Each pin
+  *    names what re-reads it.
   *
   * Determinism: bucketing and reverse-cap ordering are xxhash64 of
   * (id, seed, round); top-k ties break by (score desc, id asc) inside
@@ -149,7 +152,7 @@ object KnnGraph {
                 k: Int = 10, iterations: Int = 3, initRounds: Int = 2,
                 maxReverse: Int = 0, sampleRate: Double = 1.0,
                 earlyStop: Boolean = true,
-                seed: Int = 42, corpusCount: Long = -1L): DataFrame = {
+                seed: Int = 42, corpusCount: Long = -1L): DataFrame = Pins.scoped { pins =>
     require(k >= 1, s"k must be >= 1, got $k")
     require(sampleRate > 0.0 && sampleRate <= 1.0,
       s"sampleRate must be in (0, 1], got $sampleRate")
@@ -157,7 +160,7 @@ object KnnGraph {
     val idType = corpus.schema(idCol).dataType
     val maxRev = if (maxReverse > 0) maxReverse else k
     // pinned: the init self-join, the rescue joins and every round re-read it
-    val vecs = normalized(corpus, idCol, vecCol).localCheckpoint(true)
+    val vecs = pins.pin(normalized(corpus, idCol, vecCol))
     val n = if (corpusCount >= 0) corpusCount else vecs.count()
     val nBuckets = math.max(1L, n / math.max(2L, k + 1L))
 
@@ -209,13 +212,13 @@ object KnnGraph {
     // paper's incremental-join trick — converged neighborhoods stop
     // contributing work, which is most of them after round 2). Pinned:
     // loop state, re-read by the next round.
-    var graph = topkOf(symmetrize(initScored), k, idType, dedup = true)
-      .withColumn("__new", lit(true)).localCheckpoint(true)
+    var graph = pins.loop(topkOf(symmetrize(initScored), k, idType, dedup = true)
+      .withColumn("__new", lit(true)))
 
     var iter = 0
     var live = true
     while (iter < iterations && live) {
-      val next = descentRound(graph, vecs, k, maxRev, sampleRate, seed,
+      val next = descentRound(pins, graph, vecs, k, maxRev, sampleRate, seed,
         iter, idType)
       // one limit-1 probe on the already-materialized frame
       if (earlyStop) live = !next.filter(col("__new")).isEmpty
@@ -246,10 +249,10 @@ object KnnGraph {
   /** One NN-Descent round over a flagged graph (id, nbr, cosine, rank,
     * __new): neighbor-of-neighbor candidates from pairs touching >= 1
     * new edge, scored inline, merged through the dedup top-k. Returns
-    * the next flagged graph, localCheckpoint'd (lineage truncation —
+    * the next flagged graph as a `loop` pin (lineage truncation —
     * iterated plans otherwise grow per round).
     */
-  private def descentRound(graph: DataFrame, vecs: DataFrame, k: Int,
+  private def descentRound(pins: Pins, graph: DataFrame, vecs: DataFrame, k: Int,
                            maxRev: Int, sampleRate: Double, seed: Int,
                            iter: Int,
                            idType: org.apache.spark.sql.types.DataType)
@@ -297,12 +300,11 @@ object KnnGraph {
     val merged = symmetrize(scored)
       .unionByName(graph.select(col("id"), col("nbr"), col("cosine")))
     // pinned: loop state, re-read by the next round and its probe
-    topkOf(merged, k, idType, dedup = true)
+    pins.loop(topkOf(merged, k, idType, dedup = true)
       .join(graph.select(col("id"), col("nbr"))
         .withColumn("__old", lit(true)), Seq("id", "nbr"), "left")
       .select(col("id"), col("nbr"), col("cosine"), col("rank"),
-        coalesce(col("__old"), lit(false)).unary_!.as("__new"))
-      .localCheckpoint(true)
+        coalesce(col("__old"), lit(false)).unary_!.as("__new")))
   }
 
   /** Per-node small-world bucket keys: round j's key is
@@ -355,7 +357,7 @@ object KnnGraph {
     * [[Similarity.bruteForceTopK]]-shaped top-k over everything
     * visited.
     */
-  private def searchCore(adj: DataFrame, vecs: DataFrame,
+  private def searchCore(pins: Pins, adj: DataFrame, vecs: DataFrame,
                          entryPts: DataFrame, qv: DataFrame,
                          k: Int, beam: Int, hops: Int,
                          idType: DataType): DataFrame = {
@@ -370,9 +372,8 @@ object KnnGraph {
 
     // pinned per hop: the frontier, the anti-join and the final top-k re-read
     // every scored hop frame
-    var visited = scoreNodes(
-        qv.select(col("query_id")).crossJoin(entryPts.select(col("id").as("node"))))
-      .localCheckpoint(true)
+    var visited = pins.pin(scoreNodes(
+        qv.select(col("query_id")).crossJoin(entryPts.select(col("id").as("node")))))
     var frontier = visited.select(col("query_id"), col("node"))
 
     var hop = 0
@@ -389,7 +390,7 @@ object KnnGraph {
       // plans a two-stage shuffle aggregate per hop, strictly heavier
       // than this limit-1 probe over the just-cached checkpoint blocks.
       // The eager checkpoint + cheap probe stays.
-      val scored = scoreNodes(fresh).localCheckpoint(true)
+      val scored = pins.pin(scoreNodes(fresh))
       live = !scored.isEmpty
       if (live) {
         // lazy union of per-hop CHECKPOINTED frames: lineage stays one
@@ -456,27 +457,27 @@ object KnnGraph {
   def searchGraph(graph: DataFrame, corpus: DataFrame, queries: DataFrame,
                   idCol: String, vecCol: String, k: Int, beam: Int = 8,
                   hops: Int = 3, entries: Int = 4, bridgeRounds: Int = 3,
-                  seed: Int = 42, corpusCount: Long = -1L): DataFrame = {
+                  seed: Int = 42, corpusCount: Long = -1L): DataFrame = Pins.scoped { pins =>
     require(k >= 1 && beam >= 1 && entries >= 1,
       s"k/beam/entries must be >= 1, got $k/$beam/$entries")
     requireIntegralId(corpus, idCol, "searchGraph")
     val idType = corpus.schema(idCol).dataType
     // pinned: the count, the bridges, the entry points and every hop re-read
     // vecs; every hop re-reads adj
-    val vecs = normalized(corpus, idCol, vecCol).localCheckpoint(true)
+    val vecs = pins.pin(normalized(corpus, idCol, vecCol))
     val knn = graph.select(col("id"), col("neighbor_id").as("nbr"))
-    val adj = (if (bridgeRounds <= 0) knn else {
+    val adj = pins.pin(if (bridgeRounds <= 0) knn else {
       val n = if (corpusCount >= 0) corpusCount else vecs.count()
       // no distinct: duplicate adjacency rows only duplicate `reached`
       // candidates, which dedup per hop anyway
       knn.unionByName(bridgeAdj(vecs.select(col("id")), bridgeRounds, seed,
         math.max(1L, n / 2)))
-    }).localCheckpoint(true)
+    })
     val qv = broadcast(normalized(queries, idCol, vecCol)
       .select(col("id").as("query_id"), col("__nv").as("__qv")))
     val entryPts = vecs.select(col("id"))
       .orderBy(xxhash64(col("id"), lit(seed)), col("id")).limit(entries)
-    searchCore(adj, vecs, entryPts, qv, k, beam, hops, idType)
+    searchCore(pins, adj, vecs, entryPts, qv, k, beam, hops, idType)
   }
 
   /** Serving budget that scales with corpus size — the HNSW analog:
@@ -594,13 +595,13 @@ object KnnGraph {
     */
   def graphIndex(graph: DataFrame, corpus: DataFrame, idCol: String,
                  vecCol: String, entries: Int = 4, bridgeRounds: Int = 3,
-                 seed: Int = 42, corpusCount: Long = -1L): DataFrame = {
+                 seed: Int = 42, corpusCount: Long = -1L): DataFrame = Pins.scoped { pins =>
     require(entries >= 1, s"entries must be >= 1, got $entries")
     requireIntegralId(corpus, idCol, "graphIndex")
     val idType = corpus.schema(idCol).dataType
     // pinned: the count, the bridges, the entry points and the row join
     // re-read it
-    val vecs = normalized(corpus, idCol, vecCol).localCheckpoint(true)
+    val vecs = pins.pin(normalized(corpus, idCol, vecCol))
     val n = if (corpusCount >= 0) corpusCount else vecs.count()
     val nB = math.max(1L, n / 2)
     val knn = knnArrays(graph.select(col("id"),
@@ -650,7 +651,7 @@ object KnnGraph {
     */
   def searchGraphIndexed(index: DataFrame, queries: DataFrame,
                          idCol: String, vecCol: String, k: Int,
-                         beam: Int = 8, hops: Int = 3): DataFrame = {
+                         beam: Int = 8, hops: Int = 3): DataFrame = Pins.scoped { pins =>
     require(k >= 1 && beam >= 1, s"k/beam must be >= 1, got $k/$beam")
     requireIntegralId(queries, idCol, "searchGraphIndexed")
     validateIndex(index, "searchGraphIndexed")
@@ -664,7 +665,7 @@ object KnnGraph {
     val entryPts = index.filter(col("is_entry")).select(col("id"))
     val qv = broadcast(normalized(queries, idCol, vecCol)
       .select(col("id").as("query_id"), col("__nv").as("__qv")))
-    searchCore(adj, vecs, entryPts, qv, k, beam, hops, idType)
+    searchCore(pins, adj, vecs, entryPts, qv, k, beam, hops, idType)
   }
 
   /** Incremental insert — the HNSW/DiskANN "add a batch without
@@ -705,7 +706,7 @@ object KnnGraph {
                         entries: Int = 4, bridgeRounds: Int = 3,
                         refineRounds: Int = 1, maxReverse: Int = 0,
                         seed: Int = 42, corpusCount: Long = -1L,
-                        validateIds: Boolean = true): DataFrame = {
+                        validateIds: Boolean = true): DataFrame = Pins.scoped { pins =>
     requireIntegralId(corpus, idCol, "insertIncremental")
     requireIntegralId(batch, idCol, "insertIncremental")
     if (validateIds) {
@@ -738,20 +739,18 @@ object KnnGraph {
       .unionByName(graph.select(col("id"),
         col("neighbor_id").as("nbr"), col("cosine")))
     // pinned: loop state, re-read by the first refine round
-    var placed = topkOf(merged, k, idType, dedup = true)
+    var placed = pins.loop(topkOf(merged, k, idType, dedup = true)
       // edges absent from the input graph are the perturbation front
       .join(graph.select(col("id"), col("neighbor_id").as("nbr"))
         .withColumn("__old", lit(true)), Seq("id", "nbr"), "left")
       .select(col("id"), col("nbr"), col("cosine"), col("rank"),
-        coalesce(col("__old"), lit(false)).unary_!.as("__new"))
-      .localCheckpoint(true)
+        coalesce(col("__old"), lit(false)).unary_!.as("__new")))
     if (refineRounds > 0) {
       // pinned: every refine round re-reads the vectors
-      val vecs = normalized(corpus.unionByName(batch), idCol, vecCol)
-        .localCheckpoint(true)
+      val vecs = pins.pin(normalized(corpus.unionByName(batch), idCol, vecCol))
       val maxRev = if (maxReverse > 0) maxReverse else k
       for (r <- 0 until refineRounds)
-        placed = descentRound(placed, vecs, k, maxRev, sampleRate = 1.0,
+        placed = descentRound(pins, placed, vecs, k, maxRev, sampleRate = 1.0,
           seed = seed, iter = 5000 + r, idType = idType)
     }
     placed.select(col("id"), col("nbr").as("neighbor_id"),
@@ -780,9 +779,9 @@ object KnnGraph {
     * for its node set; `baseKnn` holds (id, nbr, cosine) for everyone
     * else (rows for delta ids are ignored); `vecs` is (id, __nv) for
     * all nodes. Returns the next delta (its node set grows by the
-    * round's candidate targets), localCheckpoint'd.
+    * round's candidate targets) as a `loop` pin.
     */
-  private def descentRoundDelta(delta: DataFrame, baseKnn: DataFrame,
+  private def descentRoundDelta(pins: Pins, delta: DataFrame, baseKnn: DataFrame,
                                 vecs: DataFrame, k: Int, maxRev: Int,
                                 seed: Int, iter: Int,
                                 idType: DataType,
@@ -800,9 +799,8 @@ object KnnGraph {
     // r14 (VERDICT ask 5): endpoints via one explode pass over the
     // checkpointed delta, not a self-union scanning it twice; same id
     // multiset into the distinct. Pinned: fwdP and revP re-read it.
-    val pivots = newE.select(explode(array(col("id"), col("nbr"))).as("id"))
-      .distinct()
-      .localCheckpoint(true)
+    val pivots = pins.pin(newE.select(explode(array(col("id"), col("nbr"))).as("id"))
+      .distinct())
     val fwdP = cur.join(broadcast(pivots), Seq("id"))
     val revW = Window.partitionBy("id")
       .orderBy(xxhash64(col("nbr"), lit(seed), lit(1000 + iter)), col("nbr"))
@@ -822,7 +820,7 @@ object KnnGraph {
         Similarity.dot(col("x.__nv"), col("y.__nv")).as("cosine"))
     val sym = symmetrize(scored)
     // pinned: curT and the pass-through anti-join re-read it
-    val targets = sym.select("id").distinct().localCheckpoint(true)
+    val targets = pins.pin(sym.select("id").distinct())
     val curT = cur.join(broadcast(targets), Seq("id"))
     val nextT = topkOf(sym.unionByName(
         curT.select(col("id"), col("nbr"), col("cosine"))),
@@ -832,11 +830,10 @@ object KnnGraph {
       .select(col("id"), col("nbr"), col("cosine"), col("rank"),
         coalesce(col("__old"), lit(false)).unary_!.as("__new"))
     // pinned: loop state, re-read by the next round
-    delta.join(broadcast(targets), Seq("id"), "left_anti")
+    pins.loop(delta.join(broadcast(targets), Seq("id"), "left_anti")
       .select(col("id"), col("nbr"), col("cosine"), col("rank"))
       .withColumn("__new", lit(false))
-      .unionByName(nextT)
-      .localCheckpoint(true)
+      .unionByName(nextT))
   }
 
   private def emptyAdds(ids: DataFrame, idType: DataType): DataFrame =
@@ -857,7 +854,7 @@ object KnnGraph {
     * crossover; after one full round the delta IS the full graph, so
     * subsequent rounds stay full.
     */
-  private def refineDeltaRounds(delta0: DataFrame, baseKnn: DataFrame,
+  private def refineDeltaRounds(pins: Pins, delta0: DataFrame, baseKnn: DataFrame,
                                 vecs: DataFrame, nTotal: Long, k: Int,
                                 maxRev: Int, seed: Int, iterBase: Int,
                                 rounds: Int, switchFraction: Double,
@@ -878,7 +875,7 @@ object KnnGraph {
     for (r <- 0 until rounds) {
       delta =
         if (full)
-          descentRound(delta, vecs, k, maxRev, sampleRate = 1.0, seed,
+          descentRound(pins, delta, vecs, k, maxRev, sampleRate = 1.0, seed,
             iterBase + r, idType)
         else {
           // r13 opt: round 0's id set is usually known to the caller
@@ -887,22 +884,21 @@ object KnnGraph {
           // the count and the chosen branch re-read it.
           val dIds =
             if (r == 0 && firstIds != null) firstIds
-            else delta.select("id").distinct().localCheckpoint(true)
+            else pins.pin(delta.select("id").distinct())
           val deltaN = dIds.count()
           if (nTotal > 0 && deltaN.toDouble / nTotal <= switchFraction)
-            descentRoundDelta(delta, baseKnn, vecs, k, maxRev, seed,
+            descentRoundDelta(pins, delta, baseKnn, vecs, k, maxRev, seed,
               iterBase + r, idType, deltaIds0 = dIds)
           else {
             full = true
             // pinned: loop state, re-read four times by descentRound
-            val curAll = delta
+            val curAll = pins.loop(delta
               .select(col("id"), col("nbr"), col("cosine"), col("__new"))
               .unionByName(baseKnn
                 .join(broadcast(dIds), Seq("id"), "left_anti")
                 .select(col("id"), col("nbr"), col("cosine"))
-                .withColumn("__new", lit(false)))
-              .localCheckpoint(true)
-            descentRound(curAll, vecs, k, maxRev, sampleRate = 1.0, seed,
+                .withColumn("__new", lit(false))))
+            descentRound(pins, curAll, vecs, k, maxRev, sampleRate = 1.0, seed,
               iterBase + r, idType)
           }
         }
@@ -944,8 +940,8 @@ object KnnGraph {
                                seed: Int = 42,
                                validateIds: Boolean = true,
                                corpusCount: Long = -1L): DataFrame =
-    insertIndexedDelta(index, batch, idCol, vecCol, k, beam, hops,
-      refineRounds, maxReverse, seed, validateIds, corpusCount)._1
+    Pins.scoped(pins => insertIndexedDelta(pins, index, batch, idCol, vecCol, k,
+      beam, hops, refineRounds, maxReverse, seed, validateIds, corpusCount)._1)
 
   /** The |delta|/n crossover of [[refineDeltaRounds]] for the index
     * writes: a pure cost choice, results are identical either way.
@@ -958,9 +954,10 @@ object KnnGraph {
     * the overlay a streaming state appends per micro-batch so it never
     * re-materializes the whole index ([[graft.streaming.StreamingOps
     * .GraphInsertState]]). `deltaRefineFraction` overrides the refine
-    * crossover so specs can force either refine path.
+    * crossover so specs can force either refine path. It pins into the
+    * caller's scope: a scope keeps nothing for a tuple result.
     */
-  private[graft] def insertIndexedDelta(index: DataFrame, batch: DataFrame,
+  private[graft] def insertIndexedDelta(pins: Pins, index: DataFrame, batch: DataFrame,
       idCol: String, vecCol: String, k: Int, beam: Int, hops: Int,
       refineRounds: Int, maxReverse: Int, seed: Int,
       validateIds: Boolean, corpusCount: Long = -1L,
@@ -972,7 +969,7 @@ object KnnGraph {
     val idType = index.schema("id").dataType
     // pinned: the probes, the count, the vectors, the bridge keys and the
     // new rows re-read it
-    val bv = normalized(batch, idCol, vecCol).localCheckpoint(true)
+    val bv = pins.pin(normalized(batch, idCol, vecCol))
     if (bv.isEmpty) return (index, index.limit(0))
     if (validateIds) {
       val overlap = index.select(col("id"))
@@ -994,10 +991,9 @@ object KnnGraph {
     val intra = Similarity.bruteForceTopK(batch, batch, idCol, vecCol, k = k)
     // pinned (<= 2·k·|batch| rows): through `inc`, the touched-id distinct
     // and the re-rank union re-read it
-    val newDirected = found.unionByName(intra)
+    val newDirected = pins.pin(found.unionByName(intra)
       .select(col("query_id").as("id"), col("neighbor_id").as("nbr"),
-        col("cosine"))
-      .localCheckpoint(true)
+        col("cosine")))
     // r14 (VERDICT ask 5): both directions via one explode pass, not a
     // self-union scanning the checkpointed placement edges twice
     val inc = symmetrize(newDirected
@@ -1008,14 +1004,14 @@ object KnnGraph {
       .select(col("id"), explode(col("knn")).as("__e"))
       .select(col("id"), col("__e.nbr").as("nbr"), col("__e.cos").as("cosine"))
     // pinned: curT0, and refine round 0 as its id set, re-read it
-    val t0 = inc.select("id").distinct().localCheckpoint(true)
+    val t0 = pins.pin(inc.select("id").distinct())
     val curT0 = baseKnn.join(broadcast(t0), Seq("id"))
-    var delta = topkOf(inc.unionByName(curT0), k, idType, dedup = true)
+    // loop state, re-read by the refine rounds
+    var delta = pins.loop(topkOf(inc.unionByName(curT0), k, idType, dedup = true)
       .join(curT0.select(col("id"), col("nbr")).withColumn("__old", lit(true)),
         Seq("id", "nbr"), "left")
       .select(col("id"), col("nbr"), col("cosine"), col("rank"),
-        coalesce(col("__old"), lit(false)).unary_!.as("__new"))
-      .localCheckpoint(true) // loop state, re-read by the refine rounds
+        coalesce(col("__old"), lit(false)).unary_!.as("__new")))
     if (refineRounds > 0) {
       // not pinned: a projection of the index and of the pinned batch
       val vecsAll = index.select(col("id"), col("nv").as("__nv"))
@@ -1024,7 +1020,7 @@ object KnnGraph {
         bv.count()
       // firstIds = t0: the re-rank emits exactly one group per touched
       // id (inc covers every t0 id), so round 0's distinct is t0 itself
-      delta = refineDeltaRounds(delta, baseKnn, vecsAll, nTotal, k, maxRev,
+      delta = refineDeltaRounds(pins, delta, baseKnn, vecsAll, nTotal, k, maxRev,
         seed, 5000, refineRounds, deltaRefineFraction, idType,
         firstIds = t0)
     }
@@ -1032,8 +1028,8 @@ object KnnGraph {
     // rows (scan, no shuffle of untouched rows) + the new node rows.
     // Pinned: the old-row composition and the new rows re-read knnNew
     // and bridgeAdds.
-    val knnNew = knnArrays(delta).localCheckpoint(true)
-    val bridgeAdds = (if (bRounds <= 0) emptyAdds(bv.select(col("id")), idType)
+    val knnNew = pins.pin(knnArrays(delta))
+    val bridgeAdds = pins.pin(if (bRounds <= 0) emptyAdds(bv.select(col("id")), idType)
       else {
         // not pinned: an explode of the pinned batch
         val batchKeys = bv.select(col("id"),
@@ -1052,7 +1048,7 @@ object KnnGraph {
         bothDirections(e1) // r13 opt: explode, not self-union (see def)
           .groupBy("id")
           .agg(array_sort(collect_set(col("nbr"))).as("__adds"))
-      }).localCheckpoint(true)
+      })
     // the same row-local transform serves both the full composition and
     // the changed-rows overlay (applying it to a restricted input IS the
     // restriction of applying it to the full input — the joins are
@@ -1184,111 +1180,111 @@ object KnnGraph {
         "batch larger deletions or rebuild the index")
     val delArr = lit(delIds)
     def isDel(c: Column): Column = array_contains(delArr, c.cast("long"))
-    val survivors = index.filter(!isDel(col("id")))
-    // pinned: a selective filter that the heal candidates, the re-hub keys
-    // and the entry probe re-read
-    val deleted = index.filter(isDel(col("id"))).localCheckpoint(true)
-    val params = index.select("bridge_mod", "bridge_rounds", "bridge_seed")
-      .head
-    val bMod = params.getLong(0)
-    val bRounds = params.getInt(1)
-    val bSeed = params.getInt(2)
+    Pins.scoped { pins =>
+      val survivors = index.filter(!isDel(col("id")))
+      // pinned: a selective filter that the heal candidates, the re-hub keys
+      // and the entry probe re-read
+      val deleted = pins.pin(index.filter(isDel(col("id"))))
+      val params = index.select("bridge_mod", "bridge_rounds", "bridge_seed")
+        .head
+      val bMod = params.getLong(0)
+      val bRounds = params.getInt(1)
+      val bSeed = params.getInt(2)
 
-    // heal: the amputated survivors re-rank over their surviving edges and
-    // the deleted nodes' former neighbors, then refine. Not pinned: the
-    // survivor edges and vectors are an explode and a projection of the
-    // input index.
-    val survEdges = survivors
-      .select(col("id"), explode(col("knn")).as("__e"))
-      .select(col("id"), col("__e.nbr").as("nbr"), col("__e.cos").as("cosine"))
-    // post-amputation survivor edge view (never carries a deleted target)
-    val survKnn = survEdges.filter(!isDel(col("nbr")))
-    val amput = survEdges.filter(isDel(col("nbr")))
-      .select(col("id").as("s"), col("nbr").as("d"))
-    val vecsSurv = survivors.select(col("id"), col("nv").as("__nv"))
-    val delNbrs = deleted
-      .select(col("id").as("d"),
-        explode(transform(col("knn"), e => e.getField("nbr"))).as("c"))
-      .filter(!isDel(col("c")))
-    val cand = amput.join(broadcast(delNbrs), Seq("d"))
-      .filter(col("s") =!= col("c"))
-      .select(col("s").as("id"), col("c").as("nbr")).distinct()
-    val scoredCand = broadcast(cand)
-      .join(vecsSurv.select(col("id"), col("__nv").as("__nva")), Seq("id"))
-      .join(vecsSurv.select(col("id").as("nbr"), col("__nv").as("__nvb")),
-        Seq("nbr"))
-      .select(col("id"), col("nbr"),
-        Similarity.dot(col("__nva"), col("__nvb")).as("cosine"))
-    // pinned: curT's re-rank union and its old-edge join re-read it
-    val touched = amput.select(col("s").as("id")).distinct()
-      .localCheckpoint(true)
-    val curT = survKnn.join(broadcast(touched), Seq("id"))
-    var delta = topkOf(scoredCand.unionByName(curT), k, idType, dedup = true)
-      .join(curT.select(col("id"), col("nbr")).withColumn("__old", lit(true)),
-        Seq("id", "nbr"), "left")
-      .select(col("id"), col("nbr"), col("cosine"), col("rank"),
-        coalesce(col("__old"), lit(false)).unary_!.as("__new"))
-      .localCheckpoint(true) // loop state, re-read by the heal rounds
-    if (healRounds > 0) {
-      val maxRev = if (maxReverse > 0) maxReverse else k
-      val nSurv = (if (corpusCount >= 0) corpusCount else index.count()) -
-        delIds.length
-      delta = refineDeltaRounds(delta, survKnn, vecsSurv, nSurv, k, maxRev,
-        seed, 8000, healRounds, DeltaRefineFraction, idType)
+      // heal: the amputated survivors re-rank over their surviving edges and
+      // the deleted nodes' former neighbors, then refine. Not pinned: the
+      // survivor edges and vectors are an explode and a projection of the
+      // input index.
+      val survEdges = survivors
+        .select(col("id"), explode(col("knn")).as("__e"))
+        .select(col("id"), col("__e.nbr").as("nbr"), col("__e.cos").as("cosine"))
+      // post-amputation survivor edge view (never carries a deleted target)
+      val survKnn = survEdges.filter(!isDel(col("nbr")))
+      val amput = survEdges.filter(isDel(col("nbr")))
+        .select(col("id").as("s"), col("nbr").as("d"))
+      val vecsSurv = survivors.select(col("id"), col("nv").as("__nv"))
+      val delNbrs = deleted
+        .select(col("id").as("d"),
+          explode(transform(col("knn"), e => e.getField("nbr"))).as("c"))
+        .filter(!isDel(col("c")))
+      val cand = amput.join(broadcast(delNbrs), Seq("d"))
+        .filter(col("s") =!= col("c"))
+        .select(col("s").as("id"), col("c").as("nbr")).distinct()
+      val scoredCand = broadcast(cand)
+        .join(vecsSurv.select(col("id"), col("__nv").as("__nva")), Seq("id"))
+        .join(vecsSurv.select(col("id").as("nbr"), col("__nv").as("__nvb")),
+          Seq("nbr"))
+        .select(col("id"), col("nbr"),
+          Similarity.dot(col("__nva"), col("__nvb")).as("cosine"))
+      // pinned: curT's re-rank union and its old-edge join re-read it
+      val touched = pins.pin(amput.select(col("s").as("id")).distinct())
+      val curT = survKnn.join(broadcast(touched), Seq("id"))
+      // loop state, re-read by the heal rounds
+      var delta = pins.loop(topkOf(scoredCand.unionByName(curT), k, idType, dedup = true)
+        .join(curT.select(col("id"), col("nbr")).withColumn("__old", lit(true)),
+          Seq("id", "nbr"), "left")
+        .select(col("id"), col("nbr"), col("cosine"), col("rank"),
+          coalesce(col("__old"), lit(false)).unary_!.as("__new")))
+      if (healRounds > 0) {
+        val maxRev = if (maxReverse > 0) maxReverse else k
+        val nSurv = (if (corpusCount >= 0) corpusCount else index.count()) -
+          delIds.length
+        delta = refineDeltaRounds(pins, delta, survKnn, vecsSurv, nSurv, k, maxRev,
+          seed, 8000, healRounds, DeltaRefineFraction, idType)
+      }
+      val knnNew = knnArrays(delta)
+
+      // re-hub: buckets whose min-id hub was deleted re-elect and re-link
+      val bridgeAdds = if (bRounds <= 0) emptyAdds(deleted.select("id"), idType)
+        else {
+          val affKeys = deleted.select(col("id"),
+              explode(bridgeKeys(col("id"), bRounds, bSeed, bMod)).as("__b"))
+            .select("__b").distinct()
+          // pinned: the hub election and the surviving members re-read it
+          val members = pins.pin(index
+            .select(col("id"),
+              explode(bridgeKeys(col("id"), bRounds, bSeed, bMod)).as("__b"))
+            .join(broadcast(affKeys), Seq("__b")))
+          val rehub = members.groupBy("__b").agg(min(col("id")).as("h0"))
+            .filter(isDel(col("h0"))).select("__b")
+          val survMembers = members.filter(!isDel(col("id")))
+            .join(broadcast(rehub), Seq("__b"))
+          val e1 = survMembers
+            .join(broadcast(survMembers.groupBy("__b")
+              .agg(min(col("id")).as("h1"))), Seq("__b"))
+            .filter(col("id") =!= col("h1"))
+            .select(col("id"), col("h1").as("nbr"))
+          bothDirections(e1) // r13 opt: explode, not self-union (see def)
+            .groupBy("id")
+            .agg(array_sort(collect_set(col("nbr"))).as("__adds"))
+        }
+
+      val joined = survivors
+        .join(broadcast(knnNew.withColumnRenamed("knn", "__knn2")),
+          Seq("id"), "left")
+        .join(broadcast(bridgeAdds), Seq("id"), "left")
+      // re-elect entries when a deleted node held one
+      val entried =
+        if (deleted.filter(col("is_entry")).isEmpty)
+          joined.withColumn("__ise", col("is_entry"))
+        else {
+          val e0 = index.filter(col("is_entry")).count()
+          val entryFix = survivors.select(col("id"))
+            .orderBy(xxhash64(col("id"), lit(bSeed)), col("id"))
+            .limit(e0.toInt)
+            .withColumn("__entry2", lit(true))
+          joined.join(broadcast(entryFix), Seq("id"), "left")
+            .withColumn("__ise", coalesce(col("__entry2"), lit(false)))
+        }
+      entried.select(col("id"), col("nv"),
+        coalesce(col("__knn2"),
+          filter(col("knn"), e => !isDel(e.getField("nbr")))).as("knn"),
+        array_sort(array_union(
+          filter(col("bridges"), x => !isDel(x)),
+          coalesce(col("__adds"), array().cast(ArrayType(idType)))))
+          .as("bridges"),
+        col("__ise").as("is_entry"),
+        col("bridge_mod"), col("bridge_rounds"), col("bridge_seed"))
     }
-    val knnNew = knnArrays(delta)
-
-    // re-hub: buckets whose min-id hub was deleted re-elect and re-link
-    val bridgeAdds = if (bRounds <= 0) emptyAdds(deleted.select("id"), idType)
-      else {
-        val affKeys = deleted.select(col("id"),
-            explode(bridgeKeys(col("id"), bRounds, bSeed, bMod)).as("__b"))
-          .select("__b").distinct()
-        // pinned: the hub election and the surviving members re-read it
-        val members = index
-          .select(col("id"),
-            explode(bridgeKeys(col("id"), bRounds, bSeed, bMod)).as("__b"))
-          .join(broadcast(affKeys), Seq("__b"))
-          .localCheckpoint(true)
-        val rehub = members.groupBy("__b").agg(min(col("id")).as("h0"))
-          .filter(isDel(col("h0"))).select("__b")
-        val survMembers = members.filter(!isDel(col("id")))
-          .join(broadcast(rehub), Seq("__b"))
-        val e1 = survMembers
-          .join(broadcast(survMembers.groupBy("__b")
-            .agg(min(col("id")).as("h1"))), Seq("__b"))
-          .filter(col("id") =!= col("h1"))
-          .select(col("id"), col("h1").as("nbr"))
-        bothDirections(e1) // r13 opt: explode, not self-union (see def)
-          .groupBy("id")
-          .agg(array_sort(collect_set(col("nbr"))).as("__adds"))
-      }
-
-    val joined = survivors
-      .join(broadcast(knnNew.withColumnRenamed("knn", "__knn2")),
-        Seq("id"), "left")
-      .join(broadcast(bridgeAdds), Seq("id"), "left")
-    // re-elect entries when a deleted node held one
-    val entried =
-      if (deleted.filter(col("is_entry")).isEmpty)
-        joined.withColumn("__ise", col("is_entry"))
-      else {
-        val e0 = index.filter(col("is_entry")).count()
-        val entryFix = survivors.select(col("id"))
-          .orderBy(xxhash64(col("id"), lit(bSeed)), col("id"))
-          .limit(e0.toInt)
-          .withColumn("__entry2", lit(true))
-        joined.join(broadcast(entryFix), Seq("id"), "left")
-          .withColumn("__ise", coalesce(col("__entry2"), lit(false)))
-      }
-    entried.select(col("id"), col("nv"),
-      coalesce(col("__knn2"),
-        filter(col("knn"), e => !isDel(e.getField("nbr")))).as("knn"),
-      array_sort(array_union(
-        filter(col("bridges"), x => !isDel(x)),
-        coalesce(col("__adds"), array().cast(ArrayType(idType)))))
-        .as("bridges"),
-      col("__ise").as("is_entry"),
-      col("bridge_mod"), col("bridge_rounds"), col("bridge_seed"))
   }
 }

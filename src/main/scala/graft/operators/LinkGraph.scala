@@ -62,19 +62,21 @@ object LinkGraph {
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: Seq[String], iters: Int = 10,
                            damping: Double = 0.85,
-                           driverCap: Long = 2000000L): DataFrame = {
+                           driverCap: Long = 2000000L): DataFrame = Pins.scoped { pins =>
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges
+    // pinned: the count and the collect, or the node set, the out-degrees
+    // and every round's contribution join, re-read the edges
+    val ec = pins.pin(edges
       .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
+      .filter(col("src").isNotNull && col("dst").isNotNull))
     val seedSet = seeds.distinct
 
-    val nEdges = e.count()
+    val nEdges = ec.count()
     if (nEdges <= driverCap) {
       // in-memory power iteration, identical update rule
-      val pairs = e.as[(String, String)].collect()
+      val pairs = ec.as[(String, String)].collect()
       val nodes = (pairs.map(_._1) ++ pairs.map(_._2) ++ seedSet).distinct.sorted
       val idx = nodes.zipWithIndex.toMap
       val n = nodes.length
@@ -98,10 +100,7 @@ object LinkGraph {
           (1.0 - damping) * t(i) + damping * (in(i) + dangling * t(i)))
       }
       spark.createDataFrame(nodes.zip(rank).toSeq).toDF("node", "rank")
-    } else Pins.scoped { pins =>
-      // pinned: the node set, the out-degrees and every round's
-      // contribution join re-read the edges
-      val ec = pins.pin(e)
+    } else {
       // pinned: the count and every round's teleport join re-read it
       val nodes = pins.pin((ec.select(col("src").as("node"))
         .union(ec.select(col("dst").as("node")))
@@ -152,16 +151,18 @@ object LinkGraph {
     * join-based loop with one-iteration-deep lineage.
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-           iters: Int = 10, driverCap: Long = 2000000L): DataFrame = {
+           iters: Int = 10, driverCap: Long = 2000000L): DataFrame = Pins.scoped { pins =>
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges
+    // pinned: the count and the collect, or the node set and both joins of
+    // every round, re-read the edges
+    val ec = pins.pin(edges
       .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-    val nEdges = e.count()
+      .filter(col("src").isNotNull && col("dst").isNotNull))
+    val nEdges = ec.count()
     if (nEdges <= driverCap) {
-      val pairs = e.as[(String, String)].collect()
+      val pairs = ec.as[(String, String)].collect()
       val nodes = (pairs.map(_._1) ++ pairs.map(_._2)).distinct.sorted
       val idx = nodes.zipWithIndex.toMap
       val n = nodes.length
@@ -180,9 +181,7 @@ object LinkGraph {
       spark.createDataFrame(
         nodes.indices.map(i => (nodes(i), hub(i), auth(i))))
         .toDF("node", "hub", "authority")
-    } else Pins.scoped { pins =>
-      // pinned: the node set and both joins of every round re-read the edges
-      val ec = pins.pin(e)
+    } else {
       // pinned: the count and both normalizing joins of every round re-read it
       val nodes = pins.pin(ec.select(col("src").as("node"))
         .union(ec.select(col("dst").as("node")))
@@ -252,19 +251,21 @@ object LinkGraph {
     * altitude rule: per-round job overhead dominates tiny graphs.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-            maxIters: Int = 30, driverCap: Long = 2000000L): DataFrame = {
+            maxIters: Int = 30, driverCap: Long = 2000000L): DataFrame = Pins.scoped { pins =>
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
     val spark = edges.sparkSession
     import spark.implicits._
-    val und = edges
+    // pinned: the count and the collect, or both semi-joins of every round,
+    // re-read the edges
+    val ec = pins.pin(edges
       .select(col(srcCol).cast("string").as("s"), col(dstCol).cast("string").as("d"))
       .filter(col("s").isNotNull && col("d").isNotNull && col("s") =!= col("d"))
       .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct()
-    val nEdges = und.count()
+      .distinct())
+    val nEdges = ec.count()
     if (nEdges <= driverCap) {
-      val pairs = und.as[(String, String)].collect()
+      val pairs = ec.as[(String, String)].collect()
       val nodes = (pairs.map(_._1) ++ pairs.map(_._2)).distinct.sorted
       val idx = nodes.zipWithIndex.toMap
       var alive = Array.fill(nodes.length)(true)
@@ -284,9 +285,7 @@ object LinkGraph {
       spark.createDataFrame(nodes.indices.collect {
           case i if alive(i) => (nodes(i), deg(i).toLong)
         }).toDF("node", "degree")
-    } else Pins.scoped { pins =>
-      // pinned: both semi-joins of every round re-read the edges
-      val ec = pins.pin(und)
+    } else {
       // loop state: the count and the first round's semi-joins re-read it
       var surv = pins.loop(ec.select(col("a").as("node"))
         .union(ec.select(col("b").as("node")))
@@ -360,7 +359,7 @@ object LinkGraph {
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        maxIters: Int = 15,
-                       driverCap: Long = 2000000L): DataFrame = {
+                       driverCap: Long = 2000000L): DataFrame = Pins.scoped { pins =>
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -368,13 +367,15 @@ object LinkGraph {
     val directed = edges
       .select(col(srcCol).as("s"), col(dstCol).as("d"))
       .filter(col("s").isNotNull && col("d").isNotNull && col("s") =!= col("d"))
-    // both directions, deduped: each undirected neighbor votes exactly once
-    val sym = bothDirections(directed).distinct()
+    // both directions, deduped: each undirected neighbor votes exactly once.
+    // Pinned: the count and the collect, or every round's vote join,
+    // re-read the edges
+    val ec = pins.pin(bothDirections(directed).distinct())
     val integralIds = Seq(org.apache.spark.sql.types.LongType,
       org.apache.spark.sql.types.IntegerType).contains(idType)
-    val nDirected = sym.count() // 2x undirected edge count
+    val nDirected = ec.count() // 2x undirected edge count
     if (integralIds && nDirected <= 2 * driverCap) {
-      val pairs = sym.select(col("s").cast("long"), col("d").cast("long"))
+      val pairs = ec.select(col("s").cast("long"), col("d").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
       val nodes = pairs.map(_._1).distinct.sorted
       val idx = nodes.zipWithIndex.toMap
@@ -402,9 +403,7 @@ object LinkGraph {
       spark.createDataFrame(nodes.indices.map(i => (nodes(i), label(i))))
         .toDF("node", "community")
         .select(col("node").cast(idType), col("community").cast(idType))
-    } else Pins.scoped { pins =>
-      // pinned: every round's vote join re-reads the edges
-      val ec = pins.pin(sym)
+    } else {
       // loop state: the first round's votes and fixpoint probe re-read it
       var labels = pins.loop(
         ec.select(col("s").as("node")).distinct()
@@ -517,7 +516,7 @@ object LinkGraph {
     */
   def seedDistance(edges: DataFrame, srcCol: String, dstCol: String,
                    seeds: Seq[Any], maxHops: Int = 6,
-                   driverCap: Long = 2000000L): DataFrame = {
+                   driverCap: Long = 2000000L): DataFrame = Pins.scoped { pins =>
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     require(seeds.nonEmpty, "seeds must be non-empty")
     val spark = edges.sparkSession
@@ -526,12 +525,14 @@ object LinkGraph {
     val directed = edges
       .select(col(srcCol).as("s"), col(dstCol).as("d"))
       .filter(col("s").isNotNull && col("d").isNotNull && col("s") =!= col("d"))
-    val sym = bothDirections(directed).distinct()
+    // pinned: the count and the collect, or every round's relaxation join,
+    // re-read the edges
+    val ec = pins.pin(bothDirections(directed).distinct())
     val integralIds = Seq(org.apache.spark.sql.types.LongType,
       org.apache.spark.sql.types.IntegerType).contains(idType)
-    val nDirected = sym.count()
+    val nDirected = ec.count()
     if (integralIds && nDirected <= 2 * driverCap) {
-      val pairs = sym.select(col("s").cast("long"), col("d").cast("long"))
+      val pairs = ec.select(col("s").cast("long"), col("d").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
       val nodes = pairs.map(_._1).distinct.sorted
       val idx = nodes.zipWithIndex.toMap
@@ -550,9 +551,7 @@ object LinkGraph {
           if (dist(i) == Long.MaxValue) None else Some(dist(i)))))
         .toDF("node", "distance")
         .select(col("node").cast(idType), col("distance"))
-    } else Pins.scoped { pins =>
-      // pinned: every round's relaxation join re-reads the edges
-      val ec = pins.pin(sym)
+    } else {
       // pinned: the seed filter and the final join re-read it
       val nodes = pins.pin(ec.select(col("s").as("node")).distinct())
       val seedLit = typedlit(seeds.map(String.valueOf(_)))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pins
 
 /** Deterministic sampling operators for training-data pipelines.
   *
@@ -415,47 +416,48 @@ object Sampling {
     * run reproducible.
     */
   def systematicResample(df: DataFrame, idCol: String, weightCol: String,
-                         nSamples: Long, offsetNum: Long = 0L): DataFrame = {
+                         nSamples: Long, offsetNum: Long = 0L): DataFrame = Pins.scoped { pins =>
     require(nSamples >= 1, s"bad nSamples $nSamples")
     require(offsetNum >= 0, s"bad offset $offsetNum")
     val spark = df.sparkSession
-    val w = df.select(col(idCol).as("id"), col(weightCol).cast("long").as("weight"))
+    // pinned: two consumers, and the pin keeps the partition layout
+    val w = pins.pin(df.select(col(idCol).as("id"), col(weightCol).cast("long").as("weight"))
       .filter(col("weight") > 0)
       .repartitionByRange(col("id"))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true) // two consumers + pins the partition layout
+      .withColumn("__pid", spark_partition_id()))
     val partSums = w.groupBy("__pid").agg(sum(col("weight")).as("__ps"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    if (partSums.isEmpty)
-      return w.withColumn("n_copies", lit(0L)).drop("__pid").limit(0)
-    val total = partSums.map(_._2).sum
-    // the shifted numerators reach W * (n + 2): guard that product
-    require(total <= Long.MaxValue / (nSamples + 2),
-      s"W * nSamples overflows int64 (W=$total, n=$nSamples): " +
-        "pre-scale the weights down")
-    require(offsetNum < total, s"offset $offsetNum must be < W=$total")
-    val offsets = partSums.scanLeft((0, 0L)) { case ((_, acc), (pid, s)) =>
-      (pid, acc + s)
-    }.init.zip(partSums).map { case ((_, off), (pid, _)) => (pid, off) }
-    import spark.implicits._
-    val offDf = offsets.toSeq.toDF("__pid", "__off")
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy("__pid").orderBy("id")
-    // positions j in [0, n): row i receives j with
-    //   cum_{i-1} * n <= j * W + o < cum_i * n
-    // shift both ceil-div numerators by +W so they stay positive and
-    // integer `div` (truncation) equals the floor the formula needs
-    w.join(broadcast(offDf), Seq("__pid"))
-      .withColumn("__cum", col("__off") + sum(col("weight")).over(win))
-      .withColumn("__hi",
-        expr(s"(__cum * ${nSamples}L - ${offsetNum}L + ${2 * total - 1}L) " +
-          s"div ${total}L"))
-      .withColumn("__lo",
-        expr(s"((__cum - weight) * ${nSamples}L - ${offsetNum}L + " +
-          s"${2 * total - 1}L) div ${total}L"))
-      .withColumn("n_copies", col("__hi") - col("__lo"))
-      .filter(col("n_copies") > 0)
-      .select("id", "weight", "n_copies")
+    if (partSums.isEmpty) w.withColumn("n_copies", lit(0L)).drop("__pid").limit(0)
+    else {
+      val total = partSums.map(_._2).sum
+      // the shifted numerators reach W * (n + 2): guard that product
+      require(total <= Long.MaxValue / (nSamples + 2),
+        s"W * nSamples overflows int64 (W=$total, n=$nSamples): " +
+          "pre-scale the weights down")
+      require(offsetNum < total, s"offset $offsetNum must be < W=$total")
+      val offsets = partSums.scanLeft((0, 0L)) { case ((_, acc), (pid, s)) =>
+        (pid, acc + s)
+      }.init.zip(partSums).map { case ((_, off), (pid, _)) => (pid, off) }
+      import spark.implicits._
+      val offDf = offsets.toSeq.toDF("__pid", "__off")
+      val win = org.apache.spark.sql.expressions.Window
+        .partitionBy("__pid").orderBy("id")
+      // positions j in [0, n): row i receives j with
+      //   cum_{i-1} * n <= j * W + o < cum_i * n
+      // shift both ceil-div numerators by +W so they stay positive and
+      // integer `div` (truncation) equals the floor the formula needs
+      w.join(broadcast(offDf), Seq("__pid"))
+        .withColumn("__cum", col("__off") + sum(col("weight")).over(win))
+        .withColumn("__hi",
+          expr(s"(__cum * ${nSamples}L - ${offsetNum}L + ${2 * total - 1}L) " +
+            s"div ${total}L"))
+        .withColumn("__lo",
+          expr(s"((__cum - weight) * ${nSamples}L - ${offsetNum}L + " +
+            s"${2 * total - 1}L) div ${total}L"))
+        .withColumn("n_copies", col("__hi") - col("__lo"))
+        .filter(col("n_copies") > 0)
+        .select("id", "weight", "n_copies")
+    }
   }
 
   /** Rolling-origin backtest assignment — the time-series analog of the

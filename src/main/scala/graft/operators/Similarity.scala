@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pins
 
 import graft.functions.VectorExprs
 
@@ -299,8 +300,8 @@ object Similarity {
     * `bits` defaults to 0 = ADAPTIVE: derived from corpus.count() via
     * [[adaptiveLshBits]] (one count job — at any scale it is dwarfed by
     * the bucketing scan it sizes; NOTE the count re-runs the corpus
-    * lineage, so if `corpus` is a derived plan either localCheckpoint it
-    * first or pass `corpusCount`). Pass an explicit positive `bits` only
+    * lineage, so if `corpus` is a derived plan either pin it first
+    * ([[org.apache.spark.sql.graft.Pins]]) or pass `corpusCount`). Pass an explicit positive `bits` only
     * with a corpus-size rationale; a fixed value is a latent
     * band-saturation bug at 10-100x growth (see the sizing-rule scaladoc).
     *
@@ -669,17 +670,16 @@ object Similarity {
     */
   /** Build the PQ index: (id, codes) — m ints per row, the 32x-compressed
     * corpus representation a deployment persists ONCE (write this to a
-    * table) and scans per query batch. localCheckpoint materializes it so
-    * the optimizer cannot inline the encode expression into a downstream
+    * table) and scans per query batch. A [[org.apache.spark.sql.graft.Pins]]
+    * pin materializes it so the optimizer cannot inline the encode expression into a downstream
     * per-PAIR projection — re-encoding per (candidate x query) multiplies
     * the encode cost by the query count (the CollapseProject hazard, cf.
     * minHashCandidates).
     */
   def pqIndex(corpus: DataFrame, idCol: String, vecCol: String,
               model: PqModel): DataFrame =
-    FanOut(pqEncode(corpus, vecCol, model, "codes"))
-      .select(col(idCol).as("id"), col("codes"))
-      .localCheckpoint(true)
+    Pins.scoped(_.pin(FanOut(pqEncode(corpus, vecCol, model, "codes"))
+      .select(col(idCol).as("id"), col("codes"))))
 
   /** ADC top-k against a prebuilt [[pqIndex]] table — the build-once /
     * query-many deployment shape: each batch pays only its LUTs + the
@@ -746,7 +746,7 @@ object Similarity {
     */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, k: Int, nlist: Int = 16, nprobe: Int = 4,
-                m: Int = 8, ksub: Int = 16, seed: Long = 42L): DataFrame = {
+                m: Int = 8, ksub: Int = 16, seed: Long = 42L): DataFrame = Pins.scoped { pins =>
     import org.apache.spark.sql.graft.{ColumnBridge, PqAdcExpr, PqEncodeExpr, PqExprs, PqLutExpr}
     val cents = graft.fitting.KMeansLite.fitVectors(corpus, vecCol, nlist,
       maxIter = 20, seed = seed)
@@ -761,13 +761,12 @@ object Similarity {
     val dims = cents(0).length
     val model = pqTrain(cv, "__res", dims, m, ksub, seed = seed)
     val (cb, cn) = PqExprs.flatten(model.codebooks)
-    // list_id + m ints per row — the persisted IVF-PQ index (localCheckpoint
-    // barriers encode out of the per-pair projection, cf. pqTopK)
-    val codes = cv
+    // list_id + m ints per row — the persisted IVF-PQ index (a pin
+    // barriers encode out of the per-pair projection, cf. pqIndex)
+    val codes = pins.pin(cv
       .withColumn("__codes", ColumnBridge.column(PqEncodeExpr(
         ColumnBridge.expression(col("__res")), cb, cn, m, ksub, model.dsub)))
-      .select(col("neighbor_id"), col("__list"), col("__codes"))
-      .localCheckpoint(true)
+      .select(col("neighbor_id"), col("__list"), col("__codes")))
 
     // queries: top-nprobe lists by euclidean distance, one residual LUT per
     // probed list (the query table is the small side: nlist structs + a

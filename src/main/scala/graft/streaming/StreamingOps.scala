@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pins
 
 /** Structured Streaming twins of the batch operators.
   *
@@ -556,6 +557,11 @@ object StreamingOps {
     * parquet/Delta in deployment: base file + merged delta, compaction
     * on the same cadence.
     *
+    * Each [[addBatch]] runs in one `Pins.scoped` whose result is the new
+    * snapshot's frame, so a batch leaves one persisted RDD behind. A
+    * superseded snapshot is not released: a reader may still hold an
+    * [[index]] frame over it.
+    *
     * Batch ids must be disjoint from everything already inserted —
     * the insert's semi-join probe enforces it loudly per batch, and
     * because the probe scans only the index's id column (not the
@@ -575,7 +581,7 @@ object StreamingOps {
                              val overlay: Option[DataFrame],
                              val batchesSinceCompact: Int)
     @volatile private var snap =
-      new Snap(initialIndex.localCheckpoint(true), None, 0)
+      new Snap(Pins.scoped(_.pin(initialIndex)), None, 0)
     // running row count so each insert's refine-path crossover check
     // (delta vs full round) needs no per-batch index count job
     private var nRows: Long = snap.base.count()
@@ -595,34 +601,42 @@ object StreamingOps {
       */
     def addBatch(batch: DataFrame): Unit = synchronized {
       val s = snap
-      val b = batch.select(col(idCol), col(vecCol)).localCheckpoint(true)
-      if (!b.isEmpty) {
-        val (_, changed) = KnnGraph.insertIndexedDelta(compose(s), b,
-          idCol, vecCol, k = k, beam = beam, hops = hops,
-          refineRounds = refineRounds, maxReverse = maxReverse,
-          seed = seed, validateIds = validateIds, corpusCount = nRows)
-        // checkpoint the changed rows BEFORE composing them into the
-        // overlay: a LAZY frame on both sides of the anti-join ∪ union
-        // below (self-reference) trips Catalyst's union constraint
-        // rewrite (NoSuchElementException in UnionBase
-        // .rewriteConstraints); a materialized LogicalRDD on both sides
-        // is fine — and the rows land in the overlay anyway, so this is
-        // the batch's one bounded write, not an extra one
-        val changedC = changed.localCheckpoint(true)
-        val ovNew = s.overlay match {
-          case None => changedC
-          case Some(ov) =>
-            ov.join(changedC.select("id"), Seq("id"), "left_anti")
-              .unionByName(changedC).localCheckpoint(true)
+      val nb = s.batchesSinceCompact + 1
+      val compact = compactEvery > 0 && nb >= compactEvery
+      // the new snapshot's frame; null for an empty batch
+      val frame: DataFrame = Pins.scoped { pins =>
+        // pinned: the emptiness probe, the insert and the row count re-read it
+        val b = pins.pin(batch.select(col(idCol), col(vecCol)))
+        if (b.isEmpty) null
+        else {
+          val (_, changed) = KnnGraph.insertIndexedDelta(pins, compose(s), b,
+            idCol, vecCol, k = k, beam = beam, hops = hops,
+            refineRounds = refineRounds, maxReverse = maxReverse,
+            seed = seed, validateIds = validateIds, corpusCount = nRows)
+          // pin the changed rows BEFORE composing them into the
+          // overlay: a LAZY frame on both sides of the anti-join ∪ union
+          // below (self-reference) trips Catalyst's union constraint
+          // rewrite (NoSuchElementException in UnionBase
+          // .rewriteConstraints); a materialized LogicalRDD on both sides
+          // is fine — and the rows land in the overlay anyway, so this is
+          // the batch's one bounded write, not an extra one
+          val changedC = pins.pin(changed)
+          val ovNew = s.overlay match {
+            case None => changedC
+            case Some(ov) =>
+              // pinned: the next batch's composed index and every reader
+              // re-read the overlay
+              pins.pin(ov.join(changedC.select("id"), Seq("id"), "left_anti")
+                .unionByName(changedC))
+          }
+          nRows += b.count()
+          // pinned: the compacted base is the next snapshot's whole index
+          if (compact) pins.pin(compose(new Snap(s.base, Some(ovNew), nb)))
+          else ovNew
         }
-        nRows += b.count()
-        val nb = s.batchesSinceCompact + 1
-        snap =
-          if (compactEvery > 0 && nb >= compactEvery)
-            new Snap(compose(new Snap(s.base, Some(ovNew), nb))
-              .localCheckpoint(true), None, 0)
-          else new Snap(s.base, Some(ovNew), nb)
       }
+      if (frame != null)
+        snap = if (compact) new Snap(frame, None, 0) else new Snap(s.base, Some(frame), nb)
     }
   }
 

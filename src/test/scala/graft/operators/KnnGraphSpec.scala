@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ListenerBus
+import org.apache.spark.sql.graft.{ListenerBus, Pins}
 
 import graft.SparkSpec
 
@@ -378,10 +378,10 @@ class KnnGraphSpec extends SparkSpec {
     for (refine <- Seq(0, 2); frac <- Seq(0.0, 1.0)) {
       val direct = KnnGraph.insertIncremental(g, corpus, batch, "vec_id",
         "v", k = 6, refineRounds = refine, corpusCount = n)
-      val viaIdx = KnnGraph.indexGraph(KnnGraph.insertIndexedDelta(
-        idx, batch, "vec_id", "v", k = 6, beam = 8, hops = 3,
+      val viaIdx = Pins.scoped(pins => KnnGraph.indexGraph(KnnGraph.insertIndexedDelta(
+        pins, idx, batch, "vec_id", "v", k = 6, beam = 8, hops = 3,
         refineRounds = refine, maxReverse = 0, seed = 42,
-        validateIds = true, deltaRefineFraction = frac)._1)
+        validateIds = true, deltaRefineFraction = frac)._1))
       assert(viaIdx.exceptAll(direct).isEmpty &&
         direct.exceptAll(viaIdx).isEmpty, s"refine=$refine frac=$frac diverged")
     }
@@ -442,11 +442,13 @@ class KnnGraphSpec extends SparkSpec {
     val g = KnnGraph.nnDescent(corpus, "vec_id", "v", k = 4, iterations = 2)
     val idx = KnnGraph.graphIndex(g, corpus, "vec_id", "v")
       .localCheckpoint(true)
-    val (updated0, changed0) = KnnGraph.insertIndexedDelta(idx, batch,
-      "vec_id", "v", k = 4, beam = 8, hops = 3, refineRounds = 1,
-      maxReverse = 0, seed = 42, validateIds = true)
-    val updated = updated0.localCheckpoint(true)
-    val changed = changed0.localCheckpoint(true)
+    // both frames are materialized inside the scope that owns the insert's pins
+    val (updated, changed) = Pins.scoped { pins =>
+      val (updated0, changed0) = KnnGraph.insertIndexedDelta(pins, idx, batch,
+        "vec_id", "v", k = 4, beam = 8, hops = 3, refineRounds = 1,
+        maxReverse = 0, seed = 42, validateIds = true)
+      (updated0.localCheckpoint(true), changed0.localCheckpoint(true))
+    }
     assert(changed.exceptAll(updated).isEmpty) // changed ⊆ updated
     val changedIds = changed.select("id").distinct()
     val untouched = updated.join(changedIds, Seq("id"), "left_anti")
