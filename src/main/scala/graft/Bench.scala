@@ -1,11 +1,16 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.CodegenCount
 object Bench {
   type Gate = (SparkSession, String) => DataFrame
 
   /** Min-of-repeats seconds per gate that ran clean, and the gates that
-    * threw, in name order. A failed gate is never a time. */
-  final case class Timings(seconds: Map[String, Double], failed: Seq[String]) {
+    * threw, in name order. A failed gate is never a time. `compiles` is
+    * each gate's codegen compiles over all its repeats, failed gates
+    * included: the classes its plans generated that Spark's codegen cache
+    * did not hold. */
+  final case class Timings(seconds: Map[String, Double], failed: Seq[String],
+                           compiles: Map[String, Long]) {
     def total: Double = seconds.values.sum
   }
 
@@ -20,6 +25,7 @@ object Bench {
   def timeGates(spark: SparkSession, sfDir: String, gates: Map[String, Gate],
                 repeats: Int): Timings = {
     val outcomes = gates.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val compiles0 = CodegenCount.compiles
       val best =
         try Some((1 to math.max(1, repeats)).map { _ =>
           val t0 = System.nanoTime()
@@ -30,11 +36,13 @@ object Bench {
           (System.nanoTime() - t0) / 1e9
         }.min)
         catch { case _: Throwable => None }
+      val compiled = CodegenCount.compiles - compiles0
       Sessions.releaseGateState(spark)
-      name -> best
+      (name, best, compiled)
     }
-    Timings(outcomes.collect { case (n, Some(t)) => n -> t }.toMap,
-      outcomes.collect { case (n, None) => n })
+    Timings(outcomes.collect { case (n, Some(t), _) => n -> t }.toMap,
+      outcomes.collect { case (n, None, _) => n },
+      outcomes.map { case (n, _, c) => n -> c }.toMap)
   }
 
   def main(args: Array[String]): Unit = {
@@ -70,8 +78,11 @@ object Bench {
     val total = timings.total
     // run conditions ride in both records so runs compare across hosts
     val failed = timings.failed.map(n => s"\"$n\"").mkString("[", ",", "]")
+    def setting(key: String) = spark.conf.getOption(key).getOrElse("default")
     val conditions =
-      s""""cores":$cores,"heap_mb":${Runtime.getRuntime.maxMemory >> 20},"failed":$failed"""
+      s""""cores":$cores,"heap_mb":${Runtime.getRuntime.maxMemory >> 20},""" +
+        s""""codegen_cache_entries":"${setting(Sessions.CodegenCacheEntries)}",""" +
+        s""""retained_executions":"${setting(Sessions.RetainedExecutions)}","failed":$failed"""
     // The two intentional evaluation harnesses (multi-method sweeps, each
     // the cost of ~15 ordinary gates BY DESIGN) report on their own line
     // so the per-operator trend stays legible when diffing rounds.
@@ -86,10 +97,12 @@ object Bench {
     // than silently dropped.
     val sorted = results.toSeq.sortBy { case (k, v) => (-v, k) }
     val full = sorted.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
+    val compiles = timings.compiles.toSeq.sorted.map { case (k, v) => s"\"$k\":$v" }
+      .mkString("{", ",", "}")
     try
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("target/bench_full_last.json"),
-        s"""{"total_s":$total,"operators_s":$operators,"harness_s":$harness,"n":${sorted.size},"protocol":"$protocol",$conditions,"sf":"$sfDir","queries":$full}""")
+        s"""{"total_s":$total,"operators_s":$operators,"harness_s":$harness,"n":${sorted.size},"protocol":"$protocol",$conditions,"sf":"$sfDir","queries":$full,"codegen_compiles":$compiles}""")
     catch { case _: Throwable => () } // the stdout line must still go out
     def fmt(v: Double): String =
       if (v >= 100) f"$v%.0f" else if (v >= 10) f"$v%.1f" else f"$v%.2f"

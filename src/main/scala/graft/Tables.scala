@@ -51,6 +51,9 @@ object Tables {
   * times.
   */
 object Sessions {
+  val CodegenCacheEntries = "spark.sql.codegen.cache.maxEntries"
+  val RetainedExecutions = "spark.sql.ui.retainedExecutions"
+
   /** Core count for the mains: `SPARK_GRAFT_CPUS`, default 4. */
   def mainCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
@@ -82,6 +85,17 @@ object Sessions {
       .config("spark.memory.storageFraction", "0.3")
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
       .config("spark.ui.enabled", "false")
+      // Generated classes are cached per JVM, 100 by default (a static
+      // conf, read once). One pass of the five Spark analyses with UQ on
+      // the 60-day synthetic plant compiles 216 classes into an empty
+      // cache; at 100 entries every later pass recompiles most of them
+      // (215-306 compiles per warm benchmark pass), at 512 the next pass
+      // compiles 4.
+      .config(CodegenCacheEntries, "512")
+      // The SQL status store keeps every execution's plan and metrics,
+      // 1000 by default, even with the UI off; the retained heap grows
+      // with each query until then. Nothing here reads it.
+      .config(RetainedExecutions, "50")
       .getOrCreate()
     // ERROR: stray WARN chatter on stderr must not drown the JSON line
     // Bench prints

@@ -2,7 +2,6 @@ package graft.analysis
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Pins
 
 import graft.fitting.Fitting
 import graft.functions.Met
@@ -14,10 +13,14 @@ import graft.plant.PlantData
   * it to the long-term daily reanalysis record.
   *
   * Spark re-expression of openoa/analysis/turbine_long_term_gross_energy.py
-  * :46-564. The reference loops turbines in Python over pandas frames; here
-  * the flagging + daily reduction is ONE distributed plan over the long
-  * (time, asset_id) table, and only the per-turbine daily aggregates
-  * (#turbines x #days rows) are collected for the model fits.
+  * :46-564. The reference loops turbines in Python over pandas frames.
+  * Scale design: only the fact-grain steps are Spark plans — the flags and
+  * the daily reduction, one plan over the long (time, asset_id) table, and
+  * the daily reanalysis means. What they produce is collected: the
+  * per-turbine valid days (#turbines x #days rows) and the daily
+  * reanalysis (#days of the long-term record). The bounded-grain tail runs
+  * on the driver, where the reference runs it: the gap-fill grid, the
+  * correlation imputation, the join by day and the model fits.
   *
   * Model note: the reference fits a pygam GAM(ws, wd, rho)
   * (power_curve/functions.py:154-200); here it's a ridge regression on
@@ -106,20 +109,31 @@ final class TurbineLongTermGrossEnergy(
     * days from the best-correlated turbines
     * (turbine_long_term_gross_energy.py:476-501: gap-filled frame +
     * imputing.impute_all_assets_by_correlation, then drop what could not be
-    * imputed). One distributed plan: a #turbines x #days grid left-joined to
-    * the valid days, imputed via [[graft.operators.Imputing]].
+    * imputed). Like the reference, the grid and the imputation run on the
+    * driver: the valid-day table is collected (#turbines x #days rows),
+    * every turbine gets a row for every calendar day (session time zone)
+    * from the first valid day to the last, and
+    * [[graft.operators.Imputing.imputeAllByCorrelation]] fills the gaps.
+    * Returns a local frame.
     */
   def dailyImputed(daily: DataFrame, turbines: Seq[String]): DataFrame = {
-    val span = daily.agg(min(col("day")).as("__mn"), max(col("day")).as("__mx"))
-    val days = span.select(explode(sequence(col("__mn"), col("__mx"),
-      expr("INTERVAL 1 DAY"))).as("day"))
-    val turbDf = daily.sparkSession.createDataFrame(
-      turbines.map(Tuple1(_))).toDF("asset_id")
-    val grid = days.crossJoin(broadcast(turbDf))
-      .join(daily.select("day", "asset_id", "energy_corrected"),
-        Seq("day", "asset_id"), "left")
+    val spark = daily.sparkSession
+    val valid = daily.select("day", "asset_id", "energy_corrected").collect()
+      .map(r => (r.getTimestamp(0).getTime, r.getString(1)) -> r.getDouble(2)).toMap
+    val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
+    def date(ms: Long) = java.time.Instant.ofEpochMilli(ms).atZone(zone).toLocalDate
+    val days =
+      if (valid.isEmpty) Seq.empty
+      else {
+        val last = date(valid.keys.map(_._1).max)
+        Iterator.iterate(date(valid.keys.map(_._1).min))(_.plusDays(1))
+          .takeWhile(!_.isAfter(last))
+          .map(d => java.sql.Timestamp.from(d.atStartOfDay(zone).toInstant)).toSeq
+      }
+    val grid = for (d <- days; t <- turbines) yield (d, t, valid.get((d.getTime, t)))
     graft.operators.Imputing
-      .imputeAllByCorrelation(grid, "day", "asset_id", "energy_corrected")
+      .imputeAllByCorrelation(spark.createDataFrame(grid).toDF("day", "asset_id", "energy_corrected"),
+        "day", "asset_id", "energy_corrected")
       .filter(col("energy_corrected_imputed").isNotNull)
       .withColumn("energy_corrected", col("energy_corrected_imputed"))
       .drop("energy_corrected_imputed")
@@ -140,7 +154,7 @@ final class TurbineLongTermGrossEnergy(
       .withColumn("wd", Met.windDirection(col("u"), col("v")))
   }
 
-  def run(): Result = Pins.scoped { pins =>
+  def run(): Result = {
     val rng = new scala.util.Random(seed)
     val turbines = plant.turbineIds
     val rated = plant.ratedPower
@@ -162,37 +176,44 @@ final class TurbineLongTermGrossEnergy(
     val results = new Array[Double](sims)
     var perTurbineAcc = Map.empty[String, Double]
 
-    // Memoize the daily table per threshold CONFIG (<= numSim distinct
-    // aggregation plans — the reference refilters per simulation,
+    // Spark runs the fact-grain steps: the flags and the daily sums. The
+    // valid-day table is collected once per threshold CONFIG (<= numSim
+    // distinct aggregation plans — the reference refilters per simulation,
     // turbine_long_term_gross_energy.py TODO notes the resulting slowness)
-    // and the collected arrays per (config, product): one join + collect per
-    // pair no matter how many simulations draw it (reference memo at
-    // turbine_long_term_gross_energy.py:392-415). The valid-day table
-    // (#turbines x #days rows) is pinned: the imputation plan references it
-    // a dozen times (span, grid, both correlation sides, the pair/fit/
-    // prediction joins), and each unpinned reference would re-run the
-    // frozen-sensor window and the per-bin median filter over SCADA. The
-    // imputed table is read once per (config, product), by the collect.
-    val dailyCache = scala.collection.mutable.Map.empty[(Double, Double, Double), DataFrame]
-    def dailyFor(cfg: (Double, Double, Double)): DataFrame =
+    // and the daily reanalysis once per product (reference memo at
+    // turbine_long_term_gross_energy.py:392-415). The driver does the rest:
+    // the gap-fill grid and the imputation ([[dailyImputed]] returns a
+    // local frame, collected without a job), the join by day and the
+    // per-turbine sort, once per (config, product) pair however many
+    // simulations draw it.
+    val dailyCache = scala.collection.mutable.Map.empty[(Double, Double, Double),
+      Array[org.apache.spark.sql.Row]]
+    def dailyFor(cfg: (Double, Double, Double)) =
       dailyCache.getOrElseUpdate(cfg, {
-        val valid = pins.pin(dailyValid(filteredScada(rated, cfg._1, cfg._2), cfg._3))
-        if (imputeMissingDays) dailyImputed(valid, turbines) else valid
+        val valid = dailyValid(filteredScada(rated, cfg._1, cfg._2), cfg._3)
+        (if (imputeMissingDays) dailyImputed(valid, turbines) else valid)
+          .select("asset_id", "day", "energy_corrected").collect()
       })
+    // (ws, wd, rho, day in epoch ms) per product
+    val reanCache = scala.collection.mutable.Map.empty[String, Array[(Double, Double, Double, Long)]]
+    def reanFor(product: String) =
+      reanCache.getOrElseUpdate(product,
+        dailyReanalysis(product).select("ws", "wd", "rho", "day").collect()
+          .map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getTimestamp(3).getTime)))
     val memo = scala.collection.mutable.Map.empty[((Double, Double, Double), String),
-      (Map[String, Array[org.apache.spark.sql.Row]], Array[org.apache.spark.sql.Row])]
-    // each turbine's rows are sorted by day, so the UQ bootstrap's draws
-    // do not depend on the order the join plan collects them in
+      Map[String, Array[(Double, Double, Double, Double)]]]
+    // (energy, ws, wd, rho) per turbine, sorted by day, so the UQ
+    // bootstrap's draws do not depend on the order the rows were collected in
     def productData(cfg: (Double, Double, Double), product: String) =
       memo.getOrElseUpdate((cfg, product), {
-        val rean = dailyReanalysis(product)
-        val joined = dailyFor(cfg).join(rean, Seq("day"))
-          .select(col("asset_id"), col("energy_corrected"), col("ws"), col("wd"), col("rho"),
-            col("day"))
-          .collect()
-          .groupBy(_.getString(0))
-          .map { case (t, rows) => t -> rows.sortBy(_.getTimestamp(5).getTime) }
-        (joined, rean.select("ws", "wd", "rho", "day").collect())
+        val rean = reanFor(product).map(c => c._4 -> c).toMap
+        dailyFor(cfg).toSeq
+          .flatMap { r =>
+            val day = r.getTimestamp(1).getTime
+            rean.get(day).map { case (ws, wd, rho, _) => (r.getString(0), day, (r.getDouble(2), ws, wd, rho)) }
+          }
+          .groupBy(_._1)
+          .map { case (t, rows) => t -> rows.sortBy(_._2).map(_._3).toArray }
       })
 
     for (n <- 0 until sims) {
@@ -200,11 +221,11 @@ final class TurbineLongTermGrossEnergy(
         sample(correctionThreshold))
       val scadaFrac = if (uq) 1.0 + rng.nextGaussian() * uncertaintyScada else 1.0
       val product = products(if (uq) rng.nextInt(products.size) else n % products.size)
-      val (joined, ltRows) = productData(cfg, product)
+      val joined = productData(cfg, product)
       val perTurbine = turbines.map { t =>
         val rows = joined.getOrElse(t, Array.empty)
-        val xs = rows.map(r => (r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-        val ys = rows.map(_.getDouble(1) * scadaFrac)
+        val xs = rows.map(r => (r._2, r._3, r._4))
+        val ys = rows.map(_._1 * scadaFrac)
         val sampleIdx =
           if (uq) Array.fill(ys.length)(rng.nextInt(ys.length))
           else ys.indices.toArray
@@ -212,8 +233,8 @@ final class TurbineLongTermGrossEnergy(
           sampleIdx.map(xs), sampleIdx.map(ys))
         // apply to full LT record; per-day energy, cap at plausible bounds
         val maxDaily = rated(t) * 24.0 * 1.2
-        val lt = ltRows.map { r =>
-          val p = model(r.getDouble(0), r.getDouble(1), r.getDouble(2))
+        val lt = reanFor(product).map { r =>
+          val p = model(r._1, r._2, r._3)
           math.min(math.max(p, 0.0), maxDaily)
         }
         val years = lt.length / 365.25

@@ -1,11 +1,12 @@
 package graft.analysis
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Pins
 
 import graft.fitting.Fitting
 import graft.functions.Met
+import graft.operators.Flags
 import graft.plant.PlantData
 
 /** Internal wake losses from freestream-vs-plant power comparison, with
@@ -13,15 +14,19 @@ import graft.plant.PlantData
   *
   * Spark re-expression of openoa/analysis/wake_losses.py:53-1317. Key
   * structural change per SURVEY.md §3.3: the reference unstacks SCADA to a
-  * wide (time x turbine) frame in memory; here the data stays LONG and every
-  * per-timestamp quantity (reference direction, freestream means, plant
-  * sums) is a groupBy("time") aggregate — the only fact-grain shuffles. The
-  * freestream assignment is a broadcast (wd_bin -> turbine set) table built
-  * from the tiny asset-pair geometry.
+  * wide (time x turbine) frame in memory; here the data stays LONG. Spark
+  * runs the fact-grain steps: the derating flags, one groupBy("time")
+  * aggregate for every per-timestamp quantity (reference direction,
+  * freestream means, plant sums, and the turbine rows the turbine bins
+  * are summed from), and the hourly means and wind-rose counts. The
+  * freestream assignment is a per-direction-bin turbine list built on the
+  * driver from the tiny asset-pair geometry. The driver sums the collected
+  * turbine bins into plant bins, joins the hourly means for the bias fit,
+  * and weights the bins.
   *
   * Parity features:
   *  - derating identification (wake_losses.py:1057-1095): per-turbine
-  *    window-range + median/MAD power-curve bin flags; derated samples are
+  *    window-range + exact median/MAD power-curve bin flags; derated samples are
   *    excluded, and only all-turbines-reporting timestamps enter the loss
   *    calculation (the reference's dropna over the wide frame)
   *  - SCADA->reanalysis wind speed bias regression (wake_losses.py:
@@ -125,8 +130,12 @@ final class WakeLosses(
   /** Per-turbine derating/curtailment flags (wake_losses.py:1057-1095):
     * window-range flag (plausible ws, implausible power) OR a median/MAD
     * power-curve bin flag (ws above the bin median by > thresh MADs, power
-    * bins limited to [0.01, maxPf] x rated). All aggregates are per
-    * (asset, power-bin) — a #turbines x #bins broadcast table.
+    * bins limited to [0.01, maxPf] x rated) — the reference's
+    * `bin_filter(center_type="median", deviation_type="mad",
+    * direction="above")`. One aggregation per (asset, power-bin) keeps each
+    * bin's sorted ws, from which the [[graft.operators.Flags]] kernel takes
+    * the exact median and the MAD about it; the #turbines x #bins table is
+    * broadcast-joined back once.
     */
   def withDerateFlag(scada: DataFrame, rated: Map[String, Double],
                      wsStart: Double, maxPf: Double, madThresh: Double): DataFrame = {
@@ -138,17 +147,14 @@ final class WakeLosses(
       .withColumn("__bin", floor(col("WTUR_W") / (lit(binFrac) * col("__rated"))))
     val inBinRange = col("WTUR_W") >= lit(0.01) * col("__rated") &&
       col("WTUR_W") <= lit(maxPf) * col("__rated")
-    val med = binned.filter(inBinRange)
+    val stats = binned.filter(inBinRange)
       .groupBy("asset_id", "__bin")
-      .agg(percentile_approx(col("WMET_HorWdSpd"), lit(0.5), lit(10000)).as("__med"))
-    val mad = binned.filter(inBinRange)
-      .join(broadcast(med), Seq("asset_id", "__bin"))
-      .groupBy("asset_id", "__bin")
-      .agg(percentile_approx(abs(col("WMET_HorWdSpd") - col("__med")), lit(0.5), lit(10000))
-        .as("__mad"))
+      .agg(Flags.sortedValues(col("WMET_HorWdSpd")).as("__sorted"))
+      .withColumn("__med", Flags.medianOfSorted(col("__sorted")))
+      .select(col("asset_id"), col("__bin"), col("__med"),
+        Flags.madOfSorted(col("__sorted"), col("__med")).as("__mad"))
     binned
-      .join(broadcast(med), Seq("asset_id", "__bin"), "left")
-      .join(broadcast(mad), Seq("asset_id", "__bin"), "left")
+      .join(broadcast(stats), Seq("asset_id", "__bin"), "left")
       .withColumn("flag_bin", coalesce(
         inBinRange &&
           (col("WMET_HorWdSpd") - col("__med")) > lit(madThresh) * col("__mad"),
@@ -164,14 +170,26 @@ final class WakeLosses(
     * dropna(how="any") over the wide frame.
     */
   def timestampAggregate(scada: DataFrame, sectorWidth: Double,
-                         nTurbines: Int): DataFrame = {
+                         nTurbines: Int): DataFrame =
+    perTimestamp(scada, sectorWidth, nTurbines).drop("__rows")
+
+  /** [[timestampAggregate]] with each timestamp's turbine rows kept as
+    * `__rows`, an array of (asset_id, p, ws) structs. One aggregation by
+    * time: the freestream values are read from the array through the
+    * timestamp's direction bin, so the fact table is shuffled once.
+    */
+  private def perTimestamp(scada: DataFrame, sectorWidth: Double,
+                           nTurbines: Int): DataFrame = {
     // reference wind direction: circular mean over turbines (default), or
     // over met-tower direction sensors when wdRef="tower"
     // (wake_losses.py:1016-1033 wd_ref asset option)
     val perTime = scada
       .groupBy("time")
       .agg(Met.circularMeanAgg(col("WMET_HorWdDir")).as("__scada_wd"),
-        count(lit(1)).as("n_reporting"))
+        count(lit(1)).as("n_reporting"),
+        sum(col("WTUR_W")).as("plant_power"),
+        collect_list(struct(col("asset_id"), col("WTUR_W").cast("double").as("p"),
+          col("WMET_HorWdSpd").cast("double").as("ws"))).as("__rows"))
       .filter(col("n_reporting") === nTurbines)
     val withRef = (wdRef match {
       case "tower" =>
@@ -182,65 +200,73 @@ final class WakeLosses(
         perTime.join(towerWd, Seq("time")).drop("__scada_wd")
       case _ => perTime.withColumnRenamed("__scada_wd", "wd_ref")
     }).withColumn("wd_bin", floor(col("wd_ref") / wdBinWidth).cast("int"))
-    // broadcast freestream membership as (wd_bin, asset_id) table
-    val fs = freestreamByBin(sectorWidth).toSeq.flatMap { case (b, ts) => ts.map(t => (b, t)) }
-    val spark = plant.scadaDf.sparkSession
-    import spark.implicits._
-    val fsDf = broadcast(fs.toDF("wd_bin", "asset_id").withColumn("is_freestream", lit(true)))
-    val joined = scada.join(withRef.select("time", "wd_ref", "wd_bin", "n_reporting"), Seq("time"))
-      .join(fsDf, Seq("wd_bin", "asset_id"), "left")
-      .withColumn("is_freestream", coalesce(col("is_freestream"), lit(false)))
-    // freestream aggregation per the configured method
-    // (wake_losses.py:187-188, :1041-1054)
-    def fsAgg(c: org.apache.spark.sql.Column, method: String) = method match {
-      case "mean"   => avg(c)
-      case "median" => percentile(c, lit(0.5))
-      case "max"    => max(c)
+    // freestream turbines of each direction bin, a literal indexed by bin;
+    // a bin past the last (360 not a multiple of the width) has none
+    val byBin = freestreamByBin(sectorWidth)
+    val members = try_element_at(typedLit((0 until nBins(wdBinWidth)).map(byBin)),
+      col("wd_bin") + 1)
+    // freestream aggregation per the configured method over the members'
+    // non-null values (wake_losses.py:187-188, :1041-1054); none gives null
+    def fsAgg(field: String, method: String): Column = {
+      val vs = filter(
+        transform(filter(col("__rows"), r => array_contains(members, r.getField("asset_id"))),
+          r => r.getField(field)),
+        v => v.isNotNull)
+      method match {
+        case "mean" =>
+          when(size(vs) > 0, aggregate(vs, lit(0.0), (acc, v) => acc + v) / size(vs))
+        case "median" => Flags.medianOfSorted(sort_array(vs))
+        case "max"    => array_max(vs)
+      }
     }
-    joined.groupBy("time")
-      .agg(first(col("wd_ref")).as("wd_ref"),
-        first(col("wd_bin")).as("wd_bin"),
-        first(col("n_reporting")).as("n_reporting"),
-        sum(col("WTUR_W")).as("plant_power"),
-        fsAgg(when(col("is_freestream"), col("WTUR_W")), freestreamPowerMethod)
-          .as("freestream_power"),
-        fsAgg(when(col("is_freestream"), col("WMET_HorWdSpd")), freestreamWsMethod)
-          .as("freestream_ws"))
+    withRef
+      .select(col("time"), col("wd_ref"), col("wd_bin"), col("n_reporting"),
+        col("plant_power"),
+        fsAgg("p", freestreamPowerMethod).as("freestream_power"),
+        fsAgg("ws", freestreamWsMethod).as("freestream_ws"),
+        col("__rows"))
       .filter(col("freestream_power").isNotNull)
   }
 
   /** Linear map from SCADA freestream ws to the product's reanalysis ws
-    * (wake_losses.py:1127-1147): hourly means, integer ws bins, OLS over
-    * bins with enough support. Falls back to identity when the POR is too
-    * short to populate two valid bins.
+    * (wake_losses.py:1127-1147): hourly means, integer ws bins (Spark's
+    * HALF_UP `round`), OLS over bins with enough support. Falls back to
+    * identity when the POR is too short to populate two valid bins. Spark
+    * takes the two hourly means — the freestream ws over the POR and the
+    * product's ws over the same hours — and the driver joins them (#POR
+    * hours each) and bins.
     */
   private def wsBiasFit(ts: DataFrame, product: String): Fitting.LinearFit = {
-    val rean = plant.reanalysis(product)
-      .select(date_trunc("hour", col("time")).as("hour"),
-        col("WMETR_HorWdSpd").as("__rws"))
-      .groupBy("hour").agg(avg(col("__rws")).as("__rws"))
-    val hourly = ts.groupBy(date_trunc("hour", col("time")).as("hour"))
-      .agg(avg(col("freestream_ws")).as("__fws"))
-      .join(rean, Seq("hour"))
-    val bins = hourly.withColumn("__wsb", round(col("__fws")))
-      .groupBy("__wsb")
-      .agg(avg(col("__rws")).as("__mrws"), count(lit(1)).as("__n"))
-      .filter(col("__wsb") >= minWsBinLinReg && col("__n") >= binCountThreshLinReg)
-      .collect()
+    val hour = date_trunc("hour", col("time")).as("hour")
+    val fws = ts.groupBy(hour).agg(avg(col("freestream_ws"))).collect()
+      .collect { case r if !r.isNullAt(1) => r.getTimestamp(0).getTime -> r.getDouble(1) }.toMap
+    val rws =
+      if (fws.isEmpty) Array.empty[org.apache.spark.sql.Row]
+      else plant.reanalysis(product)
+        .select(hour, col("WMETR_HorWdSpd"))
+        .filter(col("hour").between(lit(new java.sql.Timestamp(fws.keys.min)),
+          lit(new java.sql.Timestamp(fws.keys.max))))
+        .groupBy("hour").agg(avg(col("WMETR_HorWdSpd")))
+        .collect()
+    def wsBin(x: Double) =
+      if (x.isNaN || x.isInfinite) x
+      else BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble
+    // (ws bin, mean product ws) of each bin with enough hours; an hour
+    // with no product ws counts toward its bin's support, not its mean
+    val bins = rws.toSeq
+      .flatMap(r => fws.get(r.getTimestamp(0).getTime).map(f => wsBin(f) -> Option.unless(r.isNullAt(1))(r.getDouble(1))))
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .collect { case (b, hs) if b >= minWsBinLinReg && hs.size >= binCountThreshLinReg =>
+        val ys = hs.flatMap(_._2)
+        (b, ys.sum / ys.size)
+      }
     if (bins.length < 2) Fitting.LinearFit(1.0, 0.0)
-    else {
-      val x = bins.map(_.getDouble(0))
-      val y = bins.map(_.getDouble(1))
-      Fitting.wlsFit(x, y, Array.fill(x.length)(1.0))
-    }
+    else Fitting.wlsFit(bins.map(_._1).toArray, bins.map(_._2).toArray, Array.fill(bins.length)(1.0))
   }
 
-  // last reanalysis bucket per product, for the LT windiness window
-  private lazy val reanEnd: Map[String, Long] =
-    plant.reanalysis.keys.map { p =>
-      p -> plant.reanalysis(p).agg(max(col("time"))).head()
-        .getTimestamp(0).toInstant.getEpochSecond
-    }.toMap
+  // last reanalysis bucket per product, for the LT windiness window; read
+  // once for each product a run draws
+  private val reanEnd = scala.collection.mutable.Map.empty[String, Long]
 
   /** Long-term (wd_bin, ws_bin) wind-rose frequency table over the last
     * `years` calendar years of a reanalysis product
@@ -248,7 +274,9 @@ final class WakeLosses(
     * floor on the SAME widths as the POR binning so the join grain matches.
     */
   def longTermFrequency(product: String, years: Int): DataFrame = {
-    val ltStart = MonteCarloAEP.windowStartSec(reanEnd(product), years, "h")
+    val end = reanEnd.getOrElseUpdate(product,
+      plant.reanalysis(product).agg(max(col("time"))).head().getTimestamp(0).toInstant.getEpochSecond)
+    val ltStart = MonteCarloAEP.windowStartSec(end, years, "h")
     plant.reanalysis(product)
       .filter(unix_timestamp(col("time")) >= ltStart)
       .withColumn("wd_bin", floor(col("WMETR_HorWdDir") / wdBinWidth).cast("int"))
@@ -270,11 +298,12 @@ final class WakeLosses(
 
   /** One wake-loss evaluation for a fixed parameter draw. `base` is the
     * na-dropped SCADA projection, pinned by [[run]] so UQ draws don't
-    * re-scan the fact table. The derate-filtered SCADA and the
-    * per-timestamp frame are pinned for the draw: the bias fit and both bin
-    * reductions re-read them. The four losses come from three bounded
-    * collects (plant bins, turbine bins, the long-term wind rose), weighted
-    * on the driver.
+    * re-scan the fact table. The derate-filtered SCADA is read once, by
+    * the per-timestamp aggregate, which is pinned for the draw: the bias fit
+    * and the turbine bins re-read it, the latter from the turbine rows it
+    * keeps. The four losses come from two bounded collects (turbine bins,
+    * the long-term wind rose), summed into plant bins and weighted on the
+    * driver.
     */
   private def runOnce(base: DataFrame, product: String, sectorWidth: Double,
                       madThresh: Double, wsStart: Double, maxPf: Double,
@@ -282,25 +311,31 @@ final class WakeLosses(
     val nTurbines = plant.turbineIds.size
     val scada =
       if (deratingFilter)
-        pins.pin(withDerateFlag(base, plant.ratedPower, wsStart, maxPf, madThresh)
-          .filter(!col("derate_flag")).drop("derate_flag"))
+        withDerateFlag(base, plant.ratedPower, wsStart, maxPf, madThresh)
+          .filter(!col("derate_flag")).drop("derate_flag")
       else base
-    val ts = pins.pin(timestampAggregate(scada, sectorWidth, nTurbines))
+    val ts = pins.pin(perTimestamp(scada, sectorWidth, nTurbines))
 
     // LT binning (wake_losses.py:1098-1147): (wd, ws) bins on the
     // bias-corrected freestream ws
     val fit = wsBiasFit(ts, product)
     val tsBinned = ts.withColumn("ws_bin", floor(
       (lit(fit.intercept) + lit(fit.slope) * col("freestream_ws")) / wsBinWidthLt).cast("int"))
-    val plantBins = tsBinned.groupBy("wd_bin", "ws_bin")
-      .agg(sum(col("plant_power")), sum(col("freestream_power")), count(lit(1)))
-      .collect().map(binSums(_, 0)).toSeq
-    // per-turbine bins: each turbine's power vs the freestream mean
-    val turbineBins = scada
-      .join(tsBinned.select("time", "wd_bin", "ws_bin", "freestream_power"), Seq("time"))
-      .groupBy("asset_id", "wd_bin", "ws_bin")
-      .agg(sum(col("WTUR_W")), sum(col("freestream_power")), count(lit(1)))
+    // per-turbine bins: each turbine's power vs the freestream mean, from
+    // the turbine rows each timestamp kept
+    val turbineBins = tsBinned
+      .select(col("wd_bin"), col("ws_bin"), col("freestream_power"), explode(col("__rows")).as("__r"))
+      .groupBy(col("__r.asset_id").as("asset_id"), col("wd_bin"), col("ws_bin"))
+      .agg(sum(col("__r.p")), sum(col("freestream_power")), count(lit(1)))
       .collect().groupBy(_.getString(0)).map { case (t, rs) => t -> rs.map(binSums(_, 1)).toSeq }
+    // plant bins, summed on the driver: every kept timestamp has all
+    // nTurbines turbines reporting, so a bin's plant power is the sum of its
+    // turbine sums, and its freestream power and count are each turbine-summed
+    // value over nTurbines — exact up to summation order
+    val plantBins = turbineBins.values.flatten.groupBy(_.key).map { case (key, bs) =>
+      BinSums(key, bs.map(_.actual).sum, bs.map(_.freestream).sum / nTurbines,
+        bs.map(_.n).sum / nTurbines)
+    }.toSeq
     // long-term wind rose over the last `years` calendar years of reanalysis
     // (wake_losses.py:201 num_years_LT; end-anchored like the AEP windiness)
     val freq = longTermFrequency(product, years).collect()

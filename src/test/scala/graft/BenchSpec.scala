@@ -22,5 +22,7 @@ class BenchSpec extends SparkSpec {
     assert(t.total == t.seconds("q_ok"))
     assert(okRuns == 3)
     assert(planThrows == 1)
+    // every gate, failed or not, reports the codegen compiles it paid
+    assert(t.compiles.keySet == Set("q_ok", "q_job_throws", "q_plan_throws"))
   }
 }

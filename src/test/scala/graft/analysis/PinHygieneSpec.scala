@@ -12,7 +12,7 @@ import graft.operators.{Dedup, KnnGraph, LinkGraph, Sampling, Similarity, Suffix
 import graft.streaming.StreamingOps
 
 /** The analyses release every RDD they persist, on return and on a throw,
-  * and wake's and AEP's job counts stay bounded. The link-graph, dedup and
+  * and TIE's, wake's and AEP's job counts stay bounded. The link-graph, dedup and
   * Bradley–Terry loops, on their distributed paths, and the graph-index,
   * PQ, resampling and image-dedup operators leave persisted only the RDDs
   * their results read; a streamed graph insert leaves one per batch. The
@@ -53,12 +53,12 @@ class PinHygieneSpec extends SparkSpec {
 
   test("an analysis that throws after pinning releases its pins") {
     // no tower bucket: wdRef = "tower" fails in the timestamp aggregate,
-    // after the SCADA projection and the derate-filtered SCADA are pinned
+    // after the SCADA projection is pinned
     leavesNothingPersisted("WakeLosses") {
       intercept[RuntimeException](new WakeLosses(plant, wdRef = "tower").run())
     }
-    // a reanalysis density that fails at run time: the first collect over
-    // the pinned valid-day table throws
+    // a reanalysis density that fails at run time: the daily reanalysis
+    // collect throws
     val badRean = plant.copy(reanalysis = Map("era5" -> plant.reanalysis("era5")
       .withColumn("WMETR_AirDen", raise_error(lit("bad density")))))
     leavesNothingPersisted("TurbineLongTermGrossEnergy") {
@@ -67,9 +67,24 @@ class PinHygieneSpec extends SparkSpec {
   }
 
   test("WakeLosses without UQ runs in a bounded number of Spark jobs") {
+    // one aggregation per timestamp feeds the turbine bins, the plant bins
+    // are summed on the driver, and the bias fit joins collected hourly
+    // means (17 jobs; 27 with the timestamp frame joined back to SCADA)
     plant.turbineIds; plant.ratedPower
     val jobs = ListenerBus.countJobs(spark.sparkContext)(new WakeLosses(plant).run())
-    assert(jobs <= 40, s"$jobs jobs")
+    assert(jobs <= 18, s"$jobs jobs")
+  }
+
+  test("TurbineLongTermGrossEnergy runs in a bounded number of Spark jobs, with and without UQ") {
+    // Spark runs the flags, the daily sums and the daily reanalysis; the
+    // grid, the imputation and the join by day run on the driver (6 and 14
+    // jobs; 18 and 60 with a distributed imputation plan per config)
+    plant.turbineIds; plant.ratedPower
+    val plain = ListenerBus.countJobs(spark.sparkContext)(new TurbineLongTermGrossEnergy(plant).run())
+    assert(plain <= 7, s"$plain jobs without UQ")
+    val uq = ListenerBus.countJobs(spark.sparkContext)(
+      new TurbineLongTermGrossEnergy(plant, uq = true, numSim = 3).run())
+    assert(uq <= 15, s"$uq jobs with UQ at numSim = 3")
   }
 
   test("MonteCarloAEP with UQ runs in a bounded number of Spark jobs") {

@@ -74,6 +74,47 @@ class MiscOperatorsSpec extends SparkSpec {
     assert(math.abs(filled - 20.0) < 1e-6)
   }
 
+  test("imputeSeries: the rank-2 neighbor fills a gap the best neighbor also misses") {
+    // a = t; b = 2t + 1 exactly (r = 1), missing at t = 10 like a; c is 3t
+    // with +-0.3 noise (r < 1), and 60 at t = 10, where a's fit on c
+    // predicts ~20 (its fit sees only the times a has a value)
+    val a = (1 to 20).map(t => if (t == 10) None else Some(t.toDouble))
+    val b = (1 to 20).map(t => if (t == 10) None else Some(2.0 * t + 1))
+    val c = (1 to 20).map(t => Some(if (t == 10) 60.0 else 3.0 * t + (if (t % 2 == 0) 0.3 else -0.3)))
+    val series = IndexedSeq(a, b, c).map(_.toArray)
+    val filled = Imputing.imputeSeries(series, minR2 = 0.7, topM = 2)
+    assert(math.abs(filled(0)(9).get - 20.0) < 0.5, s"a(10) = ${filled(0)(9)}")
+    assert(filled(1)(9).isDefined, "b(10) is filled from a's neighbor c")
+    // only the best neighbor kept: b has no value at t = 10, the gap stays
+    assert(Imputing.imputeSeries(series, minR2 = 0.7, topM = 1)(0)(9).isEmpty)
+  }
+
+  test("imputeSeries: no neighbor above minR2 leaves the gap, and TIE drops that day") {
+    val t1 = Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0).map(Some(_))
+    // r(T1, T2) over their overlap (days 1, 2, 4, 5, 6) is exactly 0
+    val t2 = Seq(Some(5.0), Some(1.0), None, Some(1.0), Some(5.0), Some(3.0))
+    val filled = Imputing.imputeSeries(IndexedSeq(t1.toArray, t2.toArray), minR2 = 0.7, topM = 3)
+    assert(filled(1)(2).isEmpty)
+    val daily = t1.zip(t2).zipWithIndex.flatMap { case ((v1, v2), d) =>
+      val day = ts(f"2020-01-${d + 1}%02d 00:00:00")
+      Seq(v1.map(v => (day, "T1", v)), v2.map(v => (day, "T2", v))).flatten
+    }.toDF("day", "asset_id", "energy_corrected")
+    val got = new graft.analysis.TurbineLongTermGrossEnergy(graft.plant.PlantData())
+      .dailyImputed(daily, Seq("T1", "T2"))
+      .select("asset_id", "day").as[(String, Timestamp)].collect().toSet
+    assert(got.size == 11)
+    assert(!got(("T2", ts("2020-01-03 00:00:00"))))
+  }
+
+  test("imputeSeries: a constant series (NaN r) is never a neighbor") {
+    val a = Array(Some(1.0), Some(2.0), None, Some(4.0), Some(5.0))
+    val flat = Array.fill[Option[Double]](5)(Some(7.0))
+    // every finite r passes minR2 = -2; only the NaN r of `flat` does not
+    val filled = Imputing.imputeSeries(IndexedSeq(a, flat), minR2 = -2.0, topM = 3)
+    assert(filled(0)(2).isEmpty)
+    assert(filled(1).forall(_.contains(7.0)))
+  }
+
   test("TextAnalysis token/quality metrics") {
     val df = Seq("The quick brown fox!").toDF("text")
     val row = df.select(
