@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{ListenerBus, Pins}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 import graft.SparkSpec
 
@@ -611,6 +612,112 @@ class KnnGraphSpec extends SparkSpec {
       .drop("bridge_mod")
     assert(msg(KnnGraph.searchGraphIndexed(noParams, ldf, "vec_id", "v",
       k = 1)).contains("bridge_mod"))
+  }
+
+  /** Search-parity fixture: 24 vectors in 3 jittered axis clusters
+    * with two duplicate pairs (4 = 3, 13 = 12), a k=3 graph, and four
+    * queries: the zero vector (100), an index member that must drop
+    * out as self (3, also an entry point, whose duplicate 4 scores
+    * exactly 1.0), a duplicate of node 3 (101, a tie at 1.0) and a
+    * free vector (102). Returns (corpus, queries, graph).
+    */
+  private def parityFixture(): (DataFrame, DataFrame, DataFrame) = {
+    val rnd = new scala.util.Random(11)
+    val base = (for (c <- 0 until 3; j <- 0 until 8) yield {
+      val v = Array.tabulate(4)(d =>
+        (if (d == c) 1.0 else 0.0) + 0.2 * rnd.nextGaussian())
+      (c.toLong * 8 + j, v)
+    }).toMap
+    val rows = base.toSeq.sortBy(_._1).map { case (id, v) =>
+      (id, if (id == 4L) base(3L) else if (id == 13L) base(12L) else v)
+    }
+    val corpus = rows.toDF("vec_id", "v")
+    val queries = Seq(
+      (100L, Array(0.0, 0.0, 0.0, 0.0)),
+      (3L, base(3L)),
+      (23L, base(23L)),
+      (101L, base(3L)),
+      (102L, Array(0.3, 0.3, 1.0, 0.1))).toDF("vec_id", "v")
+    (corpus, queries, KnnGraph.nnDescent(corpus, "vec_id", "v", k = 3,
+      iterations = 2))
+  }
+
+  test("graph search returns the exact rows on ties, zero, self, absent and short-visit cases") {
+    // the rows the distributed hop loop returned, pinned literally: a
+    // change of search formulation must reproduce them bit for bit
+    val (corpus, queries, g0) = parityFixture()
+    val idx0 = KnnGraph.graphIndex(g0, corpus, "vec_id", "v", entries = 2)
+    val entries = idx0.filter(col("is_entry")).select("id").as[Long]
+      .collect().sorted.toSeq
+    assert(entries === Seq(3L, 23L))
+    // both walks reach id 999 from every entry point at hop 1; it is in
+    // neither the corpus nor the index, so it is never scored
+    val g = g0.unionByName(entries.map(e => (e, 999L, 0.5, 4))
+      .toDF("id", "neighbor_id", "cosine", "rank"))
+    val idx = idx0.withColumn("bridges", when(col("is_entry"),
+      array_union(col("bridges"), array(lit(999L)))).otherwise(col("bridges")))
+    def expected(perQuery: Seq[(Long, Seq[(Long, Double)])]): DataFrame =
+      perQuery.flatMap { case (q, ns) =>
+        ns.zipWithIndex.map { case ((n, c), i) => (q, n, c, i + 1) }
+      }.toDF("query_id", "neighbor_id", "cosine", "rank")
+    // beam 2, two hops: every query fills k = 6
+    val twoHops = expected(Seq(
+      3L -> Seq(4L -> 1.0, 1L -> 0.9666511786559496, 2L -> 0.949080212033754,
+        0L -> 0.8784614682480154, 7L -> 0.8780853269934226,
+        6L -> 0.8088234589512131),
+      23L -> Seq(20L -> 0.9957902228694758, 16L -> 0.9802006585069223,
+        22L -> 0.9561139964933524, 21L -> 0.8847258470813439,
+        17L -> 0.8837554894585355, 9L -> 0.0304878450332472),
+      100L -> Seq(0L -> 0.0, 1L -> 0.0, 2L -> 0.0, 3L -> 0.0, 4L -> 0.0,
+        5L -> 0.0),
+      101L -> Seq(3L -> 1.0, 4L -> 1.0, 1L -> 0.9666511786559496,
+        2L -> 0.949080212033754, 0L -> 0.8784614682480154,
+        7L -> 0.8780853269934226),
+      102L -> Seq(17L -> 0.951927711951548, 21L -> 0.9393173221930746,
+        22L -> 0.880408404254487, 20L -> 0.864875471445061,
+        16L -> 0.828471041147381, 23L -> 0.8177689173292112)))
+    // one hop, k = 30: every query returns all it visited, fewer than k
+    val oneHop = expected(Seq(
+      3L -> Seq(4L -> 1.0, 1L -> 0.9666511786559496, 0L -> 0.8784614682480154,
+        6L -> 0.8088234589512131, 11L -> 0.7002222466579583,
+        9L -> 0.5275800851774264, 14L -> 0.4854322605920839,
+        21L -> 0.20039040758732438, 17L -> -0.09923781702204604,
+        20L -> -0.19928678203137748, 23L -> -0.2673038809549561),
+      23L -> Seq(20L -> 0.9957902228694758, 21L -> 0.8847258470813439,
+        17L -> 0.8837554894585355, 9L -> 0.0304878450332472,
+        0L -> 7.514483674623314E-4, 6L -> -0.02788750945476799,
+        1L -> -0.16801084162344207, 3L -> -0.2673038809549561,
+        4L -> -0.2673038809549561, 14L -> -0.40028184164915653,
+        11L -> -0.5307384839828444),
+      100L -> Seq(0L -> 0.0, 1L -> 0.0, 3L -> 0.0, 4L -> 0.0, 6L -> 0.0,
+        9L -> 0.0, 11L -> 0.0, 14L -> 0.0, 17L -> 0.0, 20L -> 0.0,
+        21L -> 0.0, 23L -> 0.0),
+      101L -> Seq(3L -> 1.0, 4L -> 1.0, 1L -> 0.9666511786559496,
+        0L -> 0.8784614682480154, 6L -> 0.8088234589512131,
+        11L -> 0.7002222466579583, 9L -> 0.5275800851774264,
+        14L -> 0.4854322605920839, 21L -> 0.20039040758732438,
+        17L -> -0.09923781702204604, 20L -> -0.19928678203137748,
+        23L -> -0.2673038809549561),
+      102L -> Seq(17L -> 0.951927711951548, 21L -> 0.9393173221930746,
+        20L -> 0.864875471445061, 23L -> 0.8177689173292112,
+        9L -> 0.5578149369619534, 1L -> 0.3241168530202878,
+        0L -> 0.25896604490343594, 6L -> 0.2262371361069981,
+        3L -> 0.20200077058010663, 4L -> 0.20200077058010663,
+        14L -> 0.09568842746694176, 11L -> 0.03135772268382807)))
+    for ((k, hops, want) <- Seq((6, 2, twoHops), (30, 1, oneHop))) {
+      val oneShot = KnnGraph.searchGraph(g, corpus, queries, "vec_id", "v",
+        k = k, beam = 2, hops = hops, entries = 2)
+      val indexed = KnnGraph.searchGraphIndexed(idx, queries, "vec_id", "v",
+        k = k, beam = 2, hops = hops)
+      for ((name, got) <- Seq("searchGraph" -> oneShot,
+          "searchGraphIndexed" -> indexed)) {
+        assert(got.schema.map(f => f.name -> f.dataType) === Seq(
+          "query_id" -> LongType, "neighbor_id" -> LongType,
+          "cosine" -> DoubleType, "rank" -> IntegerType), name)
+        assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+          s"$name k=$k hops=$hops")
+      }
+    }
   }
 
   test("searchGraph determinism and k > visited degeneracy") {
