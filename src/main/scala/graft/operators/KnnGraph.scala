@@ -1,9 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Pins
+import org.apache.spark.sql.graft.{ColumnBridge, Pins}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType,
   DoubleType, IntegerType, LongType, ShortType, StructField, StructType}
 
@@ -24,8 +27,13 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType,
   * near-duplicate clustering, and is itself the standard input to
   * graph-partitioned ANN indexes.
   *
-  * Spark-first design — every step is an equi-join or a bounded
-  * aggregate; nothing is ever collected to the driver:
+  * Spark-first design for the corpus-grain work — every build, insert
+  * and delete step is an equi-join or a bounded aggregate. The driver
+  * collects only bounded-grain data: the search walk ([[searchCore]])
+  * takes the queries, the entry rows and the rows of the nodes it
+  * reaches, at most |queries| × (entries + hops·beam·degree) rows at
+  * any corpus size; [[removeIds]] takes the removed ids (~10k at
+  * most); the index writes read the one-row bucket parameters.
   *
   *  - '''Init''' = `initRounds` rounds of seeded random bucketing
   *    (`xxhash64(id, seed, round) % nBuckets`, expected bucket size
@@ -350,83 +358,154 @@ object KnnGraph {
         struct(col("nbr").as("id"), col("id").as("nbr")))).as("__d"))
       .select(col("__d.id").as("id"), col("__d.nbr").as("nbr"))
 
-  /** Shared serving loop: entry points -> `hops` rounds of
-    * expand-score-prune over a prebuilt adjacency. `vecs` must be
-    * (id, __nv) pre-normalized; `adj` (id, nbr) may carry duplicates
-    * (reached candidates dedup per hop). Returns the
-    * [[Similarity.bruteForceTopK]]-shaped top-k over everything
-    * visited.
+  /** The node-table columns [[searchCore]] reads. */
+  private val NodeCols = Seq(col("id"), col("__nv"), col("__adj"))
+
+  /** Shared serving walk, run on the driver: entry points, then up to
+    * `hops` rounds of expand-score-prune over a node table `nodes`
+    * (id, __nv pre-normalized, __adj neighbor ids, duplicates allowed).
+    * `entryPts` are rows of `nodes`; `qv` is (query_id, __qv)
+    * pre-normalized. The walk collects the queries once and the entry
+    * rows once, then fetches each hop's newly reached nodes in one
+    * filtered collect: one Spark job and one scan of the node table
+    * per hop. The filter is an `InSet` on the id cast to long, whose
+    * generated code references the id set instead of embedding it,
+    * so every hop reuses one compiled class. What the driver holds is
+    * the query vectors plus the rows of the nodes the walk reached: at
+    * most |queries| × (entries + hops·beam·degree) rows, whatever the
+    * corpus size.
+    *
+    * Semantics: frontier 0 is every entry point; each hop takes the
+    * distinct neighbors of a query's frontier minus the nodes it has
+    * visited, and a node absent from `nodes` is never scored; the walk
+    * ends after `hops` hops or when no query scored a new node; a
+    * query's next frontier is its best `beam` new nodes in Spark's SQL
+    * order (cosine desc with nulls last, then node asc). Scores are
+    * the sequential dot of `ArrayDot`, so cosines are bit-identical to
+    * the SQL kernel's. Returns the [[Similarity.bruteForceTopK]]-shaped
+    * top-k over everything visited, self-matches excluded, ranked in
+    * [[Similarity.rankTopK]]'s order (`Double.compare` on −cosine,
+    * then id), as a local frame.
     */
-  private def searchCore(pins: Pins, adj: DataFrame, vecs: DataFrame,
-                         entryPts: DataFrame, qv: DataFrame,
-                         k: Int, beam: Int, hops: Int,
+  private def searchCore(nodes: DataFrame, entryPts: DataFrame,
+                         qv: DataFrame, k: Int, beam: Int, hops: Int,
                          idType: DataType): DataFrame = {
-    // the (query, node) work set is <= |queries| x beam x k rows at any
-    // corpus size — ALWAYS the broadcast side; the corpus/adjacency
-    // tables stream without a per-hop shuffle
-    def scoreNodes(qnode: DataFrame): DataFrame = broadcast(qnode)
-      .join(vecs.select(col("id").as("node"), col("__nv")), Seq("node"))
-      .join(qv, Seq("query_id"))
-      .select(col("query_id"), col("node"),
-        Similarity.dot(col("__qv"), col("__nv")).as("cosine"))
-
-    // pinned per hop: the frontier, the anti-join and the final top-k re-read
-    // every scored hop frame
-    var visited = pins.pin(scoreNodes(
-        qv.select(col("query_id")).crossJoin(entryPts.select(col("id").as("node")))))
-    var frontier = visited.select(col("query_id"), col("node"))
-
+    def idOf(v: Any): Long = v.asInstanceOf[Number].longValue
+    val vec = mutable.HashMap.empty[Long, Array[Double]]
+    val adj = mutable.HashMap.empty[Long, Array[Long]]
+    def load(df: DataFrame): Seq[Long] =
+      df.select(NodeCols: _*).collect().toSeq.filter(!_.isNullAt(0)).map { r =>
+        val id = idOf(r.get(0))
+        vec(id) = if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray
+        adj(id) =
+          if (r.isNullAt(2)) Array.emptyLongArray
+          else r.getSeq[Any](2).iterator.filter(_ != null).map(idOf).toArray
+        id
+      }
+    val queries = qv.collect().filter(!_.isNullAt(0))
+    val qVec = queries.map(r =>
+      if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray)
+    // a null vector scores null, as the SQL dot does
+    def score(q: Int, node: Long): java.lang.Double = {
+      val a = qVec(q)
+      val b = vec(node)
+      if (a == null || b == null) null
+      else {
+        val n = math.min(a.length, b.length)
+        var s = 0.0
+        var i = 0
+        while (i < n) { s += a(i) * b(i); i += 1 }
+        s
+      }
+    }
+    val entryIds = load(entryPts).distinct.toArray
+    val visited = Array.tabulate(queries.length) { q =>
+      mutable.HashMap.from(entryIds.iterator.map(e => e -> score(q, e)))
+    }
+    var frontier = Array.fill(queries.length)(entryIds)
+    val absent = mutable.HashSet.empty[Long]
     var hop = 0
     var live = true
     while (hop < hops && live) {
-      val reached = broadcast(frontier).join(adj, frontier("node") === adj("id"))
-        .select(col("query_id"), col("nbr").as("node")).distinct()
-      val fresh = reached
-        .join(broadcast(visited.select(col("query_id"), col("node"))),
-          Seq("query_id", "node"), "left_anti")
-      // r14 measured note (VERDICT ask 3): folding the liveness probe
-      // into a lazy-checkpoint + count() REGRESSED q_graph_search
-      // 8.4 -> 9.1-10.7 s in isolated fresh-JVM A/Bs — Dataset.count()
-      // plans a two-stage shuffle aggregate per hop, strictly heavier
-      // than this limit-1 probe over the just-cached checkpoint blocks.
-      // The eager checkpoint + cheap probe stays.
-      val scored = pins.pin(scoreNodes(fresh))
-      live = !scored.isEmpty
-      if (live) {
-        // lazy union of per-hop CHECKPOINTED frames: lineage stays one
-        // union node per hop — no re-materialization of the whole set
-        visited = visited.unionByName(scored)
-        val beamW = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("node"))
-        frontier = scored.withColumn("__rn", row_number().over(beamW))
-          .filter(col("__rn") <= beam).select(col("query_id"), col("node"))
+      val reached = Array.tabulate(queries.length)(q =>
+        frontier(q).iterator.flatMap(adj(_)).filterNot(visited(q).contains)
+          .distinct.toArray)
+      val need = reached.iterator.flatten
+        .filterNot(n => vec.contains(n) || absent.contains(n)).toSet
+      if (need.nonEmpty) {
+        load(nodes.filter(ColumnBridge.column(InSet(
+          ColumnBridge.expression(col("id").cast(LongType)), need.toSet[Any]))))
+        absent ++= need.filterNot(vec.contains)
+      }
+      live = false
+      frontier = Array.tabulate(queries.length) { q =>
+        val scored = reached(q).filter(vec.contains).map(n => (n, score(q, n)))
+        if (scored.nonEmpty) live = true
+        scored.foreach { case (n, c) => visited(q)(n) = c }
+        scored.sorted(BeamOrder).iterator.take(beam).map(_._1).toArray
       }
       hop += 1
     }
-    Similarity.rankTopK(
-      visited.filter(col("node") =!= col("query_id"))
-        .select(col("query_id"), col("node").as("neighbor_id"), col("cosine")),
-      k, idType)
+    val out = new java.util.ArrayList[Row]()
+    queries.indices.foreach { q =>
+      val self = idOf(queries(q).get(0))
+      visited(q).iterator.filter { case (n, c) => n != self && c != null }
+        .toArray.sorted(RankOrder).iterator.take(k).zipWithIndex
+        .foreach { case ((n, c), i) =>
+          out.add(Row(queries(q).get(0), castId(n, idType), c.doubleValue, i + 1))
+        }
+    }
+    qv.sparkSession.createDataFrame(out, StructType(Seq(
+      qv.schema("query_id"),
+      StructField("neighbor_id", idType, nullable = false),
+      StructField("cosine", DoubleType, nullable = false),
+      StructField("rank", IntegerType, nullable = false))))
+  }
+
+  /** Spark's `ORDER BY cosine DESC, node`: nulls last, -0.0 = 0.0
+    * (`SQLOrderingUtil.compareDoubles`), then node asc.
+    */
+  private val BeamOrder: Ordering[(Long, java.lang.Double)] = (a, b) => {
+    val c =
+      if (a._2 == null) { if (b._2 == null) 0 else 1 }
+      else if (b._2 == null) -1
+      else if (a._2.doubleValue == b._2.doubleValue) 0
+      else java.lang.Double.compare(b._2, a._2)
+    if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+  }
+
+  /** `TopKPairsBuf`'s order on (−cosine, id). */
+  private val RankOrder: Ordering[(Long, java.lang.Double)] = (a, b) => {
+    val c = java.lang.Double.compare(-a._2.doubleValue, -b._2.doubleValue)
+    if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+  }
+
+  private def castId(id: Long, idType: DataType): Any = idType match {
+    case ByteType => id.toByte
+    case ShortType => id.toShort
+    case IntegerType => id.toInt
+    case _ => id
   }
 
   /** Query-time ANN over a prebuilt k-NN graph (the HNSW/DiskANN
-    * serving shape, flattened to joins): start every query at
-    * `entries` seeded entry points, then `hops` rounds of
-    * expand-score-prune — frontier joins the graph's adjacency, newly
-    * reached nodes are scored against the query (anti-join keeps each
-    * (query, node) scored exactly once), and the best `beam` new
-    * nodes per query become the next frontier. Returns exact-shape
+    * serving shape): start every query at `entries` seeded entry
+    * points, then `hops` rounds of expand-score-prune — the frontier's
+    * neighbors not yet visited are scored against the query, each
+    * (query, node) exactly once, and the best `beam` new nodes per
+    * query become the next frontier. Returns exact-shape
     * (query_id, neighbor_id, cosine, rank) top-k over everything
     * visited, self-matches excluded (same contract as
     * [[Similarity.bruteForceTopK]], so the two are directly
     * comparable).
     *
-    * Queries broadcast (same bounded-query-set assumption as every
-    * topK path here); the graph and corpus shuffle only on node id.
-    * Per-hop frontier volume is |queries| × beam × k — independent of
-    * corpus size, which is what makes graph serving the right shape
-    * at 10^9+ rows: total scored pairs per query ≈ entries +
-    * hops·beam·k versus n for brute force.
+    * Spark builds and pins one node table (the normalized corpus
+    * left-joined with its grouped adjacency: graph edges ∪ bridges);
+    * the walk itself runs on the driver ([[searchCore]]), fetching
+    * each hop's newly reached nodes in one filtered collect. Per-hop
+    * work is |queries| × beam × degree — independent of corpus size,
+    * which is what makes graph serving the right shape at 10^9+ rows:
+    * total scored pairs per query ≈ entries + hops·beam·degree versus
+    * n for brute force.
     *
     * Entry points are the `entries` globally smallest xxhash64(id) —
     * a top-n over a hash (orderBy + limit of a tiny prefix), NOT a
@@ -462,23 +541,27 @@ object KnnGraph {
       s"k/beam/entries must be >= 1, got $k/$beam/$entries")
     requireIntegralId(corpus, idCol, "searchGraph")
     val idType = corpus.schema(idCol).dataType
-    // pinned: the count, the bridges, the entry points and every hop re-read
-    // vecs; every hop re-reads adj
-    val vecs = pins.pin(normalized(corpus, idCol, vecCol))
+    val vecs = normalized(corpus, idCol, vecCol)
     val knn = graph.select(col("id"), col("neighbor_id").as("nbr"))
-    val adj = pins.pin(if (bridgeRounds <= 0) knn else {
-      val n = if (corpusCount >= 0) corpusCount else vecs.count()
-      // no distinct: duplicate adjacency rows only duplicate `reached`
-      // candidates, which dedup per hop anyway
+    val adj = if (bridgeRounds <= 0) knn else {
+      val n = if (corpusCount >= 0) corpusCount else corpus.count()
       knn.unionByName(bridgeAdj(vecs.select(col("id")), bridgeRounds, seed,
         math.max(1L, n / 2)))
-    })
-    val qv = broadcast(normalized(queries, idCol, vecCol)
-      .select(col("id").as("query_id"), col("__nv").as("__qv")))
-    val entryPts = vecs.select(col("id"))
-      .orderBy(xxhash64(col("id"), lit(seed)), col("id")).limit(entries)
-    searchCore(pins, adj, vecs, entryPts, qv, k, beam, hops, idType)
+    }
+    // pinned: the entry points and every hop re-read the node table
+    val nodes = pins.pin(vecs.join(
+      adj.groupBy("id").agg(collect_list(col("nbr")).as("__adj")), Seq("id"), "left"))
+    val entryPts = nodes.orderBy(xxhash64(col("id"), lit(seed)), col("id"))
+      .limit(entries)
+    searchCore(nodes, entryPts, queryVecs(queries, idCol, vecCol), k, beam,
+      hops, idType)
   }
+
+  /** (query_id, __qv): the queries' normalized vectors. */
+  private def queryVecs(queries: DataFrame, idCol: String,
+                        vecCol: String): DataFrame =
+    normalized(queries, idCol, vecCol)
+      .select(col("id").as("query_id"), col("__nv").as("__qv"))
 
   /** Serving budget that scales with corpus size — the HNSW analog:
     * in a small-world graph the walk length to any target grows with
@@ -644,28 +727,33 @@ object KnnGraph {
 
   /** Graph-routed beam search against a prebuilt [[graphIndex]] table
     * — the build-once / query-many deployment shape: each batch pays
-    * only its own query normalization + the hop joins; no per-call
-    * corpus count(), bridge rebuild, or vector renormalization.
-    * Output contract identical to [[searchGraph]] (and bit-identical
-    * to it for an index built with the same parameters).
+    * only its own query normalization, one collect of the entry rows
+    * and one filtered collect of the index per hop ([[searchCore]]);
+    * no per-call corpus count(), bridge rebuild, vector
+    * renormalization or pin. Output contract identical to
+    * [[searchGraph]] (and bit-identical to it for an index built with
+    * the same parameters).
     */
   def searchGraphIndexed(index: DataFrame, queries: DataFrame,
                          idCol: String, vecCol: String, k: Int,
-                         beam: Int = 8, hops: Int = 3): DataFrame = Pins.scoped { pins =>
-    require(k >= 1 && beam >= 1, s"k/beam must be >= 1, got $k/$beam")
+                         beam: Int = 8, hops: Int = 3): DataFrame = {
     requireIntegralId(queries, idCol, "searchGraphIndexed")
     validateIndex(index, "searchGraphIndexed")
-    val idType = index.schema("id").dataType
-    val vecs = index.select(col("id"), col("nv").as("__nv"))
-    // serving adjacency = knn out-edges ∪ bridges; duplicates are fine
-    // (reached candidates dedup per hop in searchCore)
-    val adj = index.select(col("id"),
-      explode(concat(transform(col("knn"), e => e.getField("nbr")),
-        col("bridges"))).as("nbr"))
-    val entryPts = index.filter(col("is_entry")).select(col("id"))
-    val qv = broadcast(normalized(queries, idCol, vecCol)
-      .select(col("id").as("query_id"), col("__nv").as("__qv")))
-    searchCore(pins, adj, vecs, entryPts, qv, k, beam, hops, idType)
+    searchIndex(index, queryVecs(queries, idCol, vecCol), k, beam, hops)
+  }
+
+  /** [[searchGraphIndexed]] over pre-normalized (query_id, __qv). The
+    * node table is a projection of the index, so nothing is pinned:
+    * serving adjacency = knn out-edges ∪ bridges.
+    */
+  private def searchIndex(index: DataFrame, qv: DataFrame, k: Int, beam: Int,
+                          hops: Int): DataFrame = {
+    require(k >= 1 && beam >= 1, s"k/beam must be >= 1, got $k/$beam")
+    val nodes = index.select(col("id"), col("nv").as("__nv"),
+      concat(transform(col("knn"), e => e.getField("nbr")), col("bridges"))
+        .as("__adj"), col("is_entry"))
+    searchCore(nodes, nodes.filter(col("is_entry")), qv, k, beam, hops,
+      index.schema("id").dataType)
   }
 
   /** Incremental insert — the HNSW/DiskANN "add a batch without
@@ -680,7 +768,8 @@ object KnnGraph {
     * Returns the full updated graph (same shape as [[nnDescent]]).
     *
     * The batch rides the same bounded-query-set assumption as every
-    * search path here (broadcast); the corpus-side cost is one scan +
+    * search path here (it is collected to the driver by the placement
+    * search); the corpus-side cost is one scan +
     * the node-grain re-rank. Batch ids must be disjoint from corpus
     * ids — validated with one cheap semi-join probe (an overlapping id
     * would duplicate rows in the unioned vecs frame and silently
@@ -911,7 +1000,8 @@ object KnnGraph {
     * was read-only for serving; after every [[insertIncremental]] it
     * had to be rebuilt whole). Returns the UPDATED index:
     *
-    *  - placement rides [[searchGraphIndexed]] — no corpus
+    *  - placement rides [[searchGraphIndexed]]'s walk with the
+    *    pinned, normalized batch as its queries — no corpus
     *    renormalize, no bridge rebuild, no count() (the per-batch
     *    corpus-wide taxes of the one-shot path),
     *  - the re-rank and every `refineRounds` repair round are DELTA
@@ -985,9 +1075,10 @@ object KnnGraph {
     val bRounds = params.getInt(1)
     val bSeed = params.getInt(2)
     val maxRev = if (maxReverse > 0) maxReverse else k
-    // placement: graph-routed search over the asset + exact new-vs-new
-    val found = searchGraphIndexed(index, batch, idCol, vecCol, k = k,
-      beam = beam, hops = hops)
+    // placement: graph-routed search over the asset, the pinned batch as
+    // the queries, + exact new-vs-new
+    val found = searchIndex(index,
+      bv.select(col("id").as("query_id"), col("__nv").as("__qv")), k, beam, hops)
     val intra = Similarity.bruteForceTopK(batch, batch, idCol, vecCol, k = k)
     // pinned (<= 2·k·|batch| rows): through `inc`, the touched-id distinct
     // and the re-rank union re-read it

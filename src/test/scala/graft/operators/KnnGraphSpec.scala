@@ -465,8 +465,10 @@ class KnnGraphSpec extends SparkSpec {
   test("the index writes run in a bounded number of Spark jobs") {
     // the graph pins follow the one pin rule: a frame read once, or a
     // projection of an input, is not pinned. On this index the insert
-    // runs 97 jobs and the delete 43; with a pin on every projection and
-    // on the pooled heal chains they ran 102 and 48.
+    // runs 74 or 75 jobs and the delete 43; with a pin on every
+    // projection and on the pooled heal chains they ran 102 and 48, and
+    // with the placement search as a distributed hop loop the insert
+    // ran 97 or 98.
     val all = clustered(nClusters = 6, perCluster = 10, dims = 8)
     val corpus = all.filter(col("vec_id") < 50)
     val batch = all.filter(col("vec_id") >= 50)
@@ -479,12 +481,33 @@ class KnnGraphSpec extends SparkSpec {
       KnnGraph.insertIncrementalIndexed(idx, batch, "vec_id", "v", k = 6,
         refineRounds = 3, corpusCount = 50).localCheckpoint(true)
     }
-    assert(insertJobs <= 99, s"insert: $insertJobs jobs")
+    assert(insertJobs <= 76, s"insert: $insertJobs jobs")
     val removeJobs = ListenerBus.countJobs(sc) {
       KnnGraph.removeIds(idx, (0L until 10L).toDF("vec_id"), "vec_id", k = 6,
         healRounds = 1, corpusCount = 50).localCheckpoint(true)
     }
     assert(removeJobs <= 45, s"removeIds: $removeJobs jobs")
+  }
+
+  test("an indexed search runs two Spark jobs plus one per hop") {
+    // the walk runs on the driver: one collect of the queries, one of
+    // the entry rows, then one filtered collect of the nodes each hop
+    // reached first (5 jobs at 3 hops; the distributed hop loop ran 29).
+    // One query, so every hop reaches nodes no earlier hop fetched.
+    val df = clustered(nClusters = 6, perCluster = 10, dims = 8)
+    val g = KnnGraph.nnDescent(df, "vec_id", "v", k = 6, iterations = 2)
+    val idx = KnnGraph.graphIndex(g, df, "vec_id", "v", entries = 3)
+      .localCheckpoint(true)
+    val q = df.filter(col("vec_id") === 0L).localCheckpoint(true)
+    val sc = spark.sparkContext
+    def jobs(hops: Int): Int = ListenerBus.countJobs(sc) {
+      KnnGraph.searchGraphIndexed(idx, q, "vec_id", "v", k = 5, beam = 2,
+        hops = hops).collect()
+    }
+    val perHops = (1 to 3).map(jobs)
+    assert(perHops(2) <= 6, s"jobs at hops 1-3: $perHops")
+    assert(perHops(1) - perHops(0) === 1 && perHops(2) - perHops(1) === 1,
+      s"jobs at hops 1-3: $perHops")
   }
 
   test("removeIds: deleted ids vanish everywhere; survivors heal and stay searchable") {
