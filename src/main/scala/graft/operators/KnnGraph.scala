@@ -358,22 +358,19 @@ object KnnGraph {
         struct(col("nbr").as("id"), col("id").as("nbr")))).as("__d"))
       .select(col("__d.id").as("id"), col("__d.nbr").as("nbr"))
 
-  /** The node-table columns [[searchCore]] reads. */
-  private val NodeCols = Seq(col("id"), col("__nv"), col("__adj"))
-
   /** Shared serving walk, run on the driver: entry points, then up to
     * `hops` rounds of expand-score-prune over a node table `nodes`
     * (id, __nv pre-normalized, __adj neighbor ids, duplicates allowed).
-    * `entryPts` are rows of `nodes`; `qv` is (query_id, __qv)
-    * pre-normalized. The walk collects the queries once and the entry
-    * rows once, then fetches each hop's newly reached nodes in one
-    * filtered collect: one Spark job and one scan of the node table
-    * per hop. The filter is an `InSet` on the id cast to long, whose
-    * generated code references the id set instead of embedding it,
-    * so every hop reuses one compiled class. What the driver holds is
-    * the query vectors plus the rows of the nodes the walk reached: at
-    * most |queries| × (entries + hops·beam·degree) rows, whatever the
-    * corpus size.
+    * `entryPts` are rows of `nodes`; `queries` is (id, __nv), the
+    * output of [[normalized]]. The walk collects the queries once and
+    * the entry rows once, then fetches each hop's newly reached nodes
+    * in one filtered collect: one Spark job and one scan of the node
+    * table per hop. The filter is an `InSet` on the id cast to long,
+    * whose generated code references the id set instead of embedding
+    * it, so every hop reuses one compiled class. What the driver holds
+    * is the query vectors plus the rows of the nodes the walk reached:
+    * at most |queries| × (entries + hops·beam·degree) rows, whatever
+    * the corpus size.
     *
     * Semantics: frontier 0 is every entry point; each hop takes the
     * distinct neighbors of a query's frontier minus the nodes it has
@@ -388,22 +385,23 @@ object KnnGraph {
     * then id), as a local frame.
     */
   private def searchCore(nodes: DataFrame, entryPts: DataFrame,
-                         qv: DataFrame, k: Int, beam: Int, hops: Int,
+                         queries: DataFrame, k: Int, beam: Int, hops: Int,
                          idType: DataType): DataFrame = {
     def idOf(v: Any): Long = v.asInstanceOf[Number].longValue
     val vec = mutable.HashMap.empty[Long, Array[Double]]
     val adj = mutable.HashMap.empty[Long, Array[Long]]
     def load(df: DataFrame): Seq[Long] =
-      df.select(NodeCols: _*).collect().toSeq.filter(!_.isNullAt(0)).map { r =>
-        val id = idOf(r.get(0))
-        vec(id) = if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray
-        adj(id) =
-          if (r.isNullAt(2)) Array.emptyLongArray
-          else r.getSeq[Any](2).iterator.filter(_ != null).map(idOf).toArray
-        id
-      }
-    val queries = qv.collect().filter(!_.isNullAt(0))
-    val qVec = queries.map(r =>
+      df.select("id", "__nv", "__adj").collect().toSeq
+        .filter(!_.isNullAt(0)).map { r =>
+          val id = idOf(r.get(0))
+          vec(id) = if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray
+          adj(id) =
+            if (r.isNullAt(2)) Array.emptyLongArray
+            else r.getSeq[Any](2).iterator.filter(_ != null).map(idOf).toArray
+          id
+        }
+    val qs = queries.collect().filter(!_.isNullAt(0))
+    val qVec = qs.map(r =>
       if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray)
     // a null vector scores null, as the SQL dot does
     def score(q: Int, node: Long): java.lang.Double = {
@@ -419,15 +417,15 @@ object KnnGraph {
       }
     }
     val entryIds = load(entryPts).distinct.toArray
-    val visited = Array.tabulate(queries.length) { q =>
+    val visited = Array.tabulate(qs.length) { q =>
       mutable.HashMap.from(entryIds.iterator.map(e => e -> score(q, e)))
     }
-    var frontier = Array.fill(queries.length)(entryIds)
+    var frontier = Array.fill(qs.length)(entryIds)
     val absent = mutable.HashSet.empty[Long]
     var hop = 0
     var live = true
     while (hop < hops && live) {
-      val reached = Array.tabulate(queries.length)(q =>
+      val reached = Array.tabulate(qs.length)(q =>
         frontier(q).iterator.flatMap(adj(_)).filterNot(visited(q).contains)
           .distinct.toArray)
       val need = reached.iterator.flatten
@@ -438,7 +436,7 @@ object KnnGraph {
         absent ++= need.filterNot(vec.contains)
       }
       live = false
-      frontier = Array.tabulate(queries.length) { q =>
+      frontier = Array.tabulate(qs.length) { q =>
         val scored = reached(q).filter(vec.contains).map(n => (n, score(q, n)))
         if (scored.nonEmpty) live = true
         scored.foreach { case (n, c) => visited(q)(n) = c }
@@ -447,16 +445,16 @@ object KnnGraph {
       hop += 1
     }
     val out = new java.util.ArrayList[Row]()
-    queries.indices.foreach { q =>
-      val self = idOf(queries(q).get(0))
+    qs.indices.foreach { q =>
+      val self = idOf(qs(q).get(0))
       visited(q).iterator.filter { case (n, c) => n != self && c != null }
         .toArray.sorted(RankOrder).iterator.take(k).zipWithIndex
         .foreach { case ((n, c), i) =>
-          out.add(Row(queries(q).get(0), castId(n, idType), c.doubleValue, i + 1))
+          out.add(Row(qs(q).get(0), castId(n, idType), c.doubleValue, i + 1))
         }
     }
-    qv.sparkSession.createDataFrame(out, StructType(Seq(
-      qv.schema("query_id"),
+    queries.sparkSession.createDataFrame(out, StructType(Seq(
+      queries.schema("id").copy(name = "query_id"),
       StructField("neighbor_id", idType, nullable = false),
       StructField("cosine", DoubleType, nullable = false),
       StructField("rank", IntegerType, nullable = false))))
@@ -553,15 +551,9 @@ object KnnGraph {
       adj.groupBy("id").agg(collect_list(col("nbr")).as("__adj")), Seq("id"), "left"))
     val entryPts = nodes.orderBy(xxhash64(col("id"), lit(seed)), col("id"))
       .limit(entries)
-    searchCore(nodes, entryPts, queryVecs(queries, idCol, vecCol), k, beam,
+    searchCore(nodes, entryPts, normalized(queries, idCol, vecCol), k, beam,
       hops, idType)
   }
-
-  /** (query_id, __qv): the queries' normalized vectors. */
-  private def queryVecs(queries: DataFrame, idCol: String,
-                        vecCol: String): DataFrame =
-    normalized(queries, idCol, vecCol)
-      .select(col("id").as("query_id"), col("__nv").as("__qv"))
 
   /** Serving budget that scales with corpus size — the HNSW analog:
     * in a small-world graph the walk length to any target grows with
@@ -739,20 +731,20 @@ object KnnGraph {
                          beam: Int = 8, hops: Int = 3): DataFrame = {
     requireIntegralId(queries, idCol, "searchGraphIndexed")
     validateIndex(index, "searchGraphIndexed")
-    searchIndex(index, queryVecs(queries, idCol, vecCol), k, beam, hops)
+    searchIndex(index, normalized(queries, idCol, vecCol), k, beam, hops)
   }
 
-  /** [[searchGraphIndexed]] over pre-normalized (query_id, __qv). The
+  /** [[searchGraphIndexed]] over normalized queries (id, __nv). The
     * node table is a projection of the index, so nothing is pinned:
     * serving adjacency = knn out-edges ∪ bridges.
     */
-  private def searchIndex(index: DataFrame, qv: DataFrame, k: Int, beam: Int,
+  private def searchIndex(index: DataFrame, queries: DataFrame, k: Int, beam: Int,
                           hops: Int): DataFrame = {
     require(k >= 1 && beam >= 1, s"k/beam must be >= 1, got $k/$beam")
     val nodes = index.select(col("id"), col("nv").as("__nv"),
       concat(transform(col("knn"), e => e.getField("nbr")), col("bridges"))
         .as("__adj"), col("is_entry"))
-    searchCore(nodes, nodes.filter(col("is_entry")), qv, k, beam, hops,
+    searchCore(nodes, nodes.filter(col("is_entry")), queries, k, beam, hops,
       index.schema("id").dataType)
   }
 
@@ -1077,8 +1069,7 @@ object KnnGraph {
     val maxRev = if (maxReverse > 0) maxReverse else k
     // placement: graph-routed search over the asset, the pinned batch as
     // the queries, + exact new-vs-new
-    val found = searchIndex(index,
-      bv.select(col("id").as("query_id"), col("__nv").as("__qv")), k, beam, hops)
+    val found = searchIndex(index, bv, k, beam, hops)
     val intra = Similarity.bruteForceTopK(batch, batch, idCol, vecCol, k = k)
     // pinned (<= 2·k·|batch| rows): through `inc`, the touched-id distinct
     // and the re-rank union re-read it

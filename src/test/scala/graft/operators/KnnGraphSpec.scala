@@ -466,9 +466,7 @@ class KnnGraphSpec extends SparkSpec {
     // the graph pins follow the one pin rule: a frame read once, or a
     // projection of an input, is not pinned. On this index the insert
     // runs 74 or 75 jobs and the delete 43; with a pin on every
-    // projection and on the pooled heal chains they ran 102 and 48, and
-    // with the placement search as a distributed hop loop the insert
-    // ran 97 or 98.
+    // projection and on the pooled heal chains they ran 102 and 48.
     val all = clustered(nClusters = 6, perCluster = 10, dims = 8)
     val corpus = all.filter(col("vec_id") < 50)
     val batch = all.filter(col("vec_id") >= 50)
@@ -492,7 +490,7 @@ class KnnGraphSpec extends SparkSpec {
   test("an indexed search runs two Spark jobs plus one per hop") {
     // the walk runs on the driver: one collect of the queries, one of
     // the entry rows, then one filtered collect of the nodes each hop
-    // reached first (5 jobs at 3 hops; the distributed hop loop ran 29).
+    // reached first: 5 jobs at 3 hops.
     // One query, so every hop reaches nodes no earlier hop fetched.
     val df = clustered(nClusters = 6, perCluster = 10, dims = 8)
     val g = KnnGraph.nnDescent(df, "vec_id", "v", k = 6, iterations = 2)
