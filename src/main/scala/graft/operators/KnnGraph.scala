@@ -450,14 +450,15 @@ object KnnGraph {
       visited(q).iterator.filter { case (n, c) => n != self && c != null }
         .toArray.sorted(RankOrder).iterator.take(k).zipWithIndex
         .foreach { case ((n, c), i) =>
-          out.add(Row(qs(q).get(0), castId(n, idType), c.doubleValue, i + 1))
+          out.add(Row(qs(q).get(0), n, c.doubleValue, i + 1))
         }
     }
     queries.sparkSession.createDataFrame(out, StructType(Seq(
-      queries.schema("id").copy(name = "query_id"),
-      StructField("neighbor_id", idType, nullable = false),
-      StructField("cosine", DoubleType, nullable = false),
-      StructField("rank", IntegerType, nullable = false))))
+        queries.schema("id").copy(name = "query_id"),
+        StructField("neighbor_id", LongType, nullable = false),
+        StructField("cosine", DoubleType, nullable = false),
+        StructField("rank", IntegerType, nullable = false))))
+      .withColumn("neighbor_id", col("neighbor_id").cast(idType))
   }
 
   /** Spark's `ORDER BY cosine DESC, node`: nulls last, -0.0 = 0.0
@@ -476,13 +477,6 @@ object KnnGraph {
   private val RankOrder: Ordering[(Long, java.lang.Double)] = (a, b) => {
     val c = java.lang.Double.compare(-a._2.doubleValue, -b._2.doubleValue)
     if (c != 0) c else java.lang.Long.compare(a._1, b._1)
-  }
-
-  private def castId(id: Long, idType: DataType): Any = idType match {
-    case ByteType => id.toByte
-    case ShortType => id.toShort
-    case IntegerType => id.toInt
-    case _ => id
   }
 
   /** Query-time ANN over a prebuilt k-NN graph (the HNSW/DiskANN
