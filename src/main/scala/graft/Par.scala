@@ -1,48 +1,46 @@
 package graft
 
+import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors}
+
+import org.apache.spark.sql.SparkSession
+
 /** Run independent Spark job chains concurrently from a bounded driver
-  * thread pool (guide §2.6: actions are only sequential because the
-  * driver calls them sequentially — a small pool lets the next chain's
-  * tasks back-fill executors idled by the current chain's tail).
-  * Results return in INPUT order, so downstream union order — and
-  * therefore every output row — is unchanged; each thunk must be
-  * deterministic and independent, so concurrency changes scheduling,
-  * never values. Pool is bounded (default 3 in flight) per the guide's
-  * guidance: enough to fill the tail, not enough to fight for executors.
+  * thread pool, so one chain's driver work and job tails overlap another's
+  * jobs. Results return in INPUT order, so downstream union order, and
+  * every output row, is unchanged; each thunk must be deterministic and
+  * independent, so concurrency changes scheduling, never values.
   *
-  * r14: hoisted out of gates.GateHelpers so operator internals can use
-  * it without a gates dependency, plus the ADVICE fixes — per-thunk job
-  * descriptions (thread-local, guide §1.5), ExecutionException
-  * unwrapping, and cancellation of surviving chains once one has failed.
+  * Each thunk's jobs run in their own job group `label[i]` on `spark`.
+  * When one thunk fails, the job groups of the others are cancelled, which
+  * stops their executor tasks, and the failed thunk's own exception is
+  * rethrown.
   */
 private[graft] object Par {
-  def inParallel[T](thunks: Seq[() => T], slots: Int = 3,
-                    label: String = "inParallel"): Seq[T] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(slots, thunks.size)))
+  def inParallel[T](spark: SparkSession, label: String, thunks: Seq[() => T]): Seq[T] = {
+    val sc = spark.sparkContext
+    val groups = thunks.indices.map(i => s"$label[$i]")
+    // 3 in flight: enough to fill one chain's tail, few enough not to fight
+    // over the executors
+    val pool = Executors.newFixedThreadPool(math.max(1, math.min(3, thunks.size)))
+    val done = new ExecutorCompletionService[T](pool)
     try {
-      val futs = thunks.zipWithIndex.map { case (t, i) =>
-        pool.submit(new java.util.concurrent.Callable[T] {
+      val futs = thunks.zip(groups).map { case (t, group) =>
+        done.submit(new Callable[T] {
           def call(): T = {
-            // guide §1.5: descriptions are THREAD-local — without this
-            // every pooled job shows up unlabelled in the UI and can't
-            // be attributed during phase profiling
-            org.apache.spark.sql.SparkSession.getDefaultSession.foreach(
-              _.sparkContext.setJobDescription(s"$label[$i]"))
-            t()
+            sc.setJobGroup(group, group, interruptOnCancel = true)
+            try t() finally sc.clearJobGroup()
           }
         })
       }
-      try futs.map(_.get())
+      // take completions as they come, so the first failure is seen at once
+      try thunks.foreach(_ => done.take().get())
       catch {
-        // surface the thunk's own exception, not the wrapper, and stop
-        // the surviving chains — without the cancel they keep burning
-        // executors after the caller has already failed
-        case e: java.util.concurrent.ExecutionException =>
+        case e: ExecutionException =>
+          groups.foreach(sc.cancelJobGroup)
           futs.foreach(_.cancel(true))
-          pool.shutdownNow()
           throw e.getCause
       }
-    } finally pool.shutdown()
+      futs.map(_.get())
+    } finally pool.shutdownNow()
   }
 }

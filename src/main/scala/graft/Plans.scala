@@ -10,7 +10,7 @@ import java.nio.file.{Files, Paths}
   * Writes <outDir>/<qname>_<suffix>.txt per query, on the session Bench
   * times with (`SPARK_GRAFT_CPUS` cores, default 4). Plan construction
   * only — nothing is executed (actions a gate runs at build time, e.g.
-  * count()/localCheckpoint(), do run; the final frame is not).
+  * count() or a pin, do run; the final frame is not).
   */
 object Plans {
   def main(args: Array[String]): Unit = {

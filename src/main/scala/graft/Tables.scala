@@ -104,9 +104,9 @@ object Sessions {
   }
 
   /** Drops what a gate left behind before the next one runs. Operators
-    * release their own pins when their `Pins.scoped` returns; what is
-    * left for this sweep is the gate-level pins of `graft.gates` and the
-    * pins a returned frame still reads. Those PERSIST in the
+    * and gates release their own pins when their `Pins.scoped` returns;
+    * what is left for this sweep is the pins a returned frame still
+    * reads. Those PERSIST in the
     * BlockManager until unpersisted: 240 gates of leftovers mean
     * later gates run under storage-memory pressure and GC churn that
     * isolated runs don't see (measured ±3x on single gates). The

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pins
 import org.apache.spark.sql.types.DecimalType
 
 /** Shared gate-harness helpers: determinism combinators, the
@@ -54,18 +55,16 @@ private[graft] object GateHelpers {
     */
   private[graft] def annClaims(ann0: DataFrame, exact0: DataFrame, corpusCount: Column,
                         k: Int, scoreCol: String,
-                        ascending: Boolean, minRecall: Double = 0.0): DataFrame = {
-    // The ann/exact subtrees are referenced by 2-3 claim branches each;
-    // lazy plans re-execute per branch. r7 measured lazy as the win at
-    // gate scale (parallel duplicate branches beat two checkpoint
-    // barriers: q_pq_topk 1.51 -> 1.65 s when checkpointed) — but the
-    // r10 sf10 sweep flipped the sign: re-running a 40 s LSH candidate
-    // plan 3x put q_lsh_topk at 125.7 s, and both claim inputs are
-    // <= |queries| x k rows, so pinning them costs ~0.1 s at any scale.
-    // Checkpoint-once is the scale-correct default; the small-sf tax is
-    // noise next to the 100x saving.
-    val ann = ann0.localCheckpoint(true)
-    val exact = exact0.localCheckpoint(true)
+                        ascending: Boolean, minRecall: Double = 0.0): DataFrame = Pins.scoped { pins =>
+    // pinned: the ann/exact subtrees are referenced by 2-3 claim branches
+    // each, and lazy plans re-execute per branch. r7 measured lazy as the
+    // win at gate scale (q_pq_topk 1.51 -> 1.65 s when pinned), but at
+    // sf10 re-running a 40 s LSH candidate plan 3x put q_lsh_topk at
+    // 125.7 s; both inputs are <= |queries| x k rows, so the pins cost
+    // ~0.1 s at any scale. The returned claims row reads both pins, so
+    // they outlive this scope until the gate's state is released.
+    val ann = pins.pin(ann0)
+    val exact = pins.pin(exact0)
     val perQ = ann.groupBy("query_id").agg(
       count(lit(1)).as("__nq"),
       max(col("rank").cast("long")).as("__maxr"),
@@ -249,10 +248,12 @@ private[graft] object GateHelpers {
   private[graft] def withTwin(df: DataFrame, idCol: String,
                               off: Long): DataFrame = {
     val cols = df.columns
-    df.select(explode(array(
-        struct(cols.map(col): _*),
-        struct(cols.map(c =>
-          if (c == idCol) (col(c) + off).as(c) else col(c)): _*))).as("__t"))
+    // both copies carry the id as the type of `id + off` (long for an int
+    // id), so array() gets one struct type instead of widening field by field
+    val idType = df.select(col(idCol) + off).schema.head.dataType
+    def copy(id: Column => Column) = struct(cols.map(c =>
+      if (c == idCol) id(col(c)).cast(idType).as(c) else col(c)): _*)
+    df.select(explode(array(copy(identity), copy(_ + off))).as("__t"))
       .select(cols.map(c => col(s"__t.$c").as(c)): _*)
   }
 

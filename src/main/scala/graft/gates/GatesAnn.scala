@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pins
 
 import graft.functions.Met
 import graft.operators._
@@ -340,18 +341,13 @@ private[graft] object GatesAnn {
         .withColumn("v", col("embedding").cast("array<double>"))
         .select("vec_id", "v")
       val n = e.count()
-      // r13 opt (guide §2.6): the build and the brute-force truth are
-      // independent chains — overlap them; values unchanged
-      val pooled = Par.inParallel(Seq[() => DataFrame](
-        () => KnnGraph.nnDescent(e, "vec_id", "v", k = 20, iterations = 3,
-          earlyStop = false, corpusCount = n),
-        () => Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 20),
-          "vec_id", "v", k = 5).localCheckpoint(true)),
-        label = "q_knn_graph")
-      val ann = pooled(0).filter(col("id") < 20 && col("rank") <= 5)
+      val ann = KnnGraph.nnDescent(e, "vec_id", "v", k = 20, iterations = 3,
+          earlyStop = false, corpusCount = n)
+        .filter(col("id") < 20 && col("rank") <= 5)
         .select(col("id").as("query_id"), col("neighbor_id"),
           col("cosine"), col("rank"))
-      val exact = pooled(1)
+      val exact = Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 20),
+        "vec_id", "v", k = 5)
       // r13: 50k floor 0.20 -> 0.24, honoring the ~half-of-measured
       // convention (measured 0.48 at the 50k slice) at every scale
       val bar = if (n <= 10000) 0.45 else if (n <= 30000) 0.40 else 0.24
@@ -378,7 +374,7 @@ private[graft] object GatesAnn {
     // every knob ~log2(n/50) and restores 0.97 / 0.95 / 1.00 / 0.94
     // at the same sub-second per-batch serving cost, so ONE flat bar at
     // ~half measured (0.45) holds at every scale.
-    "q_graph_search" -> ((s, dir) => {
+    "q_graph_search" -> ((s, dir) => Pins.scoped { pins =>
       val e = Tables.embeddings(s, dir)
         .filter(col("vec_id") < 50000)
         .withColumn("v", col("embedding").cast("array<double>"))
@@ -386,22 +382,15 @@ private[graft] object GatesAnn {
       val q = e.filter(col("vec_id") < 20)
       val n = e.count()
       val (beam, hops, entries) = KnnGraph.servingBudget(n)
-      // r13 opt (guide §2.6): build+index+search and the brute-force
-      // truth are independent chains — overlap them; values unchanged
-      val pooled = Par.inParallel(Seq[() => DataFrame](
-        () => {
-          val g = KnnGraph.nnDescent(e, "vec_id", "v", k = 16,
-            iterations = 2, earlyStop = false, corpusCount = n)
-          val index = KnnGraph.graphIndex(g, e, "vec_id", "v",
-            entries = entries, corpusCount = n).localCheckpoint(true)
-          KnnGraph.searchGraphIndexed(index, q, "vec_id", "v", k = 5,
-            beam = beam, hops = hops)
-        },
-        () => Similarity.bruteForceTopK(e, q, "vec_id", "v", k = 5)
-          .localCheckpoint(true)),
-        label = "q_graph_search")
-      val ann = pooled(0)
-      val exact = pooled(1)
+      val g = KnnGraph.nnDescent(e, "vec_id", "v", k = 16,
+        iterations = 2, earlyStop = false, corpusCount = n)
+      // pinned: the search collects from the index once per hop
+      // (plans/pr11/bench_ab.json, probes.pin_index_q_graph_search)
+      val index = pins.pin(KnnGraph.graphIndex(g, e, "vec_id", "v",
+        entries = entries, corpusCount = n))
+      val ann = KnnGraph.searchGraphIndexed(index, q, "vec_id", "v", k = 5,
+        beam = beam, hops = hops)
+      val exact = Similarity.bruteForceTopK(e, q, "vec_id", "v", k = 5)
       annClaims(ann, exact, lit(n.toDouble), k = 5, "cosine",
         ascending = false, minRecall = 0.45)
     }),
@@ -426,7 +415,7 @@ private[graft] object GatesAnn {
     // bridge rebuild), reading the merged graph back off the updated
     // index. Bit-identical to the one-shot path by the KnnGraphSpec
     // parity pin, so the oracle and bars carry over unchanged.
-    "q_graph_insert" -> ((s, dir) => {
+    "q_graph_insert" -> ((s, dir) => Pins.scoped { pins =>
       val e = Tables.embeddings(s, dir)
         .filter(col("vec_id") < 50000)
         .withColumn("v", col("embedding").cast("array<double>"))
@@ -435,26 +424,21 @@ private[graft] object GatesAnn {
       val corpus = e.filter(col("vec_id") >= 25)
       val n = e.count()
       val (beam, hops, entries) = KnnGraph.servingBudget(n)
-      // r13 opt (guide §2.6): build+index+insert and the brute-force
-      // truth are independent chains — overlap them; values unchanged
-      val pooled = Par.inParallel(Seq[() => DataFrame](
-        () => {
-          val g = KnnGraph.nnDescent(corpus, "vec_id", "v", k = 16,
-            iterations = 2, earlyStop = false, corpusCount = n - 25)
-          val idx = KnnGraph.graphIndex(g, corpus, "vec_id", "v",
-            entries = entries, corpusCount = n - 25).localCheckpoint(true)
-          KnnGraph.indexGraph(KnnGraph.insertIncrementalIndexed(
-            idx, batch, "vec_id", "v", k = 16, beam = beam, hops = hops,
-            refineRounds = 3,
-            validateIds = false)) // disjoint by construction (partition of e)
-        },
-        () => Similarity.bruteForceTopK(e, batch, "vec_id", "v", k = 5)
-          .localCheckpoint(true)),
-        label = "q_graph_insert")
-      val ann = pooled(0).filter(col("id") < 25 && col("rank") <= 5)
+      val g = KnnGraph.nnDescent(corpus, "vec_id", "v", k = 16,
+        iterations = 2, earlyStop = false, corpusCount = n - 25)
+      // pinned: the placement search collects from the index once per
+      // hop, and the insert re-reads it (plans/pr11/bench_ab.json,
+      // probes.pin_index_q_graph_insert)
+      val idx = pins.pin(KnnGraph.graphIndex(g, corpus, "vec_id", "v",
+        entries = entries, corpusCount = n - 25))
+      val ann = KnnGraph.indexGraph(KnnGraph.insertIncrementalIndexed(
+          idx, batch, "vec_id", "v", k = 16, beam = beam, hops = hops,
+          refineRounds = 3,
+          validateIds = false)) // disjoint by construction (partition of e)
+        .filter(col("id") < 25 && col("rank") <= 5)
         .select(col("id").as("query_id"), col("neighbor_id"),
           col("cosine"), col("rank"))
-      val exact = pooled(1)
+      val exact = Similarity.bruteForceTopK(e, batch, "vec_id", "v", k = 5)
       annClaims(ann, exact, lit(n.toDouble), k = 5, "cosine",
         ascending = false, minRecall = 0.45)
     }),
@@ -469,7 +453,7 @@ private[graft] object GatesAnn {
     // brute force over the survivors. The deleted range [100, 150)
     // is disjoint from the query slice, so n_queries stays 20 and the
     // oracle twin is closed-form at every scale.
-    "q_graph_delete" -> ((s, dir) => {
+    "q_graph_delete" -> ((s, dir) => Pins.scoped { pins =>
       val e = Tables.embeddings(s, dir)
         .filter(col("vec_id") < 50000)
         .withColumn("v", col("embedding").cast("array<double>"))
@@ -478,28 +462,20 @@ private[graft] object GatesAnn {
       val (beam, hops, entries) = KnnGraph.servingBudget(n)
       val isDel = col("vec_id") >= 100 && col("vec_id") < 150
       val q = e.filter(col("vec_id") < 20)
-      val survivors = e.filter(!isDel)
-      // r13 opt (guide §2.6): build+index+delete+search and the
-      // brute-force truth over survivors are independent chains —
-      // overlap them; values unchanged
-      val pooled = Par.inParallel(Seq[() => (DataFrame, DataFrame)](
-        () => {
-          val g = KnnGraph.nnDescent(e, "vec_id", "v", k = 16,
-            iterations = 2, earlyStop = false, corpusCount = n)
-          val idx = KnnGraph.graphIndex(g, e, "vec_id", "v",
-            entries = entries, corpusCount = n).localCheckpoint(true)
-          val after = KnnGraph.removeIds(idx,
-            e.filter(isDel).select("vec_id"), "vec_id", k = 16,
-            healRounds = 1).localCheckpoint(true)
-          (after, KnnGraph.searchGraphIndexed(after, q, "vec_id", "v",
-            k = 5, beam = beam, hops = hops).localCheckpoint(true))
-        },
-        () => (null, Similarity.bruteForceTopK(survivors, q, "vec_id",
-          "v", k = 5).localCheckpoint(true))),
-        label = "q_graph_delete")
-      val after = pooled(0)._1
-      val ann = pooled(0)._2
-      val exact = pooled(1)._2
+      val g = KnnGraph.nnDescent(e, "vec_id", "v", k = 16,
+        iterations = 2, earlyStop = false, corpusCount = n)
+      // pinned: the delete re-reads the index (plans/pr11/bench_ab.json,
+      // probes.pins_q_graph_delete, as for the next pin)
+      val idx = pins.pin(KnnGraph.graphIndex(g, e, "vec_id", "v",
+        entries = entries, corpusCount = n))
+      // pinned: the search collects from it once per hop, and the three
+      // deleted-id probes scan it
+      val after = pins.pin(KnnGraph.removeIds(idx,
+        e.filter(isDel).select("vec_id"), "vec_id", k = 16, healRounds = 1))
+      val ann = KnnGraph.searchGraphIndexed(after, q, "vec_id", "v",
+        k = 5, beam = beam, hops = hops)
+      val exact = Similarity.bruteForceTopK(e.filter(!isDel), q, "vec_id",
+        "v", k = 5)
       def delRange(c: org.apache.spark.sql.Column) = c >= 100 && c < 150
       val noDeleted =
         after.filter(delRange(col("id"))).isEmpty &&
@@ -534,62 +510,54 @@ private[graft] object GatesAnn {
         .withColumn("v", col("embedding").cast("array<double>"))
         .select("vec_id", "v")
       val q = e.filter(col("vec_id") < 20)
-      // tiny per-stage results (<= n_queries * 20 rows) feed 2-3 union
-      // branches each; an eager localCheckpoint computes each stage ONCE —
-      // without it the brute-force truth subtree re-executes in all ~10
-      // branches of the final union (measured 9.98 s -> the sum of the
-      // individual method costs)
       val n = e.count()
       val kc = 20
-      // r13 opt (guide §2.6): the six family chains and the exact truth
-      // are mutually independent and each ends in a bounded checkpoint —
-      // build them through a small pool so one chain's job tail
-      // back-fills cores idled by another's (they ran strictly
-      // sequentially before). Every chain is seed-fixed; pooling changes
-      // scheduling, never values, and the Seq order (hence union order
-      // and output) is preserved.
-      val built = Par.inParallel(Seq[() => (String, DataFrame)](
-        () => "exact" -> Similarity.bruteForceTopK(e, q, "vec_id", "v",
-          k = 5).localCheckpoint(true),
-        () => "graph" -> {
+      // Pooled: the graph chain's jobs and the codebook trainings' driver
+      // work overlap the other families' jobs (plans/pr11/bench_ab.json,
+      // probes.pool_ann_sweep: run in order, the sweep measured 8.4 ->
+      // 9.3-11.9 s).
+      // Each chain pins its bounded result in its own scope, so its work runs
+      // in its pool thread. The truth pin also pays on its own: it feeds two
+      // branches of every family, and unpinned its brute-force subtree
+      // re-executes in all ~10 branches of the final union (measured
+      // 9.98 s -> the sum of the individual method costs). The graph
+      // search's result is already on the driver; its index is pinned
+      // because the search collects from it once per hop
+      // (probes.pin_index_q_ann_sweep).
+      def pinned(df: => DataFrame): DataFrame = Pins.scoped(_.pin(df))
+      val built = Par.inParallel(s, "q_ann_sweep", Seq[() => (String, DataFrame)](
+        () => "exact" -> pinned(Similarity.bruteForceTopK(e, q, "vec_id", "v", k = 5)),
+        () => "graph" -> Pins.scoped { pins =>
           val (beam, hops, entries) = KnnGraph.servingBudget(n)
           val g = KnnGraph.nnDescent(e, "vec_id", "v", k = 16,
             iterations = 2, earlyStop = false, corpusCount = n)
-          val idx = KnnGraph.graphIndex(g, e, "vec_id", "v",
-            entries = entries, corpusCount = n).localCheckpoint(true)
+          val idx = pins.pin(KnnGraph.graphIndex(g, e, "vec_id", "v",
+            entries = entries, corpusCount = n))
           KnnGraph.searchGraphIndexed(idx, q, "vec_id", "v", k = kc,
-            beam = beam, hops = hops).localCheckpoint(true)
+            beam = beam, hops = hops)
         },
-        () => "ivf" -> Similarity.ivfTopK(e, q, "vec_id", "v", k = kc,
-          nlist = 8, nprobe = 3).localCheckpoint(true),
-        () => "ivfpq" -> Similarity.ivfPqTopK(e, q, "vec_id", "v", k = kc,
-          nlist = 8, nprobe = 3, m = 8, ksub = 16).localCheckpoint(true),
-        () => "lsh" -> Similarity.lshTopK(e, q, "vec_id", "v", k = kc,
-          tables = 4, dims = 64, probeHamming = 1, corpusCount = n)
-          .localCheckpoint(true),
+        () => "ivf" -> pinned(Similarity.ivfTopK(e, q, "vec_id", "v", k = kc,
+          nlist = 8, nprobe = 3)),
+        () => "ivfpq" -> pinned(Similarity.ivfPqTopK(e, q, "vec_id", "v",
+          k = kc, nlist = 8, nprobe = 3, m = 8, ksub = 16)),
+        () => "lsh" -> pinned(Similarity.lshTopK(e, q, "vec_id", "v", k = kc,
+          tables = 4, dims = 64, probeHamming = 1, corpusCount = n)),
         () => "opq" -> {
           val m = Similarity.opqTrain(e, "v", dims = 64, m = 8, ksub = 16)
-          Similarity.opqTopK(e, q, "vec_id", "v", m, k = kc)
-            .localCheckpoint(true)
+          pinned(Similarity.opqTopK(e, q, "vec_id", "v", m, k = kc))
         },
         () => "pq" -> {
           val m = Similarity.pqTrain(e, "v", dims = 64, m = 8, ksub = 16)
-          Similarity.pqTopK(e, q, "vec_id", "v", m, k = kc)
-            .localCheckpoint(true)
-        }), label = "q_ann_sweep:build")
+          pinned(Similarity.pqTopK(e, q, "vec_id", "v", m, k = kc))
+        }))
       val exact = built.head._2
       val cands = built.tail
       val truthPairs = exact.select("query_id", "neighbor_id")
       val nQ = q.count()
       val chance = lit(10.0 * 5 / n.toDouble)
-      Par.inParallel(cands.map { case (name, cand) => () =>
+      cands.map { case (name, cand) =>
         val raw5 = cand.filter(col("rank") <= 5)
-        // r13 opt: pin the tiny (<= 20x5 row) rerank result — it feeds
-        // BOTH the hits join and the coverage aggregate, and each lazy
-        // consumer otherwise re-runs the corpus-scan rerank join
-        // (2 extra corpus scans per family; rows unchanged)
         val rer = Similarity.rerankExact(cand, e, q, "vec_id", "v", k = 5)
-          .localCheckpoint(true)
         def hits(df: DataFrame, as: String) =
           df.select("query_id", "neighbor_id").distinct()
             .join(truthPairs, Seq("query_id", "neighbor_id"))
@@ -601,7 +569,7 @@ private[graft] object GatesAnn {
             (col("__rer") >= col("__raw")).as("rerank_ge_raw"),
             (col("__rer").cast("double") / (nQ * 5.0) >= chance)
               .as("recall_ok"))
-      }, label = "q_ann_sweep:rerank").reduce(_ unionByName _)
+      }.reduce(_ unionByName _)
         .orderBy("method")
     }),
 
@@ -625,16 +593,17 @@ private[graft] object GatesAnn {
         .filter(col("vec_id") < 50000)
         .withColumn("v", col("embedding").cast("array<double>"))
         .select("vec_id", "v")
-      // the all-pairs scan is the whole cost and feeds two claim
-      // actions — checkpoint its small (n x k)-row result once
+      // the all-pairs scan is the whole cost: both claim aggregates read
+      // it in one action, so it runs once
       val topk = Similarity.bruteForceTopK(e, e, "vec_id", "v", k = 10)
-        .localCheckpoint(true)
       val occ = Similarity.kOccurrence(topk, e, "vec_id")
       val n = e.count()
       val agg = occ.agg(count(lit(1)), sum("k_occurrence"),
-        max("k_occurrence"), min("k_occurrence")).head()
-      val selfRows =
-        topk.filter(col("query_id") === col("neighbor_id")).count()
+          max("k_occurrence"), min("k_occurrence"))
+        .crossJoin(topk.filter(col("query_id") === col("neighbor_id"))
+          .agg(count(lit(1))))
+        .head()
+      val selfRows = agg.getLong(4)
       Seq(
         ("bounds_0_to_n_minus_1", n,
           agg.getLong(3) >= 0L && agg.getLong(2) <= n - 1),
@@ -657,19 +626,21 @@ private[graft] object GatesAnn {
     // brute-force truth is quadratic by design; the slice bounds it at
     // every scale (no-op below 50k vectors) and uniqueness/claims are
     // computed over the SAME slice on both engine and oracle sides.
-    "q_bitext_mine" -> ((s, dir) => {
+    "q_bitext_mine" -> ((s, dir) => Pins.scoped { pins =>
       import s.implicits._
       val e = Tables.embeddings(s, dir)
         .filter(col("vec_id") < 50000)
         .withColumn("v", col("embedding").cast("array<double>"))
       val a = e.select(col("vec_id").as("id"), col("v"))
       val b = e.select((col("vec_id") + 10000).as("id"), col("v"))
-      val m = Similarity.mutualTopMatches(a, b, "id", "v", k = 4)
-        .localCheckpoint(true) // two bruteForceTopK passes feed 3 actions
+      // pinned: two bruteForceTopK passes feed three actions. Read in one
+      // action instead, the gate measured 2.9-4.1 -> 4.6-4.8 s
+      // (plans/pr11/bench_ab.json, per_gate.q_bitext_mine).
+      val m = pins.pin(Similarity.mutualTopMatches(a, b, "id", "v", k = 4))
       val n = e.count()
-      val uniq = e.groupBy("v").agg(count(lit(1)).as("__c"),
+      val uniq = pins.pin(e.groupBy("v").agg(count(lit(1)).as("__c"),
           min("vec_id").as("vec_id"))
-        .filter(col("__c") === 1).select("vec_id").localCheckpoint(true)
+        .filter(col("__c") === 1).select("vec_id"))
       val nUniq = uniq.count()
       val planted = m.join(uniq, m("id_a") === uniq("vec_id")).agg(
         count(lit(1)).as("cnt"),
@@ -719,15 +690,17 @@ private[graft] object GatesAnn {
     // the corpus, so an unsliced gate would be quadratic-in-sf pair
     // truth — the production path feeds rerankWith from a
     // selectivity-adaptive candidate stage instead (lshTopK et al.).
-    "q_rerank_ce" -> ((s, dir) => {
-      val base = Tables.documents(s, dir)
+    "q_rerank_ce" -> ((s, dir) => Pins.scoped { pins =>
+      // pinned: the candidate join and the rerank read it four times, and
+      // each read re-normalizes every document's text
+      // (plans/pr11/bench_ab.json, probes.pin_base_q_rerank_ce)
+      val base = pins.pin(Tables.documents(s, dir)
         .filter(col("doc_id") < 50000)
         .select(col("doc_id"),
           array_distinct(split(TextAnalysis.normalize(col("text")), " "))
             .as("toks"),
           element_at(split(TextAnalysis.normalize(col("text")), " "), 1)
-            .as("blk"))
-        .localCheckpoint(true)
+            .as("blk")))
       val queries = base.filter(col("doc_id") % 97 === 0)
       val cands = queries.select(col("doc_id").as("query_id"), col("blk"))
         .join(base.select(col("doc_id").as("neighbor_id"), col("blk")),

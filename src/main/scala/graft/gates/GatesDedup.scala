@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pins
 
 import graft.functions.Met
 import graft.operators._
@@ -568,20 +569,19 @@ private[graft] object GatesDedup {
       // exact twins (j = 1) still collide in EVERY band, so the coverage
       // claims are untouched and the est_jaccard >= 0.5 filter loses
       // only a slice of the j-in-[0.5, 0.77) band the claims never used.
-      // r13 opt (guide §2.6): the three candidate generators are
-      // independent seed-fixed chains ending in bounded checkpoints /
-      // counts — build them through a small pool so one chain's job
-      // tail back-fills cores the others idle (strictly sequential
-      // before). Values unchanged; only scheduling overlaps.
-      val stage1 = Par.inParallel(Seq[() => Any](
-        () => Dedup.minHashCandidates(union, "text", "doc_id",
+      // Pooled: run in order, the gate measured 6.7-8.8 -> 9.4-10.3 s
+      // (plans/pr11/bench_ab.json, per_gate.q_dedup_sweep). Each generator
+      // pins its candidate pairs in its own scope, so its work runs in its
+      // pool thread; the planted-recall counts and the CC labels both read
+      // them (probes.pins_q_dedup_sweep).
+      val stage1 = Par.inParallel(s, "q_dedup_sweep:candidates", Seq[() => Any](
+        () => Pins.scoped(_.pin(Dedup.minHashCandidates(union, "text", "doc_id",
             shingleSize = 5, numHashes = 64, bands = 8)
-          .filter(col("est_jaccard") >= 0.5).localCheckpoint(true),
-        () => Dedup.simHashCandidates(union, "text", "doc_id",
-          maxHamming = 3).localCheckpoint(true),
+          .filter(col("est_jaccard") >= 0.5))),
+        () => Pins.scoped(_.pin(Dedup.simHashCandidates(union, "text", "doc_id",
+          maxHamming = 3))),
         () => planted(Dedup.ngramJaccardPairs(union, "text", "doc_id",
-          "source", n = 3, minJaccard = 0.5))),
-        label = "q_dedup_sweep:candidates")
+          "source", n = 3, minJaccard = 0.5))))
       val mh = stage1(0).asInstanceOf[DataFrame]
       val sh = stage1(1).asInstanceOf[DataFrame]
       val ngFound = stage1(2).asInstanceOf[Long]
@@ -590,16 +590,13 @@ private[graft] object GatesDedup {
       // never use (part of the r10 q_dedup_sweep sf10 OOM fix — the
       // other part is the evictable-storage config in Verify/Sessions)
       val ids = union.select("doc_id")
-      // second pooled stage: the two planted-recall counts and the two
-      // CC label fixpoints all read only the checkpointed mh/sh
-      val stage2 = Par.inParallel(Seq[() => Any](
+      val stage2 = Par.inParallel(s, "q_dedup_sweep:labels", Seq[() => Any](
         () => planted(mh),
         () => planted(sh),
         () => Dedup.dedupClusters(ids, "doc_id", mh)
           .select(col("doc_id"), col("component").as("la")),
         () => Dedup.dedupClusters(ids, "doc_id", sh)
-          .select(col("doc_id"), col("component").as("lb"))),
-        label = "q_dedup_sweep:labels")
+          .select(col("doc_id"), col("component").as("lb"))))
       val (mhFound, shFound) = (stage2(0).asInstanceOf[Long],
         stage2(1).asInstanceOf[Long])
       val labels = stage2(2).asInstanceOf[DataFrame]

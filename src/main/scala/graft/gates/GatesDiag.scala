@@ -544,30 +544,30 @@ private[graft] object GatesDiag {
     // claims carry val_str = '', string claims carry val_num = 0.
     "q_rowgroup_stats" -> ((s, dir) => {
       import s.implicits._
-      val stats = ParquetAudit
-        .rowGroupStats(s, s"$dir/lineitem.parquet").localCheckpoint(true)
-      val ok1 = stats.filter(col("column") === "l_orderkey")
+      val stats = ParquetAudit.rowGroupStats(s, s"$dir/lineitem.parquet")
       // orderkey claims read the EXACT long stats (r10, ADVICE: the
       // double funnel loses exactness above 2^53 — irrelevant at this
-      // sf, but the gate should exercise the path production ids use)
-      val r = ok1.agg(
-        sum("group_rows").as("rows"),
-        min("min_long").as("okmin"),
-        max("max_long").as("okmax"),
-        sum(greatest(col("null_count"), lit(0L))).as("nulls")).head()
-      val fl = stats.filter(col("column") === "l_returnflag")
-        .agg(min("min_val").as("fmin"), max("max_val").as("fmax")).head()
-      val cover = ParquetAudit.rowGroupSkippability(stats)
-        .agg(min((col("n_with_stats") === col("n_groups")).cast("int")))
-        .head().getInt(0) == 1
+      // sf, but the gate should exercise the path production ids use).
+      // One action reads the footers once for all three aggregates.
+      val r = stats.filter(col("column") === "l_orderkey").agg(
+          sum("group_rows").as("rows"),
+          min("min_long").as("okmin"),
+          max("max_long").as("okmax"),
+          sum(greatest(col("null_count"), lit(0L))).as("nulls"))
+        .crossJoin(stats.filter(col("column") === "l_returnflag")
+          .agg(min("min_val").as("fmin"), max("max_val").as("fmax")))
+        .crossJoin(ParquetAudit.rowGroupSkippability(stats)
+          .agg(min((col("n_with_stats") === col("n_groups")).cast("int"))
+            .as("cover")))
+        .head()
       Seq(
         ("orderkey_max", r.getLong(2), "", true),
         ("orderkey_min", r.getLong(1), "", true),
         ("orderkey_nulls", r.getLong(3), "", true),
-        ("returnflag_max", 0L, fl.getString(1), true),
-        ("returnflag_min", 0L, fl.getString(0), true),
+        ("returnflag_max", 0L, r.getString(5), true),
+        ("returnflag_min", 0L, r.getString(4), true),
         ("rows_sum", r.getLong(0), "", true),
-        ("stats_cover_all_groups", 0L, "", cover))
+        ("stats_cover_all_groups", 0L, "", r.getInt(6) == 1))
         .toDF("claim", "val_num", "val_str", "ok").orderBy("claim")
     }),
 

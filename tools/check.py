@@ -119,6 +119,8 @@ def main():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle_sql = json.load(open(f"{out_dir}/oracle_sql.json"))
     ok = fail = 0
+    # a pass over 0 rows checks nothing; name them so it shows
+    empty_passes = []
     import glob
     have = {p.split("/")[-1] for p in glob.glob(f"{out_dir}/*") if not p.endswith(".json")}
     for name in sorted(have):
@@ -157,10 +159,14 @@ def main():
         else:
             ok += 1
             print(f"✓ {name} ({len(spark_df)} rows)")
+            if len(spark_df) == 0:
+                empty_passes.append(name)
     missing = set(oracle_sql) - have
     if missing:
         print(f"! oracle entries without spark output: {sorted(missing)}")
     print(f"\n{ok} ok, {fail} failed")
+    if empty_passes:
+        print(f"0-row passes: {', '.join(empty_passes)}")
     sys.exit(1 if fail else 0)
 
 
