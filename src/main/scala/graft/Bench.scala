@@ -8,9 +8,14 @@ object Bench {
     * threw, in name order. A failed gate is never a time. `compiles` is
     * each gate's codegen compiles over all its repeats, failed gates
     * included: the classes its plans generated that Spark's codegen cache
-    * did not hold. */
+    * did not hold. `stealS` is the host CPU steal over each gate's
+    * repeats and `load1` the 1-minute load average at its start, failed
+    * gates included, so a reader can tell a disturbed run (NaN where
+    * `/proc` cannot be read). */
   final case class Timings(seconds: Map[String, Double], failed: Seq[String],
-                           compiles: Map[String, Long]) {
+                           compiles: Map[String, Long],
+                           stealS: Map[String, Double],
+                           load1: Map[String, Double]) {
     def total: Double = seconds.values.sum
   }
 
@@ -25,6 +30,8 @@ object Bench {
   def timeGates(spark: SparkSession, sfDir: String, gates: Map[String, Gate],
                 repeats: Int): Timings = {
     val outcomes = gates.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val load = procField("/proc/loadavg", "", 0)
+      val steal0 = stealTicks()
       val compiles0 = CodegenCount.compiles
       val best =
         try Some((1 to math.max(1, repeats)).map { _ =>
@@ -37,13 +44,29 @@ object Bench {
         }.min)
         catch { case _: Throwable => None }
       val compiled = CodegenCount.compiles - compiles0
+      val steal = (stealTicks() - steal0) / 100.0
       Sessions.releaseGateState(spark)
-      (name, best, compiled)
+      (name, best, compiled, steal, load)
     }
-    Timings(outcomes.collect { case (n, Some(t), _) => n -> t }.toMap,
-      outcomes.collect { case (n, None, _) => n },
-      outcomes.map { case (n, _, c) => n -> c }.toMap)
+    Timings(outcomes.collect { case (n, Some(t), _, _, _) => n -> t }.toMap,
+      outcomes.collect { case (n, None, _, _, _) => n },
+      outcomes.map(o => o._1 -> o._3).toMap,
+      outcomes.map(o => o._1 -> o._4).toMap,
+      outcomes.map(o => o._1 -> o._5).toMap)
   }
+
+  /** Field `i` of the first line of `path` that starts with `prefix`,
+    * split on whitespace; NaN when it cannot be read. */
+  private def procField(path: String, prefix: String, i: Int): Double =
+    try {
+      val src = scala.io.Source.fromFile(path)
+      try src.getLines().find(_.startsWith(prefix)).get.trim.split("\\s+")(i).toDouble
+      finally src.close()
+    } catch { case _: Exception => Double.NaN }
+
+  /** The host's CPU steal so far: the `steal` column of /proc/stat's
+    * aggregate `cpu` line, in USER_HZ (100 per second) ticks. */
+  private def stealTicks(): Double = procField("/proc/stat", "cpu ", 8)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -99,10 +122,13 @@ object Bench {
     val full = sorted.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
     val compiles = timings.compiles.toSeq.sorted.map { case (k, v) => s"\"$k\":$v" }
       .mkString("{", ",", "}")
+    def perGate(m: Map[String, Double]): String = m.toSeq.sorted
+      .map { case (k, v) => s"\"$k\":${if (v.isNaN) "null" else v.toString}" }
+      .mkString("{", ",", "}")
     try
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("target/bench_full_last.json"),
-        s"""{"total_s":$total,"operators_s":$operators,"harness_s":$harness,"n":${sorted.size},"protocol":"$protocol",$conditions,"sf":"$sfDir","queries":$full,"codegen_compiles":$compiles}""")
+        s"""{"total_s":$total,"operators_s":$operators,"harness_s":$harness,"n":${sorted.size},"protocol":"$protocol",$conditions,"sf":"$sfDir","queries":$full,"codegen_compiles":$compiles,"steal_s":${perGate(timings.stealS)},"load1":${perGate(timings.load1)}}""")
     catch { case _: Throwable => () } // the stdout line must still go out
     def fmt(v: Double): String =
       if (v >= 100) f"$v%.0f" else if (v >= 10) f"$v%.1f" else f"$v%.2f"

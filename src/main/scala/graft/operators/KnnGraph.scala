@@ -122,19 +122,36 @@ object KnnGraph {
   }
 
   /** (id, nbr, cosine) directed edges -> per-id top-k with dense ranks.
-    * `dedup = true` ranks DISTINCT ids (per-id keep-best), so duplicate-bearing unions
+    * It ranks DISTINCT ids (per-id keep-best), so duplicate-bearing unions
     * flow straight into the map-side k-buffer — no candidate-grain
     * distinct shuffle (the merged edge stream stays at n·k state per
     * task regardless of how many duplicates the round generated).
     */
-  private def topkOf(directed: DataFrame, k: Int,
-                     idType: org.apache.spark.sql.types.DataType,
-                     dedup: Boolean = false): DataFrame =
+  private def topkOf(directed: DataFrame, k: Int, idType: DataType): DataFrame =
     Similarity.rankTopK(
         directed.select(col("id").as("query_id"),
-          col("nbr").as("neighbor_id"), col("cosine")), k, idType, dedup)
+          col("nbr").as("neighbor_id"), col("cosine")), k, idType, dedup = true)
       .select(col("query_id").as("id"), col("neighbor_id").as("nbr"),
         col("cosine"), col("rank"))
+
+  /** The one merge of every graph write: candidate edges `cands`
+    * (id, nbr, cosine) merged into the edge set `cur` (id, nbr, cosine)
+    * through the dedup top-k, each kept edge flagged `__new` when `cur`
+    * does not hold it. Used by the build and delta rounds, both inserts
+    * and the delete; the caller pins the result. No distinct runs first:
+    * the dedup top-k drops both multi-witness duplicates (same pair via
+    * several common nodes — bit-identical cosine: same kernel, same
+    * inputs) and re-found existing edges inside its map-side k-buffer,
+    * so the only exchange at candidate grain carries n·k states.
+    */
+  private def mergeTopK(cands: DataFrame, cur: DataFrame, k: Int,
+                        idType: DataType): DataFrame =
+    topkOf(cands.unionByName(cur.select(col("id"), col("nbr"), col("cosine"))),
+        k, idType)
+      .join(cur.select(col("id"), col("nbr")).withColumn("__old", lit(true)),
+        Seq("id", "nbr"), "left")
+      .select(col("id"), col("nbr"), col("cosine"), col("rank"),
+        coalesce(col("__old"), lit(false)).unary_!.as("__new"))
 
   /** Build an approximate k-NN graph (cosine) over `corpus` by
     * NN-Descent. Returns one row per directed edge:
@@ -220,7 +237,7 @@ object KnnGraph {
     // paper's incremental-join trick — converged neighborhoods stop
     // contributing work, which is most of them after round 2). Pinned:
     // loop state, re-read by the next round.
-    var graph = pins.loop(topkOf(symmetrize(initScored), k, idType, dedup = true)
+    var graph = pins.loop(topkOf(symmetrize(initScored), k, idType)
       .withColumn("__new", lit(true)))
 
     var iter = 0
@@ -262,16 +279,32 @@ object KnnGraph {
     */
   private def descentRound(pins: Pins, graph: DataFrame, vecs: DataFrame, k: Int,
                            maxRev: Int, sampleRate: Double, seed: Int,
-                           iter: Int,
-                           idType: org.apache.spark.sql.types.DataType)
-      : DataFrame = {
-    val fwd = graph.select(col("id"), col("nbr"), col("__new"))
+                           iter: Int, idType: DataType): DataFrame =
+    // pinned: loop state, re-read by the next round and its probe
+    pins.loop(mergeTopK(symmetrize(
+      scoredPairs(graph, vecs, maxRev, sampleRate, seed, iter, None)), graph, k, idType))
+
+  /** The round kernel: one round's scored neighbor-of-neighbor pairs
+    * (id_a, id_b, cosine) over a flagged edge set `cur` (id, nbr,
+    * cosine, __new). A node's hood is its forward edges ∪ its reverse
+    * edges capped at `maxRev`; a pair in one hood is scored when >= 1 of
+    * its two hood edges is new. `pivots` restricts the hoods to those
+    * nodes (the delta round's front, fetched by broadcast joins that
+    * scan `cur` but shuffle only matches); the full round passes None.
+    */
+  private def scoredPairs(cur: DataFrame, vecs: DataFrame, maxRev: Int,
+                          sampleRate: Double, seed: Int, iter: Int,
+                          pivots: Option[DataFrame]): DataFrame = {
+    val fwd = pivots.fold(cur)(p => cur.join(broadcast(p), Seq("id")))
+      .select(col("id"), col("nbr"), col("__new"))
     // Reverse-degree cap: hash-ordered row_number inside each node's
-    // reverse list — a PARTITIONED window (never a global sort).
+    // reverse list — a PARTITIONED window (never a global sort). A
+    // pivot's reverse rows are the same with or without the restriction.
     val revW = Window.partitionBy("id")
       .orderBy(xxhash64(col("nbr"), lit(seed), lit(1000 + iter)), col("nbr"))
-    val rev = graph.select(col("nbr").as("id"), col("id").as("nbr"),
-        col("__new"))
+    val rev = pivots.fold(cur)(p =>
+        cur.join(broadcast(p.withColumnRenamed("id", "nbr")), Seq("nbr")))
+      .select(col("nbr").as("id"), col("id").as("nbr"), col("__new"))
       .withColumn("__rn", row_number().over(revW))
       .filter(col("__rn") <= maxRev).drop("__rn")
     // mutual edges appear in both directions: collapse to one hood row
@@ -295,25 +328,23 @@ object KnnGraph {
     // hood's ~26 GB — the difference between a gate and a blowout.
     val hood = sampled
       .join(vecs.select(col("id").as("nbr"), col("__nv")), Seq("nbr"))
-    val scored = hood.as("x").join(hood.as("y"),
+    hood.as("x").join(hood.as("y"),
         col("x.id") === col("y.id") && col("x.nbr") < col("y.nbr") &&
           (col("x.__new") || col("y.__new")))
       .select(col("x.nbr").as("id_a"), col("y.nbr").as("id_b"),
         Similarity.dot(col("x.__nv"), col("y.__nv")).as("cosine"))
-    // merge WITHOUT a distinct: the dedup top-k aggregate drops both
-    // multi-witness duplicates (same pair via several common nodes —
-    // bit-identical cosine: same kernel, same inputs) and re-found
-    // existing edges inside its map-side k-buffer, so the only
-    // exchange at this grain carries n·k aggregate states
-    val merged = symmetrize(scored)
-      .unionByName(graph.select(col("id"), col("nbr"), col("cosine")))
-    // pinned: loop state, re-read by the next round and its probe
-    pins.loop(topkOf(merged, k, idType, dedup = true)
-      .join(graph.select(col("id"), col("nbr"))
-        .withColumn("__old", lit(true)), Seq("id", "nbr"), "left")
-      .select(col("id"), col("nbr"), col("cosine"), col("rank"),
-        coalesce(col("__old"), lit(false)).unary_!.as("__new")))
   }
+
+  /** The composed edge set `delta ∪ (baseKnn ∖ ids)`, base rows flagged
+    * old: `ids` covers every id of `delta`, and an id of `ids` outside
+    * `delta` has no `baseKnn` rows.
+    */
+  private def composeDelta(delta: DataFrame, baseKnn: DataFrame,
+                           ids: DataFrame): DataFrame =
+    delta.select(col("id"), col("nbr"), col("cosine"), col("__new"))
+      .unionByName(baseKnn.join(broadcast(ids), Seq("id"), "left_anti")
+        .select(col("id"), col("nbr"), col("cosine"))
+        .withColumn("__new", lit(false)))
 
   /** Per-node small-world bucket keys: round j's key is
     * `j:xxhash64(id, seed, 7000+j) % mod` — the SAME formula at build
@@ -327,36 +358,65 @@ object KnnGraph {
       concat_ws(":", lit(j),
         pmod(xxhash64(id, lit(seed), lit(7000 + j)), lit(mod)))): _*)
 
-  /** Small-world bridge adjacency (Watts–Strogatz-style long links):
+  /** Small-world bridge links (Watts–Strogatz-style long links):
     * `bridgeRounds` rounds of hashing nodes into expected-size-2
     * buckets (modulus `nB`, normally n/2), each bucket starred to its
-    * min-id member, both directions — a random near-matching whose
-    * union over 3 rounds is connected with high probability. All
-    * rounds ride ONE explode + groupBy (round in the key): 1 shuffle,
-    * not 2 per round.
+    * min-id member — a random near-matching whose union over 3 rounds
+    * is connected with high probability. All rounds ride ONE explode +
+    * windowed min (round in the key): 1 shuffle, not 2 per round. Returns
+    * one (id, nbr = hub) row per member; [[linkArrays]] adds the
+    * reverse direction.
     */
-  private def bridgeAdj(ids: DataFrame, bridgeRounds: Int, seed: Int,
-                        nB: Long): DataFrame = {
-    val b = ids.select(col("id"),
-      explode(bridgeKeys(col("id"), bridgeRounds, seed, nB)).as("__b"))
-    val bridges = b
-      .join(b.groupBy("__b").agg(min(col("id")).as("hub")), Seq("__b"))
+  private def bridgeLinks(ids: DataFrame, bridgeRounds: Int, seed: Int,
+                          nB: Long): DataFrame =
+    ids.select(col("id"),
+        explode(bridgeKeys(col("id"), bridgeRounds, seed, nB)).as("__b"))
+      .withColumn("hub", min(col("id")).over(Window.partitionBy("__b")))
       .filter(col("id") =!= col("hub"))
       .select(col("id"), col("hub").as("nbr"))
-    bothDirections(bridges)
-  }
 
-  /** (id, nbr) -> both directions via one explode. r13 opt: the
+  /** (id, nbr) links -> both directions via one explode. r13 opt: the
     * previous self-union re-executed the producing join once per
     * branch; the explode emits (id→nbr, nbr→id) in a single pass.
-    * Same multiset of rows — every consumer is an order-insensitive
-    * aggregate or a per-hop dedup.
     */
-  private def bothDirections(edges: DataFrame): DataFrame =
-    edges.select(explode(array(
+  private def bothWays(links: DataFrame): DataFrame =
+    links.select(explode(array(
         struct(col("id"), col("nbr")),
         struct(col("nbr").as("id"), col("id").as("nbr")))).as("__d"))
       .select(col("__d.id").as("id"), col("__d.nbr").as("nbr"))
+
+  /** (id, nbr) links -> per-id `name` arrays of the distinct linked ids
+    * over both directions, sorted: the tail of every bridge repair.
+    */
+  private def linkArrays(links: DataFrame, name: String): DataFrame =
+    bothWays(links).groupBy("id").agg(linkSet(col("nbr")).as(name))
+
+  private def linkSet(nbr: Column): Column = array_sort(collect_set(nbr))
+
+  /** An empty id array of the id type. */
+  private def noIds(idType: DataType): Column = array().cast(ArrayType(idType))
+
+  /** A [[graphIndex]]'s persisted bucket parameters (bridge_mod,
+    * bridge_rounds, bridge_seed): one head job.
+    */
+  private def bucketParams(index: DataFrame): (Long, Int, Int) = {
+    val p = index.select("bridge_mod", "bridge_rounds", "bridge_seed").head
+    (p.getLong(0), p.getInt(1), p.getInt(2))
+  }
+
+  /** The `entries` ids first in the entry order (xxhash64(id, seed),
+    * then id), flagged `name` — a top-n over a hash, not a sort of the
+    * corpus.
+    */
+  private def entryIds(ids: DataFrame, seed: Int, entries: Int,
+                       name: String): DataFrame =
+    ids.select(col("id")).orderBy(xxhash64(col("id"), lit(seed)), col("id"))
+      .limit(entries).withColumn(name, lit(true))
+
+  /** The (id, nbr, cosine) k-NN edges of index rows. */
+  private def knnEdges(rows: DataFrame): DataFrame =
+    rows.select(col("id"), explode(col("knn")).as("__e"))
+      .select(col("id"), col("__e.nbr").as("nbr"), col("__e.cos").as("cosine"))
 
   /** Shared serving walk, run on the driver: entry points, then up to
     * `hops` rounds of expand-score-prune over a node table `nodes`
@@ -490,9 +550,11 @@ object KnnGraph {
     * [[Similarity.bruteForceTopK]], so the two are directly
     * comparable).
     *
-    * Spark builds and pins one node table (the normalized corpus
-    * left-joined with its grouped adjacency: graph edges ∪ bridges);
-    * the walk itself runs on the driver ([[searchCore]]), fetching
+    * Spark builds and pins one node table, the [[graphIndex]] rows of
+    * the graph (one builder, so the round trip through a saved index
+    * is bit-identical by construction), and walks it as
+    * [[searchGraphIndexed]] does. The walk runs on the driver
+    * ([[searchCore]]), fetching
     * each hop's newly reached nodes in one filtered collect. Per-hop
     * work is |queries| × beam × degree — independent of corpus size,
     * which is what makes graph serving the right shape at 10^9+ rows:
@@ -532,21 +594,12 @@ object KnnGraph {
     require(k >= 1 && beam >= 1 && entries >= 1,
       s"k/beam/entries must be >= 1, got $k/$beam/$entries")
     requireIntegralId(corpus, idCol, "searchGraph")
-    val idType = corpus.schema(idCol).dataType
-    val vecs = normalized(corpus, idCol, vecCol)
-    val knn = graph.select(col("id"), col("neighbor_id").as("nbr"))
-    val adj = if (bridgeRounds <= 0) knn else {
-      val n = if (corpusCount >= 0) corpusCount else corpus.count()
-      knn.unionByName(bridgeAdj(vecs.select(col("id")), bridgeRounds, seed,
-        math.max(1L, n / 2)))
-    }
-    // pinned: the entry points and every hop re-read the node table
-    val nodes = pins.pin(vecs.join(
-      adj.groupBy("id").agg(collect_list(col("nbr")).as("__adj")), Seq("id"), "left"))
-    val entryPts = nodes.orderBy(xxhash64(col("id"), lit(seed)), col("id"))
-      .limit(entries)
-    searchCore(nodes, entryPts, normalized(queries, idCol, vecCol), k, beam,
-      hops, idType)
+    // the walk never reads bridge_mod: without bridges, no count
+    val n = if (corpusCount >= 0 || bridgeRounds <= 0) corpusCount else corpus.count()
+    // pinned: the entry rows and every hop re-read the node table
+    val nodes = pins.pin(indexRows(graph, normalized(corpus, idCol, vecCol), n,
+      entries, bridgeRounds, seed))
+    searchIndex(nodes, normalized(queries, idCol, vecCol), k, beam, hops)
   }
 
   /** Serving budget that scales with corpus size — the HNSW analog:
@@ -582,12 +635,16 @@ object KnnGraph {
     * ([[indexGraph]] inverts bit-identically).
     */
   private def knnArrays(edges: DataFrame): DataFrame =
-    edges.groupBy("id")
-      .agg(array_sort(collect_list(struct(col("rank").cast("int").as("r"),
-        col("nbr").as("nbr"), col("cosine").as("cos")))).as("__a"))
-      .select(col("id"), transform(col("__a"),
-        e => struct(e.getField("nbr").as("nbr"),
-          e.getField("cos").as("cos"))).as("knn"))
+    edges.groupBy("id").agg(array_sort(collect_list(knnEntry)).as("__a"))
+      .select(col("id"), knnOf(col("__a")).as("knn"))
+
+  /** An edge row's (rank, nbr, cos) struct: sorted, rank order. */
+  private def knnEntry: Column = struct(col("rank").cast("int").as("r"),
+    col("nbr").as("nbr"), col("cosine").as("cos"))
+
+  /** Sorted [[knnEntry]] structs -> the stored struct(nbr, cos) list. */
+  private def knnOf(sorted: Column): Column = transform(sorted,
+    e => struct(e.getField("nbr").as("nbr"), e.getField("cos").as("cos")))
 
   private def emptyKnn(idType: DataType): Column =
     array().cast(ArrayType(StructType(Seq(
@@ -667,31 +724,37 @@ object KnnGraph {
                  seed: Int = 42, corpusCount: Long = -1L): DataFrame = Pins.scoped { pins =>
     require(entries >= 1, s"entries must be >= 1, got $entries")
     requireIntegralId(corpus, idCol, "graphIndex")
-    val idType = corpus.schema(idCol).dataType
     // pinned: the count, the bridges, the entry points and the row join
     // re-read it
     val vecs = pins.pin(normalized(corpus, idCol, vecCol))
-    val n = if (corpusCount >= 0) corpusCount else vecs.count()
+    indexRows(graph, vecs, if (corpusCount >= 0) corpusCount else vecs.count(),
+      entries, bridgeRounds, seed)
+  }
+
+  /** The [[graphIndex]] rows of `graph` over the normalized vectors
+    * `vecs` (id, __nv) of `n` nodes: the one node-table builder of the
+    * index build and the one-shot [[searchGraph]].
+    */
+  private def indexRows(graph: DataFrame, vecs: DataFrame, n: Long, entries: Int,
+                        bridgeRounds: Int, seed: Int): DataFrame = {
+    val idType = vecs.schema("id").dataType
     val nB = math.max(1L, n / 2)
-    val knn = knnArrays(graph.select(col("id"),
-      col("neighbor_id").as("nbr"), col("cosine"), col("rank")))
-    val bridges =
-      if (bridgeRounds <= 0) null
-      else bridgeAdj(vecs.select(col("id")), bridgeRounds, seed, nB)
-        .groupBy("id").agg(array_sort(collect_set(col("nbr"))).as("bridges"))
-    val entryPts = vecs.select(col("id"))
-      .orderBy(xxhash64(col("id"), lit(seed)), col("id")).limit(entries)
-      .withColumn("__entry", lit(true))
-    val withBridges =
-      if (bridges == null) vecs.withColumn("bridges",
-        array().cast(ArrayType(idType)))
-      else vecs.join(bridges, Seq("id"), "left")
-    withBridges.join(knn, Seq("id"), "left")
-      .join(entryPts, Seq("id"), "left")
+    val knnRows = graph.select(col("id"), col("neighbor_id").as("nbr"),
+        col("cosine"), col("rank"))
+      .select(col("id"), knnEntry.as("__k"), lit(null).cast(idType).as("__l"))
+    // the k-NN edges and the bridge links ride one id-grain aggregate:
+    // one exchange and one join for both arrays
+    val rows = if (bridgeRounds <= 0) knnRows
+      else knnRows.unionByName(bothWays(bridgeLinks(vecs.select(col("id")),
+          bridgeRounds, seed, nB))
+        .select(col("id"), lit(null).cast(knnRows.schema("__k").dataType).as("__k"),
+          col("nbr").as("__l")))
+    vecs.join(rows.groupBy("id").agg(array_sort(collect_list(col("__k"))).as("__a"),
+        linkSet(col("__l")).as("__br")), Seq("id"), "left")
+      .join(entryIds(vecs, seed, entries, "__entry"), Seq("id"), "left")
       .select(col("id"), col("__nv").as("nv"),
-        coalesce(col("knn"), emptyKnn(idType)).as("knn"),
-        coalesce(col("bridges"), array().cast(ArrayType(idType)))
-          .as("bridges"),
+        coalesce(knnOf(col("__a")), emptyKnn(idType)).as("knn"),
+        coalesce(col("__br"), noIds(idType)).as("bridges"),
         coalesce(col("__entry"), lit(false)).as("is_entry"),
         lit(nB).as("bridge_mod"),
         lit(bridgeRounds).as("bridge_rounds"),
@@ -807,19 +870,12 @@ object KnnGraph {
       .select(col("query_id").as("id"), col("neighbor_id").as("nbr"),
         col("cosine"))
     // reverse edges let affected OLD nodes admit the new arrivals; both
-    // directions come from ONE explode pass ([[symmetrize]]) — same
-    // multiset into the dedup top-k aggregate.
-    val merged = symmetrize(newDirected
-        .select(col("id").as("id_a"), col("nbr").as("id_b"), col("cosine")))
-      .unionByName(graph.select(col("id"),
-        col("neighbor_id").as("nbr"), col("cosine")))
-    // pinned: loop state, re-read by the first refine round
-    var placed = pins.loop(topkOf(merged, k, idType, dedup = true)
-      // edges absent from the input graph are the perturbation front
-      .join(graph.select(col("id"), col("neighbor_id").as("nbr"))
-        .withColumn("__old", lit(true)), Seq("id", "nbr"), "left")
-      .select(col("id"), col("nbr"), col("cosine"), col("rank"),
-        coalesce(col("__old"), lit(false)).unary_!.as("__new")))
+    // directions come from ONE explode pass ([[symmetrize]]). Edges
+    // absent from the input graph are the perturbation front. Pinned:
+    // loop state, re-read by the first refine round.
+    var placed = pins.loop(mergeTopK(symmetrize(newDirected
+        .select(col("id").as("id_a"), col("nbr").as("id_b"), col("cosine"))),
+      graph.select(col("id"), col("neighbor_id").as("nbr"), col("cosine")), k, idType))
     if (refineRounds > 0) {
       // pinned: every refine round re-reads the vectors
       val vecs = pins.pin(normalized(corpus.unionByName(batch), idCol, vecCol))
@@ -851,69 +907,63 @@ object KnnGraph {
     *    honest.
     *
     * `delta` must hold COMPLETE (id, nbr, cosine, rank, __new) lists
-    * for its node set; `baseKnn` holds (id, nbr, cosine) for everyone
-    * else (rows for delta ids are ignored); `vecs` is (id, __nv) for
-    * all nodes. Returns the next delta (its node set grows by the
-    * round's candidate targets) as a `loop` pin.
+    * for its node set, `deltaIds` (as [[composeDelta]] takes it);
+    * `baseKnn` holds (id, nbr, cosine) for everyone else (rows for
+    * delta ids are ignored); `vecs` is (id, __nv) for all nodes. The
+    * re-rank broadcasts the targets' current lists, which the front
+    * bounds. Returns the next delta (its node set grows by the round's
+    * candidate targets) as a `loop` pin.
     */
-  private def descentRoundDelta(pins: Pins, delta: DataFrame, baseKnn: DataFrame,
-                                vecs: DataFrame, k: Int, maxRev: Int,
-                                seed: Int, iter: Int,
-                                idType: DataType,
-                                deltaIds0: DataFrame = null): DataFrame = {
-    // r13 opt: the caller usually just materialized this distinct for
-    // its crossover check — reuse it instead of re-shuffling (guide §2.4)
-    val deltaIds =
-      if (deltaIds0 != null) deltaIds0 else delta.select("id").distinct()
-    val cur = delta.select(col("id"), col("nbr"), col("cosine"), col("__new"))
-      .unionByName(baseKnn
-        .join(broadcast(deltaIds), Seq("id"), "left_anti")
-        .select(col("id"), col("nbr"), col("cosine"))
-        .withColumn("__new", lit(false)))
-    val newE = delta.filter(col("__new")).select(col("id"), col("nbr"))
+  private def descentRoundDelta(pins: Pins, delta: DataFrame, deltaIds: DataFrame,
+                                baseKnn: DataFrame, vecs: DataFrame, k: Int,
+                                maxRev: Int, seed: Int, iter: Int,
+                                idType: DataType): DataFrame = {
+    val cur = composeDelta(delta, baseKnn, deltaIds)
     // r14 (VERDICT ask 5): endpoints via one explode pass over the
     // checkpointed delta, not a self-union scanning it twice; same id
-    // multiset into the distinct. Pinned: fwdP and revP re-read it.
-    val pivots = pins.pin(newE.select(explode(array(col("id"), col("nbr"))).as("id"))
-      .distinct())
-    val fwdP = cur.join(broadcast(pivots), Seq("id"))
-    val revW = Window.partitionBy("id")
-      .orderBy(xxhash64(col("nbr"), lit(seed), lit(1000 + iter)), col("nbr"))
-    val revP = cur
-      .join(broadcast(pivots.withColumnRenamed("id", "nbr")), Seq("nbr"))
-      .select(col("nbr").as("id"), col("id").as("nbr"), col("__new"))
-      .withColumn("__rn", row_number().over(revW))
-      .filter(col("__rn") <= maxRev).drop("__rn")
-    val hood = fwdP.select(col("id"), col("nbr"), col("__new"))
-      .unionByName(revP)
-      .groupBy("id", "nbr").agg(max(col("__new")).as("__new"))
-      .join(vecs.select(col("id").as("nbr"), col("__nv")), Seq("nbr"))
-    val scored = hood.as("x").join(hood.as("y"),
-        col("x.id") === col("y.id") && col("x.nbr") < col("y.nbr") &&
-          (col("x.__new") || col("y.__new")))
-      .select(col("x.nbr").as("id_a"), col("y.nbr").as("id_b"),
-        Similarity.dot(col("x.__nv"), col("y.__nv")).as("cosine"))
-    val sym = symmetrize(scored)
-    // pinned: curT and the pass-through anti-join re-read it
+    // multiset into the distinct. Pinned: both hood sides re-read it.
+    val pivots = pins.pin(delta.filter(col("__new"))
+      .select(explode(array(col("id"), col("nbr"))).as("id")).distinct())
+    val sym = symmetrize(
+      scoredPairs(cur, vecs, maxRev, 1.0, seed, iter, Some(pivots)))
+    // pinned: the target re-rank and the pass-through anti-join re-read it
     val targets = pins.pin(sym.select("id").distinct())
-    val curT = cur.join(broadcast(targets), Seq("id"))
-    val nextT = topkOf(sym.unionByName(
-        curT.select(col("id"), col("nbr"), col("cosine"))),
-        k, idType, dedup = true)
-      .join(curT.select(col("id"), col("nbr")).withColumn("__old", lit(true)),
-        Seq("id", "nbr"), "left")
-      .select(col("id"), col("nbr"), col("cosine"), col("rank"),
-        coalesce(col("__old"), lit(false)).unary_!.as("__new"))
     // pinned: loop state, re-read by the next round
     pins.loop(delta.join(broadcast(targets), Seq("id"), "left_anti")
       .select(col("id"), col("nbr"), col("cosine"), col("rank"))
       .withColumn("__new", lit(false))
-      .unionByName(nextT))
+      .unionByName(mergeTopK(sym, broadcast(cur.join(broadcast(targets), Seq("id"))),
+        k, idType)))
   }
 
   private def emptyAdds(ids: DataFrame, idType: DataType): DataFrame =
-    ids.select(col("id"), array().cast(ArrayType(idType)).as("__adds"))
-      .limit(0)
+    ids.select(col("id"), noIds(idType).as("__adds")).limit(0)
+
+  /** The front repair of both index writes: re-rank every `touched` id
+    * over its `baseKnn` edges ∪ the candidate edges `cands` (whose ids
+    * are all touched), run `rounds` refine rounds
+    * ([[refineDeltaRounds]]) and collapse the repaired lists to `knn`
+    * arrays, one row per re-ranked id. `vecs` is (id, __nv) for all
+    * nodes; `nTotal`, their count, is read only when a round runs. The
+    * re-rank broadcasts the touched ids' current lists, which the front
+    * bounds: a planned broadcast, not one that adaptive execution may
+    * or may not pick depending on which stage finishes first.
+    */
+  private def repairFront(pins: Pins, cands: DataFrame, touched: DataFrame,
+                          baseKnn: DataFrame, vecs: DataFrame, nTotal: => Long,
+                          k: Int, maxRev: Int, seed: Int, iterBase: Int,
+                          rounds: Int, switchFraction: Double,
+                          idType: DataType): DataFrame = {
+    // pinned: the re-rank's base edges and old-edge flags, and refine
+    // round 0 as its id set, re-read it
+    val ids = pins.pin(touched.distinct())
+    // loop state, re-read by the refine rounds
+    val delta = pins.loop(mergeTopK(cands,
+      broadcast(baseKnn.join(broadcast(ids), Seq("id"))), k, idType))
+    knnArrays(if (rounds <= 0) delta
+      else refineDeltaRounds(pins, delta, ids, baseKnn, vecs, nTotal, k, maxRev,
+        seed, iterBase, rounds, switchFraction, idType))
+  }
 
   /** Run `rounds` refine rounds over a delta against a base edge set,
     * picking per round between [[descentRoundDelta]] and the plain
@@ -927,14 +977,21 @@ object KnnGraph {
     * rounds 2-3 cost 17 s where full rounds cost 0.7 s), the full
     * round is strictly cheaper. `switchFraction` is the |delta|/n
     * crossover; after one full round the delta IS the full graph, so
-    * subsequent rounds stay full.
+    * subsequent rounds stay full. `ids0` is round 0's id set: it covers
+    * `delta0`'s ids, and its ids outside `delta0` have no base rows.
+    *
+    * Measured fronts (round-0 ids / n): the perfbench `ann_index`
+    * insert 229/375 (61%) and its delete 297/325 (91%) both run full,
+    * so that workload never runs [[descentRoundDelta]]; the sf0.1
+    * `q_graph_insert` runs round 0 delta (395/2000, 19.75%) and round 1
+    * full (1929/2000); the sf0.1 `q_graph_delete` runs full (679/1950,
+    * 35%).
     */
-  private def refineDeltaRounds(pins: Pins, delta0: DataFrame, baseKnn: DataFrame,
-                                vecs: DataFrame, nTotal: Long, k: Int,
-                                maxRev: Int, seed: Int, iterBase: Int,
+  private def refineDeltaRounds(pins: Pins, delta0: DataFrame, ids0: DataFrame,
+                                baseKnn: DataFrame, vecs: DataFrame, nTotal: Long,
+                                k: Int, maxRev: Int, seed: Int, iterBase: Int,
                                 rounds: Int, switchFraction: Double,
-                                idType: DataType,
-                                firstIds: DataFrame = null): DataFrame = {
+                                idType: DataType): DataFrame = {
     var delta = delta0
     // r13 opt (bit-identical, cost only): (a) the per-round crossover
     // check's distinct id set is checkpointed ONCE and reused by both
@@ -943,9 +1000,7 @@ object KnnGraph {
     // first full round the delta IS the whole graph (descentRound
     // re-emits every node), so later rounds skip the count job, the
     // anti-join (provably empty: the full round's output covers every
-    // base id) and the compose checkpoint outright — the scaladoc
-    // already stated "subsequent rounds stay full"; now they also stop
-    // paying the per-round probe.
+    // base id) and the compose checkpoint outright.
     var full = false
     for (r <- 0 until rounds) {
       delta =
@@ -953,28 +1008,17 @@ object KnnGraph {
           descentRound(pins, delta, vecs, k, maxRev, sampleRate = 1.0, seed,
             iterBase + r, idType)
         else {
-          // r13 opt: round 0's id set is usually known to the caller
-          // (the checkpointed touched-id frame whose distinct this
-          // would recompute) — reuse it; later rounds re-derive. Pinned:
-          // the count and the chosen branch re-read it.
-          val dIds =
-            if (r == 0 && firstIds != null) firstIds
-            else pins.pin(delta.select("id").distinct())
+          // pinned: the count and the chosen branch re-read it
+          val dIds = if (r == 0) ids0 else pins.pin(delta.select("id").distinct())
           val deltaN = dIds.count()
           if (nTotal > 0 && deltaN.toDouble / nTotal <= switchFraction)
-            descentRoundDelta(pins, delta, baseKnn, vecs, k, maxRev, seed,
-              iterBase + r, idType, deltaIds0 = dIds)
+            descentRoundDelta(pins, delta, dIds, baseKnn, vecs, k, maxRev, seed,
+              iterBase + r, idType)
           else {
             full = true
             // pinned: loop state, re-read four times by descentRound
-            val curAll = pins.loop(delta
-              .select(col("id"), col("nbr"), col("cosine"), col("__new"))
-              .unionByName(baseKnn
-                .join(broadcast(dIds), Seq("id"), "left_anti")
-                .select(col("id"), col("nbr"), col("cosine"))
-                .withColumn("__new", lit(false))))
-            descentRound(pins, curAll, vecs, k, maxRev, sampleRate = 1.0, seed,
-              iterBase + r, idType)
+            descentRound(pins, pins.loop(composeDelta(delta, baseKnn, dIds)), vecs,
+              k, maxRev, sampleRate = 1.0, seed, iterBase + r, idType)
           }
         }
     }
@@ -990,10 +1034,12 @@ object KnnGraph {
     *    pinned, normalized batch as its queries — no corpus
     *    renormalize, no bridge rebuild, no count() (the per-batch
     *    corpus-wide taxes of the one-shot path),
-    *  - the re-rank and every `refineRounds` repair round are DELTA
-    *    computations ([[descentRoundDelta]]): shuffles are bounded by
-    *    the batch-touched front, untouched rows pass through the
-    *    one-pass composition unshuffled,
+    *  - the re-rank and the `refineRounds` repair rounds run through
+    *    the repair path it shares with [[removeIds]] ([[repairFront]]):
+    *    while the batch-touched front stays under the crossover its
+    *    shuffles are front-bounded ([[descentRoundDelta]]), and
+    *    untouched rows pass through the one-pass composition
+    *    unshuffled,
     *  - new nodes get small-world bridges under the index's persisted
     *    bucket parameters: each attaches to its buckets' EXISTING
     *    hub (append-only — old members are not re-pointed; a fresh
@@ -1055,18 +1101,13 @@ object KnnGraph {
           overlap.limit(3).collect().map(_.get(0)).mkString(", ") +
           ") — batch ids must be disjoint from the index")
     }
-    val params = index.select("bridge_mod", "bridge_rounds", "bridge_seed")
-      .head
-    val bMod = params.getLong(0)
-    val bRounds = params.getInt(1)
-    val bSeed = params.getInt(2)
-    val maxRev = if (maxReverse > 0) maxReverse else k
+    val (bMod, bRounds, bSeed) = bucketParams(index)
     // placement: graph-routed search over the asset, the pinned batch as
     // the queries, + exact new-vs-new
     val found = searchIndex(index, bv, k, beam, hops)
     val intra = Similarity.bruteForceTopK(batch, batch, idCol, vecCol, k = k)
-    // pinned (<= 2·k·|batch| rows): through `inc`, the touched-id distinct
-    // and the re-rank union re-read it
+    // pinned (<= 2·k·|batch| rows): through the candidates, the touched-id
+    // distinct and the re-rank union re-read it
     val newDirected = pins.pin(found.unionByName(intra)
       .select(col("query_id").as("id"), col("neighbor_id").as("nbr"),
         col("cosine")))
@@ -1074,37 +1115,18 @@ object KnnGraph {
     // self-union scanning the checkpointed placement edges twice
     val inc = symmetrize(newDirected
       .select(col("id").as("id_a"), col("nbr").as("id_b"), col("cosine")))
-    // not pinned: an explode of the input index, cheaper to re-run than
-    // to materialize
-    val baseKnn = index
-      .select(col("id"), explode(col("knn")).as("__e"))
-      .select(col("id"), col("__e.nbr").as("nbr"), col("__e.cos").as("cosine"))
-    // pinned: curT0, and refine round 0 as its id set, re-read it
-    val t0 = pins.pin(inc.select("id").distinct())
-    val curT0 = baseKnn.join(broadcast(t0), Seq("id"))
-    // loop state, re-read by the refine rounds
-    var delta = pins.loop(topkOf(inc.unionByName(curT0), k, idType, dedup = true)
-      .join(curT0.select(col("id"), col("nbr")).withColumn("__old", lit(true)),
-        Seq("id", "nbr"), "left")
-      .select(col("id"), col("nbr"), col("cosine"), col("rank"),
-        coalesce(col("__old"), lit(false)).unary_!.as("__new")))
-    if (refineRounds > 0) {
-      // not pinned: a projection of the index and of the pinned batch
-      val vecsAll = index.select(col("id"), col("nv").as("__nv"))
-        .unionByName(bv.select(col("id"), col("__nv")))
-      val nTotal = (if (corpusCount >= 0) corpusCount else index.count()) +
-        bv.count()
-      // firstIds = t0: the re-rank emits exactly one group per touched
-      // id (inc covers every t0 id), so round 0's distinct is t0 itself
-      delta = refineDeltaRounds(pins, delta, baseKnn, vecsAll, nTotal, k, maxRev,
-        seed, 5000, refineRounds, deltaRefineFraction, idType,
-        firstIds = t0)
-    }
     // compose the updated index: one broadcast-joined pass over the old
     // rows (scan, no shuffle of untouched rows) + the new node rows.
-    // Pinned: the old-row composition and the new rows re-read knnNew
-    // and bridgeAdds.
-    val knnNew = pins.pin(knnArrays(delta))
+    // Pinned: the old-row composition, the new rows and the changed ids
+    // re-read knnNew and bridgeAdds. The base edges are an explode of the
+    // input index and the vectors a projection of it and of the pinned
+    // batch: neither is pinned.
+    val knnNew = pins.pin(repairFront(pins, inc, inc.select("id"), knnEdges(index),
+      index.select(col("id"), col("nv").as("__nv"))
+        .unionByName(bv.select(col("id"), col("__nv"))),
+      (if (corpusCount >= 0) corpusCount else index.count()) + bv.count(),
+      k, if (maxReverse > 0) maxReverse else k, seed, 5000, refineRounds,
+      deltaRefineFraction, idType))
     val bridgeAdds = pins.pin(if (bRounds <= 0) emptyAdds(bv.select(col("id")), idType)
       else {
         // not pinned: an explode of the pinned batch
@@ -1118,12 +1140,9 @@ object KnnGraph {
         val hubOf = batchKeys.groupBy("__b").agg(min(col("id")).as("nhub"))
           .join(oldHub, Seq("__b"), "left")
           .select(col("__b"), coalesce(col("hub"), col("nhub")).as("hub"))
-        val e1 = batchKeys.join(broadcast(hubOf), Seq("__b"))
+        linkArrays(batchKeys.join(broadcast(hubOf), Seq("__b"))
           .filter(col("id") =!= col("hub"))
-          .select(col("id"), col("hub").as("nbr"))
-        bothDirections(e1) // r13 opt: explode, not self-union (see def)
-          .groupBy("id")
-          .agg(array_sort(collect_set(col("nbr"))).as("__adds"))
+          .select(col("id"), col("hub").as("nbr")), "__adds")
       })
     // the same row-local transform serves both the full composition and
     // the changed-rows overlay (applying it to a restricted input IS the
@@ -1141,12 +1160,11 @@ object KnnGraph {
         col("is_entry"), col("bridge_mod"), col("bridge_rounds"),
         col("bridge_seed"))
     val newRows = bv.select(col("id"), col("__nv").as("nv"))
-      .join(knnNew, Seq("id"), "left")
-      .join(bridgeAdds, Seq("id"), "left")
+      .join(broadcast(knnNew), Seq("id"), "left")
+      .join(broadcast(bridgeAdds), Seq("id"), "left")
       .select(col("id"), col("nv"),
         coalesce(col("knn"), emptyKnn(idType)).as("knn"),
-        coalesce(col("__adds"), array().cast(ArrayType(idType)))
-          .as("bridges"),
+        coalesce(col("__adds"), noIds(idType)).as("bridges"),
         lit(false).as("is_entry"),
         lit(bMod).as("bridge_mod"),
         lit(bRounds).as("bridge_rounds"),
@@ -1155,7 +1173,7 @@ object KnnGraph {
     // changed OLD rows = the transform over the touched subset of the
     // index (batch ids in the touched sets semi-join away naturally);
     // new rows are changed by definition
-    val changedOldIds = delta.select("id")
+    val changedOldIds = knnNew.select("id")
       .unionByName(bridgeAdds.select("id")).distinct()
     val changed = composeOld(
         index.join(broadcast(changedOldIds), Seq("id"), "left_semi"))
@@ -1182,29 +1200,18 @@ object KnnGraph {
   def compactIndex(index: DataFrame): DataFrame = {
     validateIndex(index, "compactIndex")
     val idType = index.schema("id").dataType
-    val params = index.select("bridge_mod", "bridge_rounds", "bridge_seed")
-      .head
-    val bRounds = params.getInt(1)
-    val bSeed = params.getInt(2)
+    val (_, bRounds, bSeed) = bucketParams(index)
     val n = index.count()
     val e0 = index.filter(col("is_entry")).count().toInt
     val nB = math.max(1L, n / 2)
-    val bridges =
-      if (bRounds <= 0) null
-      else bridgeAdj(index.select(col("id")), bRounds, bSeed, nB)
-        .groupBy("id").agg(array_sort(collect_set(col("nbr"))).as("__br2"))
-    val entryPts = index.select(col("id"))
-      .orderBy(xxhash64(col("id"), lit(bSeed)), col("id"))
-      .limit(math.max(1, e0))
-      .withColumn("__entry2", lit(true))
     val withB =
-      if (bridges == null)
-        index.withColumn("__br2", array().cast(ArrayType(idType)))
-      else index.join(bridges, Seq("id"), "left")
-    withB.join(broadcast(entryPts), Seq("id"), "left")
+      if (bRounds <= 0) index.withColumn("__br2", noIds(idType))
+      else index.join(linkArrays(bridgeLinks(index.select(col("id")), bRounds, bSeed,
+        nB), "__br2"), Seq("id"), "left")
+    withB.join(broadcast(entryIds(index, bSeed, math.max(1, e0), "__entry2")),
+        Seq("id"), "left")
       .select(col("id"), col("nv"), col("knn"),
-        coalesce(col("__br2"), array().cast(ArrayType(idType)))
-          .as("bridges"),
+        coalesce(col("__br2"), noIds(idType)).as("bridges"),
         coalesce(col("__entry2"), lit(false)).as("is_entry"),
         lit(nB).as("bridge_mod"),
         lit(bRounds).as("bridge_rounds"),
@@ -1223,8 +1230,9 @@ object KnnGraph {
     *  2. heal — each amputated survivor re-ranks over its surviving
     *     edges ∪ the DELETED nodes' former neighbor lists (the
     *     detour-through-the-hole candidates), scored by the stored
-    *     normalized vectors, then `healRounds` delta refine rounds
-    *     seeded at the healed front repair second-order damage,
+    *     normalized vectors, then `healRounds` refine rounds seeded
+    *     at the healed front repair second-order damage (the insert's
+    *     repair path, [[repairFront]]),
     *  3. re-hub — any bridge bucket whose min-id hub was deleted
     *     re-elects the surviving min and re-links its members
     *     (bucket membership recomputes from ids + the persisted
@@ -1261,21 +1269,13 @@ object KnnGraph {
       // pinned: a selective filter that the heal candidates, the re-hub keys
       // and the entry probe re-read
       val deleted = pins.pin(index.filter(isDel(col("id"))))
-      val params = index.select("bridge_mod", "bridge_rounds", "bridge_seed")
-        .head
-      val bMod = params.getLong(0)
-      val bRounds = params.getInt(1)
-      val bSeed = params.getInt(2)
+      val (bMod, bRounds, bSeed) = bucketParams(index)
 
       // heal: the amputated survivors re-rank over their surviving edges and
       // the deleted nodes' former neighbors, then refine. Not pinned: the
       // survivor edges and vectors are an explode and a projection of the
       // input index.
-      val survEdges = survivors
-        .select(col("id"), explode(col("knn")).as("__e"))
-        .select(col("id"), col("__e.nbr").as("nbr"), col("__e.cos").as("cosine"))
-      // post-amputation survivor edge view (never carries a deleted target)
-      val survKnn = survEdges.filter(!isDel(col("nbr")))
+      val survEdges = knnEdges(survivors)
       val amput = survEdges.filter(isDel(col("nbr")))
         .select(col("id").as("s"), col("nbr").as("d"))
       val vecsSurv = survivors.select(col("id"), col("nv").as("__nv"))
@@ -1292,23 +1292,13 @@ object KnnGraph {
           Seq("nbr"))
         .select(col("id"), col("nbr"),
           Similarity.dot(col("__nva"), col("__nvb")).as("cosine"))
-      // pinned: curT's re-rank union and its old-edge join re-read it
-      val touched = pins.pin(amput.select(col("s").as("id")).distinct())
-      val curT = survKnn.join(broadcast(touched), Seq("id"))
-      // loop state, re-read by the heal rounds
-      var delta = pins.loop(topkOf(scoredCand.unionByName(curT), k, idType, dedup = true)
-        .join(curT.select(col("id"), col("nbr")).withColumn("__old", lit(true)),
-          Seq("id", "nbr"), "left")
-        .select(col("id"), col("nbr"), col("cosine"), col("rank"),
-          coalesce(col("__old"), lit(false)).unary_!.as("__new")))
-      if (healRounds > 0) {
-        val maxRev = if (maxReverse > 0) maxReverse else k
-        val nSurv = (if (corpusCount >= 0) corpusCount else index.count()) -
-          delIds.length
-        delta = refineDeltaRounds(pins, delta, survKnn, vecsSurv, nSurv, k, maxRev,
-          seed, 8000, healRounds, DeltaRefineFraction, idType)
-      }
-      val knnNew = knnArrays(delta)
+      // the base is the post-amputation survivor edge view (it never
+      // carries a deleted target)
+      val knnNew = repairFront(pins, scoredCand, amput.select(col("s").as("id")),
+        survEdges.filter(!isDel(col("nbr"))), vecsSurv,
+        (if (corpusCount >= 0) corpusCount else index.count()) - delIds.length,
+        k, if (maxReverse > 0) maxReverse else k, seed, 8000, healRounds,
+        DeltaRefineFraction, idType)
 
       // re-hub: buckets whose min-id hub was deleted re-elect and re-link
       val bridgeAdds = if (bRounds <= 0) emptyAdds(deleted.select("id"), idType)
@@ -1325,14 +1315,11 @@ object KnnGraph {
             .filter(isDel(col("h0"))).select("__b")
           val survMembers = members.filter(!isDel(col("id")))
             .join(broadcast(rehub), Seq("__b"))
-          val e1 = survMembers
+          linkArrays(survMembers
             .join(broadcast(survMembers.groupBy("__b")
               .agg(min(col("id")).as("h1"))), Seq("__b"))
             .filter(col("id") =!= col("h1"))
-            .select(col("id"), col("h1").as("nbr"))
-          bothDirections(e1) // r13 opt: explode, not self-union (see def)
-            .groupBy("id")
-            .agg(array_sort(collect_set(col("nbr"))).as("__adds"))
+            .select(col("id"), col("h1").as("nbr")), "__adds")
         }
 
       val joined = survivors
@@ -1344,12 +1331,9 @@ object KnnGraph {
         if (deleted.filter(col("is_entry")).isEmpty)
           joined.withColumn("__ise", col("is_entry"))
         else {
-          val e0 = index.filter(col("is_entry")).count()
-          val entryFix = survivors.select(col("id"))
-            .orderBy(xxhash64(col("id"), lit(bSeed)), col("id"))
-            .limit(e0.toInt)
-            .withColumn("__entry2", lit(true))
-          joined.join(broadcast(entryFix), Seq("id"), "left")
+          val e0 = index.filter(col("is_entry")).count().toInt
+          joined.join(broadcast(entryIds(survivors, bSeed, e0, "__entry2")),
+              Seq("id"), "left")
             .withColumn("__ise", coalesce(col("__entry2"), lit(false)))
         }
       entried.select(col("id"), col("nv"),
@@ -1357,8 +1341,7 @@ object KnnGraph {
           filter(col("knn"), e => !isDel(e.getField("nbr")))).as("knn"),
         array_sort(array_union(
           filter(col("bridges"), x => !isDel(x)),
-          coalesce(col("__adds"), array().cast(ArrayType(idType)))))
-          .as("bridges"),
+          coalesce(col("__adds"), noIds(idType)))).as("bridges"),
         col("__ise").as("is_entry"),
         col("bridge_mod"), col("bridge_rounds"), col("bridge_seed"))
     }

@@ -640,10 +640,11 @@ object StreamingOps {
     }
   }
 
-  /** Wire a vector stream into a [[GraphInsertState]]: one
-    * insertIncremental per micro-batch via foreachBatch. Returns the
-    * started query; read `state.graph` between/after batches for the
-    * live index.
+  /** Wire a vector stream into a [[GraphInsertState]]: each
+    * micro-batch goes through `GraphInsertState.addBatch` (one
+    * index-native `insertIndexedDelta`) via foreachBatch. Returns the
+    * started query; read `state.index` (or `state.graph`, its k-NN
+    * edges) between/after batches for the live index.
     */
   def graphInsertStream(stream: DataFrame,
                         state: GraphInsertState): org.apache.spark.sql.streaming.StreamingQuery =

@@ -24,5 +24,9 @@ class BenchSpec extends SparkSpec {
     assert(planThrows == 1)
     // every gate, failed or not, reports the codegen compiles it paid
     assert(t.compiles.keySet == Set("q_ok", "q_job_throws", "q_plan_throws"))
+    // and the host steal over its repeats and the load at its start
+    assert(t.stealS.keySet == t.compiles.keySet && t.stealS.values.forall(_ >= 0),
+      t.stealS.toString)
+    assert(t.load1.keySet == t.compiles.keySet, t.load1.toString)
   }
 }
