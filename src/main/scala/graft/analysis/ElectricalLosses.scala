@@ -33,9 +33,8 @@ final class ElectricalLosses(
     monthlyMeter: Option[Boolean] = None,
     seed: Long = 42L) {
 
-  require(!uq || numSim >= 1, s"numSim must be >= 1 with uq, got $numSim")
-  require(correctionThreshold._1 <= correctionThreshold._2,
-    s"correctionThreshold must be (lo, hi) with lo <= hi, got $correctionThreshold")
+  MonteCarlo.requireSims(uq, numSim)
+  MonteCarlo.requireRange("correctionThreshold", correctionThreshold)
 
   /** Monthly-meter handling auto-detects from the meter frequency metadata
     * unless overridden (electrical_losses.py:128-130).
@@ -44,11 +43,8 @@ final class ElectricalLosses(
     monthlyMeter.getOrElse(plant.metadata.meterFreqSeconds >= 2592000L)
 
   final case class Result(losses: Array[Double]) {
-    def mean: Double = losses.sum / losses.length
-    def std: Double = {
-      val m = mean
-      math.sqrt(losses.map(l => (l - m) * (l - m)).sum / (losses.length - 1).max(1))
-    }
+    def mean: Double = MonteCarlo.mean(losses)
+    def std: Double = MonteCarlo.std(losses)
   }
 
   private val freqS = plant.metadata.scadaFreqSeconds
@@ -81,28 +77,23 @@ final class ElectricalLosses(
       .filter(col("count") === expected)
   }
 
-  def run(): Result = {
-    val rng = new scala.util.Random(seed)
-    val sims = if (uq) numSim else 1
-
+  /** (turbine, meter, availability) energy rows to compare: one row of
+    * sums over the fully-reporting days, availability 1 (daily meter), or
+    * one row per month of availability-corrected energy
+    * (electrical_losses.py:281-330).
+    */
+  private def energyRows: Array[(Double, Double, Double)] =
     if (!isMonthlyMeter) {
-      // daily path: inner-join fully-reporting days, sum, MC-scale
+      // daily path: inner-join fully-reporting days, sum
       val expectedScada = 24.0 * 3600.0 / freqS * nTurbines
       val combined = scadaDaily.filter(col("count") === expectedScada)
         .select("day", "WTUR_SupWh")
         .join(meterDaily.select("day", "MMTR_SupWh"), Seq("day"), "inner")
         .agg(sum(col("WTUR_SupWh")).as("turbine"), sum(col("MMTR_SupWh")).as("meter"))
         .head()
-      val (turbine, meter) = (combined.getDouble(0), combined.getDouble(1))
-      val losses = Array.fill(sims) {
-        val mf = if (uq) 1.0 + rng.nextGaussian() * uncertaintyMeter else 1.0
-        val sf = if (uq) 1.0 + rng.nextGaussian() * uncertaintyScada else 1.0
-        1.0 - (meter * mf) / (turbine * sf)
-      }
-      Result(losses)
+      Array((combined.getDouble(0), combined.getDouble(1), 1.0))
     } else {
-      // monthly path: corrected daily energy to months, availability filter
-      // per sampled threshold (electrical_losses.py:281-330)
+      // monthly path: corrected daily energy to months
       val monthly = scadaDaily
         .groupBy(date_trunc("month", col("day")).as("month"))
         .agg(sum(col("corrected_energy")).as("WTUR_SupWh"), sum(col("count")).as("count"))
@@ -112,23 +103,32 @@ final class ElectricalLosses(
       val meterMonthly = plant.meterDf
         .groupBy(date_trunc("month", col("time")).as("month"))
         .agg(sum(col("MMTR_SupWh")).as("MMTR_SupWh"))
-      val rows = monthly.join(meterMonthly, Seq("month"), "inner")
+      monthly.join(meterMonthly, Seq("month"), "inner")
         .select("WTUR_SupWh", "MMTR_SupWh", "percent")
         .collect()
         .map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2)))
-      val losses = Array.fill(sims) {
-        val mf = if (uq) 1.0 + rng.nextGaussian() * uncertaintyMeter else 1.0
-        val sf = if (uq) 1.0 + rng.nextGaussian() * uncertaintyScada else 1.0
-        val thr = if (uq)
-          correctionThreshold._1 + rng.nextDouble() *
-            (correctionThreshold._2 - correctionThreshold._1)
-        else correctionThreshold._2
-        val kept = rows.filter(_._3 >= thr)
-        val turbine = kept.map(_._1).sum
-        val meter = kept.map(_._2).sum
-        1.0 - (meter * mf) / (turbine * sf)
-      }
-      Result(losses)
     }
+
+  /** MC-scaled losses over [[energyRows]]. A monthly meter also filters
+    * the months by availability, at a threshold sampled per draw under UQ;
+    * the daily rows already are the fully-reporting days and draw none.
+    */
+  def run(): Result = {
+    val rng = new scala.util.Random(seed)
+    val rows = energyRows
+    Result(Array.fill(if (uq) numSim else 1) {
+      val mf = if (uq) MonteCarlo.jitter(rng, uncertaintyMeter) else 1.0
+      val sf = if (uq) MonteCarlo.jitter(rng, uncertaintyScada) else 1.0
+      val kept =
+        if (!isMonthlyMeter) rows
+        else {
+          val thr = if (uq)
+            correctionThreshold._1 + rng.nextDouble() *
+              (correctionThreshold._2 - correctionThreshold._1)
+          else correctionThreshold._2
+          rows.filter(_._3 >= thr)
+        }
+      1.0 - (kept.map(_._2).sum * mf) / (kept.map(_._1).sum * sf)
+    })
   }
 }

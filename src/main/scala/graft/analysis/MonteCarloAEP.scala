@@ -75,13 +75,11 @@ final class MonteCarloAEP(
 
   require(Seq("MS", "ME", "D", "h").contains(timeResolution), s"bad timeResolution $timeResolution")
   require(Seq("lin", "gam", "gbt", "rf").contains(regModel), s"bad regModel $regModel")
-  require(!uq || numSim >= 1, s"numSim must be >= 1 with uq, got $numSim")
-  require(windinessYears._1 >= 1 && windinessYears._1 <= windinessYears._2,
-    s"windinessYears must be (lo, hi) with 1 <= lo <= hi, got $windinessYears")
-  require(lossMaxPct._1 <= lossMaxPct._2,
-    s"lossMaxPct must be (lo, hi) with lo <= hi, got $lossMaxPct")
-  require(uncertaintyOutlier._1 <= uncertaintyOutlier._2,
-    s"uncertaintyOutlier must be (lo, hi) with lo <= hi, got $uncertaintyOutlier")
+  MonteCarlo.requireSims(uq, numSim)
+  MonteCarlo.requireRange("windinessYears", windinessYears)
+  require(windinessYears._1 >= 1, s"windinessYears must start at 1 year or more, got $windinessYears")
+  MonteCarlo.requireRange("lossMaxPct", lossMaxPct)
+  MonteCarlo.requireRange("uncertaintyOutlier", uncertaintyOutlier)
   private val isMonthly = timeResolution == "MS" || timeResolution == "ME"
   // monthly data has too few points for the nonlinear models (aep.py:257-259)
   require(!isMonthly || regModel == "lin",
@@ -124,21 +122,11 @@ final class MonteCarloAEP(
 
   final case class Result(aepGwh: Array[Double], availPct: Array[Double],
                           curtPct: Array[Double], iav: Array[Double]) {
-    private def stats(a: Array[Double]) = {
-      val m = a.sum / a.length
-      val s = math.sqrt(a.map(x => (x - m) * (x - m)).sum / (a.length - 1).max(1))
-      (m, s)
-    }
-    def aepMean: Double = stats(aepGwh)._1
-    def aepStd: Double = stats(aepGwh)._2
+    def aepMean: Double = MonteCarlo.mean(aepGwh)
+    def aepStd: Double = MonteCarlo.std(aepGwh)
   }
 
-  private def products: Seq[String] = reanalysisProducts match {
-    case Some(ps) =>
-      ps.foreach(p => require(plant.reanalysis.contains(p), s"unknown reanalysis product '$p'"))
-      ps.sorted
-    case None => plant.reanalysis.keys.toSeq.sorted
-  }
+  private lazy val products = MonteCarlo.products(plant, reanalysisProducts)
   private def needsExtras: Boolean = regTemperature || regWindDirection
 
   /** Density-corrected per-product wind speed resampled to the analysis
@@ -336,8 +324,7 @@ final class MonteCarloAEP(
       if (ws.size < 2) Seq.empty
       else {
         val med = Fitting.percentileSorted(ws.sorted.toArray, 0.5)
-        val m = ws.sum / ws.size
-        val sd = math.sqrt(ws.map(x => (x - m) * (x - m)).sum / (ws.size - 1))
+        val sd = MonteCarlo.std(ws)
         rs.filter(r => math.abs(r.ws(product) - med) > threshold * sd).map(_.epochSec)
       }
     }.toSet
@@ -403,22 +390,19 @@ final class MonteCarloAEP(
     val iavA = new Array[Double](sims)
 
     for (n <- 0 until sims) {
-      val product = products(rng.nextInt(products.size))
-      val meterFrac = if (uq) 1.0 + rng.nextGaussian() * uncertaintyMeter else 1.0
-      val lossFrac = if (uq) 1.0 + rng.nextGaussian() * uncertaintyLosses else 1.0
-      val years = if (uq)
-        windinessYears._1 + rng.nextInt(windinessYears._2 - windinessYears._1 + 1)
-      else windinessYears._2
-      val lossThreshold = (if (uq)
-        lossMaxPct._1 + rng.nextInt(lossMaxPct._2 - lossMaxPct._1 + 1)
-      else lossMaxPct._2) / 100.0
+      val product = MonteCarlo.pick(rng, products)
+      val meterFrac = if (uq) MonteCarlo.jitter(rng, uncertaintyMeter) else 1.0
+      val lossFrac = if (uq) MonteCarlo.jitter(rng, uncertaintyLosses) else 1.0
+      val years =
+        if (uq) MonteCarlo.inclusive(rng, windinessYears._1, windinessYears._2)
+        else windinessYears._2
+      val lossThreshold =
+        (if (uq) MonteCarlo.inclusive(rng, lossMaxPct._1, lossMaxPct._2) else lossMaxPct._2) / 100.0
       // sampled Huber/bin threshold (aep.py:706-715): uniform on a 0.1 grid
       val outlierThreshold =
         if (!outlierDetection) 0.0
-        else if (uq) {
-          val steps = ((uncertaintyOutlier._2 - uncertaintyOutlier._1) * 10).round.toInt
-          uncertaintyOutlier._1 + rng.nextInt(steps + 1) / 10.0
-        } else (uncertaintyOutlier._1 + uncertaintyOutlier._2) / 2.0
+        else if (uq) MonteCarlo.onGrid(rng, uncertaintyOutlier, 10)
+        else (uncertaintyOutlier._1 + uncertaintyOutlier._2) / 2.0
 
       val valid = filterOutliers(agg, product, lossThreshold, outlierThreshold)
       // MC-scale + 30-day normalize, then bootstrap + regression (aep.py:842-927)
@@ -458,13 +442,11 @@ final class MonteCarloAEP(
       }
       val availLt = availSum / grossSum
       val curtLt = curtSum / grossSum
-      val iav = if (annual.length > 1) {
-        val m = annual.sum / annual.length
-        math.sqrt(annual.map(a => (a - m) * (a - m)).sum / (annual.length - 1)) / m
-      } else 0.0
+      val iav =
+        if (annual.length > 1) MonteCarlo.std(annual) / MonteCarlo.mean(annual) else 0.0
 
       val aep = grossSum / years * (1.0 - availLt)
-      aepA(n) = if (uq) aep * (1.0 + rng.nextGaussian() * iav) else aep
+      aepA(n) = if (uq) aep * MonteCarlo.jitter(rng, iav) else aep
       availA(n) = availLt
       curtA(n) = curtLt
       iavA(n) = iav

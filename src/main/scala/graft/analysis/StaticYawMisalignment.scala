@@ -22,9 +22,13 @@ import graft.plant.PlantData
   * cosine-exponent fit (cos_curve, yaw_misalignment.py:59-71).
   *
   * Scale design:
-  *  - The power-curve outlier filter is `Flags.binFilter`'s median/MAD
-  *    filter: one aggregation per turbine and power bin over each group's
-  *    sorted wind speeds ([[Flags.sortedValues]]).
+  *  - One power-curve outlier filter, [[simFrame]], serves the oracle-gated
+  *    [[vaneBins]] and [[run]] with or without UQ: a median/MAD bin filter
+  *    on the [[Flags]] kernels, one aggregation per max-power-filter value,
+  *    turbine and power bin over each group's sorted wind speeds
+  *    ([[Flags.sortedValues]]). Without UQ it is one draw with weight 1.
+  *    The no-UQ aggregate has no `sim` key: the key would re-partition it,
+  *    and the driver-side fit depends on the order the bins are collected in.
   *  - The ws slice and the vane bin are computed once per row, before the
   *    UQ explode; nothing per-row is recomputed per simulation.
   *  - Under UQ the power-bin statistics are computed per DISTINCT sampled
@@ -59,11 +63,9 @@ final class StaticYawMisalignment(
     numSim: Int = 20,
     seed: Long = 42L) {
 
-  require(!uq || numSim >= 1, s"numSim must be >= 1 with uq, got $numSim")
-  require(maxPowerFilter._1 <= maxPowerFilter._2,
-    s"maxPowerFilter must be (lo, hi) with lo <= hi, got $maxPowerFilter")
-  require(powerBinMadThresh._1 <= powerBinMadThresh._2,
-    s"powerBinMadThresh must be (lo, hi) with lo <= hi, got $powerBinMadThresh")
+  MonteCarlo.requireSims(uq, numSim)
+  MonteCarlo.requireRange("maxPowerFilter", maxPowerFilter)
+  MonteCarlo.requireRange("powerBinMadThresh", powerBinMadThresh)
 
   final case class Result(
       avgVaneAngleByTurbine: Map[String, Double],
@@ -100,12 +102,12 @@ final class StaticYawMisalignment(
     when(col("p_frac") > minPowerFilter && col("p_frac") <= pf,
       ceil((col("p_frac") - minPowerFilter) / ((pf - minPowerFilter) / numPowerBins)))
 
-  /** Shared cosine-fit-input aggregation tail (yaw_misalignment.py:545-563):
-    * target ws-bin slice, optional power-coefficient normalization,
-    * weighted per-vane-bin power/vane statistics over [[normalBase]]'s bins.
-    * Both the oracle-gated [[vaneBins]] (weight = 1) and the UQ bootstrap
-    * path in [[run]] (weight = Poisson multiplicity, extra `sim` key)
-    * consume THIS tail — the gated code is the only binning implementation.
+  /** Cosine-fit-input aggregation (yaw_misalignment.py:545-563) over
+    * [[simFrame]]'s rows: target ws-bin slice, optional power-coefficient
+    * normalization, weighted per-vane-bin power/vane statistics over
+    * [[normalBase]]'s bins. The oracle-gated [[vaneBins]] is its one-draw,
+    * weight-1 case; UQ weighs each row by its Poisson multiplicity in each
+    * draw and adds the `sim` key.
     */
   private def binAggregate(df: DataFrame, weight: Column, keys: Seq[String]): DataFrame =
     // ws bins are CENTERED on wsBins values: slice [c - w/2, c + w/2)
@@ -130,58 +132,47 @@ final class StaticYawMisalignment(
     * the cosine-fit INPUTS (yaw_misalignment.py:545-563) for one fixed
     * parameter set: pitch filter, median/MAD power-curve outlier removal at
     * the given max-power-filter fraction and MAD threshold, target ws-bin
-    * slice, vane binning. [[run]] consumes this directly in the no-UQ path.
+    * slice, vane binning: the one-draw case of the filter and aggregate
+    * [[run]] takes under UQ, so the oracle gate covers the filter every run
+    * applies. [[run]] consumes this directly without UQ.
     */
-  def vaneBins(maxPf: Double = 0.95, madThresh: Double = 7.0): DataFrame = {
-    // the power bins of powerBin(maxPf): right-closed, width
-    // (maxPf - minPowerFilter) / numPowerBins from minPowerFilter
-    val kept = Flags.binFilter(normalBase, "p_frac", "WMET_HorWdSpd",
-        binWidth = (maxPf - minPowerFilter) / numPowerBins, threshold = madThresh,
-        centerType = "median", deviationType = "mad", flagCol = "__outlier",
-        binMin = Some(minPowerFilter), binMax = Some(maxPf), groupCols = Seq("asset_id"))
-      .filter(!col("__outlier"))
+  def vaneBins(maxPf: Double = 0.95, madThresh: Double = 7.0): DataFrame =
     // weight 1.0: sum(x*1.0)/sum(1.0) is bit-identical to avg(x), and n is
     // an exact integer-valued double -> restore the count-typed column
-    binAggregate(kept, lit(1.0), Nil)
+    binAggregate(simFrame(normalBase, Seq(maxPf), Seq(madThresh)), lit(1.0), Nil)
       .withColumn("n", col("n").cast("long"))
-  }
 
   def run(): Result = {
     val base = normalBase
 
     // (sim, turbine, ws_bin, vane_bin) weighted mean power performance +
     // vane (yaw_misalignment.py:545-563); ONE shuffle for all simulations.
-    // Both branches consume the shared [[binAggregate]] tail: without UQ via
-    // [[vaneBins]] (so the oracle-gated stage IS the analysis path), with UQ
-    // via Poisson bootstrap weights and an extra `sim` key.
-    val binned =
-      if (!uq)
-        vaneBins()
-          .select(lit(0).as("sim"), col("asset_id"), col("ws_bin_center"),
-            col("vane_bin"), col("perf_mean"),
-            col("n").cast("double").as("n"), col("vane_mean"))
-          .collect()
+    // Both branches filter through [[simFrame]] and aggregate through
+    // [[binAggregate]]. Without UQ the one draw at the reference's fixed
+    // defaults 0.95 / 7.0 is [[vaneBins]], grouped without a `sim` key: the
+    // key would change the order the bins are collected in, and with it
+    // the summation order of the driver-side fit.
+    val binned = (
+      if (!uq) vaneBins().withColumn("sim", lit(0))
       else {
         // per-sim thresholds on the reference's randint grids
         // (yaw_misalignment.py:434-444): hundredths of rated power, whole
         // MADs; all filter draws first, then all MAD draws
         val rng = new scala.util.Random(seed)
-        def draws(range: (Double, Double), scale: Double): Seq[Int] = {
-          val lo = math.round(range._1 * scale).toInt
-          val hi = math.round(range._2 * scale).toInt
-          Seq.fill(numSim)(lo + rng.nextInt(hi - lo + 1))
+        def draws(range: (Double, Double), scale: Double): Seq[Double] = {
+          val (lo, hi) = (math.round(range._1 * scale).toInt, math.round(range._2 * scale).toInt)
+          Seq.fill(numSim)(MonteCarlo.inclusive(rng, lo, hi) / scale)
         }
-        val simPf = draws(maxPowerFilter, 100).map(_ / 100.0)
-        val simMad = draws(powerBinMadThresh, 1).map(_.toDouble)
+        val simPf = draws(maxPowerFilter, 100)
+        val simMad = draws(powerBinMadThresh, 1)
         binAggregate(simFrame(base, simPf, simMad),
-            poisson1(
-              (pmod(xxhash64(col("time"), col("asset_id"), col("sim"), lit(seed)),
-                lit(1000000L)) / 1000000.0)).cast("double"),
-            Seq("sim"))
-          .select(col("sim"), col("asset_id"), col("ws_bin_center"),
-            col("vane_bin"), col("perf_mean"), col("n"), col("vane_mean"))
-          .collect()
-      }
+          poisson1((pmod(xxhash64(col("time"), col("asset_id"), col("sim"), lit(seed)),
+            lit(1000000L)) / 1000000.0)).cast("double"),
+          Seq("sim"))
+      })
+      .select(col("sim"), col("asset_id"), col("ws_bin_center"), col("vane_bin"),
+        col("perf_mean"), col("n").cast("double").as("n"), col("vane_mean"))
+      .collect()
 
     // driver-side per (sim, turbine, ws_bin): slice mean vane over ALL vane
     // bins (yaw_misalignment.py:554), cosine fit over qualifying bins, yaw
@@ -207,15 +198,8 @@ final class StaticYawMisalignment(
         }
       }.toMap
 
-    def stats(vs: Iterable[Double]): (Double, Double) = {
-      val n = vs.size
-      val m = vs.sum / n
-      val sd = if (n < 2) 0.0
-        else math.sqrt(vs.map(v => (v - m) * (v - m)).sum / (n - 1))
-      (m, sd)
-    }
     val byBin = perSim.groupBy { case ((_, t, b), _) => (t, b) }
-      .map { case (k, m) => k -> stats(m.values) }
+      .map { case (k, m) => k -> (MonteCarlo.mean(m.values), MonteCarlo.std(m.values)) }
 
     // overall per-turbine mean vane angle (over the unweighted frame)
     val avgVane = base.groupBy("asset_id")
@@ -228,7 +212,9 @@ final class StaticYawMisalignment(
   /** `base` exploded into one row per simulation, with that simulation's
     * power-curve outlier filter applied: draw n keeps a row unless its wind
     * speed lies more than `simMad(n)` MADs from the median of its turbine's
-    * power bin under max-power filter `simPf(n)`.
+    * power bin under max-power filter `simPf(n)`. The bins are right-closed
+    * and the keep rule is `Flags.binFilter`'s (median center, MAD spread,
+    * both directions), so one draw keeps what that filter keeps.
     */
   private def simFrame(base: DataFrame, simPf: Seq[Double], simMad: Seq[Double]): DataFrame = {
     // median/MAD of wind speed per (max-power-filter value, turbine, power
@@ -259,5 +245,5 @@ final class StaticYawMisalignment(
   /** Overall yaw per turbine = mean of per-ws-bin offsets. */
   def overall(result: Result): Map[String, Double] =
     result.yawByTurbineAndBin.groupBy(_._1._1)
-      .map { case (t, m) => t -> m.values.sum / m.size }
+      .map { case (t, m) => t -> MonteCarlo.mean(m.values) }
 }

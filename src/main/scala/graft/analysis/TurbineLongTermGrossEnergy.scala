@@ -42,17 +42,14 @@ final class TurbineLongTermGrossEnergy(
     numSim: Int = 20,
     seed: Long = 42L) {
 
-  require(!uq || numSim >= 1, s"numSim must be >= 1 with uq, got $numSim")
-  require(maxPowerFilter._1 <= maxPowerFilter._2,
-    s"maxPowerFilter must be (lo, hi) with lo <= hi, got $maxPowerFilter")
-  require(windBinThreshold._1 <= windBinThreshold._2,
-    s"windBinThreshold must be (lo, hi) with lo <= hi, got $windBinThreshold")
-  require(correctionThreshold._1 <= correctionThreshold._2,
-    s"correctionThreshold must be (lo, hi) with lo <= hi, got $correctionThreshold")
+  MonteCarlo.requireSims(uq, numSim)
+  MonteCarlo.requireRange("maxPowerFilter", maxPowerFilter)
+  MonteCarlo.requireRange("windBinThreshold", windBinThreshold)
+  MonteCarlo.requireRange("correctionThreshold", correctionThreshold)
 
   final case class Result(plantGrossGwhPerYear: Array[Double],
                           perTurbine: Map[String, Double]) {
-    def mean: Double = plantGrossGwhPerYear.sum / plantGrossGwhPerYear.length
+    def mean: Double = MonteCarlo.mean(plantGrossGwhPerYear)
   }
 
   private val freqS = plant.metadata.scadaFreqSeconds
@@ -154,16 +151,13 @@ final class TurbineLongTermGrossEnergy(
       .withColumn("wd", Met.windDirection(col("u"), col("v")))
   }
 
+  // the products a run cycles through (no UQ) or draws from (UQ)
+  private lazy val products = MonteCarlo.products(plant, reanalysisProducts)
+
   def run(): Result = {
     val rng = new scala.util.Random(seed)
     val turbines = plant.turbineIds
     val rated = plant.ratedPower
-    val products = reanalysisProducts
-      .map { ps =>
-        ps.foreach(p => require(plant.reanalysis.contains(p), s"unknown reanalysis product '$p'"))
-        ps.sorted
-      }
-      .getOrElse(plant.reanalysis.keys.toSeq.sorted)
 
     // per-simulation filter thresholds: uniform within the tuple under UQ
     // (rounded to 0.01 so the daily-table memo below stays bounded),
@@ -219,8 +213,8 @@ final class TurbineLongTermGrossEnergy(
     for (n <- 0 until sims) {
       val cfg = (sample(maxPowerFilter), sample(windBinThreshold),
         sample(correctionThreshold))
-      val scadaFrac = if (uq) 1.0 + rng.nextGaussian() * uncertaintyScada else 1.0
-      val product = products(if (uq) rng.nextInt(products.size) else n % products.size)
+      val scadaFrac = if (uq) MonteCarlo.jitter(rng, uncertaintyScada) else 1.0
+      val product = if (uq) MonteCarlo.pick(rng, products) else products(n % products.size)
       val joined = productData(cfg, product)
       val perTurbine = turbines.map { t =>
         val rows = joined.getOrElse(t, Array.empty)

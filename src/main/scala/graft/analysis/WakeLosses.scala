@@ -75,17 +75,12 @@ final class WakeLosses(
   require(Seq("scada", "tower").contains(wdRef), s"bad wdRef $wdRef")
   require(Seq("mean", "median", "max").contains(freestreamPowerMethod))
   require(Seq("mean", "median", "max").contains(freestreamWsMethod))
-  require(!uq || numSim >= 1, s"numSim must be >= 1 with uq, got $numSim")
-  require(uncertaintySectorWidth._1 <= uncertaintySectorWidth._2,
-    s"uncertaintySectorWidth must be (lo, hi) with lo <= hi, got $uncertaintySectorWidth")
-  require(uncertaintyMadThresh._1 <= uncertaintyMadThresh._2,
-    s"uncertaintyMadThresh must be (lo, hi) with lo <= hi, got $uncertaintyMadThresh")
-  require(uncertaintyWsStart._1 <= uncertaintyWsStart._2,
-    s"uncertaintyWsStart must be (lo, hi) with lo <= hi, got $uncertaintyWsStart")
-  require(uncertaintyMaxPower._1 <= uncertaintyMaxPower._2,
-    s"uncertaintyMaxPower must be (lo, hi) with lo <= hi, got $uncertaintyMaxPower")
-  require(numYearsLt._1 <= numYearsLt._2,
-    s"numYearsLt must be (lo, hi) with lo <= hi, got $numYearsLt")
+  MonteCarlo.requireSims(uq, numSim)
+  MonteCarlo.requireRange("uncertaintySectorWidth", uncertaintySectorWidth)
+  MonteCarlo.requireRange("uncertaintyMadThresh", uncertaintyMadThresh)
+  MonteCarlo.requireRange("uncertaintyWsStart", uncertaintyWsStart)
+  MonteCarlo.requireRange("uncertaintyMaxPower", uncertaintyMaxPower)
+  MonteCarlo.requireRange("numYearsLt", numYearsLt)
 
   final case class Result(
       porLossPlant: Double, porLossByTurbine: Map[String, Double],
@@ -375,13 +370,10 @@ final class WakeLosses(
       ltByT = turbineBins.flatMap { case (t, bs) => ltLoss(bs, 1.0).map(t -> _) })
   }
 
+  // the products a run averages (no UQ) or draws from (UQ)
+  private lazy val products = MonteCarlo.products(plant, reanalysisProducts)
+
   def run(): Result = Pins.scoped { pins =>
-    val products = reanalysisProducts
-      .map { ps =>
-        ps.foreach(p => require(plant.reanalysis.contains(p), s"unknown reanalysis product '$p'"))
-        ps.sorted
-      }
-      .getOrElse(plant.reanalysis.keys.toSeq.sorted)
     val base0 = plant.scadaDf
       .select(col("time"), col("asset_id"), col("WTUR_W"), col("WMET_HorWdSpd"),
         col("WMET_HorWdDir"))
@@ -397,33 +389,23 @@ final class WakeLosses(
       else {
         val rng = new scala.util.Random(seed)
         (0 until numSim).map { _ =>
-          val p = products(rng.nextInt(products.size))
-          val sector = uncertaintySectorWidth._1 +
-            rng.nextInt(uncertaintySectorWidth._2 - uncertaintySectorWidth._1 + 1)
-          val mad = uncertaintyMadThresh._1 +
-            rng.nextInt(uncertaintyMadThresh._2 - uncertaintyMadThresh._1 + 1)
-          val ws0 = uncertaintyWsStart._1 +
-            rng.nextInt(((uncertaintyWsStart._2 - uncertaintyWsStart._1) * 10).round.toInt + 1) / 10.0
-          val mpf = uncertaintyMaxPower._1 +
-            rng.nextInt(((uncertaintyMaxPower._2 - uncertaintyMaxPower._1) * 100).round.toInt + 1) / 100.0
-          val yrs = numYearsLt._1 +
-            rng.nextInt(numYearsLt._2 - numYearsLt._1 + 1)
+          val p = MonteCarlo.pick(rng, products)
+          val sector = MonteCarlo.inclusive(rng, uncertaintySectorWidth._1, uncertaintySectorWidth._2)
+          val mad = MonteCarlo.inclusive(rng, uncertaintyMadThresh._1, uncertaintyMadThresh._2)
+          val ws0 = MonteCarlo.onGrid(rng, uncertaintyWsStart, 10)
+          val mpf = MonteCarlo.onGrid(rng, uncertaintyMaxPower, 100)
+          val yrs = MonteCarlo.inclusive(rng, numYearsLt._1, numYearsLt._2)
           runOnce(base, p, sector.toDouble, mad.toDouble, ws0, mpf, yrs)
         }
       }
-    def meanOf(xs: Seq[Double]) = xs.sum / xs.size
-    def stdOf(xs: Seq[Double]) = {
-      val m = meanOf(xs)
-      math.sqrt(xs.map(x => (x - m) * (x - m)).sum / math.max(1, xs.size - 1))
-    }
     def avgMap(ms: Seq[Map[String, Double]]): Map[String, Double] =
-      ms.flatten.groupBy(_._1).map { case (k, vs) => k -> meanOf(vs.map(_._2).toSeq) }
+      ms.flatten.groupBy(_._1).map { case (k, vs) => k -> MonteCarlo.mean(vs.map(_._2)) }
     Result(
-      porLossPlant = meanOf(runs.map(_.por)),
+      porLossPlant = MonteCarlo.mean(runs.map(_.por)),
       porLossByTurbine = avgMap(runs.map(_.porByT)),
-      ltLossPlant = meanOf(runs.map(_.lt)),
+      ltLossPlant = MonteCarlo.mean(runs.map(_.lt)),
       ltLossByTurbine = avgMap(runs.map(_.ltByT)),
-      porLossStd = if (runs.size > 1) stdOf(runs.map(_.por)) else 0.0,
-      ltLossStd = if (runs.size > 1) stdOf(runs.map(_.lt)) else 0.0)
+      porLossStd = MonteCarlo.std(runs.map(_.por)),
+      ltLossStd = MonteCarlo.std(runs.map(_.lt)))
   }
 }

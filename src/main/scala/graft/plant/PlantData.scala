@@ -138,42 +138,42 @@ object PlantData {
 
 /** Declarative validation against ANALYSIS_REQUIREMENTS (plant.py:37-145,
   * schema/metadata.py:44-179): column presence, dtype, and frequency checks,
-  * accumulated into one error list.
+  * accumulated into one error list. The reanalysis columns are checked in
+  * every product, and the SCADA frequency is inferred at most once per
+  * validation, however many listed analysis types check it.
   */
 object Validator {
   import graft.operators.Timeseries
 
   def validate(pd: PlantData): Seq[String] = {
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
+    lazy val scadaFreqSeconds: Long = Timeseries.inferFrequencySeconds(
+        pd.scadaDf.select("time", "asset_id"), "time", Seq("asset_id"))
+      .agg(max("freq_seconds")).head().getLong(0)
     for (at <- pd.analysisTypes; req <- AnalysisRequirements.requirements.get(at)) {
       for ((bucket, cols) <- req.columns) {
-        val dfOpt: Option[DataFrame] = bucket match {
-          case "scada" => pd.scada
-          case "meter" => pd.meter
-          case "curtail" => pd.curtail
-          case "asset" => pd.asset
-          case "reanalysis" => pd.reanalysis.values.headOption
-          case _ => None
+        // (label, frame) of each table the bucket names
+        val tables: Seq[(String, DataFrame)] = bucket match {
+          case "scada" => pd.scada.map(bucket -> _).toSeq
+          case "meter" => pd.meter.map(bucket -> _).toSeq
+          case "curtail" => pd.curtail.map(bucket -> _).toSeq
+          case "asset" => pd.asset.map(bucket -> _).toSeq
+          case "reanalysis" =>
+            pd.reanalysis.toSeq.sortBy(_._1).map { case (p, df) => s"reanalysis product '$p'" -> df }
+          case _ => Nil
         }
-        dfOpt match {
-          case None => errors += s"[$at] bucket '$bucket' missing"
-          case Some(df) =>
-            val have = df.columns.toSet
-            cols.filterNot(have).foreach(c => errors += s"[$at] $bucket missing column '$c'")
+        if (tables.isEmpty) errors += s"[$at] bucket '$bucket' missing"
+        for ((label, df) <- tables) {
+          val have = df.columns.toSet
+          cols.filterNot(have).foreach(c => errors += s"[$at] $label missing column '$c'")
         }
       }
       // frequency check: inferred sampling interval must be one of the
       // acceptable frequencies or finer (plant.py:148-191)
       val acceptable = req.frequency.flatMap(AnalysisRequirements.freqSeconds.get)
-      if (acceptable.nonEmpty) {
-        for (bucketName <- req.columns.keys if bucketName == "scada" && pd.scada.isDefined) {
-          val inferred = Timeseries.inferFrequencySeconds(
-            pd.scada.get.select("time", "asset_id"), "time", Seq("asset_id"))
-            .agg(max("freq_seconds")).head().getLong(0)
-          if (inferred > acceptable.max)
-            errors += s"[$at] scada frequency ${inferred}s coarser than required ${acceptable.max}s"
-        }
-      }
+      if (acceptable.nonEmpty && req.columns.contains("scada") && pd.scada.isDefined &&
+          scadaFreqSeconds > acceptable.max)
+        errors += s"[$at] scada frequency ${scadaFreqSeconds}s coarser than required ${acceptable.max}s"
     }
     errors.toSeq
   }

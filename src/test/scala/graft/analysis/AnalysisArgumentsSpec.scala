@@ -3,9 +3,9 @@ package graft.analysis
 import graft.SparkSpec
 
 /** The Monte-Carlo arguments of AEP, yaw, electrical losses, TIE and
-  * wake: a degenerate draw count or sampling range is a typed error
-  * naming its argument, never a NaN result, and yaw's UQ draws follow the
-  * ranges they are given.
+  * wake: a degenerate draw count, sampling range or product list is a
+  * typed error naming its argument, never a NaN result, and yaw's UQ draws
+  * follow the ranges they are given.
   */
 class AnalysisArgumentsSpec extends SparkSpec {
 
@@ -45,6 +45,13 @@ class AnalysisArgumentsSpec extends SparkSpec {
     rejects("uncertaintyWsStart")(new WakeLosses(plant, uncertaintyWsStart = (8.0, 4.0)))
     rejects("uncertaintyMaxPower")(new WakeLosses(plant, uncertaintyMaxPower = (0.98, 0.92)))
     rejects("numYearsLt")(new WakeLosses(plant, numYearsLt = (20, 10)))
+  }
+
+  test("an empty reanalysisProducts list is rejected by wake, TIE and AEP") {
+    rejects("reanalysisProducts")(new WakeLosses(plant, reanalysisProducts = Some(Nil)).run())
+    rejects("reanalysisProducts")(
+      new TurbineLongTermGrossEnergy(plant, reanalysisProducts = Some(Nil)).run())
+    rejects("reanalysisProducts")(new MonteCarloAEP(plant, reanalysisProducts = Some(Nil)).run())
   }
 
   test("yaw UQ draws its outlier filter from maxPowerFilter and powerBinMadThresh") {

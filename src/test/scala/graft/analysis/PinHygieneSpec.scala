@@ -12,11 +12,12 @@ import graft.operators.{Dedup, KnnGraph, LinkGraph, Sampling, Similarity, Suffix
 import graft.streaming.StreamingOps
 
 /** The analyses release every RDD they persist, on return and on a throw,
-  * and TIE's, wake's and AEP's job counts stay bounded. The link-graph, dedup and
-  * Bradley–Terry loops, on their distributed paths, and the graph-index,
-  * PQ, resampling and image-dedup operators leave persisted only the RDDs
-  * their results read; a streamed graph insert leaves one per batch. The
-  * link-graph and Bradley–Terry operators run the caller's edge plan once.
+  * and TIE's, wake's, AEP's, yaw's and electrical losses' job counts stay
+  * bounded. The link-graph, dedup and Bradley–Terry loops, on their
+  * distributed paths, and the graph-index, PQ, resampling and image-dedup
+  * operators leave persisted only the RDDs their results read; a streamed
+  * graph insert leaves one per batch. The link-graph and Bradley–Terry
+  * operators run the caller's edge plan once.
   */
 class PinHygieneSpec extends SparkSpec {
 
@@ -95,6 +96,30 @@ class PinHygieneSpec extends SparkSpec {
     val jobs = ListenerBus.countJobs(spark.sparkContext)(new MonteCarloAEP(plant,
       timeResolution = "D", uq = true, numSim = 50, windinessYears = (1, 2)).run())
     assert(jobs <= 12, s"$jobs jobs")
+  }
+
+  test("StaticYawMisalignment runs in a bounded number of Spark jobs, with and without UQ") {
+    // the outlier filter's bin statistics, one binned aggregate (keyed by
+    // draw under UQ) and the per-turbine mean vane angle, however many
+    // draws (6 jobs with and without UQ)
+    plant.turbineIds; plant.ratedPower
+    val plain = ListenerBus.countJobs(spark.sparkContext)(
+      new StaticYawMisalignment(plant, minVaneBinCount = 10).run())
+    assert(plain <= 6, s"$plain jobs without UQ")
+    val uq = ListenerBus.countJobs(spark.sparkContext)(
+      new StaticYawMisalignment(plant, minVaneBinCount = 10, uq = true, numSim = 3).run())
+    assert(uq <= 6, s"$uq jobs with UQ at numSim = 3")
+  }
+
+  test("ElectricalLosses with UQ runs in a bounded number of Spark jobs, daily and monthly meter") {
+    // the daily sums or the monthly rows are collected once, and every
+    // draw runs on the driver over them (6 jobs, daily and monthly)
+    val daily = ListenerBus.countJobs(spark.sparkContext)(
+      new ElectricalLosses(plant, uq = true, numSim = 200).run())
+    assert(daily <= 6, s"$daily jobs with a daily meter")
+    val monthly = ListenerBus.countJobs(spark.sparkContext)(
+      new ElectricalLosses(plant, uq = true, numSim = 200, monthlyMeter = Some(true)).run())
+    assert(monthly <= 6, s"$monthly jobs with a monthly meter")
   }
 
   private def leavesOnlyWhatItReads(what: String)(body: => DataFrame): Unit = {
