@@ -6,16 +6,17 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ListenerBus
 
 import graft.SparkSpec
-import graft.fitting.BradleyTerry
+import graft.fitting.{BradleyTerry, Logistic}
 import graft.multimodal.Multimodal
-import graft.operators.{Dedup, KnnGraph, LinkGraph, Sampling, Similarity, SuffixDedup}
+import graft.operators.{Dedup, KnnGraph, LinkGraph, Pca, Sampling, Similarity, SuffixDedup}
 import graft.streaming.StreamingOps
 
 /** The analyses release every RDD they persist, on return and on a throw,
   * and TIE's, wake's, AEP's, yaw's and electrical losses' job counts stay
-  * bounded. The link-graph, dedup and Bradley–Terry loops, on their
-  * distributed paths, and the graph-index, PQ, resampling and image-dedup
-  * operators leave persisted only the RDDs their results read; a streamed
+  * bounded, as do the logistic and PCA fits'. The link-graph, dedup and
+  * Bradley–Terry loops, on their distributed paths, and the graph-index,
+  * PQ, resampling and image-dedup operators leave persisted only the RDDs
+  * their results read; a streamed
   * graph insert leaves one per batch. The link-graph and Bradley–Terry
   * operators run the caller's edge plan once.
   */
@@ -120,6 +121,26 @@ class PinHygieneSpec extends SparkSpec {
     val monthly = ListenerBus.countJobs(spark.sparkContext)(
       new ElectricalLosses(plant, uq = true, numSim = 200, monthlyMeter = Some(true)).run())
     assert(monthly <= 6, s"$monthly jobs with a monthly meter")
+  }
+
+  test("Logistic.fit, Pca.fit and Pca.momentRows run in a bounded number of Spark jobs and " +
+      "leave nothing persisted") {
+    import spark.implicits._
+    // one Gram aggregate per Newton step and one for the PCA moments, each
+    // two jobs under adaptive execution (the shuffle's map stage runs as
+    // its own job); momentRows adds the broadcast of its slot table (10, 2
+    // and 3 jobs)
+    val df = (0 until 200).map { i =>
+      (i.toLong, Array(math.sin(i.toDouble), math.cos(0.3 * i), (i % 7) / 7.0), i % 3 == 0)
+    }.toDF("id", "x", "y")
+    def jobs(what: String)(body: => Any): Int =
+      ListenerBus.countJobs(spark.sparkContext)(leavesNothingPersisted(what)(body))
+    val logistic = jobs("Logistic.fit")(Logistic.fit(df, "x", "y", dims = 3, iters = 5))
+    assert(logistic <= 10, s"$logistic jobs for Logistic.fit at iters = 5")
+    val pca = jobs("Pca.fit")(Pca.fit(df, "x", 3, 2))
+    assert(pca <= 2, s"$pca jobs for Pca.fit")
+    val moments = jobs("Pca.momentRows")(Pca.momentRows(df, "x", 3).collect())
+    assert(moments <= 3, s"$moments jobs for Pca.momentRows")
   }
 
   private def leavesOnlyWhatItReads(what: String)(body: => DataFrame): Unit = {

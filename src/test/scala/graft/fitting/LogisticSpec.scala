@@ -81,6 +81,13 @@ class LogisticSpec extends SparkSpec {
     got.zip(x).foreach { case (g, e) => assert(math.abs(g - e) < 1e-12) }
   }
 
+  test("a NaN or infinite feature fails the fit with a typed error") {
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity)) {
+      val df = (clusters(40) :+ ((99L, Array(bad, 0.0), true))).toDF("id", "x", "y")
+      intercept[IllegalArgumentException](Logistic.fit(df, "x", "y", dims = 2, iters = 3))
+    }
+  }
+
   test("model parquet round-trip scores identically") {
     val df = clusters(100).toDF("id", "x", "y")
     val m = Logistic.fit(df, "x", "y", dims = 2, iters = 6, lambda = 0.05)
