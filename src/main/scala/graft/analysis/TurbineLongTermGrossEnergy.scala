@@ -223,8 +223,10 @@ final class TurbineLongTermGrossEnergy(
         val sampleIdx =
           if (uq) Array.fill(ys.length)(rng.nextInt(ys.length))
           else ys.indices.toArray
-        val model = TurbineLongTermGrossEnergy.fitPowerModel(
-          sampleIdx.map(xs), sampleIdx.map(ys))
+        // a draw whose thresholds leave the turbine no valid day predicts 0
+        val model =
+          if (rows.isEmpty) (_: Double, _: Double, _: Double) => 0.0
+          else TurbineLongTermGrossEnergy.fitPowerModel(sampleIdx.map(xs), sampleIdx.map(ys))
         // apply to full LT record; per-day energy, cap at plausible bounds
         val maxDaily = rated(t) * 24.0 * 1.2
         val lt = reanFor(product).map { r =>
@@ -242,40 +244,17 @@ final class TurbineLongTermGrossEnergy(
 }
 
 object TurbineLongTermGrossEnergy {
-  /** Ridge fit of daily energy on hinge-spline(ws) + sin/cos(wd) + rho.
-    * Returns the predictor (gam_3param stand-in).
+  /** Ridge fit of daily energy on hinge-spline(ws) + sin/cos(wd) + rho
+    * ([[Fitting.HingeSpline]] with the direction and density as extra
+    * linear columns). Returns the predictor (gam_3param stand-in). An
+    * empty sample is an `IllegalArgumentException`.
     */
   def fitPowerModel(xs: Array[(Double, Double, Double)], ys: Array[Double],
                     nKnots: Int = 8, ridge: Double = 1e-4): (Double, Double, Double) => Double = {
-    if (xs.isEmpty) return (_, _, _) => 0.0
-    val wsMin = xs.map(_._1).min; val wsMax = xs.map(_._1).max
-    val knots = (1 until nKnots).map(i => wsMin + (wsMax - wsMin) * i / nKnots).toArray
-    def basis(ws: Double, wd: Double, rho: Double): Array[Double] =
-      Array(1.0, ws, math.sin(math.toRadians(wd)), math.cos(math.toRadians(wd)), rho) ++
-        knots.map(k => math.max(0.0, ws - k))
-    val k = 5 + knots.length
-    val xtx = Array.ofDim[Double](k, k)
-    val xty = new Array[Double](k)
-    var i = 0
-    while (i < xs.length) {
-      val b = basis(xs(i)._1, xs(i)._2, xs(i)._3)
-      var a = 0
-      while (a < k) {
-        xty(a) += b(a) * ys(i)
-        var c = 0
-        while (c < k) { xtx(a)(c) += b(a) * b(c); c += 1 }
-        a += 1
-      }
-      i += 1
-    }
-    var d = 0
-    while (d < k) { xtx(d)(d) += ridge; d += 1 }
-    val coef = Fitting.solve(xtx, xty)
-    (ws, wd, rho) => {
-      val b = basis(math.min(math.max(ws, wsMin), wsMax), wd, rho)
-      var s = 0.0; var j = 0
-      while (j < k) { s += coef(j) * b(j); j += 1 }
-      s
-    }
+    def extras(wd: Double, rho: Double): Array[Double] =
+      Array(math.sin(math.toRadians(wd)), math.cos(math.toRadians(wd)), rho)
+    val spline = Fitting.HingeSpline.fit(xs.map(_._1), xs.map(x => extras(x._2, x._3)), ys,
+      nKnots, ridge)
+    (ws, wd, rho) => spline.predict(ws, extras(wd, rho))
   }
 }

@@ -7,6 +7,12 @@ import org.apache.spark.sql.functions._
   * sufficient statistics (or small binned tables); the iterative math runs
   * on the driver over <= ~10^4 numbers, matching the reference's train/
   * predict pattern (SURVEY.md §2.8). Nothing here collects fact-grain data.
+  *
+  * Every driver-side linear least-squares fit goes through one kernel,
+  * `leastSquares`, which accumulates XᵀX and Xᵀy, and one solver,
+  * [[solve]]: [[olsFit]], [[gamFit]], [[curveFit]]'s Gauss-Newton step and
+  * [[HingeSpline]] (the power-curve spline and TIE's power model).
+  * [[Logistic]]'s Newton step uses the same solver.
   */
 object Fitting {
 
@@ -103,28 +109,8 @@ object Fitting {
     * coefficients [intercept, b1..bk]. Reference: aep.py:920-927 (sklearn
     * LinearRegression over [ws, temp?, sin(wd)?, cos(wd)?]).
     */
-  def olsFit(xs: Array[Array[Double]], y: Array[Double]): Array[Double] = {
-    require(xs.nonEmpty && xs.length == y.length, "olsFit: bad shapes")
-    val k = xs(0).length + 1
-    val xtx = Array.ofDim[Double](k, k)
-    val xty = new Array[Double](k)
-    var i = 0
-    while (i < xs.length) {
-      var a = 0
-      while (a < k) {
-        val ra = if (a == 0) 1.0 else xs(i)(a - 1)
-        var b = 0
-        while (b < k) {
-          xtx(a)(b) += ra * (if (b == 0) 1.0 else xs(i)(b - 1))
-          b += 1
-        }
-        xty(a) += ra * y(i)
-        a += 1
-      }
-      i += 1
-    }
-    solve(xtx, xty)
-  }
+  def olsFit(xs: Array[Array[Double]], y: Array[Double]): Array[Double] =
+    leastSquares(xs, y, intercept = true)((_, v) => v)
 
   def olsPredict(coefs: Array[Double])(x: Array[Double]): Double = {
     var s = coefs(0)
@@ -143,7 +129,7 @@ object Fitting {
     */
   def gamFit(xs: Array[Array[Double]], y: Array[Double], nKnots: Int = 4,
              ridge: Double = 1e-6): Array[Double] => Double = {
-    require(xs.nonEmpty && xs.length == y.length, "gamFit: bad shapes")
+    requireSample(xs.length, y.length)
     val nf = xs(0).length
     val knots: Array[Array[Double]] = Array.tabulate(nf) { j =>
       val sorted = xs.map(_(j)).sorted
@@ -163,28 +149,9 @@ object Fitting {
       }
       out
     }
-    val design = xs.map(basis)
-    val k = nf * (nKnots + 1) + 1
-    val xtx = Array.ofDim[Double](k, k)
-    val xty = new Array[Double](k)
-    var i = 0
-    while (i < design.length) {
-      var a = 0
-      while (a < k) {
-        val ra = if (a == 0) 1.0 else design(i)(a - 1)
-        var b = 0
-        while (b < k) {
-          xtx(a)(b) += ra * (if (b == 0) 1.0 else design(i)(b - 1))
-          b += 1
-        }
-        xty(a) += ra * y(i)
-        a += 1
-      }
-      i += 1
-    }
-    var d = 1 // no penalty on the intercept
-    while (d < k) { xtx(d)(d) += ridge; d += 1 }
-    val coefs = solve(xtx, xty)
+    // no penalty on the intercept
+    val coefs = leastSquares(xs.map(basis), y, intercept = true)((d, v) =>
+      if (d == 0) v else v + ridge)
     x => olsPredict(coefs)(basis(x))
   }
 
@@ -236,22 +203,7 @@ object Fitting {
         i += 1
       }
       // solve (J'J + lambda I) dp = J'r
-      val jtj = Array.ofDim[Double](k, k)
-      val jtr = new Array[Double](k)
-      i = 0
-      while (i < n) {
-        var a = 0
-        while (a < k) {
-          jtr(a) += jac(i)(a) * resid(i)
-          var b = 0
-          while (b < k) { jtj(a)(b) += jac(i)(a) * jac(i)(b); b += 1 }
-          a += 1
-        }
-        i += 1
-      }
-      var a = 0
-      while (a < k) { jtj(a)(a) *= (1.0 + lambda); a += 1 }
-      val dp = solve(jtj, jtr)
+      val dp = leastSquares(jac, resid, intercept = false)((_, v) => v * (1.0 + lambda))
       val cand = p.zip(dp).map { case (pi, d) => pi + d }
       val candSse = sse(cand)
       if (candSse < currentSse) {
@@ -265,6 +217,71 @@ object Fitting {
       iter += 1
     }
     p
+  }
+
+  private def requireSample(rows: Int, targets: Int): Unit =
+    require(rows > 0 && rows == targets,
+      s"a fit needs a non-empty sample with one target per row, got $rows rows and $targets targets")
+
+  /** The one least-squares kernel: accumulates XᵀX and Xᵀy over the design
+    * rows, row by row and cell by cell (with `intercept`, column 0 is an
+    * implicit 1.0 ahead of each row), replaces each diagonal cell d by
+    * `diagonal(d, cell)` (each fit's ridge or damping) and solves the
+    * system by [[solve]].
+    */
+  private def leastSquares(rows: Array[Array[Double]], y: Array[Double], intercept: Boolean)(
+      diagonal: (Int, Double) => Double): Array[Double] = {
+    requireSample(rows.length, y.length)
+    val off = if (intercept) 1 else 0
+    val k = rows(0).length + off
+    val xtx = Array.ofDim[Double](k, k)
+    val xty = new Array[Double](k)
+    var i = 0
+    while (i < rows.length) {
+      val r = rows(i)
+      var a = 0
+      while (a < k) {
+        val ra = if (a < off) 1.0 else r(a - off)
+        var b = 0
+        while (b < k) {
+          xtx(a)(b) += ra * (if (b < off) 1.0 else r(b - off))
+          b += 1
+        }
+        xty(a) += ra * y(i)
+        a += 1
+      }
+      i += 1
+    }
+    var d = 0
+    while (d < k) { xtx(d)(d) = diagonal(d, xtx(d)(d)); d += 1 }
+    solve(xtx, xty)
+  }
+
+  /** Uniform-knot hinge spline on [lo, hi], the sample's range: knots
+    * lo + (hi − lo)·i/nKnots for i in 1 until nKnots, design row
+    * [1, x, extras…, max(0, x − knot)…], ridge on every coefficient, and
+    * x clamped to [lo, hi] when predicting. The one basis and predictor of
+    * [[graft.powercurve.PowerCurve.fitSpline]] (no extras) and TIE's power
+    * model (sin/cos of the wind direction and the density as extras).
+    */
+  private[graft] final case class HingeSpline(knots: Array[Double], coef: Array[Double],
+                                              lo: Double, hi: Double) {
+    def predict(x: Double, extras: Array[Double]): Double =
+      olsPredict(coef)(HingeSpline.row(knots, math.min(math.max(x, lo), hi), extras))
+  }
+
+  private[graft] object HingeSpline {
+    private def row(knots: Array[Double], x: Double, extras: Array[Double]): Array[Double] =
+      (x +: extras) ++ knots.map(k => math.max(0.0, x - k))
+
+    def fit(xs: Array[Double], extras: Array[Array[Double]], ys: Array[Double], nKnots: Int,
+            ridge: Double): HingeSpline = {
+      requireSample(xs.length, ys.length)
+      val lo = xs.min; val hi = xs.max
+      val knots = (1 until nKnots).map(i => lo + (hi - lo) * i / nKnots).toArray
+      val design = Array.tabulate(xs.length)(i => row(knots, xs(i), extras(i)))
+      HingeSpline(knots, leastSquares(design, ys, intercept = true)((_, v) => v + ridge), lo, hi)
+    }
   }
 
   /** Gaussian elimination with partial pivoting for small dense systems. */

@@ -2,7 +2,7 @@ package graft.fitting
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{ColumnBridge, GramMatrixAgg}
+import org.apache.spark.sql.graft.GramMatrixAgg
 
 import graft.functions.VectorExprs
 
@@ -35,9 +35,6 @@ object Logistic {
     def intercept: Double = weights(0)
     def coefficients: Array[Double] = weights.drop(1)
   }
-
-  private def gram(vec: Column, dims: Int): Column = ColumnBridge.column(
-    GramMatrixAgg(ColumnBridge.expression(vec), dims).toAggregateExpression())
 
   /** Fit on `featuresCol: array<double>` (fixed length `dims`) against
     * `labelCol` (boolean or 0/1 numeric). `lambda` is the L2 strength on
@@ -73,20 +70,15 @@ object Logistic {
       val vz = concat(transform(col("xa"), e => e * col("sw")),
         array((col("y") - col("p")) / col("sw")))
       val row = staged.agg(
-        gram(vz, d + 1).as("m"),
+        GramMatrixAgg.column(vz, d + 1).as("m"),
         sum(-(col("y") * log(greatest(col("p"), lit(1e-300))) +
           (lit(1.0) - col("y")) * log(greatest(lit(1.0) - col("p"), lit(1e-300)))))
           .as("ll")).head()
       val m = row.getSeq[Double](0).toArray
       n = m(0).toLong
-      // unpack: Gram layout (see GramMatrixAgg) over the (d+1)-dim vz;
-      // H = block [0..d), g = column d
-      def tri(i: Int, j: Int): Double = {
-        val (a, b) = if (i <= j) (i, j) else (j, i)
-        m(1 + (d + 1) + a * (d + 1) - a * (a - 1) / 2 + (b - a))
-      }
-      val h = Array.tabulate(d, d)((i, j) => tri(i, j))
-      val g = Array.tabulate(d)(i => tri(i, d))
+      // the Gram of the (d+1)-dim vz: H = block [0..d), g = column d
+      val h = Array.tabulate(d, d)((i, j) => m(GramMatrixAgg.slot(i, j, d + 1)))
+      val g = Array.tabulate(d)(i => m(GramMatrixAgg.slot(i, d, d + 1)))
       // L2 on coefficients only; a tiny unconditional ridge keeps the
       // solve well-posed on collinear features
       var i = 1
@@ -95,43 +87,14 @@ object Logistic {
       while (i < d) { h(i)(i) += 1e-10; i += 1 }
       val l2 = 0.5 * lambda * w.drop(1).map(x => x * x).sum
       trace(it) = (row.getDouble(1) + l2) / math.max(n, 1L)
-      val delta = solveSym(h, g)
+      val delta = Fitting.solve(h, g)
+      // a NaN or infinite feature makes the whole system NaN
+      require(delta.forall(java.lang.Double.isFinite),
+        s"logistic Newton step $it is not finite: a NaN or infinite feature?")
       i = 0
       while (i < d) { w(i) += delta(i); i += 1 }
     }
     LogisticModel(dims, n, w, lambda, trace)
-  }
-
-  /** In-place Gaussian elimination with partial pivoting (driver-side,
-    * d x d — feature-count-sized, never data-sized). */
-  private[fitting] def solveSym(a0: Array[Array[Double]],
-                                b0: Array[Double]): Array[Double] = {
-    val d = b0.length
-    val a = a0.map(_.clone())
-    val b = b0.clone()
-    for (k <- 0 until d) {
-      var piv = k
-      for (r <- k + 1 until d) if (math.abs(a(r)(k)) > math.abs(a(piv)(k))) piv = r
-      if (piv != k) { val t = a(k); a(k) = a(piv); a(piv) = t
-        val tb = b(k); b(k) = b(piv); b(piv) = tb }
-      require(math.abs(a(k)(k)) > 0, s"singular system at pivot $k")
-      for (r <- k + 1 until d) {
-        val f = a(r)(k) / a(k)(k)
-        if (f != 0.0) {
-          var c = k
-          while (c < d) { a(r)(c) -= f * a(k)(c); c += 1 }
-          b(r) -= f * b(k)
-        }
-      }
-    }
-    val x = new Array[Double](d)
-    for (k <- d - 1 to 0 by -1) {
-      var s = b(k)
-      var c = k + 1
-      while (c < d) { s -= a(k)(c) * x(c); c += 1 }
-      x(k) = s / a(k)(k)
-    }
-    x
   }
 
   /** P(y=1 | x) under the model — a codegen'd row-local column (the model

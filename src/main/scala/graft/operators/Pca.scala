@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{ColumnBridge, GramMatrixAgg}
+import org.apache.spark.sql.graft.GramMatrixAgg
 
 import graft.functions.VectorExprs
 
@@ -27,34 +27,28 @@ object Pca {
   case class PcaModel(dims: Int, count: Long, mean: Array[Double],
                       eigenvalues: Array[Double], components: Array[Array[Double]])
 
-  private def gram(vec: Column, dims: Int): Column = ColumnBridge.column(
-    GramMatrixAgg(ColumnBridge.expression(vec), dims).toAggregateExpression())
-
   /** One-row frame holding the flattened moment buffer (see
     * [[org.apache.spark.sql.graft.GramMatrixAgg]] for the layout).
     */
   def secondMoments(df: DataFrame, vecCol: String, dims: Int): DataFrame =
-    df.agg(gram(col(vecCol).cast("array<double>"), dims).as("moments"))
+    df.agg(GramMatrixAgg.column(col(vecCol).cast("array<double>"), dims).as("moments"))
 
   /** The moment buffer as gate-able rows: (-1, -1, n), (i, -1, sum_i) and
     * (i, j, sum of x_i*x_j) for i <= j. The flat-position -> (i, j) map is
     * a broadcast-joined literal dim table (d(d+1)/2 + d + 1 rows — driver
     * arithmetic, never data-sized).
     */
-  def momentRows(df: DataFrame, vecCol: String, dims: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val triBase = 1 + dims
-    val mapping: Seq[(Int, Long, Long)] =
-      Seq((0, -1L, -1L)) ++
-      (0 until dims).map(i => (1 + i, i.toLong, -1L)) ++
-      (for (i <- 0 until dims; j <- i until dims) yield
-        (triBase + i * dims - i * (i - 1) / 2 + (j - i), i.toLong, j.toLong))
-    val mapDf = mapping.toDF("pos", "i", "j")
+  def momentRows(df: DataFrame, vecCol: String, dims: Int): DataFrame =
     secondMoments(df, vecCol, dims)
       .select(posexplode(col("moments")).as(Seq("pos", "sxy")))
-      .join(broadcast(mapDf), "pos")
+      .join(slotTable(df, dims), "pos")
       .select(col("i"), col("j"), col("sxy"))
+
+  /** [[GramMatrixAgg.slots]] as a broadcast (pos, i, j) frame. */
+  private def slotTable(df: DataFrame, dims: Int): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    broadcast(GramMatrixAgg.slots(dims).toDF("pos", "i", "j"))
   }
 
   /** Per-group moment rows: (group, i, j, sxy) — one fixed-size gram buffer
@@ -63,22 +57,12 @@ object Pca {
     * vector data.
     */
   def momentRowsBy(df: DataFrame, vecCol: String, dims: Int,
-                   byCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val triBase = 1 + dims
-    val mapping: Seq[(Int, Long, Long)] =
-      Seq((0, -1L, -1L)) ++
-      (0 until dims).map(i => (1 + i, i.toLong, -1L)) ++
-      (for (i <- 0 until dims; j <- i until dims) yield
-        (triBase + i * dims - i * (i - 1) / 2 + (j - i), i.toLong, j.toLong))
-    val mapDf = mapping.toDF("pos", "i", "j")
+                   byCol: String): DataFrame =
     df.groupBy(col(byCol).as("group"))
-      .agg(gram(col(vecCol).cast("array<double>"), dims).as("moments"))
+      .agg(GramMatrixAgg.column(col(vecCol).cast("array<double>"), dims).as("moments"))
       .select(col("group"), posexplode(col("moments")).as(Seq("pos", "sxy")))
-      .join(broadcast(mapDf), "pos")
+      .join(slotTable(df, dims), "pos")
       .select(col("group"), col("i"), col("j"), col("sxy"))
-  }
 
   /** Cyclic Jacobi eigendecomposition of a symmetric matrix. Returns
     * (eigenvalues, eigenvectors as rows), unsorted. Deterministic: fixed
@@ -152,15 +136,9 @@ object Pca {
     val m = secondMoments(df, vecCol, dims).collect()(0).getSeq[Double](0).toArray
     val n = m(0)
     require(n > 1, s"PCA needs at least 2 rows, saw ${n.toLong}")
-    val mean = Array.tabulate(dims)(i => m(1 + i) / n)
-    val triBase = 1 + dims
-    val cov = Array.ofDim[Double](dims, dims)
-    for (i <- 0 until dims; j <- i until dims) {
-      val sxy = m(triBase + i * dims - i * (i - 1) / 2 + (j - i))
-      val c = sxy / n - mean(i) * mean(j)
-      cov(i)(j) = c
-      cov(j)(i) = c
-    }
+    val mean = Array.tabulate(dims)(i => m(GramMatrixAgg.sumSlot(i)) / n)
+    val cov = Array.tabulate(dims, dims)((i, j) =>
+      m(GramMatrixAgg.slot(i, j, dims)) / n - mean(i) * mean(j))
     val (eig, vecs) = jacobiEigSym(cov)
     val order = (0 until dims).sortBy(i => -eig(i))
     val comps = order.take(k).map { i =>

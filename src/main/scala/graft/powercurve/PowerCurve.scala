@@ -148,43 +148,17 @@ object PowerCurve {
     fitSpline(pts.map(_._1), pts.map(_._2), nKnots, ridge)
   }
 
+  /** [[Fitting.HingeSpline]] on wind speed alone. */
   def fitSpline(xs: Array[Double], ys: Array[Double], nKnots: Int,
                 ridge: Double): SplineCurve = {
-    val lo = xs.min; val hi = xs.max
-    val knots = (1 until nKnots).map(i => lo + (hi - lo) * i / nKnots).toArray
-    def basis(x: Double): Array[Double] =
-      Array(1.0, x) ++ knots.map(k => math.max(0.0, x - k))
-    val k = knots.length + 2
-    val xtx = Array.ofDim[Double](k, k)
-    val xty = new Array[Double](k)
-    var i = 0
-    while (i < xs.length) {
-      val b = basis(xs(i))
-      var a = 0
-      while (a < k) {
-        xty(a) += b(a) * ys(i)
-        var c = 0
-        while (c < k) { xtx(a)(c) += b(a) * b(c); c += 1 }
-        a += 1
-      }
-      i += 1
-    }
-    var d = 0
-    while (d < k) { xtx(d)(d) += ridge; d += 1 }
-    SplineCurve(knots, Fitting.solve(xtx, xty), lo, hi)
+    val h = Fitting.HingeSpline.fit(xs, xs.map(_ => Array.emptyDoubleArray), ys, nKnots, ridge)
+    SplineCurve(h.knots, h.coef, h.lo, h.hi)
   }
 
   final case class SplineCurve(knots: Array[Double], coef: Array[Double],
                                lo: Double, hi: Double) extends Fitted {
-    def predict(ws: Double): Double = {
-      val x = math.min(math.max(ws, lo), hi)
-      var s = coef(0) + coef(1) * x
-      var i = 0
-      while (i < knots.length) {
-        s += coef(i + 2) * math.max(0.0, x - knots(i)); i += 1
-      }
-      s
-    }
+    def predict(ws: Double): Double =
+      Fitting.HingeSpline(knots, coef, lo, hi).predict(ws, Array.emptyDoubleArray)
     def predictCol(ws: Column): Column = {
       val x = least(greatest(ws, lit(lo)), lit(hi))
       val hinges = knots.zipWithIndex.map { case (kn, i) =>

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -16,7 +17,10 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Double
   * self-join per row id for products) shuffles n*d^2 rows.
   *
   * Buffer layout: slot 0 = n; slots 1..d = sum(x_i); then for i <= j the
-  * product sums row-major: slot 1 + d + (i*(2d-i-1))/2 + j.
+  * product sums row-major: slot 1 + d + (i*(2d-i-1))/2 + j. The companion
+  * object is the layout's one reader: callers build the aggregate with
+  * [[GramMatrixAgg.column]] and find a slot with [[GramMatrixAgg.sumSlot]],
+  * [[GramMatrixAgg.slot]] or [[GramMatrixAgg.slots]].
   * Null rows are skipped; a row of the wrong length is a schema bug and
   * throws with both lengths named.
   */
@@ -90,4 +94,26 @@ case class GramMatrixAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0))
+}
+
+object GramMatrixAgg {
+  /** The aggregate over the array<double> column `vec` of length `dims`. */
+  def column(vec: Column, dims: Int): Column =
+    ColumnBridge.column(GramMatrixAgg(ColumnBridge.expression(vec), dims).toAggregateExpression())
+
+  /** Slot of sum(x_i). Slot 0 holds the count. */
+  def sumSlot(i: Int): Int = 1 + i
+
+  /** Slot of sum(x_i * x_j), in either order. */
+  def slot(i: Int, j: Int, dims: Int): Int = {
+    val a = math.min(i, j)
+    1 + dims + a * dims - a * (a - 1) / 2 + (math.max(i, j) - a)
+  }
+
+  /** Every slot with its (i, j): the count at (-1, -1), sum(x_i) at
+    * (i, -1) and sum(x_i * x_j) at (i, j) for i <= j.
+    */
+  def slots(dims: Int): Seq[(Int, Long, Long)] =
+    (0, -1L, -1L) +: ((0 until dims).map(i => (sumSlot(i), i.toLong, -1L)) ++
+      (for (i <- 0 until dims; j <- i until dims) yield (slot(i, j, dims), i.toLong, j.toLong)))
 }

@@ -55,4 +55,16 @@ class FittingSpec extends SparkSpec {
     val r = a.map(row => row.zip(x).map { case (c, v) => c * v }.sum)
     assert(r.zip(Seq(5.0, 5.0, 3.0)).forall { case (p, q) => math.abs(p - q) < 1e-9 })
   }
+
+  test("solve solves a pivoting-required system exactly") {
+    // first pivot is 0: partial pivoting must swap
+    val a = Array(
+      Array(0.0, 2.0, 1.0),
+      Array(4.0, 1.0, -1.0),
+      Array(2.0, -1.0, 3.0))
+    val x = Array(1.0, -2.0, 3.0)
+    val b = a.map(row => row.zip(x).map { case (c, v) => c * v }.sum)
+    val got = Fitting.solve(a, b)
+    got.zip(x).foreach { case (g, e) => assert(math.abs(g - e) < 1e-12) }
+  }
 }

@@ -69,18 +69,6 @@ class LogisticSpec extends SparkSpec {
     assert(m.coefficients(0) > 0)
   }
 
-  test("solveSym solves a pivoting-required system exactly") {
-    // first pivot is 0: partial pivoting must swap
-    val a = Array(
-      Array(0.0, 2.0, 1.0),
-      Array(4.0, 1.0, -1.0),
-      Array(2.0, -1.0, 3.0))
-    val x = Array(1.0, -2.0, 3.0)
-    val b = a.map(row => row.zip(x).map { case (c, v) => c * v }.sum)
-    val got = Logistic.solveSym(a, b)
-    got.zip(x).foreach { case (g, e) => assert(math.abs(g - e) < 1e-12) }
-  }
-
   test("a NaN or infinite feature fails the fit with a typed error") {
     for (bad <- Seq(Double.NaN, Double.PositiveInfinity)) {
       val df = (clusters(40) :+ ((99L, Array(bad, 0.0), true))).toDF("id", "x", "y")
