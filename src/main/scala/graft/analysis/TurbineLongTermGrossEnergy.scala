@@ -210,6 +210,8 @@ final class TurbineLongTermGrossEnergy(
           .map { case (t, rows) => t -> rows.sortBy(_._2).map(_._3).toArray }
       })
 
+    // the turbines with a valid day in at least one draw
+    val fitted = scala.collection.mutable.Set.empty[String]
     for (n <- 0 until sims) {
       val cfg = (sample(maxPowerFilter), sample(windBinThreshold),
         sample(correctionThreshold))
@@ -223,10 +225,14 @@ final class TurbineLongTermGrossEnergy(
         val sampleIdx =
           if (uq) Array.fill(ys.length)(rng.nextInt(ys.length))
           else ys.indices.toArray
-        // a draw whose thresholds leave the turbine no valid day predicts 0
+        // a UQ draw whose thresholds leave the turbine no valid day
+        // predicts 0; a turbine with no valid day in any draw is an error
         val model =
           if (rows.isEmpty) (_: Double, _: Double, _: Double) => 0.0
-          else TurbineLongTermGrossEnergy.fitPowerModel(sampleIdx.map(xs), sampleIdx.map(ys))
+          else {
+            fitted += t
+            TurbineLongTermGrossEnergy.fitPowerModel(sampleIdx.map(xs), sampleIdx.map(ys))
+          }
         // apply to full LT record; per-day energy, cap at plausible bounds
         val maxDaily = rated(t) * 24.0 * 1.2
         val lt = reanFor(product).map { r =>
@@ -239,6 +245,9 @@ final class TurbineLongTermGrossEnergy(
       if (n == 0) perTurbineAcc = perTurbine
       results(n) = perTurbine.values.sum
     }
+    val noDays = turbines.filterNot(fitted)
+    require(noDays.isEmpty, s"[TurbineLongTermGrossEnergy] turbine(s) ${noDays.mkString(", ")} " +
+      "have no valid day to fit a power model on")
     Result(results, perTurbineAcc)
   }
 }

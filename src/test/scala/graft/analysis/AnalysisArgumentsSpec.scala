@@ -4,8 +4,9 @@ import graft.SparkSpec
 
 /** The Monte-Carlo arguments of AEP, yaw, electrical losses, TIE and
   * wake: a degenerate draw count, sampling range or product list is a
-  * typed error naming its argument, never a NaN result, and yaw's UQ draws
-  * follow the ranges they are given.
+  * typed error naming its argument, never a NaN result, as is a TIE
+  * turbine with no valid day, and yaw's UQ draws follow the ranges they
+  * are given.
   */
 class AnalysisArgumentsSpec extends SparkSpec {
 
@@ -52,6 +53,15 @@ class AnalysisArgumentsSpec extends SparkSpec {
     rejects("reanalysisProducts")(
       new TurbineLongTermGrossEnergy(plant, reanalysisProducts = Some(Nil)).run())
     rejects("reanalysisProducts")(new MonteCarloAEP(plant, reanalysisProducts = Some(Nil)).run())
+  }
+
+  test("a TIE turbine with no valid day is rejected by name, with and without UQ") {
+    import org.apache.spark.sql.functions._
+    // T2's wind speed is outside the [0, 40] m/s range flag on every row
+    val noT2 = plant.copy(scada = Some(plant.scadaDf.withColumn("WMET_HorWdSpd",
+      when(col("asset_id") === "T2", lit(50.0)).otherwise(col("WMET_HorWdSpd")))))
+    rejects("T2")(new TurbineLongTermGrossEnergy(noT2).run())
+    rejects("T2")(new TurbineLongTermGrossEnergy(noT2, uq = true, numSim = 3).run())
   }
 
   test("yaw UQ draws its outlier filter from maxPowerFilter and powerBinMadThresh") {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.analysis.TurbineLongTermGrossEnergy
+import graft.powercurve.PowerCurve
 
 /** Degenerate-argument net over every public operator family (r7 VERDICT
   * ask #7): all four r6 ADVICE findings were edge-case hazards in PUBLIC
@@ -259,6 +261,22 @@ class DegenerateArgsSpec extends SparkSpec {
     intercept[IllegalArgumentException] { Pca.fit(one, "v", 2, 1) }
     intercept[IllegalArgumentException] {
       Pca.fit(one.union(one), "v", 2, 3) // k > dims
+    }
+  }
+
+  // ---- driver-side fits --------------------------------------------------
+  test("PowerCurve.fitSpline/spline and TIE's fitPowerModel: an empty sample is refused") {
+    intercept[IllegalArgumentException] {
+      PowerCurve.fitSpline(Array.empty, Array.empty, nKnots = 20, ridge = 1e-6)
+    }
+    intercept[IllegalArgumentException] {
+      PowerCurve.fitSpline(Array(1.0, 2.0), Array(1.0), nKnots = 20, ridge = 1e-6)
+    }
+    intercept[IllegalArgumentException] {
+      PowerCurve.spline(Seq.empty[(Double, Double)].toDF("ws", "p"), "ws", "p")
+    }
+    intercept[IllegalArgumentException] {
+      TurbineLongTermGrossEnergy.fitPowerModel(Array.empty, Array.empty)
     }
   }
 
