@@ -411,10 +411,11 @@ private[graft] object GatesAnn {
     // rebuild-parity measurement.
     // r13 (VERDICT ask 1): routed through the INDEX-NATIVE path — the
     // gate now builds the graphIndex asset and inserts with
-    // insertIncrementalIndexed (delta re-rank, no corpus renormalize /
-    // bridge rebuild), reading the merged graph back off the updated
-    // index. Bit-identical to the one-shot path by the KnnGraphSpec
-    // parity pin, so the oracle and bars carry over unchanged.
+    // insertIncrementalIndexed (front re-rank, then full refine rounds;
+    // no corpus renormalize / bridge rebuild), reading the merged graph
+    // back off the updated index. Bit-identical to the one-shot path by
+    // the KnnGraphSpec parity pin, so the oracle and bars carry over
+    // unchanged.
     "q_graph_insert" -> ((s, dir) => Pins.scoped { pins =>
       val e = Tables.embeddings(s, dir)
         .filter(col("vec_id") < 50000)

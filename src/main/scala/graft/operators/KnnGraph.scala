@@ -137,9 +137,10 @@ object KnnGraph {
   /** The one merge of every graph write: candidate edges `cands`
     * (id, nbr, cosine) merged into the edge set `cur` (id, nbr, cosine)
     * through the dedup top-k, each kept edge flagged `__new` when `cur`
-    * does not hold it. Used by the build and delta rounds, both inserts
-    * and the delete; the caller pins the result. No distinct runs first:
-    * the dedup top-k drops both multi-witness duplicates (same pair via
+    * does not hold it. Used by every descent round, the one-shot
+    * insert's placement and the index writes' front re-rank; the caller
+    * pins the result or a frame over it. No distinct runs first: the
+    * dedup top-k drops both multi-witness duplicates (same pair via
     * several common nodes — bit-identical cosine: same kernel, same
     * inputs) and re-found existing edges inside its map-side k-buffer,
     * so the only exchange at candidate grain carries n·k states.
@@ -282,29 +283,22 @@ object KnnGraph {
                            iter: Int, idType: DataType): DataFrame =
     // pinned: loop state, re-read by the next round and its probe
     pins.loop(mergeTopK(symmetrize(
-      scoredPairs(graph, vecs, maxRev, sampleRate, seed, iter, None)), graph, k, idType))
+      scoredPairs(graph, vecs, maxRev, sampleRate, seed, iter)), graph, k, idType))
 
   /** The round kernel: one round's scored neighbor-of-neighbor pairs
     * (id_a, id_b, cosine) over a flagged edge set `cur` (id, nbr,
     * cosine, __new). A node's hood is its forward edges ∪ its reverse
     * edges capped at `maxRev`; a pair in one hood is scored when >= 1 of
-    * its two hood edges is new. `pivots` restricts the hoods to those
-    * nodes (the delta round's front, fetched by broadcast joins that
-    * scan `cur` but shuffle only matches); the full round passes None.
+    * its two hood edges is new.
     */
   private def scoredPairs(cur: DataFrame, vecs: DataFrame, maxRev: Int,
-                          sampleRate: Double, seed: Int, iter: Int,
-                          pivots: Option[DataFrame]): DataFrame = {
-    val fwd = pivots.fold(cur)(p => cur.join(broadcast(p), Seq("id")))
-      .select(col("id"), col("nbr"), col("__new"))
+                          sampleRate: Double, seed: Int, iter: Int): DataFrame = {
+    val fwd = cur.select(col("id"), col("nbr"), col("__new"))
     // Reverse-degree cap: hash-ordered row_number inside each node's
-    // reverse list — a PARTITIONED window (never a global sort). A
-    // pivot's reverse rows are the same with or without the restriction.
+    // reverse list — a PARTITIONED window (never a global sort).
     val revW = Window.partitionBy("id")
       .orderBy(xxhash64(col("nbr"), lit(seed), lit(1000 + iter)), col("nbr"))
-    val rev = pivots.fold(cur)(p =>
-        cur.join(broadcast(p.withColumnRenamed("id", "nbr")), Seq("nbr")))
-      .select(col("nbr").as("id"), col("id").as("nbr"), col("__new"))
+    val rev = cur.select(col("nbr").as("id"), col("id").as("nbr"), col("__new"))
       .withColumn("__rn", row_number().over(revW))
       .filter(col("__rn") <= maxRev).drop("__rn")
     // mutual edges appear in both directions: collapse to one hood row
@@ -888,141 +882,39 @@ object KnnGraph {
       col("cosine"), col("rank"))
   }
 
-  /** One NN-Descent round computed as a DELTA against a base edge set:
-    * bit-identical to [[descentRound]] over (base for non-delta nodes
-    * ∪ delta), but every shuffle/materialization is bounded by the
-    * perturbation front, not the corpus —
-    *
-    *  - pivots = endpoints of flagged-new edges (exactly the nodes the
-    *    full round's `x.__new || y.__new` pair filter lets generate
-    *    work; extra pivots would produce zero pairs),
-    *  - their capped reverse lists are per-node identical to the full
-    *    computation (the row_number window sees the same per-pivot
-    *    rows), fetched by two broadcast joins that SCAN the base but
-    *    shuffle only matches,
-    *  - only candidate-target nodes re-rank; every other delta node
-    *    passes through with its `__new` cleared (the full round would
-    *    recompute it as false — an edge present in the previous graph
-    *    is old by definition), which keeps the next round's pivot set
-    *    honest.
-    *
-    * `delta` must hold COMPLETE (id, nbr, cosine, rank, __new) lists
-    * for its node set, `deltaIds` (as [[composeDelta]] takes it);
-    * `baseKnn` holds (id, nbr, cosine) for everyone else (rows for
-    * delta ids are ignored); `vecs` is (id, __nv) for all nodes. The
-    * re-rank broadcasts the targets' current lists, which the front
-    * bounds. Returns the next delta (its node set grows by the round's
-    * candidate targets) as a `loop` pin.
-    */
-  private def descentRoundDelta(pins: Pins, delta: DataFrame, deltaIds: DataFrame,
-                                baseKnn: DataFrame, vecs: DataFrame, k: Int,
-                                maxRev: Int, seed: Int, iter: Int,
-                                idType: DataType): DataFrame = {
-    val cur = composeDelta(delta, baseKnn, deltaIds)
-    // r14 (VERDICT ask 5): endpoints via one explode pass over the
-    // checkpointed delta, not a self-union scanning it twice; same id
-    // multiset into the distinct. Pinned: both hood sides re-read it.
-    val pivots = pins.pin(delta.filter(col("__new"))
-      .select(explode(array(col("id"), col("nbr"))).as("id")).distinct())
-    val sym = symmetrize(
-      scoredPairs(cur, vecs, maxRev, 1.0, seed, iter, Some(pivots)))
-    // pinned: the target re-rank and the pass-through anti-join re-read it
-    val targets = pins.pin(sym.select("id").distinct())
-    // pinned: loop state, re-read by the next round
-    pins.loop(delta.join(broadcast(targets), Seq("id"), "left_anti")
-      .select(col("id"), col("nbr"), col("cosine"), col("rank"))
-      .withColumn("__new", lit(false))
-      .unionByName(mergeTopK(sym, broadcast(cur.join(broadcast(targets), Seq("id"))),
-        k, idType)))
-  }
-
   private def emptyAdds(ids: DataFrame, idType: DataType): DataFrame =
     ids.select(col("id"), noIds(idType).as("__adds")).limit(0)
 
   /** The front repair of both index writes: re-rank every `touched` id
     * over its `baseKnn` edges ∪ the candidate edges `cands` (whose ids
-    * are all touched), run `rounds` refine rounds
-    * ([[refineDeltaRounds]]) and collapse the repaired lists to `knn`
-    * arrays, one row per re-ranked id. `vecs` is (id, __nv) for all
-    * nodes; `nTotal`, their count, is read only when a round runs. The
-    * re-rank broadcasts the touched ids' current lists, which the front
-    * bounds: a planned broadcast, not one that adaptive execution may
-    * or may not pick depending on which stage finishes first.
+    * are all touched), then, when `rounds` > 0, compose the full graph
+    * once ([[composeDelta]]: the re-ranked lists, flagged, ∪ every other
+    * node's base edges, old) and run `rounds` [[descentRound]]s over it.
+    * Collapses the result to `knn` arrays: one row per re-ranked id
+    * without rounds, one per node with them. `vecs` is (id, __nv) for
+    * all nodes. The re-rank broadcasts the touched ids' current lists,
+    * which the front bounds: a planned broadcast, not one that adaptive
+    * execution may or may not pick depending on which stage finishes
+    * first.
     */
   private def repairFront(pins: Pins, cands: DataFrame, touched: DataFrame,
-                          baseKnn: DataFrame, vecs: DataFrame, nTotal: => Long,
-                          k: Int, maxRev: Int, seed: Int, iterBase: Int,
-                          rounds: Int, switchFraction: Double,
+                          baseKnn: DataFrame, vecs: DataFrame, k: Int, maxRev: Int,
+                          seed: Int, iterBase: Int, rounds: Int,
                           idType: DataType): DataFrame = {
-    // pinned: the re-rank's base edges and old-edge flags, and refine
-    // round 0 as its id set, re-read it
+    // pinned: the re-rank's base edges and old-edge flags, and the
+    // composition's anti-join, re-read it
     val ids = pins.pin(touched.distinct())
-    // loop state, re-read by the refine rounds
-    val delta = pins.loop(mergeTopK(cands,
-      broadcast(baseKnn.join(broadcast(ids), Seq("id"))), k, idType))
-    knnArrays(if (rounds <= 0) delta
-      else refineDeltaRounds(pins, delta, ids, baseKnn, vecs, nTotal, k, maxRev,
-        seed, iterBase, rounds, switchFraction, idType))
-  }
-
-  /** Run `rounds` refine rounds over a delta against a base edge set,
-    * picking per round between [[descentRoundDelta]] and the plain
-    * [[descentRound]] over the composed graph — bit-identical results
-    * either way (spec-pinned at both forced extremes); the choice is
-    * pure cost. The delta formulation wins when the perturbation front
-    * is a small fraction of the corpus (its shuffles are front-bounded)
-    * but pays reconstruction overhead per consumption of the composed
-    * view; once the front saturates (measured: a 25-vector batch's
-    * round-1 targets cover ~40% of a 2k-vector corpus, and pure-delta
-    * rounds 2-3 cost 17 s where full rounds cost 0.7 s), the full
-    * round is strictly cheaper. `switchFraction` is the |delta|/n
-    * crossover; after one full round the delta IS the full graph, so
-    * subsequent rounds stay full. `ids0` is round 0's id set: it covers
-    * `delta0`'s ids, and its ids outside `delta0` have no base rows.
-    *
-    * Measured fronts (round-0 ids / n): the perfbench `ann_index`
-    * insert 229/375 (61%) and its delete 297/325 (91%) both run full,
-    * so that workload never runs [[descentRoundDelta]]; the sf0.1
-    * `q_graph_insert` runs round 0 delta (395/2000, 19.75%) and round 1
-    * full (1929/2000); the sf0.1 `q_graph_delete` runs full (679/1950,
-    * 35%).
-    */
-  private def refineDeltaRounds(pins: Pins, delta0: DataFrame, ids0: DataFrame,
-                                baseKnn: DataFrame, vecs: DataFrame, nTotal: Long,
-                                k: Int, maxRev: Int, seed: Int, iterBase: Int,
-                                rounds: Int, switchFraction: Double,
-                                idType: DataType): DataFrame = {
-    var delta = delta0
-    // r13 opt (bit-identical, cost only): (a) the per-round crossover
-    // check's distinct id set is checkpointed ONCE and reused by both
-    // the count and whichever branch runs (each previously re-shuffled
-    // its own distinct — guide §2.4, shared exchange); (b) after the
-    // first full round the delta IS the whole graph (descentRound
-    // re-emits every node), so later rounds skip the count job, the
-    // anti-join (provably empty: the full round's output covers every
-    // base id) and the compose checkpoint outright.
-    var full = false
-    for (r <- 0 until rounds) {
-      delta =
-        if (full)
-          descentRound(pins, delta, vecs, k, maxRev, sampleRate = 1.0, seed,
-            iterBase + r, idType)
-        else {
-          // pinned: the count and the chosen branch re-read it
-          val dIds = if (r == 0) ids0 else pins.pin(delta.select("id").distinct())
-          val deltaN = dIds.count()
-          if (nTotal > 0 && deltaN.toDouble / nTotal <= switchFraction)
-            descentRoundDelta(pins, delta, dIds, baseKnn, vecs, k, maxRev, seed,
-              iterBase + r, idType)
-          else {
-            full = true
-            // pinned: loop state, re-read four times by descentRound
-            descentRound(pins, pins.loop(composeDelta(delta, baseKnn, dIds)), vecs,
-              k, maxRev, sampleRate = 1.0, seed, iterBase + r, idType)
-          }
-        }
+    val reranked = mergeTopK(cands,
+      broadcast(baseKnn.join(broadcast(ids), Seq("id"))), k, idType)
+    if (rounds <= 0) knnArrays(reranked)
+    else {
+      // pinned: loop state, re-read by the first round
+      var graph = pins.loop(composeDelta(reranked, baseKnn, ids))
+      for (r <- 0 until rounds)
+        graph = descentRound(pins, graph, vecs, k, maxRev, sampleRate = 1.0, seed,
+          iterBase + r, idType)
+      knnArrays(graph)
     }
-    delta
   }
 
   /** Index-native incremental insert — the insert path reads AND
@@ -1034,11 +926,12 @@ object KnnGraph {
     *    pinned, normalized batch as its queries — no corpus
     *    renormalize, no bridge rebuild, no count() (the per-batch
     *    corpus-wide taxes of the one-shot path),
-    *  - the re-rank and the `refineRounds` repair rounds run through
-    *    the repair path it shares with [[removeIds]] ([[repairFront]]):
-    *    while the batch-touched front stays under the crossover its
-    *    shuffles are front-bounded ([[descentRoundDelta]]), and
-    *    untouched rows pass through the one-pass composition
+    *  - the re-rank of the batch-touched front and the `refineRounds`
+    *    repair rounds run through the repair path it shares with
+    *    [[removeIds]] ([[repairFront]]): the front re-ranks over its
+    *    broadcast lists, and each refine round is one full
+    *    [[descentRound]] over the composed graph. Without refine
+    *    rounds, untouched rows pass through the one-pass composition
     *    unshuffled,
     *  - new nodes get small-world bridges under the index's persisted
     *    bucket parameters: each attaches to its buckets' EXISTING
@@ -1051,9 +944,11 @@ object KnnGraph {
     * [[insertIncremental]] on (graph, corpus) = ([[indexGraph]],
     * index vectors) with the same (k, beam, hops, refineRounds,
     * maxReverse, seed) and an index built with matching
-    * entries/bridge parameters — spec-pinned; the delta formulation
+    * entries/bridge parameters — spec-pinned; the front re-rank
     * changes cost, never results. `k` must equal the index's build
     * k (a larger k cannot conjure edges the stored k-lists dropped).
+    *
+    * @param corpusCount unread: no step of the insert needs |index|.
     */
   def insertIncrementalIndexed(index: DataFrame, batch: DataFrame,
                                idCol: String, vecCol: String, k: Int,
@@ -1063,34 +958,26 @@ object KnnGraph {
                                validateIds: Boolean = true,
                                corpusCount: Long = -1L): DataFrame =
     Pins.scoped(pins => insertIndexedDelta(pins, index, batch, idCol, vecCol, k,
-      beam, hops, refineRounds, maxReverse, seed, validateIds, corpusCount)._1)
-
-  /** The |delta|/n crossover of [[refineDeltaRounds]] for the index
-    * writes: a pure cost choice, results are identical either way.
-    */
-  private val DeltaRefineFraction = 0.25
+      beam, hops, refineRounds, maxReverse, seed, validateIds)._1)
 
   /** [[insertIncrementalIndexed]] plus the CHANGED ROWS (index-schema
-    * rows for every id whose row differs from the input index —
-    * re-ranked nodes, bridge-amended hubs, and the new batch nodes):
-    * the overlay a streaming state appends per micro-batch so it never
-    * re-materializes the whole index ([[graft.streaming.StreamingOps
-    * .GraphInsertState]]). `deltaRefineFraction` overrides the refine
-    * crossover so specs can force either refine path. It pins into the
-    * caller's scope: a scope keeps nothing for a tuple result.
+    * rows for every id whose row differs from the input index — old
+    * rows whose `knn` or `bridges` the insert changed, and the new
+    * batch nodes): the overlay a streaming state appends per
+    * micro-batch so it never re-materializes the whole index
+    * ([[graft.streaming.StreamingOps.GraphInsertState]]). It pins into
+    * the caller's scope: a scope keeps nothing for a tuple result.
     */
   private[graft] def insertIndexedDelta(pins: Pins, index: DataFrame, batch: DataFrame,
       idCol: String, vecCol: String, k: Int, beam: Int, hops: Int,
       refineRounds: Int, maxReverse: Int, seed: Int,
-      validateIds: Boolean, corpusCount: Long = -1L,
-      deltaRefineFraction: Double = DeltaRefineFraction)
-      : (DataFrame, DataFrame) = {
+      validateIds: Boolean): (DataFrame, DataFrame) = {
     validateIndex(index, "insertIncrementalIndexed")
     requireIntegralId(batch, idCol, "insertIncrementalIndexed")
     require(k >= 1, s"k must be >= 1, got $k")
     val idType = index.schema("id").dataType
-    // pinned: the probes, the count, the vectors, the bridge keys and the
-    // new rows re-read it
+    // pinned: the probes, the vectors, the bridge keys and the new rows
+    // re-read it
     val bv = pins.pin(normalized(batch, idCol, vecCol))
     if (bv.isEmpty) return (index, index.limit(0))
     if (validateIds) {
@@ -1117,16 +1004,14 @@ object KnnGraph {
       .select(col("id").as("id_a"), col("nbr").as("id_b"), col("cosine")))
     // compose the updated index: one broadcast-joined pass over the old
     // rows (scan, no shuffle of untouched rows) + the new node rows.
-    // Pinned: the old-row composition, the new rows and the changed ids
-    // re-read knnNew and bridgeAdds. The base edges are an explode of the
-    // input index and the vectors a projection of it and of the pinned
-    // batch: neither is pinned.
+    // Pinned: the old-row composition and the new rows re-read knnNew
+    // and bridgeAdds. The base edges are an explode of the input index
+    // and the vectors a projection of it and of the pinned batch:
+    // neither is pinned.
     val knnNew = pins.pin(repairFront(pins, inc, inc.select("id"), knnEdges(index),
       index.select(col("id"), col("nv").as("__nv"))
         .unionByName(bv.select(col("id"), col("__nv"))),
-      (if (corpusCount >= 0) corpusCount else index.count()) + bv.count(),
-      k, if (maxReverse > 0) maxReverse else k, seed, 5000, refineRounds,
-      deltaRefineFraction, idType))
+      k, if (maxReverse > 0) maxReverse else k, seed, 5000, refineRounds, idType))
     val bridgeAdds = pins.pin(if (bRounds <= 0) emptyAdds(bv.select(col("id")), idType)
       else {
         // not pinned: an explode of the pinned batch
@@ -1144,11 +1029,10 @@ object KnnGraph {
           .filter(col("id") =!= col("hub"))
           .select(col("id"), col("hub").as("nbr")), "__adds")
       })
-    // the same row-local transform serves both the full composition and
-    // the changed-rows overlay (applying it to a restricted input IS the
-    // restriction of applying it to the full input — the joins are
-    // id-keyed left joins against the same bounded frames)
-    def composeOld(rows: DataFrame): DataFrame = rows
+    // the old rows, each beside its input knn and bridges: the updated
+    // index reads the new columns, the changed-rows overlay keeps the
+    // rows where they differ
+    val composed = index
       .join(broadcast(knnNew.withColumnRenamed("knn", "__knn2")),
         Seq("id"), "left")
       .join(broadcast(bridgeAdds), Seq("id"), "left")
@@ -1158,7 +1042,9 @@ object KnnGraph {
           array_sort(array_union(col("bridges"), col("__adds"))))
           .otherwise(col("bridges")).as("bridges"),
         col("is_entry"), col("bridge_mod"), col("bridge_rounds"),
-        col("bridge_seed"))
+        col("bridge_seed"), col("knn").as("__knn0"), col("bridges").as("__br0"))
+    val rowCols = Seq("id", "nv", "knn", "bridges", "is_entry", "bridge_mod",
+      "bridge_rounds", "bridge_seed").map(col)
     val newRows = bv.select(col("id"), col("__nv").as("nv"))
       .join(broadcast(knnNew), Seq("id"), "left")
       .join(broadcast(bridgeAdds), Seq("id"), "left")
@@ -1169,15 +1055,12 @@ object KnnGraph {
         lit(bMod).as("bridge_mod"),
         lit(bRounds).as("bridge_rounds"),
         lit(bSeed).as("bridge_seed"))
-    val updated = composeOld(index).unionByName(newRows)
-    // changed OLD rows = the transform over the touched subset of the
-    // index (batch ids in the touched sets semi-join away naturally);
-    // new rows are changed by definition
-    val changedOldIds = knnNew.select("id")
-      .unionByName(bridgeAdds.select("id")).distinct()
-    val changed = composeOld(
-        index.join(broadcast(changedOldIds), Seq("id"), "left_semi"))
-      .unionByName(newRows)
+    val updated = composed.select(rowCols: _*).unionByName(newRows)
+    // an edge's cosine is one kernel over the same two stored vectors, so
+    // an unchanged list compares equal; new rows are changed by definition
+    val changed = composed
+      .filter(!(col("knn") <=> col("__knn0")) || !(col("bridges") <=> col("__br0")))
+      .select(rowCols: _*).unionByName(newRows)
     (updated, changed)
   }
 
@@ -1230,9 +1113,10 @@ object KnnGraph {
     *  2. heal — each amputated survivor re-ranks over its surviving
     *     edges ∪ the DELETED nodes' former neighbor lists (the
     *     detour-through-the-hole candidates), scored by the stored
-    *     normalized vectors, then `healRounds` refine rounds seeded
-    *     at the healed front repair second-order damage (the insert's
-    *     repair path, [[repairFront]]),
+    *     normalized vectors, then `healRounds` full [[descentRound]]s
+    *     over the healed graph, its healed front flagged new, repair
+    *     second-order damage (the insert's repair path,
+    *     [[repairFront]]),
     *  3. re-hub — any bridge bucket whose min-id hub was deleted
     *     re-elects the surviving min and re-links its members
     *     (bucket membership recomputes from ids + the persisted
@@ -1247,6 +1131,8 @@ object KnnGraph {
     * the array filters, so one call takes at most ~10k ids — the same
     * bounded-side assumption every batch path here makes; mass
     * deletion is a rebuild, as in DiskANN's consolidate.
+    *
+    * @param corpusCount unread: no step of the delete needs |index|.
     */
   def removeIds(index: DataFrame, removals: DataFrame, idCol: String,
                 k: Int, healRounds: Int = 1, maxReverse: Int = 0,
@@ -1296,9 +1182,7 @@ object KnnGraph {
       // carries a deleted target)
       val knnNew = repairFront(pins, scoredCand, amput.select(col("s").as("id")),
         survEdges.filter(!isDel(col("nbr"))), vecsSurv,
-        (if (corpusCount >= 0) corpusCount else index.count()) - delIds.length,
-        k, if (maxReverse > 0) maxReverse else k, seed, 8000, healRounds,
-        DeltaRefineFraction, idType)
+        k, if (maxReverse > 0) maxReverse else k, seed, 8000, healRounds, idType)
 
       // re-hub: buckets whose min-id hub was deleted re-elect and re-link
       val bridgeAdds = if (bRounds <= 0) emptyAdds(deleted.select("id"), idType)

@@ -550,12 +550,14 @@ object StreamingOps {
     * was materialized (r12: the (graph, corpus) pair state re-
     * materialized the WHOLE corpus per micro-batch, O(n·B) cumulative,
     * and its two volatile writes could be read torn). Per-batch
-    * materialization cost is the overlay — bounded by the cumulative
-    * touched front, not the corpus — and every `compactEvery` batches
-    * the view compacts into a fresh base, keeping the read path's
-    * lineage depth constant. The same shape writes through to
-    * parquet/Delta in deployment: base file + merged delta, compaction
-    * on the same cadence.
+    * materialization cost is the overlay: the rows that some batch
+    * since the last compaction changed. Without refine rounds that is
+    * the touched front; a refine round is a full round that may change
+    * any row, so the overlay can grow to the whole index. Every
+    * `compactEvery` batches the view compacts into a fresh base,
+    * keeping the read path's lineage depth constant. The same shape
+    * writes through to parquet/Delta in deployment: base file + merged
+    * delta, compaction on the same cadence.
     *
     * Each [[addBatch]] runs in one `Pins.scoped` whose result is the new
     * snapshot's frame, so a batch leaves one persisted RDD behind. A
@@ -582,9 +584,6 @@ object StreamingOps {
                              val batchesSinceCompact: Int)
     @volatile private var snap =
       new Snap(Pins.scoped(_.pin(initialIndex)), None, 0)
-    // running row count so each insert's refine-path crossover check
-    // (delta vs full round) needs no per-batch index count job
-    private var nRows: Long = snap.base.count()
     private def compose(s: Snap): DataFrame = s.overlay match {
       case None => s.base
       case Some(ov) =>
@@ -605,14 +604,14 @@ object StreamingOps {
       val compact = compactEvery > 0 && nb >= compactEvery
       // the new snapshot's frame; null for an empty batch
       val frame: DataFrame = Pins.scoped { pins =>
-        // pinned: the emptiness probe, the insert and the row count re-read it
+        // pinned: the emptiness probe and the insert re-read it
         val b = pins.pin(batch.select(col(idCol), col(vecCol)))
         if (b.isEmpty) null
         else {
           val (_, changed) = KnnGraph.insertIndexedDelta(pins, compose(s), b,
             idCol, vecCol, k = k, beam = beam, hops = hops,
             refineRounds = refineRounds, maxReverse = maxReverse,
-            seed = seed, validateIds = validateIds, corpusCount = nRows)
+            seed = seed, validateIds = validateIds)
           // pin the changed rows BEFORE composing them into the
           // overlay: a LAZY frame on both sides of the anti-join ∪ union
           // below (self-reference) trips Catalyst's union constraint
@@ -629,7 +628,6 @@ object StreamingOps {
               pins.pin(ov.join(changedC.select("id"), Seq("id"), "left_anti")
                 .unionByName(changedC))
           }
-          nRows += b.count()
           // pinned: the compacted base is the next snapshot's whole index
           if (compact) pins.pin(compose(new Snap(s.base, Some(ovNew), nb)))
           else ovNew

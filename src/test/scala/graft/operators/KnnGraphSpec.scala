@@ -372,19 +372,15 @@ class KnnGraphSpec extends SparkSpec {
       .localCheckpoint(true)
     val idx = KnnGraph.graphIndex(g, corpus, "vec_id", "v", corpusCount = n)
       .localCheckpoint(true)
-    // deltaRefineFraction forced to both extremes: 1.0 = every refine
-    // round takes the front-bounded DELTA path, 0.0 = every round takes
-    // the full descentRound over the composed graph — the crossover is
-    // a pure cost choice, so BOTH must match the one-shot bit-for-bit
-    for (refine <- Seq(0, 2); frac <- Seq(0.0, 1.0)) {
+    for (refine <- Seq(0, 2)) {
       val direct = KnnGraph.insertIncremental(g, corpus, batch, "vec_id",
         "v", k = 6, refineRounds = refine, corpusCount = n)
       val viaIdx = Pins.scoped(pins => KnnGraph.indexGraph(KnnGraph.insertIndexedDelta(
         pins, idx, batch, "vec_id", "v", k = 6, beam = 8, hops = 3,
         refineRounds = refine, maxReverse = 0, seed = 42,
-        validateIds = true, deltaRefineFraction = frac)._1))
+        validateIds = true)._1))
       assert(viaIdx.exceptAll(direct).isEmpty &&
-        direct.exceptAll(viaIdx).isEmpty, s"refine=$refine frac=$frac diverged")
+        direct.exceptAll(viaIdx).isEmpty, s"refine=$refine diverged")
     }
     // empty batch is the identity on the asset
     val same = KnnGraph.insertIncrementalIndexed(idx, batch.limit(0),
@@ -435,7 +431,9 @@ class KnnGraphSpec extends SparkSpec {
     // the overlay contract GraphInsertState builds on: changed ⊆
     // updated; updated minus changed-ids is bit-identical to the input
     // index (untouched rows pass through); base∖changed ∪ changed ≡
-    // updated
+    // updated; and no changed old row equals its input row (the overlay
+    // holds only rows that differ, although the refine round re-emits
+    // every node)
     val all = clustered(nClusters = 5, perCluster = 8, dims = 6)
     val corpus = all.filter(col("vec_id") < 32)
     val batch = all.filter(col("vec_id") >= 32)
@@ -460,14 +458,20 @@ class KnnGraphSpec extends SparkSpec {
       .unionByName(changed)
     assert(composed.exceptAll(updated).isEmpty &&
       updated.exceptAll(composed).isEmpty)
+    val changedOld = changed.join(idx.select("id"), Seq("id"), "left_semi")
+    assert(changedOld.count() > 0)
+    val sameAsInput = changedOld.intersectAll(idx).count()
+    assert(sameAsInput === 0, s"$sameAsInput changed old rows equal their input rows")
   }
 
   test("the index writes run in a bounded number of Spark jobs") {
     // the graph pins follow the one pin rule: a frame read once, or a
     // projection of an input, is not pinned. On this index the build
     // runs 40 jobs (42 before its node table took one aggregate), the
-    // insert 70 and the delete 35; with a pin on every projection and
-    // on the pooled heal chains the insert and the delete ran 102 and 48.
+    // insert 64 and the delete 34; with a pin on every projection and
+    // on the pooled heal chains the insert and the delete ran 102 and 48,
+    // and with a per-round choice between a front-bounded delta round and
+    // the full round, and the row counts that choice read, 70 and 40.
     // The insert's count is exact: its front-bounded joins are broadcast
     // from the plan's start, so no stage job depends on the order in
     // which adaptive execution sees concurrent stages finish.
@@ -487,12 +491,12 @@ class KnnGraphSpec extends SparkSpec {
       KnnGraph.insertIncrementalIndexed(idx, batch, "vec_id", "v", k = 6,
         refineRounds = 3, corpusCount = 50).localCheckpoint(true)
     }
-    assert(insertJobs <= 70, s"insert: $insertJobs jobs")
+    assert(insertJobs <= 64, s"insert: $insertJobs jobs")
     val removeJobs = ListenerBus.countJobs(sc) {
       KnnGraph.removeIds(idx, (0L until 10L).toDF("vec_id"), "vec_id", k = 6,
         healRounds = 1, corpusCount = 50).localCheckpoint(true)
     }
-    assert(removeJobs <= 45, s"removeIds: $removeJobs jobs")
+    assert(removeJobs <= 34, s"removeIds: $removeJobs jobs")
   }
 
   test("an indexed search runs two Spark jobs plus one per hop") {

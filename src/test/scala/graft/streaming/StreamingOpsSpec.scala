@@ -518,6 +518,30 @@ class StreamingOpsSpec extends SparkSpec {
       state.index.exceptAll(s2.index).isEmpty)
   }
 
+  test("a graph insert state pins its index in one job and counts no rows per batch") {
+    // construction is the index's pin; a batch is the insert alone. With
+    // a running row count (read by a per-round delta/full refine choice)
+    // construction ran 3 jobs and this batch 54
+    import graft.operators.KnnGraph
+    import org.apache.spark.sql.graft.ListenerBus
+    val rnd = new scala.util.Random(11)
+    def vecs(idBase: Long, n: Int) = (0 until n).map(j =>
+      (idBase + j, Seq.tabulate(6)(_ => rnd.nextGaussian()))).toDF("vec_id", "v")
+    val corpus = vecs(0L, 30)
+    val idx = KnnGraph.graphIndex(KnnGraph.nnDescent(corpus, "vec_id", "v", k = 4,
+      iterations = 2), corpus, "vec_id", "v").localCheckpoint(true)
+    val batch = vecs(1000L, 6).localCheckpoint(true)
+    val sc = spark.sparkContext
+    var state: StreamingOps.GraphInsertState = null
+    val buildJobs = ListenerBus.countJobs(sc) {
+      state = new StreamingOps.GraphInsertState(idx, "vec_id", "v", k = 4)
+    }
+    val batchJobs = ListenerBus.countJobs(sc)(state.addBatch(batch))
+    assert(buildJobs === 1, s"construction: $buildJobs jobs")
+    assert(batchJobs <= 44, s"addBatch: $batchJobs jobs")
+    assert(state.index.count() === 36)
+  }
+
   test("uniquesPerWindow sketches merge into the batch cumulative curve") {
     implicit val sqlCtx = spark.sqlContext
     import java.sql.Timestamp
