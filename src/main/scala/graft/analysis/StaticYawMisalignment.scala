@@ -27,8 +27,9 @@ import graft.plant.PlantData
   *    on the [[Flags]] kernels, one aggregation per max-power-filter value,
   *    turbine and power bin over each group's sorted wind speeds
   *    ([[Flags.sortedValues]]). Without UQ it is one draw with weight 1.
-  *    The no-UQ aggregate has no `sim` key: the key would re-partition it,
-  *    and the driver-side fit depends on the order the bins are collected in.
+  *  - The driver-side fit reads each (sim, turbine, ws bin) group's vane
+  *    bins in vane-bin order, so the result does not depend on the order
+  *    in which the aggregate's partitions are collected.
   *  - The ws slice and the vane bin are computed once per row, before the
   *    UQ explode; nothing per-row is recomputed per simulation.
   *  - Under UQ the power-bin statistics are computed per DISTINCT sampled
@@ -98,6 +99,10 @@ final class StaticYawMisalignment(
       .withColumn("ws_bin_center", round(col("WMET_HorWdSpd") / wsBinWidth) * wsBinWidth)
       .withColumn("vane_bin", round(col("WMET_HorWdDirRel") / vaneBinWidth) * vaneBinWidth)
 
+  /** The reference's fixed max-power filter and MAD threshold without UQ. */
+  private val FixedMaxPf = 0.95
+  private val FixedMadThresh = 7.0
+
   private def powerBin(pf: Column): Column =
     when(col("p_frac") > minPowerFilter && col("p_frac") <= pf,
       ceil((col("p_frac") - minPowerFilter) / ((pf - minPowerFilter) / numPowerBins)))
@@ -133,10 +138,10 @@ final class StaticYawMisalignment(
     * parameter set: pitch filter, median/MAD power-curve outlier removal at
     * the given max-power-filter fraction and MAD threshold, target ws-bin
     * slice, vane binning: the one-draw case of the filter and aggregate
-    * [[run]] takes under UQ, so the oracle gate covers the filter every run
-    * applies. [[run]] consumes this directly without UQ.
+    * [[run]] takes, so the oracle gate covers the filter every run applies.
+    * Its defaults are the draw [[run]] takes without UQ.
     */
-  def vaneBins(maxPf: Double = 0.95, madThresh: Double = 7.0): DataFrame =
+  def vaneBins(maxPf: Double = FixedMaxPf, madThresh: Double = FixedMadThresh): DataFrame =
     // weight 1.0: sum(x*1.0)/sum(1.0) is bit-identical to avg(x), and n is
     // an exact integer-valued double -> restore the count-typed column
     binAggregate(simFrame(normalBase, Seq(maxPf), Seq(madThresh)), lit(1.0), Nil)
@@ -147,13 +152,10 @@ final class StaticYawMisalignment(
 
     // (sim, turbine, ws_bin, vane_bin) weighted mean power performance +
     // vane (yaw_misalignment.py:545-563); ONE shuffle for all simulations.
-    // Both branches filter through [[simFrame]] and aggregate through
-    // [[binAggregate]]. Without UQ the one draw at the reference's fixed
-    // defaults 0.95 / 7.0 is [[vaneBins]], grouped without a `sim` key: the
-    // key would change the order the bins are collected in, and with it
-    // the summation order of the driver-side fit.
-    val binned = (
-      if (!uq) vaneBins().withColumn("sim", lit(0))
+    // Without UQ: one draw at the reference's fixed defaults 0.95 / 7.0,
+    // every row weighted 1 ([[vaneBins]]' filter and aggregate).
+    val (simPf, simMad, weight) =
+      if (!uq) (Seq(FixedMaxPf), Seq(FixedMadThresh), lit(1.0))
       else {
         // per-sim thresholds on the reference's randint grids
         // (yaw_misalignment.py:434-444): hundredths of rated power, whole
@@ -163,23 +165,23 @@ final class StaticYawMisalignment(
           val (lo, hi) = (math.round(range._1 * scale).toInt, math.round(range._2 * scale).toInt)
           Seq.fill(numSim)(MonteCarlo.inclusive(rng, lo, hi) / scale)
         }
-        val simPf = draws(maxPowerFilter, 100)
-        val simMad = draws(powerBinMadThresh, 1)
-        binAggregate(simFrame(base, simPf, simMad),
+        (draws(maxPowerFilter, 100), draws(powerBinMadThresh, 1),
           poisson1((pmod(xxhash64(col("time"), col("asset_id"), col("sim"), lit(seed)),
-            lit(1000000L)) / 1000000.0)).cast("double"),
-          Seq("sim"))
-      })
+            lit(1000000L)) / 1000000.0)).cast("double"))
+      }
+    val binned = binAggregate(simFrame(base, simPf, simMad), weight, Seq("sim"))
       .select(col("sim"), col("asset_id"), col("ws_bin_center"), col("vane_bin"),
         col("perf_mean"), col("n").cast("double").as("n"), col("vane_mean"))
       .collect()
 
-    // driver-side per (sim, turbine, ws_bin): slice mean vane over ALL vane
-    // bins (yaw_misalignment.py:554), cosine fit over qualifying bins, yaw
-    // = fitted offset - mean vane angle (yaw_misalignment.py:576-580)
+    // driver-side per (sim, turbine, ws_bin), over its vane bins in
+    // vane-bin order: slice mean vane over ALL vane bins
+    // (yaw_misalignment.py:554), cosine fit over qualifying bins, yaw =
+    // fitted offset - mean vane angle (yaw_misalignment.py:576-580)
     val perSim: Map[(Int, String, Double), Double] = binned
       .groupBy(r => (r.getInt(0), r.getString(1), r.getDouble(2)))
-      .flatMap { case ((sim, turbine, wsBin), rows) =>
+      .flatMap { case ((sim, turbine, wsBin), unordered) =>
+        val rows = unordered.sortBy(_.getDouble(3))
         val totalW = rows.map(_.getDouble(5)).sum
         val meanVane = rows.map(r => r.getDouble(6) * r.getDouble(5)).sum / totalW
         val fitRows = rows.filter(r => r.getDouble(5) > minVaneBinCount &&

@@ -155,6 +155,29 @@ class AnalysisResultPinSpec extends SparkSpec {
     assert(fingerprint(r.yawStdByTurbineAndBin) == ((16, 647.4004509583593, 1789391513)))
   }
 
+  test("StaticYawMisalignment Result does not depend on the shuffle partition count") {
+    // the driver-side fit reads each group's bins in vane-bin order, not
+    // in the order the aggregate's partitions are collected (adaptive
+    // execution would coalesce the small aggregate into one partition)
+    def yaw(uq: Boolean) =
+      new StaticYawMisalignment(plant, minVaneBinCount = 10, uq = uq, numSim = 5).run()
+    val (parts, coalesce) =
+      ("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val prev = (spark.conf.get(parts), spark.conf.get(coalesce))
+    for (uq <- Seq(false, true)) {
+      val want = yaw(uq)
+      for (n <- Seq("3", "7")) {
+        spark.conf.set(parts, n)
+        spark.conf.set(coalesce, "false")
+        val got = try yaw(uq) finally {
+          spark.conf.set(parts, prev._1)
+          spark.conf.set(coalesce, prev._2)
+        }
+        assert(got == want, s"uq = $uq, $n shuffle partitions")
+      }
+    }
+  }
+
   test("ElectricalLosses Result without UQ is unchanged, daily and monthly meter") {
     assert(new ElectricalLosses(plant).run().losses.toSeq == Seq(0.019999999999999907))
     assert(new ElectricalLosses(plant, monthlyMeter = Some(true)).run().losses.toSeq ==
