@@ -100,8 +100,7 @@ final class StaticYawMisalignment(
       .withColumn("vane_bin", round(col("WMET_HorWdDirRel") / vaneBinWidth) * vaneBinWidth)
 
   /** The reference's fixed max-power filter and MAD threshold without UQ. */
-  private val FixedMaxPf = 0.95
-  private val FixedMadThresh = 7.0
+  private val (fixedMaxPf, fixedMadThresh) = (0.95, 7.0)
 
   private def powerBin(pf: Column): Column =
     when(col("p_frac") > minPowerFilter && col("p_frac") <= pf,
@@ -141,7 +140,7 @@ final class StaticYawMisalignment(
     * [[run]] takes, so the oracle gate covers the filter every run applies.
     * Its defaults are the draw [[run]] takes without UQ.
     */
-  def vaneBins(maxPf: Double = FixedMaxPf, madThresh: Double = FixedMadThresh): DataFrame =
+  def vaneBins(maxPf: Double = fixedMaxPf, madThresh: Double = fixedMadThresh): DataFrame =
     // weight 1.0: sum(x*1.0)/sum(1.0) is bit-identical to avg(x), and n is
     // an exact integer-valued double -> restore the count-typed column
     binAggregate(simFrame(normalBase, Seq(maxPf), Seq(madThresh)), lit(1.0), Nil)
@@ -155,7 +154,7 @@ final class StaticYawMisalignment(
     // Without UQ: one draw at the reference's fixed defaults 0.95 / 7.0,
     // every row weighted 1 ([[vaneBins]]' filter and aggregate).
     val (simPf, simMad, weight) =
-      if (!uq) (Seq(FixedMaxPf), Seq(FixedMadThresh), lit(1.0))
+      if (!uq) (Seq(fixedMaxPf), Seq(fixedMadThresh), lit(1.0))
       else {
         // per-sim thresholds on the reference's randint grids
         // (yaw_misalignment.py:434-444): hundredths of rated power, whole
@@ -172,16 +171,15 @@ final class StaticYawMisalignment(
     val binned = binAggregate(simFrame(base, simPf, simMad), weight, Seq("sim"))
       .select(col("sim"), col("asset_id"), col("ws_bin_center"), col("vane_bin"),
         col("perf_mean"), col("n").cast("double").as("n"), col("vane_mean"))
-      .collect()
+      .collect().sortBy(_.getDouble(3))
 
     // driver-side per (sim, turbine, ws_bin), over its vane bins in
-    // vane-bin order: slice mean vane over ALL vane bins
-    // (yaw_misalignment.py:554), cosine fit over qualifying bins, yaw =
-    // fitted offset - mean vane angle (yaw_misalignment.py:576-580)
+    // vane-bin order (groupBy keeps the sorted order): slice mean vane over
+    // ALL vane bins (yaw_misalignment.py:554), cosine fit over qualifying
+    // bins, yaw = fitted offset - mean vane angle (yaw_misalignment.py:576-580)
     val perSim: Map[(Int, String, Double), Double] = binned
       .groupBy(r => (r.getInt(0), r.getString(1), r.getDouble(2)))
-      .flatMap { case ((sim, turbine, wsBin), unordered) =>
-        val rows = unordered.sortBy(_.getDouble(3))
+      .flatMap { case ((sim, turbine, wsBin), rows) =>
         val totalW = rows.map(_.getDouble(5)).sum
         val meanVane = rows.map(r => r.getDouble(6) * r.getDouble(5)).sum / totalW
         val fitRows = rows.filter(r => r.getDouble(5) > minVaneBinCount &&

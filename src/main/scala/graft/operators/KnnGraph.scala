@@ -908,7 +908,7 @@ object KnnGraph {
       broadcast(baseKnn.join(broadcast(ids), Seq("id"))), k, idType)
     if (rounds <= 0) knnArrays(reranked)
     else {
-      // pinned: loop state, re-read by the first round
+      // pinned: loop state, re-read four times by the first round
       var graph = pins.loop(composeDelta(reranked, baseKnn, ids))
       for (r <- 0 until rounds)
         graph = descentRound(pins, graph, vecs, k, maxRev, sampleRate = 1.0, seed,
