@@ -359,8 +359,8 @@ class KnnGraphSpec extends SparkSpec {
 
   test("insertIncrementalIndexed ≡ insertIncremental bit-identically on the merged graph") {
     // the r13 headline pin: the index-native insert is a COST
-    // reformulation (delta re-rank, delta refine, no corpus
-    // renormalize/bridge rebuild), never a semantic one — its merged
+    // reformulation (front re-rank, no corpus renormalize/bridge
+    // rebuild), never a semantic one — its merged
     // graph must match the one-shot path edge for edge, cosine for
     // cosine, at every refine depth
     val all = clustered(nClusters = 6, perCluster = 10, dims = 8)
